@@ -31,10 +31,10 @@ private final class TaskMetricsListener extends SparkListener {
 /** Benchmark main — runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall-clock seconds.
   *
-  * Headline set: one representative per operator family (scan+agg, star
-  * join, anti join, window, top-k, period rollup, minhash, jaccard pairs,
-  * cosine pairs, ANN, text quality, sessionize) — the queries whose cost
-  * profile matters at scale.
+  * Headline set: the registry's `Headline` tier, one representative per
+  * operator family (scan+agg, star join, anti join, window, top-k, period
+  * rollup, minhash, jaccard pairs, cosine pairs, ANN, text quality,
+  * sessionize) — the queries whose cost profile matters at scale.
   */
 object Bench {
   final case class QueryMetrics(shuffleRd: Long, shuffleWr: Long,
@@ -50,298 +50,15 @@ object Bench {
       .split("\\s+").head.toDouble
     catch { case _: Throwable => -1.0 }
 
-  val headline: Seq[String] = Seq(
-    "q01_pricing_summary",
-    "q03_star_join_revenue",
-    "q05_anti_join_orders",
-    "q10_latest_event_per_user",
-    "q11_running_totals",
-    "q14_topk_lineitems",
-    "q16_period_rollup",
-    "q21_minhash_lsh_pairs",
-    "q22_jaccard_pairs_topk",
-    "q24_cosine_pairs_topk",
-    "q25_ann_bruteforce_topk",
-    "q26_ann_lsh_topk",
-    "q28_quality_scores",
-    "q32_sessionize")
+  private def tier(t: SparkEntry.Tier): Seq[String] =
+    SparkEntry.registry.filter(_.tier == t).map(_.name)
 
-  /** Secondary set: operators added after the headline series started.
-    * Timed identically but reported under "extra" and excluded from the
-    * headline total so round-over-round totals stay comparable.
+  val headline: Seq[String] = tier(SparkEntry.Tier.Headline)
+
+  /** Secondary set (`Extra` tier): operators added after the headline
+    * series started, timed the same way but reported under "extra".
     */
-  val extra: Seq[String] = Seq(
-    "q41_asof_click_attribution",
-    "q44_asof_native",
-    "q49_kmeans_iteration",
-    "q52_dedup_groups",
-    "q63_stratified_sample",
-    "q66_decontaminate",
-    "q67_sequence_packing",
-    "q69_dedup_keep_best",
-    "q71_salted_join",
-    "q73_repetition_stats",
-    "q74_incremental_dedup",
-    "q76_deterministic_shards",
-    "q79_packed_sequences",
-    "q87_corpus_prep",
-    "q91_bloom_pruned_join",
-    "q93_simpson_diversity",
-    "q95_funnel",
-    "q105_temperature_mix",
-    "q106_bm25_terms",
-    "q107_containment_pairs",
-    "q108_gopher_rules",
-    "q109_bloom_decontaminate",
-    "q110_leakage_free_split",
-    "q111_semantic_dedup",
-    "q112_temperature_rebalance",
-    "q113_stream_dedup",
-    "q114_quantized_ann",
-    "q115_curation_v2",
-    "q116_compaction_roundtrip",
-    "q117_versioned_csv_roundtrip",
-    "q118_jdbc_roundtrip",
-    "q119_stream_sessionize",
-    "q120_incremental_load",
-    "q121_personalized_pagerank",
-    "q122_cohort_retention",
-    "q123_resample_ffill",
-    "q124_bm25_search",
-    "q125_transition_matrix",
-    "q126_rolling_window",
-    "q127_topk_list",
-    "q128_sliding_windows",
-    "q129_outlier_days",
-    "q130_json_field_stats",
-    "q131_time_weighted_avg",
-    "q132_gap_histogram",
-    "q133_gini_index",
-    "q134_funnel_timing",
-    "q135_copurchase_lift",
-    "q136_sliding_windows_stream",
-    "q137_knn_graph",
-    "q138_label_propagation",
-    "q139_neighbor_mean",
-    "q140_native_session_window",
-    "q141_quartile_bins",
-    "q142_knn_incremental",
-    "q143_percentile_ranks",
-    "q144_knn_stream",
-    "q145_canonical_by_priority",
-    "q146_retrieval_metrics",
-    "q147_histogram_drift",
-    "q148_coverage_score",
-    "q149_embedding_health",
-    "q150_drift_stream",
-    "q151_bpe_pair_mining",
-    "q152_skew_report",
-    "q153_drift_series",
-    "q154_winsorize_global",
-    "q155_gram_matrix",
-    "q156_shingle_novelty",
-    "q157_dedup_size_histogram",
-    "q158_skew_stream",
-    "q159_triangle_count",
-    "q160_token_pmi",
-    "q161_lsh_calibration",
-    "q162_covariance_matrix",
-    "q163_pca_power_iteration",
-    "q164_degree_assortativity",
-    "q165_skipgram_pmi",
-    "q166_curation_funnel",
-    "q167_curriculum_interleave",
-    "q168_budget_allocation",
-    "q169_kcore",
-    "q170_fuzzy_match",
-    "q171_label_disagreement",
-    "q172_mad_outliers",
-    "q173_cohens_kappa",
-    "q174_rare_token_ratio",
-    "q175_rrf_hybrid",
-    "q176_source_overlap",
-    "q177_path_trigrams",
-    "q178_token_entropy",
-    "q179_integrity_audit",
-    "q180_benford_digits",
-    "q181_snapshot_diff",
-    "q182_zipf_fit",
-    "q183_hourly_trend",
-    "q184_weighted_pagerank",
-    "q185_frequent_triples",
-    "q186_rfm_scores",
-    "q187_survival_curve",
-    "q188_golden_record",
-    "q189_interval_merge",
-    "q190_debounce",
-    "q191_scd2_asof",
-    "q192_pareto_frontier",
-    "q193_reliability_bins",
-    "q194_auc",
-    "q195_classifier_metrics",
-    "q196_debounce_stream",
-    "q197_linear_attribution",
-    "q198_contribution_shares",
-    "q199_session_report",
-    "q200_eval_report",
-    "q201_range_frame",
-    "q202_asof_tolerance",
-    "q203_equidepth_histogram",
-    "q204_packing_efficiency",
-    "q205_cdc_apply",
-    "q206_two_hop_reach",
-    "q207_bpe_rounds",
-    "q208_cdc_stream",
-    "q209_feature_scale",
-    "q210_lag1_autocorr",
-    "q211_knn_bounded",
-    "q212_real_codec_roundtrip",
-    "q213_ranking_metrics",
-    "q214_knn_bounded_incremental",
-    "q215_pr_auc",
-    "q216_calibration_summary",
-    "q217_hits",
-    "q218_ewma_daily",
-    "q219_group_kfold",
-    "q220_dbscan",
-    "q221_audio_frame_energy",
-    "q222_ewma_stream",
-    "q223_unigram_lm_score",
-    "q224_bootstrap",
-    "q225_ks_drift",
-    "q226_mmr_diversify",
-    "q227_bfs_distance",
-    "q228_seasonal_profile",
-    "q229_changepoint",
-    "q230_orc_roundtrip",
-    "q231_spearman",
-    "q232_binary_card",
-    "q233_manifest_time_travel",
-    "q234_ks_drift_stream",
-    "q235_mmr_eval",
-    "q236_seasonal_anomaly_stream",
-    "q237_dbscan_cells",
-    "q238_wav_roundtrip",
-    "q239_silhouette",
-    "q240_kmv_distinct",
-    "q241_content_chunks",
-    "q242_chunk_dedup",
-    "q243_kmv_stream",
-    "q244_chunk_overlap",
-    "q245_regional_revenue",
-    "q246_epoch_plan",
-    "q247_chunk_store_stream",
-    "q248_chunk_dup_groups",
-    "q249_cms_build",
-    "q250_cms_estimate",
-    "q251_cms_stream",
-    "q252_linear_probe",
-    "q253_probe_eval",
-    "q254_semantic_dedup",
-    "q255_importance_weights",
-    "q256_uniform_sample",
-    "q257_sample_stream",
-    "q258_small_qty_revenue",
-    "q259_cms_heavy_hitters",
-    "q260_probe_score_stream",
-    "q261_kmv_jaccard",
-    "q262_image_dhash",
-    "q263_image_neardup",
-    "q264_bootstrap_auc",
-    "q265_bootstrap_auc_ci",
-    "q266_bpe_merges",
-    "q267_bpe_encode",
-    "q268_pii_luhn",
-    "q269_readability",
-    "q270_image_dedup_groups",
-    "q271_cms_join_size",
-    "q272_image_neardup_stream",
-    "q273_sample_quantiles",
-    "q274_kmv_by_group",
-    "q275_audio_neardup",
-    "q276_bradley_terry",
-    "q277_waiting_orders",
-    "q278_min_cost_supplier",
-    "q279_grouped_auc",
-    "q280_tokenizer_fertility",
-    // round 8 — q282/q283 (deep BPE training, 96–256 sequential merge
-    // rounds) are deliberately NOT benched: each costs minutes BY
-    // DESIGN (the per-round argmax barrier), which would double the
-    // bench wall for a number that measures round count, not data
-    // cost; their scale evidence is BpeProbe's recorded 10× table
-    "q281_luhn_formatted",
-    "q284_avi_roundtrip",
-    "q285_gram_tiled",
-    "q286_bradley_terry_scale",
-    "q287_pq_quant_error",
-    "q288_excess_stock",
-    "q289_bpe_stream_wordcounts",
-    "q290_pq_codebooks",
-    "q291_pq_adc_ann",
-    "q292_bigram_lm",
-    "q293_html_extract",
-    "q294_ivfpq_ann",
-    "q295_pq_code_stream",
-    "q296_prefix_dim_recall",
-    "q297_sdc_closest_pairs",
-    "q298_jsonl_roundtrip",
-    "q299_mixed_language",
-    "q300_curation_funnel_e2e",
-    "q301_nb_model",
-    "q302_nb_predict",
-    "q303_nb_confusion",
-    "q304_platt_fit",
-    "q305_platt_calibration",
-    "q306_url_canonical_dedup",
-    "q307_domain_stats",
-    "q308_blocklist_funnel",
-    "q309_k_anonymity",
-    "q310_l_diversity",
-    "q311_cv_probe_sweep",
-    "q312_nb_score_stream",
-    "q313_nb_state_stream",
-    "q314_geo_nearest",
-    "q315_geo_radius_grid",
-    "q316_doremi_mix",
-    "q317_q18_big_orders",
-    "q318_q22_idle_customers",
-    "q319_encoding_audit",
-    "q320_keyword_risk",
-    "q321_geo_zone_tag",
-    "q322_model_curation_funnel",
-    "q323_psl_domain",
-    "q324_zone_table_pip",
-    "q325_q13_custdist",
-    "q326_calibration_drift_stream",
-    "q327_calib_bins_drift",
-    "q328_model_lang_gate",
-    "q329_q16_supplier_cnt",
-    "q330_q15_top_supplier",
-    "q331_q11_important_parts",
-    "q332_url_frontier_stream",
-    "q333_q7_trade_volume",
-    "q334_q19_disjunctive_revenue",
-    "q335_qbin_quantiles",
-    "q336_qbin_stream",
-    "q337_qbin_by_source",
-    "q338_charngram_lang_gate",
-    "q339_q4_order_priority",
-    "q340_q8_market_share",
-    "q341_q9_profit",
-    "q342_qbin_by_source_stream",
-    "q343_erase_keys",
-    "q344_erase_then_expire",
-    "q345_q3_shipping_priority",
-    "q346_q6_forecast_revenue",
-    "q347_q10_returned_items",
-    "q348_q12_shipmode_priority",
-    "q349_q14_promo_revenue",
-    "q350_lake_pruned_scan",
-    "q351_lake_erase",
-    "q352_lake_schema_evolution",
-    "q353_lake_compact",
-    "q354_lake_incremental",
-    "q355_lake_zorder_scan")
+  val extra: Seq[String] = tier(SparkEntry.Tier.Extra)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -397,7 +114,7 @@ object Bench {
           s"(not benched: ${unknown.mkString(",")})")
     }
     def selected(names: Seq[String]): Seq[String] =
-      names.filter(qs.contains).filter(n => only.forall(_.contains(n)))
+      names.filter(n => only.forall(_.contains(n)))
     val metrics = new TaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     val loadBefore = loadAvg()

@@ -13,7 +13,11 @@ import graft.normalize.Normalize
 import graft.ops.{Dedup, Multimodal, Sampling, Similarity, Skew, TemporalJoin, TextAnalysis}
 
 /** Driver contract — one named query per operator in SURVEY.md §2 plus the
-  * training-data extension ops, each with a DuckDB oracle in [[oracleSql]].
+  * training-data extension ops. Each query is declared once, as a [[Q]]
+  * entry of [[registry]] (at the bottom of this object): its name, its
+  * Spark body, its bench [[Tier]] and its DuckDB oracle SQL. [[queries]],
+  * [[oracleSql]] and Bench's headline/extra lists are derived from it, so
+  * adding a query means adding one `Q` entry.
   *
   * Determinism rules (the driver hash-compares Spark vs DuckDB output):
   *  - every query ends in a total ORDER BY (oracle uses NULLS FIRST to match
@@ -23,6 +27,31 @@ import graft.ops.{Dedup, Multimodal, Sampling, Similarity, Skew, TemporalJoin, T
   *  - column names and types are aliased identically on both sides.
   */
 object SparkEntry {
+
+  /** Where Bench times a query: `Headline` (one representative per operator
+    * family, summed into the headline total), `Extra` (timed identically but
+    * reported apart, so round-over-round headline totals stay comparable) or
+    * `Unbenched` (oracle-gated only).
+    */
+  sealed trait Tier
+  object Tier {
+    case object Headline extends Tier
+    case object Extra extends Tier
+    case object Unbenched extends Tier
+  }
+  import Tier._
+
+  /** One registered query: `build(spark, sfDir)` and the DuckDB SQL whose
+    * result it must equal over the same tables.
+    */
+  final case class Q(name: String, build: (SparkSession, String) => DataFrame,
+                     tier: Tier, oracleSql: String)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
@@ -8305,366 +8334,7 @@ object SparkEntry {
       col("event_type"), Seq("view", "click", "signup", "purchase"))
       .orderBy("user_id")
 
-  // ————————————————————————————————————————————————————————— the contract
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> q01 _,
-    "q02_filter_pushdown" -> q02 _,
-    "q03_star_join_revenue" -> q03 _,
-    "q04_left_join_enrich" -> q04 _,
-    "q05_anti_join_orders" -> q05 _,
-    "q06_semi_join_suppliers" -> q06 _,
-    "q07_distinct_segments" -> q07 _,
-    "q08_rollup_acctbal" -> q08 _,
-    "q09_cube_orders" -> q09 _,
-    "q10_latest_event_per_user" -> q10 _,
-    "q11_running_totals" -> q11 _,
-    "q12_union_nationkeys" -> q12 _,
-    "q13_except_orderkeys" -> q13 _,
-    "q14_topk_lineitems" -> q14 _,
-    "q15_sanitize_extract" -> q15 _,
-    "q16_period_rollup" -> q16 _,
-    "q17_grouping_sets" -> q17 _,
-    "q18_incremental_antijoin" -> q18 _,
-    "q19_conform_schema" -> q19 _,
-    "q20_dedup_exact" -> q20 _,
-    "q21_minhash_lsh_pairs" -> q21 _,
-    "q22_jaccard_pairs_topk" -> q22 _,
-    "q23_simhash" -> q23 _,
-    "q24_cosine_pairs_topk" -> q24 _,
-    "q25_ann_bruteforce_topk" -> q25 _,
-    "q26_ann_lsh_topk" -> q26 _,
-    "q27_lang_detect" -> q27 _,
-    "q28_quality_scores" -> q28 _,
-    "q29_token_stats_by_lang" -> q29 _,
-    "q30_fingerprint" -> q30 _,
-    "q31_stream_window_hourly" -> q31 _,
-    "q32_sessionize" -> q32 _,
-    "q33_asset_metadata" -> q33 _,
-    "q34_frame_sample" -> q34 _,
-    "q35_decode_stats" -> q35 _,
-    "q36_stream_window_agg" -> q36 _,
-    "q37_ann_ivf_topk" -> q37 _,
-    "q38_token_frequency" -> q38 _,
-    "q39_length_histogram" -> q39 _,
-    "q40_stateful_user_totals" -> q40 _,
-    "q41_asof_click_attribution" -> q41 _,
-    "q42_range_prior_clicks" -> q42 _,
-    "q43_interval_join_binned" -> q43 _,
-    "q44_asof_native" -> q44 _,
-    "q45_stream_distinct_types" -> q45 _,
-    "q46_percentiles" -> q46 _,
-    "q47_window_suite" -> q47 _,
-    "q48_scalar_suite" -> q48 _,
-    "q49_kmeans_iteration" -> q49 _,
-    "q50_tfidf_topk" -> q50 _,
-    "q51_variant_extract" -> q51 _,
-    "q52_dedup_groups" -> q52 _,
-    "q53_sliding_window" -> q53 _,
-    "q54_simhash_neighbors" -> q54 _,
-    "q55_train_test_split" -> q55 _,
-    "q56_unpivot_measures" -> q56 _,
-    "q57_pivot_lang_counts" -> q57 _,
-    "q58_intersect_nations" -> q58 _,
-    "q59_correlated_subquery" -> q59 _,
-    "q60_multi_distinct" -> q60 _,
-    "q61_filter_having" -> q61 _,
-    "q62_ann_multiprobe_topk" -> q62 _,
-    "q63_stratified_sample" -> q63 _,
-    "q64_kmeans_two_iterations" -> q64 _,
-    "q65_cap_per_stratum" -> q65 _,
-    "q66_decontaminate" -> q66 _,
-    "q67_sequence_packing" -> q67 _,
-    "q68_salted_agg" -> q68 _,
-    "q69_dedup_keep_best" -> q69 _,
-    "q70_stream_range_join" -> q70 _,
-    "q71_salted_join" -> q71 _,
-    "q72_pii_redaction" -> q72 _,
-    "q73_repetition_stats" -> q73 _,
-    "q74_incremental_dedup" -> q74 _,
-    "q75_quality_quantile_filter" -> q75 _,
-    "q76_deterministic_shards" -> q76 _,
-    "q77_weighted_mix" -> q77 _,
-    "q78_nfc_normalize" -> q78 _,
-    "q79_packed_sequences" -> q79 _,
-    "q80_quantize_int8" -> q80 _,
-    "q81_column_profile" -> q81 _,
-    "q82_passage_dup" -> q82 _,
-    "q83_incremental_agg" -> q83 _,
-    "q84_scd2_merge" -> q84 _,
-    "q85_vocab_encode" -> q85 _,
-    "q86_chunk_stride" -> q86 _,
-    "q87_corpus_prep" -> q87 _,
-    "q88_hard_negatives" -> q88 _,
-    "q89_stream_landing" -> q89 _,
-    "q90_zorder_curve" -> q90 _,
-    "q91_bloom_pruned_join" -> q91 _,
-    "q92_negative_sampling" -> q92 _,
-    "q93_simpson_diversity" -> q93 _,
-    "q94_docgen_source" -> q94 _,
-    "q95_funnel" -> q95 _,
-    "q96_manifest_landing" -> q96 _,
-    "q97_funnel_stream" -> q97 _,
-    "q98_winsorize" -> q98 _,
-    "q99_correlation" -> q99 _,
-    "q100_stream_static_join" -> q100 _,
-    "q101_pagerank" -> q101 _,
-    "q102_funnel_n" -> q102 _,
-    "q103_ann_ivf_probe2" -> q103 _,
-    "q104_funnel_landing" -> q104 _,
-    "q105_temperature_mix" -> q105 _,
-    "q106_bm25_terms" -> q106 _,
-    "q107_containment_pairs" -> q107 _,
-    "q108_gopher_rules" -> q108 _,
-    "q109_bloom_decontaminate" -> q109 _,
-    "q110_leakage_free_split" -> q110 _,
-    "q111_semantic_dedup" -> q111 _,
-    "q112_temperature_rebalance" -> q112 _,
-    "q113_stream_dedup" -> q113 _,
-    "q114_quantized_ann" -> q114 _,
-    "q115_curation_v2" -> q115 _,
-    "q116_compaction_roundtrip" -> q116 _,
-    "q117_versioned_csv_roundtrip" -> q117 _,
-    "q118_jdbc_roundtrip" -> q118 _,
-    "q119_stream_sessionize" -> q119 _,
-    "q120_incremental_load" -> q120 _,
-    "q121_personalized_pagerank" -> q121 _,
-    "q122_cohort_retention" -> q122 _,
-    "q123_resample_ffill" -> q123 _,
-    "q124_bm25_search" -> q124 _,
-    "q125_transition_matrix" -> q125 _,
-    "q126_rolling_window" -> q126 _,
-    "q127_topk_list" -> q127 _,
-    "q128_sliding_windows" -> q128 _,
-    "q129_outlier_days" -> q129 _,
-    "q130_json_field_stats" -> q130 _,
-    "q131_time_weighted_avg" -> q131 _,
-    "q132_gap_histogram" -> q132 _,
-    "q133_gini_index" -> q133 _,
-    "q134_funnel_timing" -> q134 _,
-    "q135_copurchase_lift" -> q135 _,
-    "q136_sliding_windows_stream" -> q136 _,
-    "q137_knn_graph" -> q137 _,
-    "q138_label_propagation" -> q138 _,
-    "q139_neighbor_mean" -> q139 _,
-    "q140_native_session_window" -> q140 _,
-    "q141_quartile_bins" -> q141 _,
-    "q142_knn_incremental" -> q142 _,
-    "q143_percentile_ranks" -> q143 _,
-    "q144_knn_stream" -> q144 _,
-    "q145_canonical_by_priority" -> q145 _,
-    "q146_retrieval_metrics" -> q146 _,
-    "q147_histogram_drift" -> q147 _,
-    "q148_coverage_score" -> q148 _,
-    "q149_embedding_health" -> q149 _,
-    "q150_drift_stream" -> q150 _,
-    "q151_bpe_pair_mining" -> q151 _,
-    "q152_skew_report" -> q152 _,
-    "q153_drift_series" -> q153 _,
-    "q154_winsorize_global" -> q154 _,
-    "q155_gram_matrix" -> q155 _,
-    "q156_shingle_novelty" -> q156 _,
-    "q157_dedup_size_histogram" -> q157 _,
-    "q158_skew_stream" -> q158 _,
-    "q159_triangle_count" -> q159 _,
-    "q160_token_pmi" -> q160 _,
-    "q161_lsh_calibration" -> q161 _,
-    "q162_covariance_matrix" -> q162 _,
-    "q163_pca_power_iteration" -> q163 _,
-    "q164_degree_assortativity" -> q164 _,
-    "q165_skipgram_pmi" -> q165 _,
-    "q166_curation_funnel" -> q166 _,
-    "q167_curriculum_interleave" -> q167 _,
-    "q168_budget_allocation" -> q168 _,
-    "q169_kcore" -> q169 _,
-    "q170_fuzzy_match" -> q170 _,
-    "q171_label_disagreement" -> q171 _,
-    "q172_mad_outliers" -> q172 _,
-    "q173_cohens_kappa" -> q173 _,
-    "q174_rare_token_ratio" -> q174 _,
-    "q175_rrf_hybrid" -> q175 _,
-    "q176_source_overlap" -> q176 _,
-    "q177_path_trigrams" -> q177 _,
-    "q178_token_entropy" -> q178 _,
-    "q179_integrity_audit" -> q179 _,
-    "q180_benford_digits" -> q180 _,
-    "q181_snapshot_diff" -> q181 _,
-    "q182_zipf_fit" -> q182 _,
-    "q183_hourly_trend" -> q183 _,
-    "q184_weighted_pagerank" -> q184 _,
-    "q185_frequent_triples" -> q185 _,
-    "q186_rfm_scores" -> q186 _,
-    "q187_survival_curve" -> q187 _,
-    "q188_golden_record" -> q188 _,
-    "q189_interval_merge" -> q189 _,
-    "q190_debounce" -> q190 _,
-    "q191_scd2_asof" -> q191 _,
-    "q192_pareto_frontier" -> q192 _,
-    "q193_reliability_bins" -> q193 _,
-    "q194_auc" -> q194 _,
-    "q195_classifier_metrics" -> q195 _,
-    "q196_debounce_stream" -> q196 _,
-    "q197_linear_attribution" -> q197 _,
-    "q198_contribution_shares" -> q198 _,
-    "q199_session_report" -> q199 _,
-    "q200_eval_report" -> q200 _,
-    "q201_range_frame" -> q201 _,
-    "q202_asof_tolerance" -> q202 _,
-    "q203_equidepth_histogram" -> q203 _,
-    "q204_packing_efficiency" -> q204 _,
-    "q205_cdc_apply" -> q205 _,
-    "q206_two_hop_reach" -> q206 _,
-    "q207_bpe_rounds" -> q207 _,
-    "q208_cdc_stream" -> q208 _,
-    "q209_feature_scale" -> q209 _,
-    "q210_lag1_autocorr" -> q210 _,
-    "q211_knn_bounded" -> q211 _,
-    "q212_real_codec_roundtrip" -> q212 _,
-    "q213_ranking_metrics" -> q213 _,
-    "q214_knn_bounded_incremental" -> q214 _,
-    "q215_pr_auc" -> q215 _,
-    "q216_calibration_summary" -> q216 _,
-    "q217_hits" -> q217 _,
-    "q218_ewma_daily" -> q218 _,
-    "q219_group_kfold" -> q219 _,
-    "q220_dbscan" -> q220 _,
-    "q221_audio_frame_energy" -> q221 _,
-    "q222_ewma_stream" -> q222 _,
-    "q223_unigram_lm_score" -> q223 _,
-    "q224_bootstrap" -> q224 _,
-    "q225_ks_drift" -> q225 _,
-    "q226_mmr_diversify" -> q226 _,
-    "q227_bfs_distance" -> q227 _,
-    "q228_seasonal_profile" -> q228 _,
-    "q229_changepoint" -> q229 _,
-    "q230_orc_roundtrip" -> q230 _,
-    "q231_spearman" -> q231 _,
-    "q232_binary_card" -> q232 _,
-    "q233_manifest_time_travel" -> q233 _,
-    "q234_ks_drift_stream" -> q234 _,
-    "q235_mmr_eval" -> q235 _,
-    "q236_seasonal_anomaly_stream" -> q236 _,
-    "q237_dbscan_cells" -> q237 _,
-    "q238_wav_roundtrip" -> q238 _,
-    "q239_silhouette" -> q239 _,
-    "q240_kmv_distinct" -> q240 _,
-    "q241_content_chunks" -> q241 _,
-    "q242_chunk_dedup" -> q242 _,
-    "q243_kmv_stream" -> q243 _,
-    "q244_chunk_overlap" -> q244 _,
-    "q245_regional_revenue" -> q245 _,
-    "q246_epoch_plan" -> q246 _,
-    "q247_chunk_store_stream" -> q247 _,
-    "q248_chunk_dup_groups" -> q248 _,
-    "q249_cms_build" -> q249 _,
-    "q250_cms_estimate" -> q250 _,
-    "q251_cms_stream" -> q251 _,
-    "q252_linear_probe" -> q252 _,
-    "q253_probe_eval" -> q253 _,
-    "q254_semantic_dedup" -> q254 _,
-    "q255_importance_weights" -> q255 _,
-    "q256_uniform_sample" -> q256 _,
-    "q257_sample_stream" -> q257 _,
-    "q258_small_qty_revenue" -> q258 _,
-    "q259_cms_heavy_hitters" -> q259 _,
-    "q260_probe_score_stream" -> q260 _,
-    "q261_kmv_jaccard" -> q261 _,
-    "q262_image_dhash" -> q262 _,
-    "q263_image_neardup" -> q263 _,
-    "q264_bootstrap_auc" -> q264 _,
-    "q265_bootstrap_auc_ci" -> q265 _,
-    "q266_bpe_merges" -> q266 _,
-    "q267_bpe_encode" -> q267 _,
-    "q268_pii_luhn" -> q268 _,
-    "q269_readability" -> q269 _,
-    "q270_image_dedup_groups" -> q270 _,
-    "q271_cms_join_size" -> q271 _,
-    "q272_image_neardup_stream" -> q272 _,
-    "q273_sample_quantiles" -> q273 _,
-    "q274_kmv_by_group" -> q274 _,
-    "q275_audio_neardup" -> q275 _,
-    "q276_bradley_terry" -> q276 _,
-    "q277_waiting_orders" -> q277 _,
-    "q278_min_cost_supplier" -> q278 _,
-    "q279_grouped_auc" -> q279 _,
-    "q280_tokenizer_fertility" -> q280 _,
-    "q281_luhn_formatted" -> q281 _,
-    "q282_bpe_deep" -> q282 _,
-    "q283_bpe_encode_trained" -> q283 _,
-    "q284_avi_roundtrip" -> q284 _,
-    "q285_gram_tiled" -> q285 _,
-    "q286_bradley_terry_scale" -> q286 _,
-    "q288_excess_stock" -> q288 _,
-    "q289_bpe_stream_wordcounts" -> q289 _,
-    "q290_pq_codebooks" -> q290 _,
-    "q291_pq_adc_ann" -> q291 _,
-    "q292_bigram_lm" -> q292 _,
-    "q293_html_extract" -> q293 _,
-    "q294_ivfpq_ann" -> q294 _,
-    "q287_pq_quant_error" -> q287 _,
-    "q295_pq_code_stream" -> q295 _,
-    "q296_prefix_dim_recall" -> q296 _,
-    "q297_sdc_closest_pairs" -> q297 _,
-    "q298_jsonl_roundtrip" -> q298 _,
-    "q299_mixed_language" -> q299 _,
-    "q300_curation_funnel_e2e" -> q300 _,
-    "q301_nb_model" -> q301 _,
-    "q302_nb_predict" -> q302 _,
-    "q303_nb_confusion" -> q303 _,
-    "q304_platt_fit" -> q304 _,
-    "q305_platt_calibration" -> q305 _,
-    "q306_url_canonical_dedup" -> q306 _,
-    "q307_domain_stats" -> q307 _,
-    "q308_blocklist_funnel" -> q308 _,
-    "q309_k_anonymity" -> q309 _,
-    "q310_l_diversity" -> q310 _,
-    "q311_cv_probe_sweep" -> q311 _,
-    "q312_nb_score_stream" -> q312 _,
-    "q313_nb_state_stream" -> q313 _,
-    "q314_geo_nearest" -> q314 _,
-    "q315_geo_radius_grid" -> q315 _,
-    "q316_doremi_mix" -> q316 _,
-    "q317_q18_big_orders" -> q317 _,
-    "q318_q22_idle_customers" -> q318 _,
-    "q319_encoding_audit" -> q319 _,
-    "q320_keyword_risk" -> q320 _,
-    "q321_geo_zone_tag" -> q321 _,
-    "q322_model_curation_funnel" -> q322 _,
-    "q323_psl_domain" -> q323 _,
-    "q324_zone_table_pip" -> q324 _,
-    "q325_q13_custdist" -> q325 _,
-    "q326_calibration_drift_stream" -> q326 _,
-    "q327_calib_bins_drift" -> q327 _,
-    "q328_model_lang_gate" -> q328 _,
-    "q329_q16_supplier_cnt" -> q329 _,
-    "q330_q15_top_supplier" -> q330 _,
-    "q331_q11_important_parts" -> q331 _,
-    "q332_url_frontier_stream" -> q332 _,
-    "q333_q7_trade_volume" -> q333 _,
-    "q334_q19_disjunctive_revenue" -> q334 _,
-    "q335_qbin_quantiles" -> q335 _,
-    "q336_qbin_stream" -> q336 _,
-    "q337_qbin_by_source" -> q337 _,
-    "q338_charngram_lang_gate" -> q338 _,
-    "q339_q4_order_priority" -> q339 _,
-    "q340_q8_market_share" -> q340 _,
-    "q341_q9_profit" -> q341 _,
-    "q342_qbin_by_source_stream" -> q342 _,
-    "q343_erase_keys" -> q343 _,
-    "q344_erase_then_expire" -> q344 _,
-    "q345_q3_shipping_priority" -> q345 _,
-    "q346_q6_forecast_revenue" -> q346 _,
-    "q347_q10_returned_items" -> q347 _,
-    "q348_q12_shipmode_priority" -> q348 _,
-    "q349_q14_promo_revenue" -> q349 _,
-    "q350_lake_pruned_scan" -> q350 _,
-    "q351_lake_erase" -> q351 _,
-    "q352_lake_schema_evolution" -> q352 _,
-    "q353_lake_compact" -> q353 _,
-    "q354_lake_incremental" -> q354 _,
-    "q355_lake_zorder_scan" -> q355 _,
-    "q356_lake_concurrent_land" -> q356 _,
-    "q357_lake_stream_land" -> q357 _)
+  // ——————————————————————————————————————————————————————— oracle helpers
 
   /** q23's oracle is generated: 64 bit-sum columns over md5 16-bit chunks,
     * the exact construction of [[Dedup.simhashPortable]] restated in
@@ -10645,13 +10315,1407 @@ object SparkEntry {
             CAST(c.i - c.start + 1 AS INT))) AS chash
         FROM ch c JOIN base b ON c.doc_id = b.doc_id)"""
 
-  // Oracle SQL (DuckDB) — identical aliases / types / ordering; see the
-  // determinism rules at the top of this object.
-  def oracleSql: Map[String, String] = Map(
-    "q102_funnel_n" -> q102Oracle,
-    "q101_pagerank" -> q101Oracle,
-    "q121_personalized_pagerank" -> q121Oracle,
-    "q122_cohort_retention" -> """
+  // ————————————————————————————————————————————————————————— the contract
+
+  /** Every query once, in query-number order (Bench's headline and extra
+    * lists keep that order). Oracle SQL keeps identical aliases / types /
+    * ordering; see the determinism rules at the top of this object. Lazy,
+    * so no entry reads an oracle helper val before that val is set.
+    */
+  lazy val registry: Seq[Q] = Seq(
+    Q("q01_pricing_summary", q01, Headline, """
+      SELECT l_returnflag, l_linestatus,
+        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
+        CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
+        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / count(*) AS avg_qty,
+        CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_disc,
+        count(*) AS count_order
+      FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+      GROUP BY l_returnflag, l_linestatus
+      ORDER BY l_returnflag, l_linestatus"""),
+    Q("q02_filter_pushdown", q02, Unbenched, """
+      SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
+        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
+      ORDER BY l_orderkey, l_linenumber"""),
+    Q("q03_star_join_revenue", q03, Headline, """
+      SELECT r_name, n_name,
+        CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue,
+        count(DISTINCT o_orderkey) AS n_orders
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN customer ON o_custkey = c_custkey
+      JOIN nation ON c_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      GROUP BY r_name, n_name ORDER BY r_name, n_name"""),
+    Q("q04_left_join_enrich", q04, Unbenched, """
+      SELECT o_orderkey, o_totalprice,
+        coalesce(c_name, 'Indefinido') AS cust_name,
+        coalesce(c_mktsegment, 'Indefinido') AS mktsegment
+      FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+      ORDER BY o_orderkey"""),
+    Q("q05_anti_join_orders", q05, Headline, """
+      SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
+      WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+      ORDER BY o_orderkey"""),
+    Q("q06_semi_join_suppliers", q06, Unbenched, """
+      SELECT s_suppkey, s_name FROM supplier
+      WHERE EXISTS (SELECT 1 FROM lineitem
+                    WHERE l_suppkey = s_suppkey AND l_quantity > 45)
+      ORDER BY s_suppkey"""),
+    Q("q07_distinct_segments", q07, Unbenched, """
+      SELECT DISTINCT c_nationkey, c_mktsegment FROM customer
+      ORDER BY c_nationkey, c_mktsegment"""),
+    Q("q08_rollup_acctbal", q08, Unbenched, """
+      SELECT coalesce(c_mktsegment, '(all)') AS mktsegment,
+        coalesce(c_nationkey, -1) AS nationkey,
+        count(*) AS n_cust,
+        CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_acctbal,
+        CAST(GROUPING(c_mktsegment, c_nationkey) AS BIGINT) AS gid
+      FROM customer GROUP BY ROLLUP(c_mktsegment, c_nationkey)
+      ORDER BY gid, mktsegment, nationkey"""),
+    Q("q09_cube_orders", q09, Unbenched, """
+      SELECT coalesce(o_orderpriority, '(all)') AS priority,
+        coalesce(o_orderstatus, '(all)') AS status,
+        count(*) AS n_orders,
+        CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_total
+      FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)
+      ORDER BY priority, status"""),
+    Q("q10_latest_event_per_user", q10, Headline, """
+      SELECT user_id, event_id, event_type, value FROM events
+      QUALIFY row_number() OVER (PARTITION BY user_id
+        ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) = 1
+      ORDER BY user_id"""),
+    Q("q11_running_totals", q11, Headline, """
+      SELECT user_id, event_id,
+        CAST(row_number() OVER w AS BIGINT) AS rn,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id
+          ORDER BY CAST(ts AS TIMESTAMP), event_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
+      ORDER BY user_id, rn"""),
+    Q("q12_union_nationkeys", q12, Unbenched, """
+      SELECT c_nationkey AS nationkey FROM customer
+      UNION SELECT s_nationkey FROM supplier ORDER BY nationkey"""),
+    Q("q13_except_orderkeys", q13, Unbenched, """
+      SELECT o_orderkey AS orderkey FROM orders
+      EXCEPT SELECT l_orderkey FROM lineitem ORDER BY orderkey"""),
+    Q("q14_topk_lineitems", q14, Headline, """
+      SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
+      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100"""),
+    Q("q15_sanitize_extract", q15, Unbenched, """
+      SELECT event_id,
+        coalesce(TRY_CAST(regexp_extract(
+          regexp_replace(props, '"(-?INF|NaN)"', 'null', 'g'),
+          '"k":\s*(-?\d+)', 1) AS BIGINT), -1) AS k_val
+      FROM events ORDER BY event_id"""),
+    Q("q16_period_rollup", q16, Headline, """
+      SELECT CAST(year(l_shipdate) AS BIGINT) AS ano_ref,
+        CAST(month(l_shipdate) AS BIGINT) AS mes_ref,
+        strftime(make_date(CAST(year(l_shipdate) AS INT), CAST(month(l_shipdate) AS INT), 1), '%Y-%m-%d') AS data_competencia,
+        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+        count(*) AS n_items
+      FROM lineitem GROUP BY 1, 2, 3 ORDER BY ano_ref, mes_ref"""),
+    Q("q17_grouping_sets", q17, Unbenched, """
+      SELECT coalesce(r_name, '(all)') AS region_name,
+        coalesce(n_name, '(all)') AS nation_name,
+        count(*) AS n_cust,
+        CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_acctbal
+      FROM customer
+      JOIN nation ON c_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      GROUP BY GROUPING SETS ((r_name, n_name), (r_name), ())
+      ORDER BY region_name NULLS FIRST, nation_name NULLS FIRST"""),
+    Q("q18_incremental_antijoin", q18, Unbenched, """
+      SELECT event_id, user_id, event_type FROM events e
+      WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-10' AND NOT EXISTS (
+        SELECT 1 FROM events h
+        WHERE CAST(h.ts AS TIMESTAMP) < TIMESTAMP '2024-01-10'
+          AND h.user_id = e.user_id AND h.event_type = e.event_type)
+      ORDER BY event_id"""),
+    Q("q19_conform_schema", q19, Unbenched, """
+      SELECT CAST(event_id AS BIGINT) AS event_id,
+        coalesce(event_type, 'Indefinido') AS event_type,
+        coalesce(TRY_CAST(value AS DOUBLE), 0.0) AS value,
+        CAST(0 AS BIGINT) AS missing_col
+      FROM events ORDER BY event_id"""),
+    Q("q20_dedup_exact", q20, Unbenched, """
+      SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
+        count(*) AS n_copies
+      FROM documents GROUP BY md5(text) ORDER BY keep_id"""),
+    Q("q21_minhash_lsh_pairs", q21, Headline, """
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      sh AS (
+        SELECT doc_id, list_distinct([array_to_string(tk[i:i+2], ' ')
+          for i in range(1, len(tk) - 1)]) AS s
+        FROM toks WHERE len(tk) >= 3),
+      sig AS (
+        SELECT doc_id, s,
+          flatten([[list_min([md5(CAST(sd AS VARCHAR) || '|' || x)[j*4+1 : j*4+4]
+            for x in s]) for j in range(0, 8)] for sd in range(0, 2)]) AS sg
+        FROM sh),
+      banded AS (
+        SELECT doc_id, s, band,
+          md5(array_to_string(sg[band*4+1:band*4+4], '|')) AS bucket
+        FROM sig, range(0, 4) r(band)),
+      cand AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          first(a.s) AS sa, first(b.s) AS sb
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id)
+      SELECT id_a, id_b,
+        round(CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
+              CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE), 4) AS jaccard
+      FROM cand
+      WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
+            CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE) >= 0.5
+      ORDER BY id_a, id_b"""),
+    Q("q22_jaccard_pairs_topk", q22, Headline, """
+      WITH sh AS (
+        SELECT doc_id, lang, source,
+          list_distinct([array_to_string(tk[i:i+2], ' ')
+            for i in range(1, len(tk) - 1)]) AS s
+        FROM (SELECT doc_id, lang, source,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents)
+        WHERE len(tk) >= 3),
+      pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+          CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS j
+        FROM sh a JOIN sh b
+          ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
+      SELECT id_a, id_b, round(j, 4) AS jaccard FROM pairs
+      ORDER BY j DESC, id_a, id_b LIMIT 100"""),
+    Q("q23_simhash", q23, Unbenched, q23Oracle),
+    Q("q24_cosine_pairs_topk", q24, Headline, """
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+          CAST(b.embedding AS DOUBLE[])), 4) AS cosine
+      FROM embeddings a JOIN embeddings b
+        ON a.label = b.label AND a.vec_id < b.vec_id
+      ORDER BY round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+        CAST(b.embedding AS DOUBLE[])), 6) DESC, id_a, id_b
+      LIMIT 100"""),
+    Q("q25_ann_bruteforce_topk", q25, Headline, """
+      WITH scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
+          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+            CAST(c.embedding AS DOUBLE[])) AS cos
+        FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
+        WHERE q.vec_id < 10)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
+      FROM scored
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q26_ann_lsh_topk", q26, Headline, """
+      WITH b AS (
+        SELECT vec_id, embedding,
+          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END +
+           CASE WHEN embedding[9] >= 0 THEN 2 ELSE 0 END +
+           CASE WHEN embedding[17] >= 0 THEN 4 ELSE 0 END +
+           CASE WHEN embedding[25] >= 0 THEN 8 ELSE 0 END +
+           CASE WHEN embedding[33] >= 0 THEN 16 ELSE 0 END) AS bucket
+        FROM embeddings),
+      probes AS (
+        SELECT vec_id, embedding,
+          unnest([xor(bucket, m) FOR m IN
+            [0, 1, 2, 4, 8, 16, 3, 5, 9, 17, 6, 10, 18, 12, 20, 24]]) AS pb
+        FROM b WHERE vec_id < 10),
+      scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
+          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+            CAST(c.embedding AS DOUBLE[])) AS cos
+        FROM probes q JOIN b c ON q.pb = c.bucket AND c.vec_id != q.vec_id)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
+      FROM scored
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q27_lang_detect", q27, Unbenched, """
+      WITH sc AS (
+        SELECT lang,
+          len(list_filter(tk, t -> t IN ('the','a','of','and','to'))) AS s_en,
+          len(list_filter(tk, t -> t IN ('el','la','de','que','y'))) AS s_es,
+          len(list_filter(tk, t -> t IN ('le','la','de','et','un'))) AS s_fr,
+          len(list_filter(tk, t -> t IN ('der','die','und','das','ein'))) AS s_de,
+          len(list_filter(tk, t -> t IN ('的','了','是','我','不'))) AS s_zh
+        FROM (SELECT lang,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents)),
+      pred AS (
+        SELECT lang, CASE
+          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0 THEN 'en'
+          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0 THEN 'es'
+          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0 THEN 'fr'
+          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0 THEN 'de'
+          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0 THEN 'zh'
+          ELSE 'und' END AS lang_pred
+        FROM sc)
+      SELECT lang, lang_pred, count(*) AS n FROM pred
+      GROUP BY lang, lang_pred ORDER BY lang, lang_pred"""),
+    Q("q28_quality_scores", q28, Headline, """
+      WITH f AS (
+        SELECT doc_id,
+          CAST(len(tk) AS DOUBLE) AS nt,
+          CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
+          CAST(len(text) AS DOUBLE) AS chars,
+          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha,
+          len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS nsw
+        FROM (SELECT doc_id, text,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents))
+      SELECT doc_id,
+        CAST(nt AS BIGINT) AS n_tokens,
+        CAST(nsw AS BIGINT) AS n_subwords,
+        round(nd / nullif(nt, 0.0), 4) AS distinct_ratio,
+        round((chars - (nt - 1)) / nullif(nt, 0.0), 4) AS mean_token_len,
+        round(alpha / nullif(chars, 0.0), 4) AS alpha_ratio,
+        round(least(greatest(
+          0.4 * least(nt / 50.0, 1.0) +
+          0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
+          0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
+      FROM f ORDER BY doc_id"""),
+    Q("q29_token_stats_by_lang", q29, Unbenched, """
+      WITH f AS (
+        SELECT lang,
+          len(regexp_split_to_array(trim(lower(text)), '\s+')) AS nt,
+          len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS ns
+        FROM documents)
+      SELECT lang, count(*) AS n_docs,
+        CAST(sum(nt) AS BIGINT) AS total_tokens,
+        round(CAST(sum(nt) AS DOUBLE) / count(*), 4) AS avg_tokens,
+        CAST(sum(ns) AS BIGINT) AS total_subwords
+      FROM f GROUP BY lang ORDER BY lang"""),
+    Q("q30_fingerprint", q30, Unbenched, """
+      SELECT doc_id, md5(array_to_string(list_sort(list_distinct(
+        regexp_split_to_array(trim(lower(text)), '\s+'))), ' ')) AS fingerprint
+      FROM documents ORDER BY doc_id"""),
+    Q("q31_stream_window_hourly", q31, Unbenched, """
+      SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS hour_epoch,
+        event_type, count(*) AS n_events,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      FROM events GROUP BY 1, 2 ORDER BY hour_epoch, event_type"""),
+    Q("q32_sessionize", q32, Headline, sessionizeOracle),
+    Q("q33_asset_metadata", q33, Unbenched, """
+      SELECT doc_id AS asset_id,
+        CASE WHEN doc_id % 3 = 0 THEN 'image'
+             WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
+        source, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
+        md5(text) AS content_hash
+      FROM documents ORDER BY asset_id"""),
+    Q("q34_frame_sample", q34, Unbenched, """
+      WITH v AS (
+        SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
+        FROM documents WHERE doc_id % 3 = 2),
+      f AS (
+        SELECT doc_id, least(CAST(floor(byte_len / 64.0) AS BIGINT) + 1, 40) AS n_frames
+        FROM v)
+      SELECT doc_id AS asset_id, CAST(unnest(range(0, n_frames, 10)) AS BIGINT) AS frame_idx
+      FROM f ORDER BY asset_id, frame_idx"""),
+    Q("q35_decode_stats", q35, Unbenched, """
+      WITH d AS (
+        SELECT doc_id,
+          CAST(64 + (('0x'||substring(md5(text),1,8))::BIGINT % 1856) AS INTEGER) AS width,
+          CAST(64 + (('0x'||substring(md5(text),9,8))::BIGINT % 1016) AS INTEGER) AS height
+        FROM documents)
+      SELECT doc_id AS asset_id, width, height, CAST(3 AS INTEGER) AS channels,
+        round(CAST(width AS DOUBLE) / CAST(height AS DOUBLE), 4) AS aspect,
+        (width > 1024 OR height > 1024) AS needs_resize,
+        CAST(width AS BIGINT) * height AS pixels,
+        CAST(floor(CAST(width AS DOUBLE) *
+          CASE WHEN greatest(width, height) <= 1024 THEN CAST(1.0 AS DOUBLE)
+            ELSE CAST(1024 AS DOUBLE) / CAST(greatest(width, height) AS DOUBLE)
+          END) AS INTEGER) AS out_width,
+        CAST(floor(CAST(height AS DOUBLE) *
+          CASE WHEN greatest(width, height) <= 1024 THEN CAST(1.0 AS DOUBLE)
+            ELSE CAST(1024 AS DOUBLE) / CAST(greatest(width, height) AS DOUBLE)
+          END) AS INTEGER) AS out_height
+      FROM d ORDER BY asset_id"""),
+    Q("q36_stream_window_agg", q36, Unbenched, """
+      SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS hour_epoch,
+        event_type, count(*) AS n_events,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      FROM events GROUP BY 1, 2 ORDER BY hour_epoch, event_type"""),
+    Q("q37_ann_ivf_topk", q37, Unbenched, """
+      WITH cent AS (
+        SELECT label AS cell, embedding AS cvec FROM embeddings
+        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
+      assign AS (
+        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
+        FROM embeddings e CROSS JOIN cent c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) = 1),
+      q AS (SELECT item_id AS query_id, vec AS qvec, cell
+            FROM assign WHERE item_id < 10),
+      scored AS (
+        SELECT q.query_id, a.item_id,
+          list_cosine_similarity(CAST(q.qvec AS DOUBLE[]),
+            CAST(a.vec AS DOUBLE[])) AS cos
+        FROM assign a JOIN q ON a.cell = q.cell AND a.item_id != q.query_id)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
+      FROM scored
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q38_token_frequency", q38, Unbenched, """
+      WITH toks AS (
+        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
+        FROM documents)
+      SELECT token, count(*) AS n_occurrences,
+        count(DISTINCT doc_id) AS doc_freq
+      FROM toks GROUP BY token
+      ORDER BY n_occurrences DESC, token LIMIT 50"""),
+    Q("q39_length_histogram", q39, Unbenched, """
+      SELECT lang, CAST(floor(n_chars / 100.0) AS BIGINT) AS len_bucket,
+        count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
+      FROM documents GROUP BY 1, 2 ORDER BY lang, len_bucket"""),
+    Q("q40_stateful_user_totals", q40, Unbenched, """
+      SELECT user_id, count(*) AS n,
+        round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 4) AS total
+      FROM events GROUP BY user_id ORDER BY user_id"""),
+    Q("q41_asof_click_attribution", q41, Extra, """
+      WITH clicks AS (
+        SELECT user_id, CAST(ts AS TIMESTAMP) AS cts, max(event_id) AS click_id
+        FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      p AS (
+        SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts
+        FROM events WHERE event_type = 'purchase')
+      SELECT p.event_id, p.user_id,
+        coalesce(c.click_id, -1) AS click_id,
+        coalesce(epoch_us(p.pts) - epoch_us(c.cts), -1) AS gap_us
+      FROM p ASOF LEFT JOIN clicks c
+        ON p.user_id = c.user_id AND p.pts >= c.cts
+      ORDER BY event_id"""),
+    Q("q42_range_prior_clicks", q42, Unbenched, """
+      SELECT p.event_id, p.user_id,
+        count(c.cts) AS n_prior_clicks,
+        coalesce(CAST(sum(CAST(c.value AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_click_value
+      FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts
+            FROM events WHERE event_type = 'purchase') p
+      LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS cts, value
+                 FROM events WHERE event_type = 'click') c
+        ON c.user_id = p.user_id
+          AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts < p.pts
+      GROUP BY p.event_id, p.user_id
+      ORDER BY event_id"""),
+    Q("q43_interval_join_binned", q43, Unbenched, """
+      WITH iv AS (
+        SELECT event_id AS interval_id,
+          CAST(ts AS TIMESTAMP) - INTERVAL 5 MINUTE AS lo,
+          CAST(ts AS TIMESTAMP) + INTERVAL 5 MINUTE AS hi
+        FROM events WHERE event_type = 'error' AND user_id < 10),
+      pt AS (SELECT CAST(ts AS TIMESTAMP) AS ts, value
+             FROM events WHERE event_type = 'view')
+      SELECT iv.interval_id,
+        count(pt.ts) AS n_views,
+        coalesce(CAST(sum(CAST(pt.value AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_view_value
+      FROM iv LEFT JOIN pt ON pt.ts >= iv.lo AND pt.ts < iv.hi
+      GROUP BY iv.interval_id ORDER BY interval_id"""),
+    Q("q44_asof_native", q44, Extra, """
+      WITH clicks AS (
+        SELECT user_id, CAST(ts AS TIMESTAMP) AS cts, max(event_id) AS click_id
+        FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      p AS (
+        SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts
+        FROM events WHERE event_type = 'purchase')
+      SELECT p.event_id, p.user_id,
+        coalesce(c.click_id, -1) AS click_id,
+        coalesce(epoch_us(p.pts) - epoch_us(c.cts), -1) AS gap_us
+      FROM p ASOF LEFT JOIN clicks c
+        ON p.user_id = c.user_id AND p.pts >= c.cts
+      ORDER BY event_id"""),
+    Q("q45_stream_distinct_types", q45, Unbenched, """
+      SELECT user_id, count(DISTINCT event_type) AS n_types
+      FROM events GROUP BY user_id ORDER BY user_id"""),
+    Q("q46_percentiles", q46, Unbenched, """
+      SELECT event_type,
+        round(quantile_cont(value, 0.5), 4) AS p50,
+        round(quantile_cont(value, 0.95), 4) AS p95,
+        round(min(value), 4) AS vmin,
+        round(max(value), 4) AS vmax
+      FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q47_window_suite", q47, Unbenched, """
+      SELECT user_id, event_id,
+        lag(event_id, 1, -1) OVER w AS prev_event,
+        lead(event_id, 1, -1) OVER w AS next_event,
+        first_value(event_id) OVER wall AS first_event,
+        last_value(event_id) OVER wall AS last_event,
+        CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+        round(percent_rank() OVER w, 6) AS pct_rank,
+        CAST(dense_rank() OVER w AS BIGINT) AS drank
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id),
+        wall AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+      ORDER BY user_id, event_id"""),
+    Q("q48_scalar_suite", q48, Unbenched, """
+      SELECT c_custkey,
+        levenshtein(c_name, 'Customer#000000001') AS edit_dist,
+        translate(lower(c_mktsegment), 'aeiou', '_____') AS seg_masked,
+        lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS key_padded,
+        substring(c_name, -4, 4) AS name_tail,
+        array_to_string(string_split(c_mktsegment, 'U'), '|') AS seg_split,
+        greatest(c_acctbal, 0.0) AS bal_floor,
+        CASE WHEN c_acctbal < 0 THEN 'overdrawn'
+             WHEN c_acctbal < 1000 THEN 'low' ELSE 'ok' END AS bal_band,
+        CAST(length(c_name) AS BIGINT) AS name_len
+      FROM customer ORDER BY c_custkey"""),
+    Q("q49_kmeans_iteration", q49, Extra, """
+      WITH cent AS (
+        SELECT label AS cell, embedding AS cvec FROM embeddings
+        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
+      assign AS (
+        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
+        FROM embeddings e CROSS JOIN cent c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) = 1),
+      dims AS (
+        SELECT cell, generate_subscripts(vec, 1) AS pos, unnest(vec) AS val
+        FROM assign),
+      avgs AS (
+        SELECT cell, pos,
+          CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS DOUBLE) / count(*) AS avg_val
+        FROM dims GROUP BY cell, pos),
+      norms AS (
+        SELECT cell,
+          sqrt(CAST(sum(CAST(avg_val * avg_val AS DECIMAL(27,12))) AS DOUBLE)) AS centroid_norm
+        FROM avgs GROUP BY cell),
+      members AS (SELECT cell, count(*) AS n_members FROM assign GROUP BY cell)
+      SELECT m.cell AS cell, m.n_members AS n_members,
+        round(n.centroid_norm, 6) AS centroid_norm
+      FROM members m JOIN norms n ON m.cell = n.cell ORDER BY m.cell"""),
+    Q("q50_tfidf_topk", q50, Unbenched, """
+      WITH toks AS (
+        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
+        FROM documents),
+      tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
+      ntok AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tok FROM tf GROUP BY 1),
+      dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
+      nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM toks),
+      scored AS (
+        SELECT t.doc_id AS doc_id, t.token AS token,
+          (CAST(t.tf AS DOUBLE) / CAST(n.n_tok AS DOUBLE)) *
+          (CAST(nd.n_docs AS DOUBLE) / CAST(d.df AS DOUBLE)) AS score
+        FROM tf t JOIN ntok n ON t.doc_id = n.doc_id
+        JOIN dfreq d ON t.token = d.token CROSS JOIN nd)
+      SELECT doc_id, token,
+        CAST(row_number() OVER w AS BIGINT) AS rank,
+        round(score, 4) AS tfidf
+      FROM scored
+      WINDOW w AS (PARTITION BY doc_id ORDER BY round(score, 6) DESC, token)
+      QUALIFY rank <= 3
+      ORDER BY doc_id, rank"""),
+    Q("q51_variant_extract", q51, Unbenched, """
+      SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k_val, count(*) AS n
+      FROM events GROUP BY 1 ORDER BY k_val"""),
+    Q("q52_dedup_groups", q52, Extra,
+      s"""$q52CompCte
+      SELECT id, component FROM comp ORDER BY id"""),
+    Q("q53_sliding_window", q53, Unbenched, """
+      WITH c AS (
+        SELECT event_type, value,
+          unnest([time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP)),
+                  time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP))
+                    - INTERVAL 30 MINUTE]) AS wstart
+        FROM events)
+      SELECT CAST(epoch(wstart) AS BIGINT) AS win_start, event_type,
+        count(*) AS n_events,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      FROM c GROUP BY 1, 2 ORDER BY win_start, event_type"""),
+    Q("q54_simhash_neighbors", q54, Unbenched, q54Oracle),
+    Q("q55_train_test_split", q55, Unbenched, """
+      WITH b AS (
+        SELECT lang, n_chars,
+          ('0x'||substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bk
+        FROM documents)
+      SELECT lang,
+        CASE WHEN bk < 80 THEN 'train' WHEN bk < 90 THEN 'val'
+          ELSE 'test' END AS split,
+        count(*) AS n_docs,
+        CAST(sum(n_chars) AS BIGINT) AS total_chars
+      FROM b GROUP BY 1, 2 ORDER BY lang, split"""),
+    Q("q56_unpivot_measures", q56, Unbenched, """
+      SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
+        l_quantity AS val FROM lineitem WHERE l_orderkey < 1000
+      UNION ALL
+      SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
+      FROM lineitem WHERE l_orderkey < 1000
+      UNION ALL
+      SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
+      FROM lineitem WHERE l_orderkey < 1000
+      ORDER BY l_orderkey, l_linenumber, measure"""),
+    Q("q57_pivot_lang_counts", q57, Unbenched, """
+      SELECT source,
+        count(*) FILTER (WHERE lang = 'de') AS de,
+        count(*) FILTER (WHERE lang = 'en') AS en,
+        count(*) FILTER (WHERE lang = 'es') AS es,
+        count(*) FILTER (WHERE lang = 'fr') AS fr,
+        count(*) FILTER (WHERE lang = 'zh') AS zh
+      FROM documents GROUP BY source ORDER BY source"""),
+    Q("q58_intersect_nations", q58, Unbenched, """
+      SELECT c_nationkey AS nationkey FROM customer
+      INTERSECT SELECT s_nationkey FROM supplier ORDER BY nationkey"""),
+    Q("q59_correlated_subquery", q59, Unbenched, """
+      SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS totalprice
+      FROM orders o
+      WHERE o_totalprice > 2 * (
+        SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+               / count(*)
+        FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+      ORDER BY o_orderkey"""),
+    Q("q60_multi_distinct", q60, Unbenched, """
+      SELECT event_type,
+        count(DISTINCT user_id) AS n_users,
+        count(DISTINCT event_id) AS n_events,
+        count(*) AS n_rows
+      FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q61_filter_having", q61, Unbenched, """
+      SELECT user_id,
+        count(*) FILTER (WHERE event_type = 'click') AS n_clicks,
+        count(*) FILTER (WHERE event_type = 'purchase') AS n_purchases,
+        count(*) AS n_total
+      FROM events
+      GROUP BY user_id
+      HAVING count(*) FILTER (WHERE event_type = 'purchase') >= 10
+      ORDER BY user_id"""),
+    Q("q62_ann_multiprobe_topk", q62, Unbenched, """
+      WITH b AS (
+        SELECT vec_id, embedding,
+          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END +
+           CASE WHEN embedding[9] >= 0 THEN 2 ELSE 0 END +
+           CASE WHEN embedding[17] >= 0 THEN 4 ELSE 0 END +
+           CASE WHEN embedding[25] >= 0 THEN 8 ELSE 0 END +
+           CASE WHEN embedding[33] >= 0 THEN 16 ELSE 0 END) AS bucket
+        FROM embeddings),
+      probes AS (
+        SELECT vec_id, embedding,
+          unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4),
+                  xor(bucket, 8), xor(bucket, 16)]) AS pb
+        FROM b WHERE vec_id < 10),
+      scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
+          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+            CAST(c.embedding AS DOUBLE[])) AS cos
+        FROM probes q JOIN b c ON q.pb = c.bucket AND c.vec_id != q.vec_id)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
+      FROM scored
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q63_stratified_sample", q63, Extra, raw"""
+      SELECT doc_id, lang, source FROM documents
+      WHERE ${hashPosSql("lang", "CAST(doc_id AS VARCHAR)")}
+            < 1073741824
+      ORDER BY doc_id"""),
+    Q("q64_kmeans_two_iterations", q64, Unbenched, """
+      WITH cent0 AS (
+        SELECT label AS cell, CAST(embedding AS DOUBLE[]) AS cvec FROM embeddings
+        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
+      assign1 AS (
+        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
+        FROM embeddings e CROSS JOIN cent0 c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            c.cvec), 6) DESC, c.cell) = 1),
+      dims1 AS (
+        SELECT cell, generate_subscripts(vec, 1) AS pos, unnest(vec) AS val
+        FROM assign1),
+      avgs1 AS (
+        SELECT cell, pos,
+          CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS DOUBLE) / count(*) AS avg_val
+        FROM dims1 GROUP BY cell, pos),
+      cent1 AS (
+        SELECT cell, list(avg_val ORDER BY pos) AS cvec FROM avgs1 GROUP BY cell),
+      assign2 AS (
+        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
+        FROM embeddings e CROSS JOIN cent1 c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            c.cvec), 6) DESC, c.cell) = 1),
+      dims2 AS (
+        SELECT cell, generate_subscripts(vec, 1) AS pos, unnest(vec) AS val
+        FROM assign2),
+      avgs2 AS (
+        SELECT cell, pos,
+          CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS DOUBLE) / count(*) AS avg_val
+        FROM dims2 GROUP BY cell, pos),
+      norms AS (
+        SELECT cell,
+          sqrt(CAST(sum(CAST(avg_val * avg_val AS DECIMAL(27,12))) AS DOUBLE)) AS centroid_norm
+        FROM avgs2 GROUP BY cell),
+      members AS (SELECT cell, count(*) AS n_members FROM assign2 GROUP BY cell)
+      SELECT m.cell AS cell, m.n_members AS n_members,
+        round(n.centroid_norm, 6) AS centroid_norm
+      FROM members m JOIN norms n ON m.cell = n.cell ORDER BY m.cell"""),
+    Q("q65_cap_per_stratum", q65, Unbenched, raw"""
+      SELECT doc_id, source, lang FROM documents
+      QUALIFY row_number() OVER (PARTITION BY source
+        ORDER BY ${hashPosSql("source", "CAST(doc_id AS VARCHAR)")},
+          doc_id) <= 10
+      ORDER BY doc_id"""),
+    Q("q66_decontaminate", q66, Extra, q66Oracle),
+    Q("q67_sequence_packing", q67, Extra, """
+      WITH f AS (
+        SELECT doc_id, lang,
+          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens
+        FROM documents),
+      c AS (
+        SELECT doc_id, lang, n_tokens,
+          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+        FROM f)
+      SELECT doc_id, lang, n_tokens, cum_tokens,
+        CAST((cum_tokens - n_tokens) // 2048 AS BIGINT) AS bin_id,
+        CAST((cum_tokens - 1) // 2048 AS BIGINT) >
+          CAST((cum_tokens - n_tokens) // 2048 AS BIGINT) AS spans_bins
+      FROM c ORDER BY doc_id"""),
+    Q("q68_salted_agg", q68, Unbenched, """
+      SELECT event_type, count(*) AS n_events,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("q69_dedup_keep_best", q69, Extra, """
+      WITH RECURSIVE toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      sh AS (
+        SELECT doc_id, list_distinct([array_to_string(tk[i:i+2], ' ')
+          for i in range(1, len(tk) - 1)]) AS s
+        FROM toks WHERE len(tk) >= 3),
+      sig AS (
+        SELECT doc_id, s,
+          flatten([[list_min([md5(CAST(sd AS VARCHAR) || '|' || x)[j*4+1 : j*4+4]
+            for x in s]) for j in range(0, 8)] for sd in range(0, 2)]) AS sg
+        FROM sh),
+      banded AS (
+        SELECT doc_id, s, band,
+          md5(array_to_string(sg[band*4+1:band*4+4], '|')) AS bucket
+        FROM sig, range(0, 4) r(band)),
+      cand AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          first(a.s) AS sa, first(b.s) AS sb
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id),
+      edges AS (
+        SELECT id_a, id_b FROM cand
+        WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
+              CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE) >= 0.5),
+      sym AS (
+        SELECT id_a AS s, id_b AS d FROM edges
+        UNION ALL SELECT id_b, id_a FROM edges),
+      reach(id, r) AS (
+        SELECT DISTINCT s, s FROM sym
+        UNION
+        SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s),
+      comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+      qual AS (
+        SELECT doc_id AS id, round(least(greatest(
+          0.4 * least(nt / 50.0, 1.0) +
+          0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
+          0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
+        FROM (SELECT doc_id,
+          CAST(len(tk) AS DOUBLE) AS nt,
+          CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
+          CAST(len(text) AS DOUBLE) AS chars,
+          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha
+          FROM (SELECT doc_id, text,
+            regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents))),
+      ranked AS (
+        SELECT comp.component, comp.id, qual.quality,
+          row_number() OVER (PARTITION BY comp.component
+            ORDER BY qual.quality DESC, comp.id) AS rn
+        FROM comp JOIN qual ON comp.id = qual.id)
+      SELECT component, max(CASE WHEN rn = 1 THEN id END) AS keep_id,
+        count(*) AS n_docs,
+        max(CASE WHEN rn = 1 THEN quality END) AS best_quality
+      FROM ranked GROUP BY component ORDER BY component"""),
+    Q("q70_stream_range_join", q70, Unbenched, """
+      SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
+        epoch_us(CAST(p.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP)) AS gap_us
+      FROM events p JOIN events c
+        ON c.user_id = p.user_id
+       AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR
+       AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
+      WHERE p.event_type = 'purchase' AND c.event_type = 'click'
+      ORDER BY purchase_id, click_id"""),
+    Q("q71_salted_join", q71, Extra, """
+      SELECT c_mktsegment, count(*) AS n_orders,
+        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      GROUP BY 1 ORDER BY c_mktsegment"""),
+    Q("q72_pii_redaction", q72, Unbenched, """
+      WITH inj AS (
+        SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR)
+          || '@example.com from host 10.0.' || CAST(doc_id % 256 AS VARCHAR)
+          || '.7 or call +1415555' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
+        FROM documents)
+      SELECT doc_id,
+        CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        CAST(len(regexp_extract_all(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
+        CAST(len(regexp_extract_all(t, '\+\d{7,15}\b')) AS BIGINT) AS n_phones,
+        md5(regexp_replace(regexp_replace(regexp_replace(t,
+          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
+          '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
+          '\+\d{7,15}\b', '[PHONE]', 'g')) AS redacted_hash
+      FROM inj ORDER BY doc_id"""),
+    Q("q73_repetition_stats", q73, Extra, """
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+        FROM documents),
+      tg AS (
+        SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 2),
+          i -> array_to_string(t[i:i+2], ' '))) AS gram
+        FROM toks WHERE len(t) >= 3),
+      cnt AS (SELECT doc_id, gram, count(*) AS c FROM tg GROUP BY 1, 2)
+      SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams, count(*) AS n_distinct,
+        CAST(max(c) AS BIGINT) AS top_count,
+        round(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 4) AS top_frac
+      FROM cnt GROUP BY doc_id ORDER BY doc_id"""),
+    Q("q74_incremental_dedup", q74, Extra, q74Oracle),
+    Q("q75_quality_quantile_filter", q75, Unbenched, """
+      WITH f AS (
+        SELECT doc_id, lang,
+          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS DOUBLE) AS nt,
+          CAST(len(list_distinct(regexp_split_to_array(trim(lower(text)), '\s+'))) AS DOUBLE) AS nd,
+          CAST(len(text) AS DOUBLE) AS chars,
+          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha
+        FROM documents),
+      q AS (
+        SELECT doc_id, lang,
+          round(least(greatest(
+            0.4 * least(nt / 50.0, 1.0) +
+            0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
+            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
+        FROM f),
+      thr AS (SELECT lang, quantile_cont(quality, 0.25) AS t FROM q GROUP BY lang)
+      SELECT doc_id, q.lang, quality
+      FROM q JOIN thr ON q.lang IS NOT DISTINCT FROM thr.lang
+      WHERE quality >= t ORDER BY doc_id"""),
+    Q("q76_deterministic_shards", q76, Extra, raw"""
+      WITH k AS (
+        SELECT doc_id,
+          ${hashPosSql("'shard'", "CAST(doc_id AS VARCHAR)")} AS key
+        FROM documents),
+      r AS (
+        SELECT doc_id,
+          row_number() OVER (ORDER BY key, doc_id) - 1 AS rn,
+          count(*) OVER () AS n
+        FROM k)
+      SELECT doc_id, CAST(rn AS BIGINT) AS rn,
+        CAST((rn * 8) // n AS BIGINT) AS shard
+      FROM r ORDER BY doc_id"""),
+    Q("q77_weighted_mix", q77, Unbenched, raw"""
+      WITH w AS (
+        SELECT doc_id, lang,
+          CASE lang WHEN 'en' THEN 2.5 WHEN 'fr' THEN 1.5 WHEN 'de' THEN 1.0
+                    WHEN 'es' THEN 0.25 ELSE 0.0 END AS wt,
+          ${hashPosSql("lang", "CAST(doc_id AS VARCHAR)")} AS h
+        FROM documents),
+      c AS (
+        SELECT doc_id, lang,
+          CAST(floor(wt) AS BIGINT) +
+            CASE WHEN h < CAST(floor((wt - floor(wt)) * 4294967296.0) AS BIGINT)
+                 THEN 1 ELSE 0 END AS copies
+        FROM w)
+      SELECT doc_id, lang, unnest(generate_series(0, copies - 1)) AS copy
+      FROM c WHERE copies > 0
+      ORDER BY doc_id, copy"""),
+    Q("q78_nfc_normalize", q78, Unbenched, """
+      WITH inj AS (
+        SELECT doc_id, text || ' cafe' || chr(769) || ' A' || chr(778) AS t
+        FROM documents)
+      SELECT doc_id,
+        CAST(octet_length(encode(t)) AS BIGINT) AS raw_bytes,
+        CAST(octet_length(encode(nfc_normalize(t))) AS BIGINT) AS norm_bytes,
+        nfc_normalize(t) <> t AS changed,
+        md5(nfc_normalize(t)) AS norm_hash
+      FROM inj ORDER BY doc_id"""),
+    Q("q79_packed_sequences", q79, Extra, """
+      WITH f AS (
+        SELECT doc_id, lang, text,
+          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens
+        FROM documents),
+      c AS (
+        SELECT doc_id, lang, text, n_tokens,
+          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        FROM f),
+      b AS (
+        SELECT lang,
+          CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id,
+          doc_id, text, n_tokens
+        FROM c)
+      SELECT lang, bin_id, count(*) AS n_docs,
+        CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
+        md5(string_agg(text, chr(10)||chr(10) ORDER BY doc_id)) AS seq_hash
+      FROM b GROUP BY lang, bin_id ORDER BY lang, bin_id"""),
+    Q("q80_quantize_int8", q80, Unbenched, """
+      WITH v AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        FROM embeddings),
+      s AS (
+        SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS ma
+        FROM v),
+      q AS (
+        SELECT vec_id, ma / 127.0 AS scale,
+          CASE WHEN ma = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
+               ELSE list_transform(e, x -> CAST(round(x / (ma / 127.0)) AS BIGINT))
+          END AS qv
+        FROM s)
+      SELECT vec_id, round(scale, 6) AS scale,
+        CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS q_norm2,
+        md5(array_to_string(qv, ',')) AS q_hash
+      FROM q ORDER BY vec_id"""),
+    Q("q81_column_profile", q81, Unbenched, """
+      SELECT * FROM (
+        SELECT 'lang' AS "column", count(*) AS n_rows, count(lang) AS n_nonnull,
+          count(DISTINCT lang) AS n_distinct,
+          CAST(min(lang) AS VARCHAR) AS min_val,
+          CAST(max(lang) AS VARCHAR) AS max_val
+        FROM documents
+        UNION ALL
+        SELECT 'source', count(*), count(source), count(DISTINCT source),
+          CAST(min(source) AS VARCHAR), CAST(max(source) AS VARCHAR)
+        FROM documents
+        UNION ALL
+        SELECT 'n_chars', count(*), count(n_chars), count(DISTINCT n_chars),
+          CAST(min(n_chars) AS VARCHAR), CAST(max(n_chars) AS VARCHAR)
+        FROM documents)
+      ORDER BY "column""""),
+    Q("q82_passage_dup", q82, Unbenched, """
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+        FROM documents),
+      w0 AS (
+        SELECT doc_id, unnest(list_distinct(list_transform(
+          generate_series(1, len(t) - 7),
+          i -> md5(array_to_string(t[i:i+7], ' '))))) AS h
+        FROM toks WHERE len(t) >= 8),
+      byh AS (SELECT h, count(DISTINCT doc_id) AS nd FROM w0 GROUP BY h),
+      per AS (
+        SELECT doc_id, count(*) AS n_windows,
+          sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS n_shared
+        FROM w0 JOIN byh USING (h) GROUP BY doc_id)
+      SELECT doc_id, CAST(n_windows AS BIGINT) AS n_windows,
+        CAST(n_shared AS BIGINT) AS n_shared,
+        round(CAST(n_shared AS DOUBLE) / CAST(n_windows AS DOUBLE), 4) AS dup_frac
+      FROM per ORDER BY doc_id"""),
+    Q("q83_incremental_agg", q83, Unbenched, """
+      SELECT event_type, count(*) AS n_events,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      FROM events GROUP BY 1 ORDER BY event_type"""),
+    Q("q84_scd2_merge", q84, Unbenched, """
+      WITH cur AS (SELECT c_custkey, c_mktsegment, c_nationkey FROM customer),
+      upd AS (
+        SELECT c_custkey,
+          CASE WHEN c_custkey % 10 = 0 THEN 'MACHINERY' ELSE c_mktsegment END AS c_mktsegment,
+          c_nationkey
+        FROM cur WHERE c_custkey % 97 <> 0
+        UNION ALL
+        SELECT c_custkey + 1000000, 'BUILDING', c_nationkey
+        FROM cur WHERE c_custkey % 101 = 0),
+      j AS (
+        SELECT coalesce(c.c_custkey, u.c_custkey) AS k,
+          c.c_mktsegment AS cs, c.c_nationkey AS cn,
+          u.c_mktsegment AS us, u.c_nationkey AS un,
+          (c.c_custkey IS NOT NULL) AS has_c, (u.c_custkey IS NOT NULL) AS has_u
+        FROM cur c FULL OUTER JOIN upd u ON c.c_custkey = u.c_custkey),
+      ch AS (
+        SELECT *, has_c AND has_u AND
+          (cs IS DISTINCT FROM us OR cn IS DISTINCT FROM un) AS changed
+        FROM j)
+      SELECT k AS c_custkey, cs AS c_mktsegment, cn AS c_nationkey,
+        '1900-01-01' AS valid_from, '2024-02-01' AS valid_to, FALSE AS is_current
+      FROM ch WHERE has_c AND (NOT has_u OR changed)
+      UNION ALL
+      SELECT k, cs, cn, '1900-01-01', '9999-12-31', TRUE
+      FROM ch WHERE has_c AND has_u AND NOT changed
+      UNION ALL
+      SELECT k, us, un, '2024-02-01', '9999-12-31', TRUE
+      FROM ch WHERE has_u AND (NOT has_c OR changed)
+      ORDER BY c_custkey, valid_from"""),
+    Q("q85_vocab_encode", q85, Unbenched, """
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+        FROM documents),
+      pos AS (
+        SELECT doc_id, u.pos, u.tok FROM (
+          SELECT doc_id, unnest(list_transform(generate_series(1, len(t)),
+            i -> {'pos': i, 'tok': t[i]})) AS u
+          FROM toks)),
+      vocab AS (
+        SELECT tok AS token, row_number() OVER (ORDER BY cnt DESC, tok) AS tid
+        FROM (SELECT tok, count(*) AS cnt FROM pos GROUP BY tok
+              ORDER BY cnt DESC, tok LIMIT 100)),
+      enc AS (
+        SELECT p.doc_id, p.pos, coalesce(v.tid, 0) AS tid
+        FROM pos p LEFT JOIN vocab v ON p.tok = v.token)
+      SELECT doc_id, count(*) AS n_tokens,
+        CAST(sum(CASE WHEN tid = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+        md5(string_agg(CAST(tid AS VARCHAR), ',' ORDER BY pos)) AS ids_hash
+      FROM enc GROUP BY doc_id ORDER BY doc_id"""),
+    Q("q86_chunk_stride", q86, Unbenched, """
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+        FROM documents),
+      st AS (
+        SELECT doc_id, t, unnest(generate_series(1, len(t), 32)) AS s
+        FROM toks)
+      SELECT doc_id, CAST((s - 1) / 32 AS BIGINT) AS chunk_id,
+        CAST(len(t[s:s+63]) AS BIGINT) AS n_chunk_tokens,
+        md5(array_to_string(t[s:s+63], ' ')) AS chunk_hash
+      FROM st
+      WHERE s = 1 OR (s - 1) - 32 + 64 < len(t)
+      ORDER BY doc_id, chunk_id"""),
+    Q("q87_corpus_prep", q87, Extra, raw"""
+      WITH f AS (
+        SELECT doc_id, lang, source,
+          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS DOUBLE) AS nt,
+          CAST(len(list_distinct(regexp_split_to_array(trim(lower(text)), '\s+'))) AS DOUBLE) AS nd,
+          CAST(len(text) AS DOUBLE) AS chars,
+          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha
+        FROM documents),
+      q AS (
+        SELECT doc_id, lang, source, CAST(nt AS BIGINT) AS n_tokens,
+          round(least(greatest(
+            0.4 * least(nt / 50.0, 1.0) +
+            0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
+            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
+        FROM f),
+      thr AS (SELECT lang, quantile_cont(quality, 0.25) AS t FROM q GROUP BY lang),
+      kept AS (
+        SELECT q.* FROM q JOIN thr ON q.lang IS NOT DISTINCT FROM thr.lang
+        WHERE quality >= t),
+      ranked AS (
+        SELECT *, row_number() OVER (PARTITION BY source ORDER BY
+          ${hashPosSql("source", "CAST(doc_id AS VARCHAR)")},
+          doc_id) AS rk
+        FROM kept),
+      capped AS (SELECT * FROM ranked WHERE rk <= 20),
+      c AS (
+        SELECT doc_id, lang, n_tokens, quality,
+          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
+            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        FROM capped)
+      SELECT lang,
+        CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id,
+        count(*) AS n_docs,
+        CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
+        CAST(sum(CAST(quality AS DECIMAL(18,4))) AS DOUBLE) AS quality_sum
+      FROM c GROUP BY 1, 2 ORDER BY lang, bin_id"""),
+    Q("q88_hard_negatives", q88, Unbenched, """
+      WITH scored AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
+          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
+            CAST(c.embedding AS DOUBLE[])) AS cos
+        FROM embeddings q JOIN embeddings c ON c.label != q.label
+        WHERE q.vec_id < 10)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
+      FROM scored
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q89_stream_landing", q89, Unbenched, """
+      SELECT event_type, count(*) AS n_events,
+        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      FROM events GROUP BY 1 ORDER BY event_type"""),
+    Q("q90_zorder_curve", q90, Unbenched, q90Oracle),
+    Q("q91_bloom_pruned_join", q91, Extra, """
+      SELECT l_returnflag, count(*) AS n_items,
+        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      WHERE o_orderpriority = '1-URGENT'
+      GROUP BY 1 ORDER BY l_returnflag"""),
+    Q("q92_negative_sampling", q92, Unbenched, raw"""
+      WITH pairs AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
+          ${hashPosSql("CAST(q.vec_id AS VARCHAR)", "CAST(c.vec_id AS VARCHAR)")} AS pos
+        FROM embeddings q JOIN embeddings c ON c.label != q.label
+        WHERE q.vec_id < 10)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER (PARTITION BY query_id ORDER BY pos, item_id)
+          AS BIGINT) AS rank
+      FROM pairs QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q93_simpson_diversity", q93, Extra, """
+      WITH tok AS (
+        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+        FROM documents),
+      cnt AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2)
+      SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
+        1.0 - CAST(sum(c * c) AS DOUBLE) / CAST(sum(c) * sum(c) AS DOUBLE)
+          AS simpson
+      FROM cnt GROUP BY doc_id ORDER BY doc_id"""),
+    // Oracle over the file q94 lands (the generator is not expressible in
+    // DuckDB SQL — splitmix64 needs 64-bit wraparound); the predicate is
+    // applied HERE while the engine pushed it into the V2 scan.
+    Q("q94_docgen_source", q94, Unbenched, s"""
+      SELECT lang, count(*) AS n_docs,
+        CAST(sum(n_chars) AS BIGINT) AS total_chars
+      FROM read_parquet('$q94LandPath/*.parquet')
+      WHERE doc_id >= 1000 AND doc_id < 4000
+      GROUP BY lang ORDER BY lang"""),
+    Q("q95_funnel", q95, Extra, funnelOracle),
+    Q("q96_manifest_landing", q96, Unbenched, """
+      SELECT event_type, count(*) AS n_events,
+        min(event_id) AS min_id, max(event_id) AS max_id
+      FROM events GROUP BY 1 ORDER BY event_type"""),
+    // the streaming funnel must reproduce the batch funnel exactly
+    Q("q97_funnel_stream", q97, Unbenched, funnelOracle),
+    Q("q98_winsorize", q98, Unbenched, """
+      WITH r AS (
+        SELECT event_id, event_type, value,
+          row_number() OVER (PARTITION BY event_type
+            ORDER BY value NULLS FIRST, event_id) AS rn,
+          count(*) OVER (PARTITION BY event_type) AS n
+        FROM events),
+      thr AS (
+        SELECT event_type AS s,
+          min(CASE WHEN rn = greatest(CAST(ceil(0.05 * n) AS BIGINT), 1)
+            THEN value END) AS lo,
+          max(CASE WHEN rn = greatest(CAST(ceil(0.95 * n) AS BIGINT), 1)
+            THEN value END) AS hi
+        FROM r
+        WHERE rn = greatest(CAST(ceil(0.05 * n) AS BIGINT), 1)
+           OR rn = greatest(CAST(ceil(0.95 * n) AS BIGINT), 1)
+        GROUP BY 1)
+      SELECT e.event_id, e.event_type, e.value,
+        least(greatest(e.value, t.lo), t.hi) AS clamped
+      FROM events e JOIN thr t ON e.event_type IS NOT DISTINCT FROM t.s
+      ORDER BY event_id"""),
+    Q("q99_correlation", q99, Unbenched, """
+      WITH m AS (
+        SELECT l_returnflag,
+          CAST(count(*) AS DOUBLE) AS n,
+          -- decimal->double via VARCHAR: DuckDB's direct decimal cast
+          -- rounds twice (int128->double, then /10^scale) and can land 1
+          -- ulp off Spark's correctly-rounded BigDecimal cast once the
+          -- scaled sum needs > 53 mantissa bits; the string parse is
+          -- correctly rounded in both engines
+          CAST(CAST(sum(CAST(l_quantity AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sx,
+          CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sy,
+          CAST(CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sxx,
+          CAST(CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS syy,
+          CAST(CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sxy
+        FROM lineitem GROUP BY 1)
+      SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
+        (n * sxy - sx * sy) /
+          sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) AS corr_qty_price
+      FROM m ORDER BY l_returnflag"""),
+    Q("q100_stream_static_join", q100, Unbenched, """
+      WITH p AS (
+        SELECT user_id, count(*) AS user_events,
+          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS user_value
+        FROM events GROUP BY 1)
+      SELECT e.event_id, e.user_id, e.value, p.user_events, p.user_value
+      FROM events e JOIN p USING (user_id)
+      WHERE e.event_type = 'purchase'
+      ORDER BY event_id"""),
+    Q("q101_pagerank", q101, Unbenched, q101Oracle),
+    Q("q102_funnel_n", q102, Unbenched, q102Oracle),
+    Q("q103_ann_ivf_probe2", q103, Unbenched, """
+      WITH cent AS (
+        SELECT label AS cell, embedding AS cvec FROM embeddings
+        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
+      assign AS (
+        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
+        FROM embeddings e CROSS JOIN cent c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) = 1),
+      probes AS (
+        SELECT e.vec_id AS query_id, e.embedding AS qvec, c.cell
+        FROM embeddings e CROSS JOIN cent c
+        WHERE e.vec_id < 10
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) <= 2),
+      scored AS (
+        SELECT q.query_id, a.item_id,
+          list_cosine_similarity(CAST(q.qvec AS DOUBLE[]),
+            CAST(a.vec AS DOUBLE[])) AS cos
+        FROM assign a JOIN probes q ON a.cell = q.cell
+          AND a.item_id != q.query_id)
+      SELECT query_id, item_id,
+        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
+      FROM scored
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    Q("q104_funnel_landing", q104, Unbenched, funnelOracle),
+    Q("q105_temperature_mix", q105, Extra, """
+      WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
+      s AS (
+        SELECT source, n_docs,
+          CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS share
+        FROM c),
+      m AS (SELECT source, n_docs, share, sqrt(share) AS sm FROM s)
+      SELECT source, n_docs, share, sm / max(sm) OVER () AS mix_weight
+      FROM m ORDER BY source"""),
+    // BM25 with the rational (log-free) Robertson idf; every arithmetic
+    // step mirrors the engine's two-operand IEEE op order exactly, and the
+    // k1+1 numerator is written as (1.2 + 1.0) so both engines derive the
+    // identical double from the same literals.
+    Q("q106_bm25_terms", q106, Extra, """
+      WITH toks AS (
+        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+        FROM documents),
+      dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
+      stats AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS tot FROM dl),
+      tf AS (SELECT doc_id, tok AS term, count(*) AS tf FROM toks
+             WHERE tok IN ('data', 'query', 'stream') GROUP BY 1, 2),
+      dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+      scored AS (
+        SELECT t.term, t.doc_id, t.tf,
+          ((CAST(s.n_docs AS DOUBLE) - CAST(f.df AS DOUBLE) + 0.5) /
+            (CAST(f.df AS DOUBLE) + 0.5) + 1.0) *
+          (CAST(t.tf AS DOUBLE) * (1.2 + 1.0) /
+            (CAST(t.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) /
+              (CAST(s.tot AS DOUBLE) / CAST(s.n_docs AS DOUBLE))))) AS bm25
+        FROM tf t JOIN dl d ON t.doc_id = d.doc_id
+        JOIN dfreq f ON t.term = f.term CROSS JOIN stats s)
+      SELECT term, CAST(row_number() OVER w AS BIGINT) AS rank, doc_id, tf,
+        round(bm25, 4) AS bm25
+      FROM scored WINDOW w AS (PARTITION BY term ORDER BY bm25 DESC, doc_id)
+      QUALIFY rank <= 5 ORDER BY term, rank"""),
+    Q("q107_containment_pairs", q107, Extra, """
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      sh AS (
+        SELECT doc_id, unnest(list_distinct([array_to_string(tk[i:i+2], ' ')
+          for i in range(1, len(tk) - 1)])) AS s
+        FROM toks WHERE len(tk) >= 3),
+      keepers AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 50),
+      inf AS (SELECT sh.doc_id, sh.s FROM sh JOIN keepers USING (s)),
+      sizes AS (SELECT doc_id AS id_a, count(*) AS size_a FROM inf GROUP BY 1),
+      inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+        FROM inf a JOIN inf b ON a.s = b.s AND a.doc_id != b.doc_id
+        GROUP BY 1, 2)
+      SELECT id_a, id_b, n_shared, size_a,
+        round(CAST(n_shared AS DOUBLE) / CAST(size_a AS DOUBLE), 4) AS containment
+      FROM inter JOIN sizes USING (id_a)
+      WHERE CAST(n_shared AS DOUBLE) / CAST(size_a AS DOUBLE) >= 0.5
+      ORDER BY id_a, id_b"""),
+    Q("q108_gopher_rules", q108, Extra, """
+      WITH m AS (
+        SELECT doc_id,
+          len(tk) AS n_words,
+          CAST(len(array_to_string(tk, '')) AS DOUBLE) /
+            CAST(len(tk) AS DOUBLE) AS mean_word_len,
+          CAST(len([w for w in tk if regexp_matches(w, '[a-z]')]) AS DOUBLE) /
+            CAST(len(tk) AS DOUBLE) AS alpha_frac,
+          ((len(text) - len(replace(text, '#', ''))) +
+            (len(text) - len(replace(text, '...', ''))) / 3) /
+            CAST(len(tk) AS DOUBLE) AS symbol_ratio,
+          len(list_intersect(tk,
+            ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'])) AS stop_hits
+        FROM (SELECT doc_id, text,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents))
+      SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
+        round(mean_word_len, 4) AS mean_word_len,
+        round(alpha_frac, 4) AS alpha_frac,
+        round(symbol_ratio, 4) AS symbol_ratio,
+        CAST(stop_hits AS BIGINT) AS stop_hits,
+        n_words >= 20 AND n_words <= 100000 AS words_ok,
+        mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS word_len_ok,
+        alpha_frac > 0.8 AS alpha_ok,
+        symbol_ratio < 0.1 AS symbol_ok,
+        stop_hits >= 2 AS stop_ok,
+        n_words >= 20 AND n_words <= 100000
+          AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+          AND alpha_frac > 0.8 AND symbol_ratio < 0.1
+          AND stop_hits >= 2 AS keep
+      FROM m ORDER BY doc_id"""),
+    // q109 is the bloom-prefiltered restatement of q66: its output is
+    // identical by construction (bloom false positives die in the exact
+    // join), so the SAME oracle gates that the prefilter dropped nothing.
+    Q("q109_bloom_decontaminate", q109, Extra, q66Oracle),
+    // q110: q52's components become split GROUPS — near-dups never
+    // straddle train/eval. Boundaries interpolated from the SAME Scala
+    // computation the operator uses (Sampling.splitBounds), so no float
+    // arithmetic crosses engines.
+    Q("q110_leakage_free_split", q110, Extra, {
+      val b = graft.ops.Sampling.splitBounds(Seq(0.8, 0.1, 0.1))
+      s"""$q52CompCte,
+      keyed AS (
+        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_key
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
+      pos AS (SELECT doc_id, group_key,
+        ${hashPosSql("'split'", "CAST(group_key AS VARCHAR)")} AS p
+        FROM keyed)
+      SELECT doc_id, group_key,
+        CASE WHEN p < ${b(0)} THEN 'train' WHEN p < ${b(1)} THEN 'val'
+             ELSE 'test' END AS split
+      FROM pos ORDER BY doc_id"""
+    }),
+    // Semantic dedup: cosine-threshold edges (boundary margin measured at
+    // 7e-6 minimum across SFs — see q111's scaladoc), recursive-CTE
+    // components, min-id representative.
+    Q("q111_semantic_dedup", q111, Extra, """
+      WITH RECURSIVE p AS (
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        FROM embeddings a JOIN embeddings b
+          ON a.label = b.label AND a.vec_id < b.vec_id
+        WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+          CAST(b.embedding AS DOUBLE[])) >= 0.25),
+      sym AS (
+        SELECT id_a AS s, id_b AS d FROM p
+        UNION ALL SELECT id_b, id_a FROM p),
+      reach(id, r) AS (
+        SELECT DISTINCT s, s FROM sym
+        UNION
+        SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s),
+      comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
+      SELECT component, min(id) AS keep_id, count(*) AS n_members
+      FROM comp GROUP BY component ORDER BY component"""),
+    Q("q112_temperature_rebalance", q112, Extra, raw"""
+      WITH cnt AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
+      sh AS (
+        SELECT source,
+          CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS share
+        FROM cnt),
+      m AS (SELECT source, sqrt(share) AS sm FROM sh),
+      w AS (SELECT source, sm / max(sm) OVER () * 2.0 AS wt FROM m),
+      j AS (
+        SELECT d.doc_id, d.source, w.wt,
+          ${hashPosSql("d.source", "CAST(d.doc_id AS VARCHAR)")} AS h
+        FROM documents d JOIN w ON d.source = w.source),
+      c AS (
+        SELECT doc_id, source,
+          CAST(floor(wt) AS BIGINT) +
+            CASE WHEN h < CAST(floor((wt - floor(wt)) * 4294967296.0) AS BIGINT)
+                 THEN 1 ELSE 0 END AS copies
+        FROM j)
+      SELECT doc_id, source, unnest(generate_series(0, copies - 1)) AS copy
+      FROM c WHERE copies > 0
+      ORDER BY doc_id, copy"""),
+    // The identity-preservation oracle: three distinct engine paths must
+    // reproduce the events table EXACTLY — q113 (streaming dedup of a
+    // doubled delivery), q116 (compaction rewrite), q117 (versioned-CSV
+    // export -> newest-pick -> import).
+    Q("q113_stream_dedup", q113, Extra, eventsIdentityOracle),
+    // Quantized shortlist scored by exact integer dot (both engines
+    // quantize and sum identically — no float until the re-rank).
+    Q("q114_quantized_ann", q114, Extra, """
+      WITH v AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        FROM embeddings),
+      s8 AS (
+        SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS ma
+        FROM v),
+      q8 AS (
+        SELECT vec_id,
+          CASE WHEN ma = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
+               ELSE list_transform(e, x -> CAST(round(x / (ma / 127.0)) AS BIGINT))
+          END AS qv
+        FROM s8),
+      short AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
+          CAST(list_sum([q.qv[i] * c.qv[i]
+            for i in range(1, len(q.qv) + 1)]) AS BIGINT) AS qdot
+        FROM q8 q JOIN q8 c ON c.vec_id != q.vec_id
+        WHERE q.vec_id < 10
+        QUALIFY row_number() OVER (PARTITION BY q.vec_id
+          ORDER BY qdot DESC, c.vec_id) <= 50),
+      rr AS (
+        SELECT s.query_id, s.item_id, s.qdot,
+          list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]),
+            CAST(ce.embedding AS DOUBLE[])) AS cos
+        FROM short s JOIN embeddings qe ON qe.vec_id = s.query_id
+        JOIN embeddings ce ON ce.vec_id = s.item_id)
+      SELECT query_id, item_id, CAST(row_number() OVER w AS BIGINT) AS rank,
+        qdot, round(cos, 4) AS cosine
+      FROM rr
+      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
+      QUALIFY rank <= 5 ORDER BY query_id, rank"""),
+    // Curation v2 capstone: gopher keep -> containment drop (host wins)
+    // -> source-grouped hash split; boundaries from Sampling.splitBounds.
+    Q("q115_curation_v2", q115, Extra, {
+      val b = graft.ops.Sampling.splitBounds(Seq(0.8, 0.1, 0.1))
+      raw"""
+      WITH base AS (
+        SELECT doc_id, source, text,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      m AS (
+        SELECT doc_id, source, tk,
+          len(tk) AS n_words,
+          CAST(len(array_to_string(tk, '')) AS DOUBLE) /
+            CAST(len(tk) AS DOUBLE) AS mean_word_len,
+          CAST(len([w for w in tk if regexp_matches(w, '[a-z]')]) AS DOUBLE) /
+            CAST(len(tk) AS DOUBLE) AS alpha_frac,
+          ((len(text) - len(replace(text, '#', ''))) +
+            (len(text) - len(replace(text, '...', ''))) / 3) /
+            CAST(len(tk) AS DOUBLE) AS symbol_ratio,
+          len(list_intersect(tk,
+            ['the', 'a', 'data', 'table', 'row', 'key', 'value', 'join'])) AS stop_hits
+        FROM base),
+      kept AS (
+        SELECT doc_id, source, tk FROM m
+        WHERE n_words >= 20 AND n_words <= 100000
+          AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+          AND alpha_frac > 0.8 AND symbol_ratio < 0.1 AND stop_hits >= 2),
+      sh AS (
+        SELECT doc_id, unnest(list_distinct([array_to_string(tk[i:i+2], ' ')
+          for i in range(1, len(tk) - 1)])) AS s
+        FROM kept WHERE len(tk) >= 3),
+      keepers AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 50),
+      inf AS (SELECT sh.doc_id, sh.s FROM sh JOIN keepers USING (s)),
+      sizes AS (SELECT doc_id, count(*) AS sz FROM inf GROUP BY 1),
+      inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+        FROM inf a JOIN inf b ON a.s = b.s AND a.doc_id != b.doc_id
+        GROUP BY 1, 2),
+      drops AS (
+        SELECT DISTINCT id_a AS doc_id
+        FROM inter JOIN sizes sa ON inter.id_a = sa.doc_id
+        JOIN sizes sb ON inter.id_b = sb.doc_id
+        WHERE CAST(n_shared AS DOUBLE) / CAST(sa.sz AS DOUBLE) >= 0.8
+          AND (sb.sz > sa.sz OR (sb.sz = sa.sz AND id_b < id_a))),
+      surv AS (
+        SELECT k.doc_id, k.source FROM kept k
+        WHERE k.doc_id NOT IN (SELECT doc_id FROM drops))
+      SELECT doc_id, source,
+        CASE WHEN ${hashPosSql("'split'", "source")} < ${b(0)} THEN 'train'
+             WHEN ${hashPosSql("'split'", "source")} < ${b(1)} THEN 'val'
+             ELSE 'test' END AS split
+      FROM surv ORDER BY doc_id"""
+    }),
+    Q("q116_compaction_roundtrip", q116, Extra, eventsIdentityOracle),
+    Q("q117_versioned_csv_roundtrip", q117, Extra, eventsIdentityOracle),
+    Q("q118_jdbc_roundtrip", q118, Extra, eventsIdentityOracle),
+    // The streaming sessionizer must reproduce the batch lag/sum sessions
+    // exactly (same gap, same (ts, event_id) tiebreak).
+    Q("q119_stream_sessionize", q119, Extra, """
+      WITH g AS (
+        SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+          lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
+            (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_us
+        FROM events),
+      m AS (
+        SELECT user_id, event_id, us,
+          CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
+            THEN 1 ELSE 0 END AS is_new
+        FROM g),
+      sess AS (
+        SELECT user_id, us,
+          sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        FROM m)
+      SELECT user_id, CAST(min(us) AS BIGINT) AS start_us,
+        CAST(max(us) AS BIGINT) AS end_us, count(*) AS n_events
+      FROM sess GROUP BY user_id, sid
+      ORDER BY user_id, start_us"""),
+    Q("q120_incremental_load", q120, Extra, eventsIdentityOracle),
+    Q("q121_personalized_pagerank", q121, Extra, q121Oracle),
+    Q("q122_cohort_retention", q122, Extra, """
       WITH weeks AS (
         SELECT DISTINCT user_id,
           CAST(date_trunc('week', ts) AS DATE) AS week FROM events),
@@ -10669,8 +11733,8 @@ object SparkEntry {
         round(CAST(n_active AS DOUBLE) / CAST(cohort_size AS DOUBLE), 4)
           AS retention
       FROM cells JOIN sizes USING (cohort_week)
-      ORDER BY 1, 2""",
-    "q123_resample_ffill" -> """
+      ORDER BY 1, 2"""),
+    Q("q123_resample_ffill", q123, Extra, """
       WITH daily AS (
         SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS n_events,
           max(value) AS day_max
@@ -10688,8 +11752,8 @@ object SparkEntry {
         d.n_events IS NULL AS is_gap
       FROM cal c LEFT JOIN daily d
         ON c.user_id = d.user_id AND c.day = d.day
-      ORDER BY 1, 2""",
-    "q124_bm25_search" -> """
+      ORDER BY 1, 2"""),
+    Q("q124_bm25_search", q124, Extra, """
       WITH toks AS (
         SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
         FROM documents),
@@ -10722,8 +11786,8 @@ object SparkEntry {
           coalesce(s1, 0) + coalesce(s2, 0) + coalesce(s3, 0) AS raw
         FROM wide ORDER BY raw DESC, doc_id LIMIT 25)
       SELECT doc_id, n_terms, round(raw, 4) AS score FROM ranked
-      ORDER BY raw DESC, doc_id""",
-    "q125_transition_matrix" -> """
+      ORDER BY raw DESC, doc_id"""),
+    Q("q125_transition_matrix", q125, Extra, """
       WITH seq AS (
         SELECT event_type,
           lag(event_type) OVER (
@@ -10733,8 +11797,8 @@ object SparkEntry {
         round(CAST(count(*) AS DOUBLE) /
           CAST(sum(count(*)) OVER (PARTITION BY prev) AS DOUBLE), 4) AS p
       FROM seq WHERE prev IS NOT NULL
-      GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q126_rolling_window" -> """
+      GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Q("q126_rolling_window", q126, Extra, """
       WITH daily AS (
         SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS n_events
         FROM events GROUP BY 1, 2),
@@ -10754,8 +11818,8 @@ object SparkEntry {
           CAST(count(*) OVER w AS DOUBLE), 4) AS avg_daily
       FROM grid WINDOW w AS (PARTITION BY user_id ORDER BY day
         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-      ORDER BY 1, 2""",
-    "q127_topk_list" -> """
+      ORDER BY 1, 2"""),
+    Q("q127_topk_list", q127, Extra, """
       WITH ranked AS (
         SELECT lang, source, CAST(doc_id AS VARCHAR) AS item,
           row_number() OVER (PARTITION BY lang, source
@@ -10763,11 +11827,9 @@ object SparkEntry {
         FROM documents)
       SELECT lang, source, count(*) AS n_items,
         string_agg(item, ',' ORDER BY pos) AS top_items
-      FROM ranked WHERE pos <= 3 GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q128_sliding_windows" -> slidingWindowOracle,
-    // the streamed sliding windows must reproduce the batch ones exactly
-    "q136_sliding_windows_stream" -> slidingWindowOracle,
-    "q129_outlier_days" -> """
+      FROM ranked WHERE pos <= 3 GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Q("q128_sliding_windows", q128, Extra, slidingWindowOracle),
+    Q("q129_outlier_days", q129, Extra, """
       WITH daily AS (
         SELECT user_id, CAST(ts AS DATE) AS day,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS day_sum
@@ -10782,37 +11844,238 @@ object SparkEntry {
           + 0.0 AS threshold
       FROM daily d JOIN mom USING (user_id)
       WHERE d.day_sum > s / n + 3.0 * sqrt(greatest(ss / n - (s / n) * (s / n), 0.0))
-      ORDER BY 1, 2""",
-    "q137_knn_graph" -> knnGraphOracle,
+      ORDER BY 1, 2"""),
+    Q("q130_json_field_stats", q130, Extra, """
+      WITH x AS (
+        SELECT event_type,
+          TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+        FROM events)
+      SELECT event_type, count(*) AS n, count(k) AS n_k,
+        min(k) AS min_k, max(k) AS max_k,
+        CAST(sum(k) AS BIGINT) AS sum_k,
+        count(DISTINCT k) AS k_distinct
+      FROM x GROUP BY 1 ORDER BY 1"""),
+    Q("q131_time_weighted_avg", q131, Extra, """
+      WITH seq AS (
+        SELECT user_id, CAST(ts AS DATE) AS day,
+          epoch_us(ts) AS us, CAST(value AS DECIMAL(18,2)) AS v,
+          lead(epoch_us(ts)) OVER (
+            PARTITION BY user_id, CAST(ts AS DATE)
+            ORDER BY ts, event_id) AS next_us
+        FROM events),
+      weighted AS (
+        SELECT user_id, day,
+          coalesce(next_us,
+            epoch_us(CAST(day AS TIMESTAMP)) + 86400000000) - us AS dt, v
+        FROM seq)
+      SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
+        count(*) AS n_events,
+        round(CAST(sum(v * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE), 6)
+          AS twap
+      FROM weighted GROUP BY user_id, day ORDER BY 1, 2"""),
+    Q("q132_gap_histogram", q132, Extra, """
+      WITH seq AS (
+        SELECT epoch_us(ts) AS us,
+          lag(epoch_us(ts)) OVER (
+            PARTITION BY user_id ORDER BY ts, event_id) AS prev
+        FROM events)
+      SELECT CAST(least((us - prev) // 60000000, 60) AS BIGINT)
+          AS gap_minutes,
+        count(*) AS n_gaps
+      FROM seq WHERE prev IS NOT NULL
+      GROUP BY 1 ORDER BY 1"""),
+    Q("q133_gini_index", q133, Extra, """
+      WITH ranked AS (
+        SELECT source, n_chars AS x,
+          CAST(row_number() OVER (PARTITION BY source
+            ORDER BY n_chars, doc_id) AS BIGINT) AS i
+        FROM documents),
+      sums AS (
+        SELECT source, count(*) AS n, CAST(sum(x) AS BIGINT) AS s0,
+          CAST(sum(CAST(i * x AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s1
+        FROM ranked GROUP BY 1)
+      SELECT source, n,
+        round(CASE WHEN s0 = 0 THEN NULL ELSE
+          (2.0 * CAST(s1 AS DOUBLE) -
+            CAST(n + 1 AS DOUBLE) * CAST(s0 AS DOUBLE)) /
+          (CAST(n AS DOUBLE) * CAST(s0 AS DOUBLE)) END, 6) AS gini
+      FROM sums ORDER BY 1"""),
+    // zero-duplication composition: the frontier subquery IS q95's oracle
+    Q("q134_funnel_timing", q134, Extra, s"""
+      SELECT count(*) AS n_converted,
+        round(CAST(sum(epoch_us(t_click) - epoch_us(t_view)) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS avg_view_click_sec,
+        round(CAST(max(epoch_us(t_click) - epoch_us(t_view)) AS DOUBLE) /
+          1000000.0, 6) AS max_view_click_sec,
+        round(CAST(sum(epoch_us(t_purchase) - epoch_us(t_click)) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS avg_click_purchase_sec,
+        round(CAST(max(epoch_us(t_purchase) - epoch_us(t_click)) AS DOUBLE) /
+          1000000.0, 6) AS max_click_purchase_sec
+      FROM ($funnelOracle) f"""),
+    Q("q135_copurchase_lift", q135, Extra, """
+      WITH items AS (
+        SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
+      nb AS (SELECT count(DISTINCT b) AS n_baskets FROM items),
+      sup AS (SELECT i, count(*) AS n FROM items GROUP BY 1),
+      pairs AS (
+        SELECT a.i AS item_a, c.i AS item_b, count(*) AS n_ab
+        FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
+        GROUP BY 1, 2 HAVING count(*) >= 2)
+      SELECT p.item_a, p.item_b, p.n_ab, sa.n AS n_a, sb.n AS n_b,
+        round(CAST(CAST(p.n_ab AS DECIMAL(19,0)) * nb.n_baskets AS DOUBLE) /
+          CAST(CAST(sa.n AS DECIMAL(19,0)) * sb.n AS DOUBLE), 6) AS lift
+      FROM pairs p
+      JOIN sup sa ON p.item_a = sa.i
+      JOIN sup sb ON p.item_b = sb.i
+      CROSS JOIN nb
+      ORDER BY 1, 2"""),
+    // the streamed sliding windows must reproduce the batch ones exactly
+    Q("q136_sliding_windows_stream", q136, Extra, slidingWindowOracle),
+    Q("q137_knn_graph", q137, Extra, knnGraphOracle),
+    Q("q138_label_propagation", q138, Extra, q138Oracle),
+    Q("q139_neighbor_mean", q139, Extra, """
+      WITH p AS (
+        SELECT a.vec_id AS ia, b.vec_id AS ib,
+          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+            CAST(b.embedding AS DOUBLE[])) AS cos
+        FROM embeddings a JOIN embeddings b
+          ON a.label = b.label AND a.vec_id < b.vec_id),
+      sym AS (
+        SELECT ia AS node, ib AS nbr, cos FROM p
+        UNION ALL
+        SELECT ib AS node, ia AS nbr, cos FROM p),
+      knn AS (
+        SELECT node, nbr FROM sym
+        QUALIFY row_number() OVER (PARTITION BY node
+          ORDER BY round(cos, 6) DESC, nbr) <= 3),
+      cells AS (
+        SELECT k.node, t.i AS dim,
+          CAST(e.embedding[t.i] AS DOUBLE) AS v
+        FROM knn k JOIN embeddings e ON k.nbr = e.vec_id
+        CROSS JOIN range(1, 9) t(i))
+      SELECT node, dim, count(v) AS n_nbrs,
+        round(CAST(sum(CAST(v AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(v) AS DOUBLE), 6) + 0.0 AS mean_v
+      FROM cells GROUP BY 1, 2 ORDER BY 1, 2"""),
+    // Spark's native session_window must reproduce the lag/sum rollup
+    Q("q140_native_session_window", q140, Extra, sessionizeOracle),
+    Q("q141_quartile_bins", q141, Extra, """
+      WITH q AS (
+        SELECT lang, n_chars,
+          CAST(ntile(4) OVER (PARTITION BY lang
+            ORDER BY n_chars, doc_id) AS BIGINT) AS quartile
+        FROM documents)
+      SELECT lang, quartile, count(*) AS n_docs,
+        min(n_chars) AS min_chars, max(n_chars) AS max_chars
+      FROM q GROUP BY 1, 2 ORDER BY 1, 2"""),
     // the incrementally-maintained graph must equal the full recompute
-    "q142_knn_incremental" -> knnGraphOracle,
+    Q("q142_knn_incremental", q142, Extra, knnGraphOracle),
+    Q("q143_percentile_ranks", q143, Extra, """
+      WITH r AS (
+        SELECT lang, doc_id, n_chars,
+          round(percent_rank() OVER w, 6) AS pct_rank,
+          round(cume_dist() OVER w, 6) AS cume
+        FROM documents
+        WINDOW w AS (PARTITION BY lang ORDER BY n_chars, doc_id))
+      SELECT lang, doc_id, n_chars, pct_rank, cume
+      FROM r WHERE doc_id % 25 = 0 ORDER BY lang, doc_id"""),
     // q144 streams the same corpus in micro-batches; the landed graph
     // must equal the full recompute — the merge law composed, so the
     // oracle is shared verbatim (q140's shared-oracle pattern)
-    "q144_knn_stream" -> knnGraphOracle,
-    // q154: q98's order-statistic contract with a single global stratum
-    "q154_winsorize_global" -> """
-      WITH r AS (
-        SELECT event_id, value,
-          row_number() OVER (ORDER BY value NULLS FIRST, event_id) AS rn,
-          count(*) OVER () AS n
-        FROM events),
-      thr AS (
-        SELECT
-          min(CASE WHEN rn = greatest(CAST(ceil(0.01 * n) AS BIGINT), 1)
-            THEN value END) AS lo,
-          max(CASE WHEN rn = greatest(CAST(ceil(0.99 * n) AS BIGINT), 1)
-            THEN value END) AS hi
-        FROM r
-        WHERE rn = greatest(CAST(ceil(0.01 * n) AS BIGINT), 1)
-           OR rn = greatest(CAST(ceil(0.99 * n) AS BIGINT), 1))
-      SELECT e.event_id, e.value,
-        least(greatest(e.value, t.lo), t.hi) AS clamped
-      FROM events e CROSS JOIN thr t
-      ORDER BY event_id""",
+    Q("q144_knn_stream", q144, Extra, knnGraphOracle),
+    Q("q145_canonical_by_priority", q145, Extra, {
+      val values = sourcePriority
+        .map { case (s, p) => s"('$s', $p)" }.mkString(", ")
+      s"""$q52CompCte,
+      pri(source, priority) AS (VALUES $values),
+      mem AS (
+        SELECT c.component, d.doc_id AS id, d.source, p.priority
+        FROM comp c JOIN documents d ON c.id = d.doc_id
+        JOIN pri p ON d.source = p.source),
+      ranked AS (
+        SELECT *, row_number() OVER (
+          PARTITION BY component ORDER BY priority, id) AS rn
+        FROM mem)
+      SELECT component, CAST(count(*) AS BIGINT) AS n_docs,
+        max(CASE WHEN rn = 1 THEN id END) AS keep_id,
+        max(CASE WHEN rn = 1 THEN source END) AS keep_source,
+        CAST(max(CASE WHEN rn = 1 THEN priority END) AS BIGINT)
+          AS keep_priority
+      FROM ranked GROUP BY component ORDER BY component"""
+    }),
+    // q146: q25's brute-force CTE (truth) + q37's IVF CTE (approx) +
+    // rational metrics — recall@5 and first-relevant reciprocal rank
+    Q("q146_retrieval_metrics", q146, Extra, s"""$q146Cte
+      SELECT query_id, CAST(count(*) AS BIGINT) AS n_returned,
+        CAST(sum(rel) AS BIGINT) AS hits,
+        round(CAST(sum(rel) AS DOUBLE) / 5.0, 6) AS recall_at_5,
+        round(coalesce(1.0 / CAST(min(CASE WHEN rel = 1 THEN rank END)
+          AS DOUBLE), 0.0), 6) AS reciprocal_rank
+      FROM marked GROUP BY query_id ORDER BY query_id"""),
+    Q("q147_histogram_drift", q147, Extra, driftOracle),
+    // q148: q66's shingle CTE, scored as a per-doc coverage ratio
+    Q("q148_coverage_score", q148, Extra, """
+      WITH toks AS (
+        SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      sh AS (
+        SELECT doc_id, source, unnest(list_distinct([array_to_string(tk[i:i+2], ' ')
+          for i in range(1, len(tk) - 1)])) AS s
+        FROM toks WHERE len(tk) >= 3),
+      ref AS (SELECT DISTINCT s FROM sh WHERE source = 'src0'),
+      m AS (
+        SELECT c.doc_id, CASE WHEN r.s IS NOT NULL THEN 1 ELSE 0 END AS k
+        FROM sh c LEFT JOIN ref r ON c.s = r.s
+        WHERE c.source != 'src0')
+      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
+        CAST(sum(k) AS BIGINT) AS n_known,
+        round(CAST(sum(k) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
+          AS coverage
+      FROM m GROUP BY doc_id ORDER BY doc_id"""),
+    // q149: decimal-exact squared-component sums, IEEE sqrt (safe), 9dp
+    // rounding before the decimal mean — the q99 idiom throughout
+    Q("q149_embedding_health", q149, Extra, """
+      WITH comp AS (
+        SELECT label, vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x
+        FROM embeddings),
+      nsq0 AS (
+        SELECT vec_id,
+          CAST(sum(CAST(x * x AS DECIMAL(28,18))) AS DOUBLE) AS nsq
+        FROM comp GROUP BY 1),
+      -- left join back so null/empty embedding arrays (dropped by unnest)
+      -- count as norm-0 vectors, mirroring the engine's explode_outer
+      nsq AS (
+        SELECT e.label, e.vec_id, coalesce(n.nsq, 0.0) AS nsq
+        FROM embeddings e LEFT JOIN nsq0 n ON e.vec_id = n.vec_id),
+      norms AS (SELECT label, sqrt(nsq) AS nm FROM nsq)
+      SELECT label, CAST(count(*) AS BIGINT) AS n_vectors,
+        round(min(nm), 6) AS min_norm, round(max(nm), 6) AS max_norm,
+        round(CAST(sum(CAST(round(nm, 9) AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_norm,
+        CAST(sum(CASE WHEN abs(nm - 1.0) <= 0.001 THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_unit
+      FROM norms GROUP BY label ORDER BY label"""),
+    Q("q150_drift_stream", q150, Extra, driftOracle),
+    // q151: token bigrams via list comprehension — same tokenization as
+    // the shingle CTEs (trim/lower/split on \s+)
+    Q("q151_bpe_pair_mining", q151, Extra, """
+      WITH toks AS (
+        SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      pairs AS (
+        SELECT unnest([tk[i] || ' ' || tk[i+1]
+          for i in range(1, len(tk))]) AS pair
+        FROM toks WHERE len(tk) >= 2),
+      counted AS (
+        SELECT pair, CAST(count(*) AS BIGINT) AS n FROM pairs GROUP BY 1)
+      SELECT CAST(row_number() OVER w AS BIGINT) AS rank, pair, n
+      FROM counted
+      WINDOW w AS (ORDER BY n DESC, pair)
+      QUALIFY rank <= 20 ORDER BY rank"""),
+    Q("q152_skew_report", q152, Extra, skewOracle),
     // q153: q147's fold per consecutive-day pair — full outer join of the
     // day histogram against itself shifted one day
-    "q153_drift_series" -> """
+    Q("q153_drift_series", q153, Extra, """
       WITH binned AS (
         SELECT event_type AS g, CAST(ts AS DATE) AS day,
           least(greatest(CAST(floor(value / 25.0) AS BIGINT), 0), 19) AS bin
@@ -10847,31 +12110,31 @@ object SparkEntry {
         max(tb) AS n_cur,
         round(CAST(sum(CAST(round(term, 12) AS DECIMAL(28,14))) AS DOUBLE),
           6) AS drift
-      FROM terms GROUP BY 1, 2 ORDER BY event_type, day""",
-    // q151: token bigrams via list comprehension — same tokenization as
-    // the shingle CTEs (trim/lower/split on \s+)
-    "q151_bpe_pair_mining" -> """
-      WITH toks AS (
-        SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      pairs AS (
-        SELECT unnest([tk[i] || ' ' || tk[i+1]
-          for i in range(1, len(tk))]) AS pair
-        FROM toks WHERE len(tk) >= 2),
-      counted AS (
-        SELECT pair, CAST(count(*) AS BIGINT) AS n FROM pairs GROUP BY 1)
-      SELECT CAST(row_number() OVER w AS BIGINT) AS rank, pair, n
-      FROM counted
-      WINDOW w AS (ORDER BY n DESC, pair)
-      QUALIFY rank <= 20 ORDER BY rank""",
-    "q152_skew_report" -> skewOracle,
-    // q158: the STREAMED skew monitor lands the same integer counts and
-    // runs the same finishing fold — shares q152's oracle verbatim
-    "q158_skew_stream" -> skewOracle,
+      FROM terms GROUP BY 1, 2 ORDER BY event_type, day"""),
+    // q154: q98's order-statistic contract with a single global stratum
+    Q("q154_winsorize_global", q154, Extra, """
+      WITH r AS (
+        SELECT event_id, value,
+          row_number() OVER (ORDER BY value NULLS FIRST, event_id) AS rn,
+          count(*) OVER () AS n
+        FROM events),
+      thr AS (
+        SELECT
+          min(CASE WHEN rn = greatest(CAST(ceil(0.01 * n) AS BIGINT), 1)
+            THEN value END) AS lo,
+          max(CASE WHEN rn = greatest(CAST(ceil(0.99 * n) AS BIGINT), 1)
+            THEN value END) AS hi
+        FROM r
+        WHERE rn = greatest(CAST(ceil(0.01 * n) AS BIGINT), 1)
+           OR rn = greatest(CAST(ceil(0.99 * n) AS BIGINT), 1))
+      SELECT e.event_id, e.value,
+        least(greatest(e.value, t.lo), t.hi) AS clamped
+      FROM events e CROSS JOIN thr t
+      ORDER BY event_id"""),
     // q155: per-vector self-join on aligned subscripts (i <= j), products
     // summed in DECIMAL — the q99 idiom; engine generates the same cells
     // map-side
-    "q155_gram_matrix" -> """
+    Q("q155_gram_matrix", q155, Extra, """
       WITH comp AS (
         SELECT label, vec_id,
           unnest(CAST(embedding AS DOUBLE[])) AS x,
@@ -10884,26 +12147,10 @@ object SparkEntry {
       SELECT label, CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
         CAST(count(*) AS BIGINT) AS n_terms,
         round(CAST(sum(p) AS DOUBLE), 6) + 0.0 AS s
-      FROM pairs GROUP BY 1, 2, 3 ORDER BY label, i, j""",
-    // q285: the tiled generator must land on q155's oracle verbatim —
-    // identical cells, identical DECIMAL sums, different fan-out shape
-    "q285_gram_tiled" -> """
-      WITH comp AS (
-        SELECT label, vec_id,
-          unnest(CAST(embedding AS DOUBLE[])) AS x,
-          generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS idx
-        FROM embeddings),
-      pairs AS (
-        SELECT a.label, a.idx - 1 AS i, b.idx - 1 AS j,
-          CAST(a.x * b.x AS DECIMAL(28,18)) AS p
-        FROM comp a JOIN comp b ON a.vec_id = b.vec_id AND a.idx <= b.idx)
-      SELECT label, CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-        CAST(count(*) AS BIGINT) AS n_terms,
-        round(CAST(sum(p) AS DOUBLE), 6) + 0.0 AS s
-      FROM pairs GROUP BY 1, 2, 3 ORDER BY label, i, j""",
+      FROM pairs GROUP BY 1, 2, 3 ORDER BY label, i, j"""),
     // q156: q148's shingle CTE at batch grain — batch = the numeric
     // suffix of source, min(batch) per shingle marks first appearance
-    "q156_shingle_novelty" -> raw"""
+    Q("q156_shingle_novelty", q156, Extra, raw"""
       WITH toks AS (
         SELECT CAST(substr(source, 4) AS INTEGER) AS batch,
           regexp_split_to_array(trim(lower(text)), '\s+') AS tk
@@ -10920,11 +12167,11 @@ object SparkEntry {
         round(CAST(sum(CASE WHEN f.fb = sh.batch THEN 1 ELSE 0 END)
             AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS novelty
       FROM sh JOIN first f ON sh.s = f.s
-      GROUP BY 1 ORDER BY 1""",
+      GROUP BY 1 ORDER BY 1"""),
     // q157: q52's CC oracle folded to the size histogram, plus the
     // singleton row (corpus count minus grouped docs) that closes the
     // Σ n_docs = |documents| conservation law the Scala side states
-    "q157_dedup_size_histogram" -> """
+    Q("q157_dedup_size_histogram", q157, Extra, """
       WITH RECURSIVE toks AS (
         SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
         FROM documents),
@@ -10973,16 +12220,386 @@ object SparkEntry {
       UNION ALL
       SELECT CAST(1 AS BIGINT), CAST(m AS BIGINT), CAST(m AS BIGINT)
       FROM acc WHERE m > 0
-      ORDER BY component_size""",
+      ORDER BY component_size"""),
+    // q158: the STREAMED skew monitor lands the same integer counts and
+    // runs the same finishing fold — shares q152's oracle verbatim
+    Q("q158_skew_stream", q158, Extra, skewOracle),
     // q159: q137's kNN CTE → undirected edge set → triangles via plain
     // id-order (a<b<c) joins — the same triangle set the engine's
     // degree-ordered orientation finds (orientation-invariant)
+    Q("q159_triangle_count", q159, Extra, """
+      WITH p AS (
+        SELECT a.vec_id AS ia, b.vec_id AS ib,
+          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+            CAST(b.embedding AS DOUBLE[])) AS cos
+        FROM embeddings a JOIN embeddings b
+          ON a.label = b.label AND a.vec_id < b.vec_id),
+      sym AS (
+        SELECT ia AS node, ib AS nbr, cos FROM p
+        UNION ALL
+        SELECT ib AS node, ia AS nbr, cos FROM p),
+      knn AS (
+        SELECT node, nbr FROM (
+          SELECT node, nbr, row_number() OVER w AS rank
+          FROM sym
+          WINDOW w AS (PARTITION BY node ORDER BY round(cos, 6) DESC, nbr))
+        WHERE rank <= 3),
+      und AS (
+        SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
+        FROM knn WHERE node <> nbr),
+      tri AS (
+        SELECT e1.a AS x, e1.b AS y, e2.b AS z
+        FROM und e1
+        JOIN und e2 ON e2.a = e1.b
+        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
+      deg AS (
+        SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
+          SELECT a AS node FROM und UNION ALL SELECT b FROM und)
+        GROUP BY 1),
+      tcnt AS (
+        SELECT node, CAST(count(*) AS BIGINT) AS t FROM (
+          SELECT x AS node FROM tri
+          UNION ALL SELECT y FROM tri
+          UNION ALL SELECT z FROM tri)
+        GROUP BY 1)
+      SELECT d.node, d.degree,
+        CAST(COALESCE(c.t, 0) AS BIGINT) AS n_triangles,
+        round(CASE WHEN d.degree >= 2
+          THEN 2.0 * COALESCE(c.t, 0) /
+               (CAST(d.degree AS DOUBLE) * CAST(d.degree - 1 AS DOUBLE))
+          ELSE 0.0 END, 6) AS clustering
+      FROM deg d LEFT JOIN tcnt c ON d.node = c.node
+      ORDER BY d.node"""),
+    // q160: doc_id self-join restates the engine's map-side pair
+    // generation; PMI = ln of the q135 DECIMAL-ratio idiom
+    Q("q160_token_pmi", q160, Extra, raw"""
+      WITH dt AS (
+        SELECT DISTINCT doc_id,
+          unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+        FROM documents),
+      nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+      pc AS (
+        SELECT a.tok AS token_a, b.tok AS token_b,
+          CAST(count(*) AS BIGINT) AS n_ab
+        FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok
+        GROUP BY 1, 2 HAVING count(*) >= 20),
+      f AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM dt GROUP BY 1)
+      SELECT p.token_a, p.token_b, p.n_ab, fa.n AS n_a, fb.n AS n_b,
+        round(ln(CAST(CAST(p.n_ab AS DECIMAL(19,0)) * nd.n AS DOUBLE) /
+          CAST(CAST(fa.n AS DECIMAL(19,0)) * fb.n AS DOUBLE)), 6) AS pmi
+      FROM pc p
+      JOIN f fa ON p.token_a = fa.tok
+      JOIN f fb ON p.token_b = fb.tok
+      CROSS JOIN nd
+      ORDER BY 1, 2"""),
+    // q161: q21's signature CTE with the 16 minima carried per candidate
+    // pair — agreement count vs exact Jaccard, q149's round-9 DECIMAL-sum
+    // mean idiom
+    Q("q161_lsh_calibration", q161, Extra, raw"""
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      sh AS (
+        SELECT doc_id, list_distinct([array_to_string(tk[i:i+2], ' ')
+          for i in range(1, len(tk) - 1)]) AS s
+        FROM toks WHERE len(tk) >= 3),
+      sig AS (
+        SELECT doc_id, s,
+          flatten([[list_min([md5(CAST(sd AS VARCHAR) || '|' || x)[j*4+1 : j*4+4]
+            for x in s]) for j in range(0, 8)] for sd in range(0, 2)]) AS sg
+        FROM sh),
+      banded AS (
+        SELECT doc_id, s, sg, band,
+          md5(array_to_string(sg[band*4+1:band*4+4], '|')) AS bucket
+        FROM sig, range(0, 4) r(band)),
+      cand AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          first(a.s) AS sa, first(b.s) AS sb,
+          first(a.sg) AS sga, first(b.sg) AS sgb
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id),
+      per AS (
+        SELECT CAST(list_sum([CASE WHEN sga[j] = sgb[j] THEN 1 ELSE 0 END
+            for j in range(1, 17)]) AS BIGINT) AS n_match,
+          CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
+            CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE) AS j
+        FROM cand)
+      SELECT n_match, round(CAST(n_match AS DOUBLE) / 16.0, 6) AS est_jaccard,
+        CAST(count(*) AS BIGINT) AS n_pairs,
+        round(CAST(sum(CAST(round(j, 9) AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_jaccard,
+        CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
+      FROM per GROUP BY 1 ORDER BY 1"""),
+    // q162: q155's gram CTE unrounded + per-dim DECIMAL sums; covariance
+    // is the identical two-division expression tree the engine computes
+    Q("q162_covariance_matrix", q162, Extra, """
+      WITH comp AS (
+        SELECT label, vec_id,
+          unnest(CAST(embedding AS DOUBLE[])) AS x,
+          generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS idx
+        FROM embeddings),
+      pairs AS (
+        SELECT a.label, a.idx - 1 AS i, b.idx - 1 AS j,
+          CAST(a.x * b.x AS DECIMAL(28,18)) AS p
+        FROM comp a JOIN comp b ON a.vec_id = b.vec_id AND a.idx <= b.idx),
+      gram AS (
+        SELECT label, CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
+          CAST(count(*) AS BIGINT) AS n_terms, sum(p) AS s
+        FROM pairs GROUP BY 1, 2, 3),
+      dims AS (
+        SELECT label, CAST(idx - 1 AS BIGINT) AS d,
+          CAST(count(*) AS BIGINT) AS n,
+          sum(CAST(x AS DECIMAL(28,18))) AS m
+        FROM comp GROUP BY 1, 2)
+      SELECT g.label, g.i, g.j, g.n_terms,
+        round(CAST(g.s AS DOUBLE) / CAST(g.n_terms AS DOUBLE)
+          - (CAST(di.m AS DOUBLE) / CAST(di.n AS DOUBLE))
+            * (CAST(dj.m AS DOUBLE) / CAST(dj.n AS DOUBLE)), 6) + 0.0 AS cov
+      FROM gram g
+      JOIN dims di ON g.label = di.label AND g.i = di.d
+      JOIN dims dj ON g.label = dj.label AND g.j = dj.d
+      ORDER BY g.label, g.i, g.j"""),
+    // q163: q155's round-6 gram mirrored to full symmetry, two unrolled
+    // matvec+normalize rounds; sums via round-9 -> DECIMAL(28,12), the
+    // DuckDB double comes off the VARCHAR parse (q99's correctly-rounded
+    // cast note)
+    Q("q163_pca_power_iteration", q163, Extra, """
+      WITH comp AS (
+        SELECT label, vec_id,
+          unnest(CAST(embedding AS DOUBLE[])) AS x,
+          generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS idx
+        FROM embeddings),
+      prs AS (
+        SELECT a.label, a.idx - 1 AS i, b.idx - 1 AS j,
+          CAST(a.x * b.x AS DECIMAL(28,18)) AS p
+        FROM comp a JOIN comp b ON a.vec_id = b.vec_id AND a.idx <= b.idx),
+      gram AS (
+        SELECT label, i, j, round(CAST(sum(p) AS DOUBLE), 6) + 0.0 AS s
+        FROM prs GROUP BY 1, 2, 3),
+      m AS (
+        SELECT label, i, j, s FROM gram
+        UNION ALL
+        SELECT label, j, i, s FROM gram WHERE i <> j),
+      w1 AS (
+        SELECT label, i AS dim,
+          CAST(CAST(sum(CAST(round(s * 1.0, 9) AS DECIMAL(28,12)))
+            AS VARCHAR) AS DOUBLE) AS w
+        FROM m GROUP BY 1, 2),
+      n1 AS (
+        SELECT label, sqrt(CAST(CAST(sum(CAST(round(w * w, 9)
+            AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)) AS nrm
+        FROM w1 GROUP BY 1),
+      v1 AS (
+        SELECT w1.label, w1.dim, w1.w / n1.nrm AS v
+        FROM w1 JOIN n1 ON w1.label = n1.label),
+      w2 AS (
+        SELECT m.label, m.i AS dim,
+          CAST(CAST(sum(CAST(round(m.s * v1.v, 9) AS DECIMAL(28,12)))
+            AS VARCHAR) AS DOUBLE) AS w
+        FROM m JOIN v1 ON m.label = v1.label AND m.j = v1.dim
+        GROUP BY 1, 2),
+      n2 AS (
+        SELECT label, sqrt(CAST(CAST(sum(CAST(round(w * w, 9)
+            AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)) AS nrm
+        FROM w2 GROUP BY 1)
+      SELECT w2.label, CAST(w2.dim AS BIGINT) AS dim,
+        round(w2.w / n2.nrm, 6) + 0.0 AS component,
+        round(n2.nrm, 6) + 0.0 AS eigenvalue
+      FROM w2 JOIN n2 ON w2.label = n2.label
+      ORDER BY w2.label, dim"""),
+    // q164: q159's und/deg CTEs folded to the symmetric moment
+    // correlation — degrees are integers, every sum exact
+    Q("q164_degree_assortativity", q164, Extra, """
+      WITH p AS (
+        SELECT a.vec_id AS ia, b.vec_id AS ib,
+          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+            CAST(b.embedding AS DOUBLE[])) AS cos
+        FROM embeddings a JOIN embeddings b
+          ON a.label = b.label AND a.vec_id < b.vec_id),
+      sym0 AS (
+        SELECT ia AS node, ib AS nbr, cos FROM p
+        UNION ALL
+        SELECT ib AS node, ia AS nbr, cos FROM p),
+      knn AS (
+        SELECT node, nbr FROM (
+          SELECT node, nbr, row_number() OVER w AS rank
+          FROM sym0
+          WINDOW w AS (PARTITION BY node ORDER BY round(cos, 6) DESC, nbr))
+        WHERE rank <= 3),
+      und AS (
+        SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
+        FROM knn WHERE node <> nbr),
+      deg AS (
+        SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
+          SELECT a AS node FROM und UNION ALL SELECT b FROM und)
+        GROUP BY 1),
+      sym AS (
+        SELECT a AS x, b AS y FROM und
+        UNION ALL SELECT b, a FROM und),
+      d AS (
+        SELECT dx.degree AS ddx, dy.degree AS ddy
+        FROM sym JOIN deg dx ON sym.x = dx.node
+        JOIN deg dy ON sym.y = dy.node),
+      mom AS (
+        SELECT CAST(count(*) AS BIGINT) AS n_edges,
+          CAST(count(*) AS DOUBLE) AS n,
+          CAST(sum(CAST(ddx AS DECIMAL(38,0))) AS DOUBLE) AS sx,
+          CAST(sum(CAST(ddy AS DECIMAL(38,0))) AS DOUBLE) AS sy,
+          CAST(sum(CAST(ddx * ddx AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
+          CAST(sum(CAST(ddy * ddy AS DECIMAL(38,0))) AS DOUBLE) AS syy,
+          CAST(sum(CAST(ddx * ddy AS DECIMAL(38,0))) AS DOUBLE) AS sxy
+        FROM d)
+      SELECT n_edges,
+        round((n * sxy - sx * sy) /
+          sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) + 0.0
+          AS assortativity
+      FROM mom"""),
+    // q165: positional window pairs via nested list comprehensions;
+    // probabilities over windows (Np) and occurrences (Nt), DECIMAL(38,0)
+    // products before the one division + ln
+    Q("q165_skipgram_pmi", q165, Extra, raw"""
+      WITH toks AS (
+        SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+        FROM documents),
+      prs AS (
+        SELECT unnest(flatten([[ [least(tk[i], tk[i+k]),
+            greatest(tk[i], tk[i+k])]
+          for i in range(1, len(tk) - k + 1)] for k in [1, 2]])) AS pr
+        FROM toks WHERE len(tk) >= 2),
+      pc AS (
+        SELECT pr[1] AS token_a, pr[2] AS token_b,
+          CAST(count(*) AS BIGINT) AS n_ab
+        FROM prs GROUP BY 1, 2 HAVING count(*) >= 20),
+      uni AS (SELECT unnest(tk) AS w FROM toks),
+      uc AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM uni GROUP BY 1),
+      np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM prs),
+      nt AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM uni)
+      SELECT p.token_a, p.token_b, p.n_ab, ua.n AS n_a, ub.n AS n_b,
+        round(ln(
+          CAST(CAST(p.n_ab AS DECIMAL(38,0)) * nt.nt * nt.nt AS DOUBLE) /
+          CAST(CAST(ua.n AS DECIMAL(38,0)) * ub.n * np.np AS DOUBLE)), 6)
+          + 0.0 AS pmi
+      FROM pc p
+      JOIN uc ua ON p.token_a = ua.w
+      JOIN uc ub ON p.token_b = ub.w
+      CROSS JOIN np CROSS JOIN nt
+      ORDER BY 1, 2"""),
+    // q166: q108's metric CTE folded to the cumulative-rule funnel
+    Q("q166_curation_funnel", q166, Extra, raw"""
+      WITH m AS (
+        SELECT doc_id,
+          len(tk) AS n_words,
+          CAST(len(array_to_string(tk, '')) AS DOUBLE) /
+            CAST(len(tk) AS DOUBLE) AS mean_word_len,
+          CAST(len([w for w in tk if regexp_matches(w, '[a-z]')]) AS DOUBLE) /
+            CAST(len(tk) AS DOUBLE) AS alpha_frac,
+          ((len(text) - len(replace(text, '#', ''))) +
+            (len(text) - len(replace(text, '...', ''))) / 3) /
+            CAST(len(tk) AS DOUBLE) AS symbol_ratio,
+          len(list_intersect(tk,
+            ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with']))
+            AS stop_hits
+        FROM (SELECT doc_id, text,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+          FROM documents)),
+      f AS (
+        SELECT
+          n_words >= 20 AND n_words <= 100000 AS c1,
+          n_words >= 20 AND n_words <= 100000
+            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS c2,
+          n_words >= 20 AND n_words <= 100000
+            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+            AND alpha_frac > 0.8 AS c3,
+          n_words >= 20 AND n_words <= 100000
+            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+            AND alpha_frac > 0.8 AND symbol_ratio < 0.1 AS c4,
+          n_words >= 20 AND n_words <= 100000
+            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+            AND alpha_frac > 0.8 AND symbol_ratio < 0.1
+            AND stop_hits >= 2 AS c5
+        FROM m),
+      agg AS (
+        SELECT CAST(count(*) AS BIGINT) AS n0,
+          CAST(sum(CASE WHEN c1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+          CAST(sum(CASE WHEN c2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+          CAST(sum(CASE WHEN c3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
+          CAST(sum(CASE WHEN c4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
+          CAST(sum(CASE WHEN c5 THEN 1 ELSE 0 END) AS BIGINT) AS n5
+        FROM f)
+      SELECT stage, rule, n_docs,
+        round(CAST(n_docs AS DOUBLE) / CAST(n0 AS DOUBLE), 6) AS pass_rate
+      FROM (
+        SELECT CAST(0 AS BIGINT) AS stage, 'total' AS rule, n0 AS n_docs, n0 FROM agg
+        UNION ALL SELECT 1, 'words_ok', n1, n0 FROM agg
+        UNION ALL SELECT 2, 'word_len_ok', n2, n0 FROM agg
+        UNION ALL SELECT 3, 'alpha_ok', n3, n0 FROM agg
+        UNION ALL SELECT 4, 'symbol_ok', n4, n0 FROM agg
+        UNION ALL SELECT 5, 'stop_ok', n5, n0 FROM agg)
+      ORDER BY stage"""),
+    // q167: q28's quality formula (unrounded) -> fixed-threshold tiers ->
+    // per-tier rank -> round-robin position
+    Q("q167_curriculum_interleave", q167, Extra, raw"""
+      WITH f AS (
+        SELECT doc_id,
+          CAST(len(tk) AS DOUBLE) AS nt,
+          CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
+          CAST(len(text) AS DOUBLE) AS chars,
+          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
+            AS alpha
+        FROM (SELECT doc_id, text,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+          FROM documents)),
+      q AS (
+        SELECT doc_id, least(greatest(
+          0.4 * least(nt / 50.0, 1.0) +
+          0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
+          0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0)
+          AS quality
+        FROM f),
+      t AS (
+        SELECT doc_id, CAST(least(floor(quality * 4), 3) AS BIGINT) AS tier
+        FROM q),
+      r AS (
+        SELECT doc_id, tier,
+          row_number() OVER (PARTITION BY tier ORDER BY doc_id) AS rn
+        FROM t)
+      SELECT doc_id, tier, CAST((rn - 1) * 4 + tier AS BIGINT) AS position
+      FROM r ORDER BY position"""),
+    // q168: q105's weight CTE + Hamilton allocation; sum(alloc) = total
+    // exactly
+    Q("q168_budget_allocation", q168, Extra, """
+      WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
+      s AS (
+        SELECT source, n_docs,
+          CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS share
+        FROM c),
+      m AS (SELECT source, n_docs, share, sqrt(share) AS sm FROM s),
+      mw AS (SELECT source, sm / max(sm) OVER () AS w FROM m),
+      sw AS (
+        SELECT CAST(sum(CAST(round(w, 9) AS DECIMAL(28,12))) AS DOUBLE) AS sw
+        FROM mw),
+      b AS (
+        SELECT source, w, 1000000.0 * w / sw AS ideal
+        FROM mw CROSS JOIN sw),
+      fr AS (
+        SELECT source, w, ideal, CAST(floor(ideal) AS BIGINT) AS base,
+          ideal - floor(ideal) AS frac
+        FROM b),
+      r AS (
+        SELECT source, w, ideal, base,
+          row_number() OVER (ORDER BY frac DESC, source) AS rk,
+          (SELECT 1000000 - sum(base) FROM fr) AS rem
+        FROM fr)
+      SELECT source, round(w, 6) AS weight, round(ideal, 6) AS ideal,
+        CAST(base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS BIGINT) AS alloc
+      FROM r ORDER BY source"""),
     // q169: fixed 16-round unrolled peel ≡ the engine's early-stopped
     // fixpoint (rounds past convergence are the identity)
-    "q169_kcore" -> kCoreOracleSql(k = 75, rounds = 16),
+    Q("q169_kcore", q169, Extra, kCoreOracleSql(k = 75, rounds = 16)),
     // q170: distinct-name grain + first-token blocking + classic
     // Levenshtein — both engines' levenshtein is unit-cost edit distance
-    "q170_fuzzy_match" -> raw"""
+    Q("q170_fuzzy_match", q170, Extra, raw"""
       WITH keys AS (
         SELECT p_name AS name, regexp_split_to_array(p_name, '\s+')[1] AS blk,
           CAST(count(*) AS BIGINT) AS n
@@ -10992,10 +12609,10 @@ object SparkEntry {
         a.n AS n_a, b.n AS n_b
       FROM keys a JOIN keys b ON a.blk = b.blk AND a.name < b.name
       WHERE levenshtein(a.name, b.name) <= 3
-      ORDER BY 1, 2""",
+      ORDER BY 1, 2"""),
     // q171: q25's brute-force scored CTE with labels joined on both ends;
     // rates are one integer ratio, suspect = integer majority comparison
-    "q171_label_disagreement" -> """
+    Q("q171_label_disagreement", q171, Extra, """
       WITH scored AS (
         SELECT q.vec_id AS query_id, q.label AS qlbl,
           c.vec_id AS item_id, c.label AS ilbl,
@@ -11016,10 +12633,10 @@ object SparkEntry {
           CAST(count(*) AS DOUBLE), 6) AS disagree_rate,
         sum(CASE WHEN ilbl <> qlbl THEN 1 ELSE 0 END) * 2 >= count(*)
           AS suspect
-      FROM knn GROUP BY 1, 2 ORDER BY query_id""",
+      FROM knn GROUP BY 1, 2 ORDER BY query_id"""),
     // q172: exact interpolated medians (quantile_cont ≡ Spark percentile,
     // the q46 idiom) for center and spread; flags are one double compare
-    "q172_mad_outliers" -> """
+    Q("q172_mad_outliers", q172, Extra, """
       WITH base AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
         FROM events),
       med AS (SELECT g, quantile_cont(v, 0.5) AS med FROM base GROUP BY 1),
@@ -11037,10 +12654,10 @@ object SparkEntry {
         round(CAST(sum(CASE WHEN d.ad > 3.0 * s.mad THEN 1 ELSE 0 END)
             AS DOUBLE) / CAST(min(s.n) AS DOUBLE), 6) AS outlier_rate
       FROM dev d JOIN stats s ON d.g = s.g
-      GROUP BY d.g ORDER BY event_type""",
+      GROUP BY d.g ORDER BY event_type"""),
     // q173: marginal products summed DECIMAL-exact; po/pe/kappa the
     // identical IEEE tree; kappa NULL when pe = 1 (vacuous agreement)
-    "q173_cohens_kappa" -> raw"""
+    Q("q173_cohens_kappa", q173, Extra, raw"""
       WITH base AS (
         SELECT CASE WHEN n_chars >= 150 THEN 'good' ELSE 'bad' END AS a,
           CASE WHEN len(regexp_split_to_array(trim(lower(text)), '\s+')) >= 30
@@ -11067,10 +12684,10 @@ object SparkEntry {
              CAST(pe_num AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) /
             (1.0 - CAST(pe_num AS DOUBLE) /
              (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6) + 0.0 END AS kappa
-      FROM tot CROSS JOIN pen""",
+      FROM tot CROSS JOIN pen"""),
     // q174: token-grain join of occurrences onto vocab counts; the rarity
     // test is one integer comparison so the gate is exact
-    "q174_rare_token_ratio" -> raw"""
+    Q("q174_rare_token_ratio", q174, Extra, raw"""
       WITH toks AS (
         SELECT doc_id,
           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
@@ -11083,11 +12700,11 @@ object SparkEntry {
         round(CAST(sum(CASE WHEN f.f * 64 < tot.total THEN 1 ELSE 0 END)
             AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS rare_ratio
       FROM toks t JOIN f ON t.tok = f.tok CROSS JOIN tot
-      GROUP BY t.doc_id ORDER BY t.doc_id""",
+      GROUP BY t.doc_id ORDER BY t.doc_id"""),
     // q175: exact-cosine top-50 (q25 idiom) ⊕ int8-dot top-50 (q114's q8
     // CTE), fused by 1/(60+rank) — two IEEE divisions on integer ranks,
     // round-9 ranking + id tie-break
-    "q175_rrf_hybrid" -> """
+    Q("q175_rrf_hybrid", q175, Extra, """
       WITH v AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         FROM embeddings),
@@ -11128,10 +12745,10 @@ object SparkEntry {
         round(s, 6) AS rrf_score
       FROM f
       WINDOW w AS (PARTITION BY query_id ORDER BY round(s, 9) DESC, item_id)
-      QUALIFY rank <= 10 ORDER BY query_id, rank""",
+      QUALIFY rank <= 10 ORDER BY query_id, rank"""),
     // q176: distinct (source, shingle) postings; pair fanout per shingle
     // bounded by |sources|; jaccard = shared/(na+nb-shared), integer-fed
-    "q176_source_overlap" -> raw"""
+    Q("q176_source_overlap", q176, Extra, raw"""
       WITH toks AS (
         SELECT source, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
         FROM documents),
@@ -11153,10 +12770,10 @@ object SparkEntry {
       FROM shared sh
       JOIN sizes sa ON sh.source_a = sa.source
       JOIN sizes sb ON sh.source_b = sb.source
-      ORDER BY 1, 2""",
+      ORDER BY 1, 2"""),
     // q177: two leads in one per-user window (q125's ordering); full
     // trigrams only; top-20 with the path tie-break
-    "q177_path_trigrams" -> """
+    Q("q177_path_trigrams", q177, Extra, """
       WITH seq AS (
         SELECT event_type AS t1,
           lead(event_type, 1) OVER w AS t2,
@@ -11171,10 +12788,10 @@ object SparkEntry {
       SELECT CAST(row_number() OVER (ORDER BY n DESC, path) AS BIGINT)
           AS rank, path, n
       FROM paths
-      QUALIFY rank <= 20 ORDER BY rank""",
+      QUALIFY rank <= 20 ORDER BY rank"""),
     // q178: c·ln(c) terms rounded to 9dp and DECIMAL-summed (the
     // q149/q161 idiom), then one division + subtraction
-    "q178_token_entropy" -> raw"""
+    Q("q178_token_entropy", q178, Extra, raw"""
       WITH toks AS (
         SELECT doc_id,
           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
@@ -11187,10 +12804,10 @@ object SparkEntry {
           CAST(sum(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)), 9)
             AS DECIMAL(28,12))) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6)
           AS entropy
-      FROM c GROUP BY doc_id ORDER BY doc_id""",
+      FROM c GROUP BY doc_id ORDER BY doc_id"""),
     // q179: NOT EXISTS per direction ≡ the engine's left_anti (NULL child
     // keys count as orphans in both)
-    "q179_integrity_audit" -> """
+    Q("q179_integrity_audit", q179, Extra, """
       WITH rels AS (
         SELECT 'lineitem->orders' AS relation,
           (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_children,
@@ -11231,10 +12848,10 @@ object SparkEntry {
         n_parents, n_unreferenced,
         round(CAST(n_parents - n_unreferenced AS DOUBLE) /
           CAST(n_parents AS DOUBLE), 6) AS coverage_rate
-      FROM rels ORDER BY relation""",
+      FROM rels ORDER BY relation"""),
     // q180: digit from the cents-integer string (no runtime log10 on the
-    // gate); Benford expectations are builder-injected literals
-    "q180_benford_digits" -> {
+    // gate); Benford expectations are Scala-injected literals
+    Q("q180_benford_digits", q180, Extra, {
       val exp = (1 to 9).map(d => math.log10(1.0 + 1.0 / d))
       val expList = exp.mkString("[", ", ", "]")
       s"""
@@ -11254,10 +12871,10 @@ object SparkEntry {
           CAST(sum(n) OVER (PARTITION BY event_type) AS DOUBLE) -
           $expList[CAST(digit AS INT)], 6) + 0.0 AS deviation
       FROM c ORDER BY event_type, digit"""
-    },
+    }),
     // q181: FULL OUTER on the key; IS NOT DISTINCT FROM ≡ the engine's
     // null-safe <=>; changed_cols built from the same sorted column order
-    "q181_snapshot_diff" -> """
+    Q("q181_snapshot_diff", q181, Extra, """
       WITH oldv AS (
         SELECT o_orderkey, o_totalprice, o_orderstatus, o_orderpriority
         FROM orders WHERE o_orderkey % 7 <> 0),
@@ -11286,10 +12903,10 @@ object SparkEntry {
         FROM oldv o FULL OUTER JOIN newv n ON o.o_orderkey = n.o_orderkey)
       SELECT o_orderkey, change,
         CASE WHEN change = 'changed' THEN cols END AS changed_cols
-      FROM j WHERE change IS NOT NULL ORDER BY o_orderkey""",
+      FROM j WHERE change IS NOT NULL ORDER BY o_orderkey"""),
     // q182: rank window over the VOCAB; ln terms round-9 → decimal-sum;
     // slope/intercept the identical IEEE tree
-    "q182_zipf_fit" -> raw"""
+    Q("q182_zipf_fit", q182, Extra, raw"""
       WITH toks AS (
         SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
         FROM documents),
@@ -11312,10 +12929,10 @@ object SparkEntry {
         round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) + 0.0 AS slope,
         round((sy - sx * ((n * sxy - sx * sy) / (n * sxx - sx * sx))) / n, 6)
           + 0.0 AS intercept
-      FROM sums""",
+      FROM sums"""),
     // q183: integer x, fixed-point y — every moment sum DECIMAL-exact,
     // VARCHAR hop on the casts (the q99 >53-bit caveat)
-    "q183_hourly_trend" -> """
+    Q("q183_hourly_trend", q183, Extra, """
       WITH base AS (
         SELECT event_type AS g, CAST(hour(CAST(ts AS TIMESTAMP))
             AS DECIMAL(18,0)) AS x,
@@ -11338,11 +12955,147 @@ object SparkEntry {
         CASE WHEN nd * sxx - sx * sx = 0.0 THEN NULL
           ELSE round((sy - sx * ((nd * sxy - sx * sy) /
             (nd * sxx - sx * sx))) / nd, 6) + 0.0 END AS intercept
-      FROM sums ORDER BY event_type""",
-    "q184_weighted_pagerank" -> q184Oracle,
+      FROM sums ORDER BY event_type"""),
+    Q("q184_weighted_pagerank", q184, Extra, q184Oracle),
+    // q185: two basket equi-joins over the distinct frame, a<b<c; count
+    // + the (n desc, triple asc) total order
+    Q("q185_frequent_triples", q185, Extra, """
+      WITH items AS (
+        SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
+      tri AS (
+        SELECT a.i AS item_a, b.i AS item_b, c.i AS item_c,
+          CAST(count(*) AS BIGINT) AS n
+        FROM items a
+        JOIN items b ON a.b = b.b AND a.i < b.i
+        JOIN items c ON a.b = c.b AND b.i < c.i
+        GROUP BY 1, 2, 3)
+      SELECT CAST(row_number() OVER (
+          ORDER BY n DESC, item_a, item_b, item_c) AS BIGINT) AS rank,
+        item_a, item_b, item_c, n
+      FROM tri QUALIFY rank <= 100 ORDER BY rank"""),
+    // q186: ntile boundaries from the metric-then-id total order (the
+    // standard quotient-remainder fill both engines implement)
+    Q("q186_rfm_scores", q186, Extra, """
+      WITH pu AS (
+        SELECT user_id, max(ts) AS last_ts,
+          CAST(count(*) AS BIGINT) AS frequency,
+          CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS monetary
+        FROM events GROUP BY 1),
+      cm AS (SELECT max(last_ts) AS cmax FROM pu),
+      base AS (
+        SELECT user_id,
+          CAST(date_diff('day', CAST(last_ts AS DATE), CAST(cmax AS DATE))
+            AS BIGINT) AS recency_days,
+          frequency, monetary
+        FROM pu CROSS JOIN cm),
+      t AS (
+        SELECT user_id, recency_days, frequency, monetary,
+          CAST(ntile(5) OVER (ORDER BY recency_days DESC, user_id)
+            AS BIGINT) AS r,
+          CAST(ntile(5) OVER (ORDER BY frequency ASC, user_id)
+            AS BIGINT) AS f,
+          CAST(ntile(5) OVER (ORDER BY monetary ASC, user_id)
+            AS BIGINT) AS m
+        FROM base)
+      SELECT user_id, recency_days, frequency, round(monetary, 4) AS monetary,
+        r, f, m,
+        CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR) AS rfm
+      FROM t ORDER BY user_id"""),
+    // q187: the >= t0 condition lives IN the left join (cohort keeps
+    // never-converting users); day frame + one cumulative window
+    Q("q187_survival_curve", q187, Extra, """
+      WITH st AS (
+        SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t0
+        FROM events WHERE event_type = 'view' GROUP BY 1),
+      cv AS (
+        SELECT s.user_id, s.t0, min(CAST(e.ts AS TIMESTAMP)) AS tc
+        FROM st s LEFT JOIN events e ON e.user_id = s.user_id
+          AND e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) >= s.t0
+        GROUP BY 1, 2),
+      gaps AS (
+        SELECT CAST(date_diff('day', CAST(t0 AS DATE), CAST(tc AS DATE))
+          AS BIGINT) AS gap FROM cv),
+      coh AS (SELECT CAST(count(*) AS BIGINT) AS n FROM gaps),
+      bygap AS (
+        SELECT gap, CAST(count(*) AS BIGINT) AS c FROM gaps
+        WHERE gap IS NOT NULL GROUP BY 1),
+      days AS (SELECT CAST(range AS BIGINT) AS day FROM range(0, 15)),
+      cum AS (
+        SELECT d.day, COALESCE(b.c, 0) AS dc
+        FROM days d LEFT JOIN bygap b ON d.day = b.gap)
+      SELECT day, coh.n AS n_cohort,
+        CAST(sum(dc) OVER w AS BIGINT) AS n_converted,
+        round(CAST(coh.n - sum(dc) OVER w AS DOUBLE) /
+          CAST(coh.n AS DOUBLE), 6) AS survival
+      FROM cum CROSS JOIN coh
+      WINDOW w AS (ORDER BY day ROWS UNBOUNDED PRECEDING)
+      ORDER BY day"""),
+    // q188: min/max in one grouped agg; modal brand = per-name count
+    // argmax with the smallest-value tie-break
+    Q("q188_golden_record", q188, Extra, """
+      WITH agg AS (
+        SELECT p_name, CAST(count(*) AS BIGINT) AS n_records,
+          min(p_partkey) AS min_p_partkey,
+          round(max(p_retailprice), 2) AS max_p_retailprice
+        FROM part GROUP BY 1),
+      modal AS (
+        SELECT p_name, p_brand AS modal_p_brand FROM (
+          SELECT p_name, p_brand,
+            row_number() OVER (PARTITION BY p_name
+              ORDER BY count(*) DESC, p_brand) AS rn
+          FROM part WHERE p_brand IS NOT NULL
+          GROUP BY p_name, p_brand)
+        WHERE rn = 1)
+      SELECT a.p_name, a.n_records, a.min_p_partkey, a.max_p_retailprice,
+        m.modal_p_brand
+      FROM agg a LEFT JOIN modal m ON a.p_name = m.p_name
+      ORDER BY a.p_name"""),
+    // q189: running-max islanding in epoch micros; covered_seconds by
+    // exact integer division both sides
+    Q("q189_interval_merge", q189, Extra, """
+      WITH base AS (
+        SELECT user_id, ts, event_id,
+          epoch_us(CAST(ts AS TIMESTAMP)) AS s,
+          epoch_us(CAST(ts AS TIMESTAMP)) + 300000000 AS e
+        FROM events),
+      flagged AS (
+        SELECT user_id, ts, event_id, s, e,
+          max(e) OVER (PARTITION BY user_id ORDER BY ts, event_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+        FROM base),
+      isl AS (
+        SELECT user_id, s, e,
+          sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
+            OVER (PARTITION BY user_id ORDER BY ts, event_id
+              ROWS UNBOUNDED PRECEDING) AS island
+        FROM flagged)
+      SELECT user_id, CAST(island AS BIGINT) AS island,
+        make_timestamp(min(s)) AS island_start,
+        make_timestamp(max(e)) AS island_end,
+        CAST(count(*) AS BIGINT) AS n_events,
+        CAST((max(e) - min(s)) // 1000000 AS BIGINT) AS covered_seconds
+      FROM isl GROUP BY 1, 2 ORDER BY 1, 2"""),
+    // q190: the engine's sequential fold restated as a linear recursive
+    // CTE — rn -> rn+1 per user, kept-clock carried in the walk
+    Q("q190_debounce", q190, Extra, q190Oracle),
+    // q191: the reconstruction law — the oracle IS the source frames
+    // (pre-merge table tagged before, post-merge tagged after)
+    Q("q191_scd2_asof", q191, Extra, """
+      SELECT c_custkey, c_mktsegment, c_nationkey, 'before' AS state
+      FROM customer
+      UNION ALL
+      SELECT c_custkey,
+        CASE WHEN c_custkey % 10 = 0 THEN 'MACHINERY'
+             ELSE c_mktsegment END,
+        c_nationkey, 'after'
+      FROM customer WHERE c_custkey % 97 <> 0
+      UNION ALL
+      SELECT c_custkey + 1000000, 'BUILDING', c_nationkey, 'after'
+      FROM customer WHERE c_custkey % 101 = 0
+      ORDER BY state, c_custkey"""),
     // q192: q28's score + q178's entropy feed the skyline; survive iff
     // y = G(x) (same-x max) and y > M(x) (strictly-greater-x max)
-    "q192_pareto_frontier" -> raw"""
+    Q("q192_pareto_frontier", q192, Extra, raw"""
       WITH f AS (
         SELECT doc_id,
           CAST(len(tk) AS DOUBLE) AS nt,
@@ -11382,34 +13135,23 @@ object SparkEntry {
       SELECT b.id AS doc_id, b.x AS quality, b.y AS entropy
       FROM base b JOIN m ON b.x = m.x
       WHERE b.y = m.gy AND (m.m IS NULL OR b.y > m.m)
-      ORDER BY doc_id""",
+      ORDER BY doc_id"""),
     // q193: ntile over the (score, id) total order; round-9 decimal mean
-    "q193_reliability_bins" -> q193Oracle,
+    Q("q193_reliability_bins", q193, Extra, q193Oracle),
     // q194: Mann–Whitney with tied-rank averaging — half-integer avg
     // ranks carried in DECIMAL(38,1)
-    "q194_auc" -> q194Oracle,
+    Q("q194_auc", q194, Extra, q194Oracle),
     // q195: q27's prediction CASE + class-grain folds off the confusion
     // cells; null metrics where the denominator (or tp) is zero
-    "q195_classifier_metrics" -> q195Oracle,
-    // q200: the composition gate — each arm's oracle verbatim as a
-    // subquery, melted to (metric, key, value)
-    "q200_eval_report" -> s"""
-      SELECT 'auc' AS metric, CAST(NULL AS VARCHAR) AS key, auc AS value
-      FROM ($q194Oracle)
-      UNION ALL
-      SELECT 'bin_pos_rate', CAST(bin AS VARCHAR), pos_rate
-      FROM ($q193Oracle)
-      UNION ALL
-      SELECT 'precision', lang, precision FROM ($q195Oracle)
-      UNION ALL
-      SELECT 'recall', lang, recall FROM ($q195Oracle)
-      UNION ALL
-      SELECT 'f1', lang, f1 FROM ($q195Oracle)
-      ORDER BY metric, key NULLS FIRST""",
+    Q("q195_classifier_metrics", q195, Extra, q195Oracle),
+    // q196: the streamed twin shares q190's oracle VERBATIM — under the
+    // event-time-monotone batch boundary, stateful streaming debounce
+    // must equal the batch fold on the union (q140/q136's device)
+    Q("q196_debounce_stream", q196, Extra, q190Oracle),
     // q197: user equi-join with the range predicate; q168's integer
     // largest-remainder split — base cents to all touches, the first
     // (c mod n) in (time, id) order take one extra; Σ ≡ cents exactly
-    "q197_linear_attribution" -> """
+    Q("q197_linear_attribution", q197, Extra, """
       WITH conv AS (
         SELECT user_id AS u, event_id AS pid,
           epoch_us(CAST(ts AS TIMESTAMP)) AS pt,
@@ -11434,10 +13176,10 @@ object SparkEntry {
         strftime(make_timestamp(ct), '%Y-%m-%d') AS day,
         CAST(count(*) AS BIGINT) AS n_touches,
         CAST(sum(credit) AS BIGINT) AS credit_cents
-      FROM credited GROUP BY 1, 2 ORDER BY 1, 2""",
+      FROM credited GROUP BY 1, 2 ORDER BY 1, 2"""),
     // q198: three-level DECIMAL-exact sums; shares are IEEE divisions of
     // the exact sums with the q99 VARCHAR hop
-    "q198_contribution_shares" -> """
+    Q("q198_contribution_shares", q198, Extra, """
       WITH base AS (
         SELECT r.r_name AS region, n.n_name AS nation,
           CAST(l.l_extendedprice AS DECIMAL(18,4)) AS m
@@ -11462,9 +13204,9 @@ object SparkEntry {
         round(CAST(CAST(pm AS VARCHAR) AS DOUBLE) /
           CAST(CAST(tm AS VARCHAR) AS DOUBLE), 6) AS parent_share,
         rank_in_parent
-      FROM lv ORDER BY region, nation""",
+      FROM lv ORDER BY region, nation"""),
     // q199: q32's session expressions folded to the one-row report
-    "q199_session_report" -> """
+    Q("q199_session_report", q199, Extra, """
       WITH seq AS (
         SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
           lag(epoch_us(CAST(ts AS TIMESTAMP)), 1) OVER (
@@ -11493,10 +13235,25 @@ object SparkEntry {
           AS events_per_session,
         round(CAST(sum(CAST(dur_us AS DECIMAL(38,0))) AS DOUBLE) /
           1000000.0 / CAST(count(*) AS DOUBLE), 6) AS mean_duration_s
-      FROM sess""",
+      FROM sess"""),
+    // q200: the composition gate — each arm's oracle verbatim as a
+    // subquery, melted to (metric, key, value)
+    Q("q200_eval_report", q200, Extra, s"""
+      SELECT 'auc' AS metric, CAST(NULL AS VARCHAR) AS key, auc AS value
+      FROM ($q194Oracle)
+      UNION ALL
+      SELECT 'bin_pos_rate', CAST(bin AS VARCHAR), pos_rate
+      FROM ($q193Oracle)
+      UNION ALL
+      SELECT 'precision', lang, precision FROM ($q195Oracle)
+      UNION ALL
+      SELECT 'recall', lang, recall FROM ($q195Oracle)
+      UNION ALL
+      SELECT 'f1', lang, f1 FROM ($q195Oracle)
+      ORDER BY metric, key NULLS FIRST"""),
     // q201: RANGE frames include all value peers — tie-order-independent
     // by construction; DECIMAL band sums
-    "q201_range_frame" -> """
+    Q("q201_range_frame", q201, Extra, """
       SELECT event_id, event_type, value,
         CAST(count(*) OVER w AS BIGINT) AS n_in_band,
         round(CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE), 4)
@@ -11504,10 +13261,10 @@ object SparkEntry {
       FROM events
       WINDOW w AS (PARTITION BY event_type ORDER BY value
         RANGE BETWEEN 100.0 PRECEDING AND CURRENT ROW)
-      ORDER BY event_id""",
+      ORDER BY event_id"""),
     // q202: DuckDB ASOF LEFT JOIN (>= semantics, right side collapsed to
     // unique (user, ts) with arg_max) + the staleness CASE
-    "q202_asof_tolerance" -> """
+    Q("q202_asof_tolerance", q202, Extra, """
       WITH clicks AS (
         SELECT user_id, CAST(ts AS TIMESTAMP) AS cts,
           max(event_id) AS click_id, arg_max(value, event_id) AS click_value
@@ -11524,10 +13281,10 @@ object SparkEntry {
           THEN round(c.click_value, 4) END AS click_value
       FROM o ASOF LEFT JOIN clicks c
         ON o.user_id = c.user_id AND o.ots >= c.cts
-      ORDER BY event_id""",
+      ORDER BY event_id"""),
     // q203: quantile_cont list boundaries (≡ Spark percentile array);
     // bucket = 1 + Σ (v > boundary_i), identical IEEE compares
-    "q203_equidepth_histogram" -> """
+    Q("q203_equidepth_histogram", q203, Extra, """
       WITH base AS (
         SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events),
       bounds AS (
@@ -11541,9 +13298,9 @@ object SparkEntry {
         FROM base JOIN bounds b ON base.g = b.g)
       SELECT g AS event_type, bucket, CAST(count(*) AS BIGINT) AS n,
         round(min(v), 4) AS min_v, round(max(v), 4) AS max_v
-      FROM assigned GROUP BY 1, 2 ORDER BY 1, 2""",
+      FROM assigned GROUP BY 1, 2 ORDER BY 1, 2"""),
     // q204: q67's packing CTE folded to the per-lang efficiency readout
-    "q204_packing_efficiency" -> raw"""
+    Q("q204_packing_efficiency", q204, Extra, raw"""
       WITH f AS (
         SELECT doc_id, lang,
           CAST(len(regexp_split_to_array(trim(lower(text)), '\s+'))
@@ -11566,12 +13323,59 @@ object SparkEntry {
           AS n_spanning,
         round(CAST(sum(n_tokens) AS DOUBLE) /
           CAST(count(DISTINCT bin_id) * 2048 AS DOUBLE), 6) AS fill_ratio
-      FROM packed GROUP BY lang ORDER BY lang""",
+      FROM packed GROUP BY lang ORDER BY lang"""),
+    // q205: the CDC resolution restated directly — final state = updated
+    // rows for mod-3, dropped for mod-5, inserts otherwise
+    Q("q205_cdc_apply", q205, Extra, q205CdcOracle),
+    // q206: q159's knn CTE; wedges via the symmetric self-join, 1-hop
+    // and self excluded, distinct targets counted
+    Q("q206_two_hop_reach", q206, Extra, """
+      WITH p AS MATERIALIZED (
+        SELECT a.vec_id AS ia, b.vec_id AS ib,
+          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+            CAST(b.embedding AS DOUBLE[])) AS cos
+        FROM embeddings a JOIN embeddings b
+          ON a.label = b.label AND a.vec_id < b.vec_id),
+      symc AS (
+        SELECT ia AS node, ib AS nbr, cos FROM p
+        UNION ALL
+        SELECT ib AS node, ia AS nbr, cos FROM p),
+      knn AS (
+        SELECT node, nbr FROM (
+          SELECT node, nbr, row_number() OVER w AS rank
+          FROM symc
+          WINDOW w AS (PARTITION BY node ORDER BY round(cos, 6) DESC, nbr))
+        WHERE rank <= 3),
+      und AS MATERIALIZED (
+        SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
+        FROM knn WHERE node <> nbr),
+      sym AS MATERIALIZED (
+        SELECT a AS x, b AS y FROM und UNION ALL SELECT b, a FROM und),
+      deg AS (SELECT x AS node, CAST(count(*) AS BIGINT) AS n1 FROM sym
+        GROUP BY 1),
+      two AS (
+        SELECT DISTINCT s1.x AS a0, s2.y AS b0
+        FROM sym s1 JOIN sym s2 ON s1.y = s2.x
+        WHERE s1.x <> s2.y),
+      twoonly AS (
+        SELECT a0, b0 FROM two
+        WHERE NOT EXISTS (SELECT 1 FROM sym WHERE sym.x = two.a0
+          AND sym.y = two.b0)),
+      n2 AS (SELECT a0 AS node, CAST(count(*) AS BIGINT) AS n2
+        FROM twoonly GROUP BY 1)
+      SELECT d.node, d.n1, COALESCE(n2.n2, 0) AS n2,
+        2 * d.n1 + COALESCE(n2.n2, 0) AS reach_x2
+      FROM deg d LEFT JOIN n2 ON d.node = n2.node
+      ORDER BY d.node"""),
     // q207: two unrolled BPE rounds — pair mining + recursive merge walk
-    "q207_bpe_rounds" -> q207Oracle,
+    Q("q207_bpe_rounds", q207, Extra, q207Oracle),
+    // q208: the streamed twin shares q205's oracle VERBATIM — per-key
+    // frontier state across micro-batches must converge to the batch
+    // resolution for any log partitioning
+    Q("q208_cdc_stream", q208, Extra, q205CdcOracle),
     // q209: DECIMAL-exact moments broadcast onto rows; population
     // variance; constant groups null; VARCHAR hop on the big sums
-    "q209_feature_scale" -> """
+    Q("q209_feature_scale", q209, Extra, """
       WITH base AS (
         SELECT event_type AS g, event_id AS id,
           CAST(value AS DECIMAL(18,4)) AS v
@@ -11596,10 +13400,10 @@ object SparkEntry {
             sqrt(st.ss / st.n - (st.s / st.n) * (st.s / st.n)), 6) + 0.0
           END AS zscore
       FROM base b JOIN stats st ON b.g = st.g
-      ORDER BY event_id""",
+      ORDER BY event_id"""),
     // q210: daily integer counts; consecutive-day self-join; the q164
     // integer-moment Pearson idiom
-    "q210_lag1_autocorr" -> """
+    Q("q210_lag1_autocorr", q210, Extra, """
       WITH daily AS (
         SELECT event_type AS g, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
           CAST(count(*) AS BIGINT) AS c
@@ -11628,31 +13432,85 @@ object SparkEntry {
           ELSE round((n * sxy - sx * sy) /
             sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) + 0.0 END
           AS autocorr
-      FROM sums ORDER BY event_type""",
+      FROM sums ORDER BY event_type"""),
     // q211: the CLUSTER-blocked truth over the SQL-derived clustered
     // vectors (cluster = vec_id % n_clusters, n_clusters capped so cell
     // population stays ~200) — the engine blocks by geometric cell
     // assignment instead, so hash equality IS the recall-1.0 proof for
     // bounded cell blocking
-    "q211_knn_bounded" -> q211Oracle,
+    Q("q211_knn_bounded", q211, Extra, q211Oracle),
+    // q212: the stats recomputed from the closed-form dimension rule the
+    // engine ENCODED the PNGs at — hash equality proves the real
+    // javax.imageio decode round-trips every dimension exactly
+    Q("q212_real_codec_roundtrip", q212, Extra, """
+      WITH dims AS (
+        SELECT CAST(doc_id AS BIGINT) AS asset_id,
+          CAST(16 + (CAST(doc_id AS BIGINT) * 7) % 120 AS INT) AS width,
+          CAST(16 + (CAST(doc_id AS BIGINT) * 13) % 90 AS INT) AS height
+        FROM documents WHERE doc_id < 200)
+      SELECT asset_id, width, height, CAST(3 AS INT) AS channels,
+        round(CAST(width AS DOUBLE) /
+          nullif(CAST(height AS DOUBLE), 0.0), 4) AS aspect,
+        (width > 1024 OR height > 1024) AS needs_resize,
+        CAST(CAST(width AS BIGINT) * height AS BIGINT) AS pixels,
+        CAST(floor(width * (CASE WHEN greatest(width, height) <= 64
+            THEN 1.0 ELSE 64.0 / CAST(greatest(width, height) AS DOUBLE)
+            END)) AS INT) AS out_width,
+        CAST(floor(height * (CASE WHEN greatest(width, height) <= 64
+            THEN 1.0 ELSE 64.0 / CAST(greatest(width, height) AS DOUBLE)
+            END)) AS INT) AS out_height
+      FROM dims ORDER BY asset_id"""),
+    // q213: q146's retrieval chain through `marked` (q146Cte), then
+    // AP@5/NDCG@5 with the ENGINE-injected literal discount and
+    // ideal-DCG tables (Eval.rankingMetrics computes the same lists)
+    Q("q213_ranking_metrics", q213, Extra, {
+      val gains = (1 to 5).map(r => 1.0 / (math.log(r + 1.0) / math.log(2.0)))
+      val idcg = gains.scanLeft(0.0)(_ + _)
+      val gainList = gains.mkString("[", ", ", "]")
+      val idcgList = idcg.mkString("[", ", ", "]")
+      s"""$q146Cte,
+      g AS (
+        SELECT query_id, rank, rel,
+          sum(rel) OVER (PARTITION BY query_id ORDER BY rank
+            ROWS UNBOUNDED PRECEDING) AS hits_upto
+        FROM marked),
+      rsz AS (SELECT query_id, CAST(count(*) AS BIGINT) AS r
+              FROM truth GROUP BY 1),
+      agg AS (
+        SELECT query_id, CAST(count(*) AS BIGINT) AS n_returned,
+          CAST(sum(rel) AS BIGINT) AS hits,
+          CAST(sum(CAST(round(CASE WHEN rel = 1
+              THEN CAST(hits_upto AS DOUBLE) / CAST(rank AS DOUBLE)
+              ELSE 0.0 END, 9) AS DECIMAL(28,12))) AS DOUBLE) AS apn,
+          CAST(sum(CAST(round(CAST(rel AS DOUBLE) *
+              ($gainList)[CAST(rank AS INT)], 9)
+              AS DECIMAL(28,12))) AS DOUBLE) AS dcg
+        FROM g GROUP BY 1)
+      SELECT a.query_id, a.n_returned, a.hits,
+        round(a.apn / CAST(least(rsz.r, 5) AS DOUBLE), 6) AS ap,
+        round(a.dcg / ($idcgList)[CAST(least(rsz.r, 5) AS INT) + 1], 6)
+          AS ndcg
+      FROM agg a JOIN rsz ON a.query_id = rsz.query_id
+      ORDER BY a.query_id"""
+    }),
     // q214: the incremental cell-blocked graph must equal the full
     // cell-blocked recompute (the q142 merge law under the bounded key),
     // which on the clustered fixture is q211's truth VERBATIM
-    "q214_knn_bounded_incremental" -> q211Oracle,
-    "q215_pr_auc" -> q215Oracle,
-    "q216_calibration_summary" -> q216Oracle,
-    "q217_hits" -> q217Oracle,
-    "q218_ewma_daily" -> q218Oracle,
-    "q219_group_kfold" -> s"""
+    Q("q214_knn_bounded_incremental", q214, Extra, q211Oracle),
+    Q("q215_pr_auc", q215, Extra, q215Oracle),
+    Q("q216_calibration_summary", q216, Extra, q216Oracle),
+    Q("q217_hits", q217, Extra, q217Oracle),
+    Q("q218_ewma_daily", q218, Extra, q218Oracle),
+    Q("q219_group_kfold", q219, Extra, s"""
       SELECT doc_id, source,
         CAST((${hashPosSql("'fold'", "source")} * 5) // 4294967296
           AS BIGINT) AS fold
-      FROM documents ORDER BY doc_id""",
+      FROM documents ORDER BY doc_id"""),
     // q220: the same ε-pair predicate as q111, then neighbor counts →
     // cores → recursive-CTE components over the CORE subgraph →
     // min-cluster border adoption; cluster ids are min member ids on
     // both sides (CC's label contract), so the triage is deterministic.
-    "q220_dbscan" -> """
+    Q("q220_dbscan", q220, Extra, """
       WITH RECURSIVE p AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM embeddings a JOIN embeddings b
@@ -11694,11 +13552,11 @@ object SparkEntry {
       LEFT JOIN corec k ON e.vec_id = k.node
       LEFT JOIN border b ON e.vec_id = b.node
       LEFT JOIN nc n ON e.vec_id = n.node
-      ORDER BY e.vec_id""",
+      ORDER BY e.vec_id"""),
     // q221: DuckDB replays FakePcmCodec sample-for-sample — frame j's 8
     // int16s are hex fields of md5(text || '|' || j), energies/peaks
     // pure integers.
-    "q221_audio_frame_energy" -> """
+    Q("q221_audio_frame_energy", q221, Extra, """
       WITH base AS (
         SELECT doc_id, text, octet_length(encode(text)) AS bl
         FROM documents),
@@ -11725,12 +13583,12 @@ object SparkEntry {
       SELECT doc_id AS asset_id, CAST(max(nf) AS BIGINT) AS n_frames,
         CAST(sum(energy) AS BIGINT) AS total_energy,
         CAST(max(peak) AS BIGINT) AS peak
-      FROM fe GROUP BY doc_id ORDER BY asset_id""",
+      FROM fe GROUP BY doc_id ORDER BY asset_id"""),
     // q222 streams the same daily series through GroupState; the landed
     // table must equal the batch EWMA fold — the oracle is q218's
     // generated chain VERBATIM (q136/q140's shared-oracle pattern)
-    "q222_ewma_stream" -> q218Oracle,
-    "q223_unigram_lm_score" -> raw"""
+    Q("q222_ewma_stream", q222, Extra, q218Oracle),
+    Q("q223_unigram_lm_score", q223, Extra, raw"""
       WITH toks AS (
         SELECT doc_id,
           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
@@ -11746,10 +13604,10 @@ object SparkEntry {
           AS mean_prob,
         round(CAST(min(f) AS DOUBLE) / CAST(max(N) AS DOUBLE), 6)
           AS min_prob
-      FROM j GROUP BY doc_id ORDER BY doc_id""",
+      FROM j GROUP BY doc_id ORDER BY doc_id"""),
     // q224: the Poisson CDF thresholds are the SAME Scala-computed Longs
     // the engine compares against — pure integer replica counts
-    "q224_bootstrap" -> {
+    Q("q224_bootstrap", q224, Extra, {
       val cases = graft.ops.Sampling.poissonBounds(8)
         .map(t => s"(CASE WHEN h >= $t THEN 1 ELSE 0 END)").mkString(" + ")
       s"""
@@ -11761,16 +13619,102 @@ object SparkEntry {
       SELECT doc_id, source,
         unnest(generate_series(0, copies - 1)) AS copy
       FROM c WHERE copies > 0 ORDER BY doc_id, copy"""
-    },
-    "q230_orc_roundtrip" -> eventsIdentityOracle,
-    // q233: the snapshot-pinned read must equal the FIRST landing alone —
-    // the odd event_ids — even though the table has since grown
-    "q233_manifest_time_travel" -> """
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        min(event_id) AS min_id, max(event_id) AS max_id
-      FROM events WHERE event_id % 2 = 1
-      GROUP BY event_type ORDER BY event_type""",
-    "q231_spearman" -> raw"""
+    }),
+    Q("q225_ks_drift", q225, Extra, """
+      WITH base AS (
+        SELECT value AS s, event_type = 'purchase' AS p FROM events
+        WHERE event_type IN ('click', 'purchase')),
+      per AS (
+        SELECT s, count(*) AS n,
+          sum(CASE WHEN p THEN 1 ELSE 0 END) AS np
+        FROM base GROUP BY 1),
+      cum AS (
+        SELECT s, n, np,
+          sum(n) OVER (ORDER BY s) AS cn,
+          sum(np) OVER (ORDER BY s) AS cnp
+        FROM per),
+      tot AS (
+        SELECT CAST(sum(np) AS BIGINT) AS na,
+          CAST(sum(n) - sum(np) AS BIGINT) AS nb
+        FROM per)
+      SELECT t.na AS n_a, t.nb AS n_b,
+        CASE WHEN t.na = 0 OR t.nb = 0 THEN NULL ELSE
+          round(max(abs(CAST(c.cnp AS DOUBLE) / CAST(t.na AS DOUBLE) -
+            CAST(c.cn - c.cnp AS DOUBLE) / CAST(t.nb AS DOUBLE))), 6)
+        END AS ks
+      FROM cum c CROSS JOIN tot t GROUP BY t.na, t.nb"""),
+    // q226: the three greedy MMR steps unrolled from ONE generated
+    // template (q101's device): step t scores every unpicked shortlist
+    // item against the picked set via greatest(), the same rdz-rounded
+    // ordering the engine's rank window uses.
+    Q("q226_mmr_diversify", q226, Extra, s"""
+      WITH $mmrCtes
+      SELECT query_id, CAST(1 AS BIGINT) AS rank, item_id,
+        round(score, 6) + 0.0 AS score FROM p1
+      UNION ALL SELECT query_id, CAST(2 AS BIGINT), item_id,
+        round(score, 6) + 0.0 FROM p2
+      UNION ALL SELECT query_id, CAST(3 AS BIGINT), item_id,
+        round(score, 6) + 0.0 FROM p3
+      ORDER BY query_id, rank"""),
+    Q("q227_bfs_distance", q227, Extra, """
+      WITH RECURSIVE e AS (
+        SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
+          's' || CAST(l_suppkey AS VARCHAR) AS dst FROM lineitem
+        UNION
+        SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR),
+          'p' || CAST(l_partkey AS VARCHAR) FROM lineitem),
+      sd AS (SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR) AS node
+             FROM supplier WHERE s_suppkey <= 3),
+      d(node, dist) AS (
+        SELECT node, 0 FROM sd
+        UNION
+        SELECT e.dst, d.dist + 1 FROM d JOIN e ON d.node = e.src
+        WHERE d.dist < 4)
+      SELECT node, CAST(min(dist) AS BIGINT) AS dist
+      FROM d GROUP BY node ORDER BY node"""),
+    Q("q228_seasonal_profile", q228, Extra, """
+      WITH daily AS (
+        SELECT event_type AS key, CAST(ts AS DATE) AS day,
+          count(*) AS cnt
+        FROM events GROUP BY 1, 2),
+      bd AS (
+        SELECT key, CAST(dayofweek(day) AS BIGINT) AS dow,
+          CAST(count(*) AS BIGINT) AS n_days,
+          CAST(sum(cnt) AS BIGINT) AS n_events
+        FROM daily GROUP BY 1, 2),
+      tot AS (SELECT key, sum(n_events) AS tt FROM bd GROUP BY 1)
+      SELECT bd.key AS event_type, bd.dow, bd.n_days, bd.n_events,
+        round(CAST(bd.n_events AS DOUBLE) / CAST(bd.n_days AS DOUBLE), 6)
+          AS mean_daily,
+        round(CAST(bd.n_events AS DOUBLE) / CAST(t.tt AS DOUBLE), 6)
+          AS share
+      FROM bd JOIN tot t ON bd.key = t.key ORDER BY event_type, dow"""),
+    Q("q229_changepoint", q229, Extra, """
+      WITH daily AS (
+        SELECT event_type AS key, CAST(ts AS DATE) AS day,
+          sum(CAST(value AS DECIMAL(18,2))) AS ds
+        FROM events GROUP BY 1, 2),
+      g AS (
+        SELECT key, day,
+          CAST(row_number() OVER wo AS BIGINT) AS k,
+          CAST(sum(CAST(ds AS DECIMAL(28,2))) OVER (PARTITION BY key
+            ORDER BY day ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS sk,
+          CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS n,
+          CAST(sum(CAST(ds AS DECIMAL(28,2))) OVER (PARTITION BY key)
+            AS DOUBLE) AS sn
+        FROM daily WINDOW wo AS (PARTITION BY key ORDER BY day ASC)),
+      st AS (
+        SELECT key, day, n,
+          abs(sk - (CAST(k AS DOUBLE) * sn) / CAST(n AS DOUBLE)) AS stat
+        FROM g)
+      SELECT key AS event_type, strftime(day, '%Y-%m-%d') AS change_day,
+        n AS n_days, round(stat, 4) + 0.0 AS stat
+      FROM st
+      QUALIFY row_number() OVER (PARTITION BY key
+        ORDER BY stat DESC, day ASC) = 1
+      ORDER BY event_type"""),
+    Q("q230_orc_roundtrip", q230, Extra, eventsIdentityOracle),
+    Q("q231_spearman", q231, Extra, raw"""
       WITH f AS (
         SELECT lang, n_chars,
           CAST(len(regexp_split_to_array(trim(lower(text)), '\s+'))
@@ -11798,10 +13742,10 @@ object SparkEntry {
           ELSE round((nd * sxy - sx * sy) /
             sqrt((nd * sxx - sx * sx) * (nd * syy - sy * sy)), 6) + 0.0
         END AS spearman
-      FROM m ORDER BY lang""",
+      FROM m ORDER BY lang"""),
     // q232: the q195 language-detector CTE collapsed to the is-English
     // binary, then the identical report-card trees
-    "q232_binary_card" -> raw"""
+    Q("q232_binary_card", q232, Extra, raw"""
       WITH sc AS (
         SELECT lang,
           len(list_filter(tk, t -> t IN ('the','a','of','and','to'))) AS s_en,
@@ -11844,25 +13788,44 @@ object SparkEntry {
             sqrt(CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE) *
                  CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE)), 6) + 0.0
         END AS mcc
-      FROM cm""",
-    // q226: the three greedy MMR steps unrolled from ONE generated
-    // template (q101's device): step t scores every unpicked shortlist
-    // item against the picked set via greatest(), the same rdz-rounded
-    // ordering the engine's rank window uses.
-    "q226_mmr_diversify" -> s"""
-      WITH $mmrCtes
-      SELECT query_id, CAST(1 AS BIGINT) AS rank, item_id,
-        round(score, 6) + 0.0 AS score FROM p1
-      UNION ALL SELECT query_id, CAST(2 AS BIGINT), item_id,
-        round(score, 6) + 0.0 FROM p2
-      UNION ALL SELECT query_id, CAST(3 AS BIGINT), item_id,
-        round(score, 6) + 0.0 FROM p3
-      ORDER BY query_id, rank""",
+      FROM cm"""),
+    // q233: the snapshot-pinned read must equal the FIRST landing alone —
+    // the odd event_ids — even though the table has since grown
+    Q("q233_manifest_time_travel", q233, Extra, """
+      SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+        min(event_id) AS min_id, max(event_id) AS max_id
+      FROM events WHERE event_id % 2 = 1
+      GROUP BY event_type ORDER BY event_type"""),
+    // q234 streams the same sufficient statistic through a Complete-mode
+    // aggregation and shares the batch fold — oracle VERBATIM below
+    Q("q234_ks_drift_stream", q234, Extra, """
+      WITH base AS (
+        SELECT value AS s, event_type = 'purchase' AS p FROM events
+        WHERE event_type IN ('click', 'purchase')),
+      per AS (
+        SELECT s, count(*) AS n,
+          sum(CASE WHEN p THEN 1 ELSE 0 END) AS np
+        FROM base GROUP BY 1),
+      cum AS (
+        SELECT s, n, np,
+          sum(n) OVER (ORDER BY s) AS cn,
+          sum(np) OVER (ORDER BY s) AS cnp
+        FROM per),
+      tot AS (
+        SELECT CAST(sum(np) AS BIGINT) AS na,
+          CAST(sum(n) - sum(np) AS BIGINT) AS nb
+        FROM per)
+      SELECT t.na AS n_a, t.nb AS n_b,
+        CASE WHEN t.na = 0 OR t.nb = 0 THEN NULL ELSE
+          round(max(abs(CAST(c.cnp AS DOUBLE) / CAST(t.na AS DOUBLE) -
+            CAST(c.cn - c.cnp AS DOUBLE) / CAST(t.nb AS DOUBLE))), 6)
+        END AS ks
+      FROM cum c CROSS JOIN tot t GROUP BY t.na, t.nb"""),
     // q235: q226's greedy template composed with q213's metric
     // arithmetic against the brute-force top-5 truth — the
     // diversification-cost readout; shared CTEs mean the constituents
     // cannot drift from their own gates
-    "q235_mmr_eval" -> {
+    Q("q235_mmr_eval", q235, Extra, {
       val k = 3
       val gains = (1 to k).map(r => 1.0 / (math.log(r + 1.0) / math.log(2.0)))
       val idcg = gains.scanLeft(0.0)(_ + _)
@@ -11911,26 +13874,10 @@ object SparkEntry {
           AS ndcg
       FROM agg a JOIN rsz ON a.query_id = rsz.query_id
       ORDER BY a.query_id"""
-    },
-    "q227_bfs_distance" -> """
-      WITH RECURSIVE e AS (
-        SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-          's' || CAST(l_suppkey AS VARCHAR) AS dst FROM lineitem
-        UNION
-        SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR),
-          'p' || CAST(l_partkey AS VARCHAR) FROM lineitem),
-      sd AS (SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR) AS node
-             FROM supplier WHERE s_suppkey <= 3),
-      d(node, dist) AS (
-        SELECT node, 0 FROM sd
-        UNION
-        SELECT e.dst, d.dist + 1 FROM d JOIN e ON d.node = e.src
-        WHERE d.dist < 4)
-      SELECT node, CAST(min(dist) AS BIGINT) AS dist
-      FROM d GROUP BY node ORDER BY node""",
+    }),
     // q236 streams the daily counts and screens against q228's frozen
     // baseline — the oracle embeds the profile arithmetic verbatim
-    "q236_seasonal_anomaly_stream" -> """
+    Q("q236_seasonal_anomaly_stream", q236, Extra, """
       WITH daily AS (
         SELECT event_type AS key, CAST(ts AS DATE) AS day,
           CAST(count(*) AS BIGINT) AS cnt
@@ -11952,13 +13899,13 @@ object SparkEntry {
       SELECT key AS event_type, strftime(day, '%Y-%m-%d') AS day, dow,
         cnt, mean_daily
       FROM f WHERE CAST(cnt AS DOUBLE) > CAST(1.05 AS DOUBLE) * mean_daily
-      ORDER BY event_type, day""",
+      ORDER BY event_type, day"""),
     // q237: the CLUSTER-blocked DBSCAN truth over q211's SQL-derived
     // clustered vectors (ε = 0.55 in the measured mixture gap) — the
     // engine blocks by capped multi-probe cell assignment instead, so
     // hash equality IS the ε-recall-1.0 proof for bounded-cell DBSCAN;
     // per-node degrees pin the pair set itself, not just the triage
-    "q237_dbscan_cells" -> s"""
+    Q("q237_dbscan_cells", q237, Extra, s"""
       WITH RECURSIVE $clusteredVecsCte,
       p AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -12000,11 +13947,11 @@ object SparkEntry {
       LEFT JOIN corec k ON e.vec_id = k.node
       LEFT JOIN border b ON e.vec_id = b.node
       LEFT JOIN nc2 n ON e.vec_id = n.node
-      ORDER BY e.vec_id""",
+      ORDER BY e.vec_id"""),
     // q238: energy/peak recomputed from the closed-form sample rule —
     // the engine's WAV encode→decode must return every PCM sample
     // bit-exactly for the hash to match (frames of 8, partial last kept)
-    "q238_wav_roundtrip" -> """
+    Q("q238_wav_roundtrip", q238, Extra, """
       WITH ids AS (
         SELECT doc_id AS id FROM documents WHERE doc_id < 200),
       idx AS (
@@ -12019,11 +13966,11 @@ object SparkEntry {
       SELECT id AS asset_id, CAST(count(*) AS BIGINT) AS n_frames,
         CAST(sum(energy) AS BIGINT) AS total_energy,
         CAST(max(peak) AS BIGINT) AS peak
-      FROM fe GROUP BY id ORDER BY asset_id""",
+      FROM fe GROUP BY id ORDER BY asset_id"""),
     // q239: silhouette replayed from the same rdz-rounded centroid
     // cosines — assignment is the LABEL, centroids its min-id seeds, so
     // misfits are real and the gate pins the triage row-for-row
-    "q239_silhouette" -> """
+    Q("q239_silhouette", q239, Extra, """
       WITH cent AS (
         SELECT label AS cell, embedding AS cvec FROM embeddings
         QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
@@ -12048,10 +13995,10 @@ object SparkEntry {
         round(CAST(sum(CAST(round(s, 9) AS DECIMAL(28,12))) AS DOUBLE) /
           count(*), 6) + 0.0 AS mean_sil,
         CAST(sum(CASE WHEN s < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_misfit
-      FROM sil GROUP BY 1 ORDER BY cell""",
+      FROM sil GROUP BY 1 ORDER BY cell"""),
     // q240: the KMV estimator replayed from the same md5 positions —
     // exact integers end-to-end, one rounded division at the readout
-    "q240_kmv_distinct" -> s"""
+    Q("q240_kmv_distinct", q240, Extra, s"""
       WITH h AS (
         SELECT DISTINCT ${hashPosSql("'kmv'", "CAST(l_partkey AS VARCHAR)")}
           AS hv
@@ -12063,10 +14010,28 @@ object SparkEntry {
              WHEN max(hv) = 0 THEN NULL
              ELSE round(255.0 * 4294967296.0 / max(hv), 4) END
           AS est_distinct
-      FROM m""",
+      FROM m"""),
+    // q241/q242: the chunk stream replayed boundary-for-boundary from
+    // the shared CTE (same windowed md5 predicate, same lag arithmetic)
+    Q("q241_content_chunks", q241, Extra, s"""$chunkCte
+      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
+        CAST(sum(clen) AS BIGINT) AS total_len,
+        CAST(max(clen) AS BIGINT) AS max_chunk_len,
+        min(chash) AS min_chunk_hash
+      FROM cc GROUP BY 1 ORDER BY doc_id"""),
+    Q("q242_chunk_dedup", q242, Extra, s"""$chunkCte,
+      per AS (SELECT chash, count(*) AS n FROM cc GROUP BY 1)
+      SELECT CAST(sum(n) AS BIGINT) AS n_instances,
+        CAST(count(*) AS BIGINT) AS n_distinct,
+        CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
+        CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT)
+          AS n_dup_instances,
+        round(CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS DOUBLE) /
+          CAST(sum(n) AS DOUBLE), 6) AS dup_ratio
+      FROM per"""),
     // q243: the streamed fold must land on the batch sketch exactly
     // (merge law) - q240's oracle verbatim
-    "q243_kmv_stream" -> s"""
+    Q("q243_kmv_stream", q243, Extra, s"""
       WITH h AS (
         SELECT DISTINCT ${hashPosSql("'kmv'", "CAST(l_partkey AS VARCHAR)")}
           AS hv
@@ -12078,10 +14043,10 @@ object SparkEntry {
              WHEN max(hv) = 0 THEN NULL
              ELSE round(255.0 * 4294967296.0 / max(hv), 4) END
           AS est_distinct
-      FROM m""",
+      FROM m"""),
     // q244: postings from the shared chunk CTE, df-capped, self-joined
     // - integer counts, one rounded division
-    "q244_chunk_overlap" -> s"""$chunkCte,
+    Q("q244_chunk_overlap", q244, Extra, s"""$chunkCte,
       post AS (SELECT DISTINCT doc_id, chash FROM cc),
       keep AS (SELECT chash FROM post GROUP BY 1 HAVING count(*) <= 64),
       inf AS (SELECT p.doc_id, p.chash FROM post p JOIN keep k
@@ -12097,14 +14062,70 @@ object SparkEntry {
           CAST(sa.n + sb.n - pr.n_shared AS DOUBLE), 6) AS jaccard
       FROM pr JOIN sz sa ON pr.id_a = sa.doc_id
       JOIN sz sb ON pr.id_b = sb.doc_id
-      ORDER BY id_a, id_b""",
+      ORDER BY id_a, id_b"""),
+    Q("q245_regional_revenue", q245, Extra, """
+      SELECT n_name,
+        CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+          AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue,
+        count(DISTINCT o_orderkey) AS n_orders
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN customer ON o_custkey = c_custkey
+        AND c_nationkey = s_nationkey
+      JOIN nation ON s_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      WHERE r_name = 'ASIA'
+        AND o_orderdate >= TIMESTAMP '1996-01-01'
+        AND o_orderdate < TIMESTAMP '1998-01-01'
+      GROUP BY n_name ORDER BY n_name"""),
+    // q246: q168's largest-remainder chain over TOKEN-share temperature
+    // weights, with the epoch ratio readout
+    Q("q246_epoch_plan", q246, Extra, """
+      WITH c AS (
+        SELECT source,
+          CAST(sum(len(regexp_split_to_array(trim(lower(text)), '\s+')))
+            AS BIGINT) AS n_tokens
+        FROM documents GROUP BY 1),
+      s AS (
+        SELECT source, n_tokens,
+          CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE)
+            AS share
+        FROM c),
+      m AS (SELECT source, n_tokens, share, sqrt(share) AS sm FROM s),
+      mw AS (
+        SELECT source, n_tokens, share, sm / max(sm) OVER () AS w FROM m),
+      sw AS (
+        SELECT CAST(sum(CAST(round(w, 9) AS DECIMAL(28,12))) AS DOUBLE)
+          AS sw
+        FROM mw),
+      b AS (
+        SELECT source, n_tokens, share, w, 500000.0 * w / sw AS ideal
+        FROM mw CROSS JOIN sw),
+      fr AS (
+        SELECT source, n_tokens, share, w, ideal,
+          CAST(floor(ideal) AS BIGINT) AS base,
+          ideal - floor(ideal) AS frac
+        FROM b),
+      r AS (
+        SELECT source, n_tokens, share, w, base,
+          row_number() OVER (ORDER BY frac DESC, source) AS rk,
+          (SELECT 500000 - sum(base) FROM fr) AS rem
+        FROM fr)
+      SELECT source, n_tokens, round(share, 6) AS share,
+        round(w, 6) AS mix_weight,
+        CAST(base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS BIGINT)
+          AS alloc_tokens,
+        round(CAST(base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS DOUBLE) /
+          CAST(n_tokens AS DOUBLE), 6) AS epochs
+      FROM r ORDER BY source"""),
     // q247: the landed store must BE the batch distinct chunk set -
     // the set-union law, row-for-row
-    "q247_chunk_store_stream" -> s"""$chunkCte
-      SELECT DISTINCT chash AS chunk_hash FROM cc ORDER BY chunk_hash""",
+    Q("q247_chunk_store_stream", q247, Extra, s"""$chunkCte
+      SELECT DISTINCT chash AS chunk_hash FROM cc ORDER BY chunk_hash"""),
     // q248: q244's pair predicate (HAVING + rounded-jaccard threshold)
     // then the recursive reach CTE - min-id components, q220's pattern
-    "q248_chunk_dup_groups" ->
+    Q("q248_chunk_dup_groups", q248, Extra,
       s"""${chunkCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
       post AS (SELECT DISTINCT doc_id, chash FROM cc),
       keep AS (SELECT chash FROM post GROUP BY 1 HAVING count(*) <= 64),
@@ -12129,38 +14150,15 @@ object SparkEntry {
         UNION
         SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s)
       SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS dup_group
-      FROM reach GROUP BY id ORDER BY doc_id""",
-    // q241/q242: the chunk stream replayed boundary-for-boundary from
-    // the shared CTE (same windowed md5 predicate, same lag arithmetic)
-    "q241_content_chunks" -> s"""$chunkCte
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-        CAST(sum(clen) AS BIGINT) AS total_len,
-        CAST(max(clen) AS BIGINT) AS max_chunk_len,
-        min(chash) AS min_chunk_hash
-      FROM cc GROUP BY 1 ORDER BY doc_id""",
-    "q242_chunk_dedup" -> s"""$chunkCte,
-      per AS (SELECT chash, count(*) AS n FROM cc GROUP BY 1)
-      SELECT CAST(sum(n) AS BIGINT) AS n_instances,
-        CAST(count(*) AS BIGINT) AS n_distinct,
-        CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
-        CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT)
-          AS n_dup_instances,
-        round(CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS DOUBLE) /
-          CAST(sum(n) AS DOUBLE), 6) AS dup_ratio
-      FROM per""",
+      FROM reach GROUP BY id ORDER BY doc_id"""),
     // q249: every CMS cell rebuilt from the same four salted md5 draws
-    "q249_cms_build" -> s"""WITH
+    Q("q249_cms_build", q249, Extra, s"""WITH
       ${cmsCellsSql("lineitem", "CAST(l_partkey AS VARCHAR)")}
-      SELECT r, c, CAST(cnt AS BIGINT) AS cnt FROM cms ORDER BY r, c""",
-    // q251: the streamed fold must land on the batch sketch EXACTLY -
-    // q249's oracle verbatim (cell-wise-sum merge law)
-    "q251_cms_stream" -> s"""WITH
-      ${cmsCellsSql("lineitem", "CAST(l_partkey AS VARCHAR)")}
-      SELECT r, c, CAST(cnt AS BIGINT) AS cnt FROM cms ORDER BY r, c""",
+      SELECT r, c, CAST(cnt AS BIGINT) AS cnt FROM cms ORDER BY r, c"""),
     // q250: probe coords replay the same draws over the keys frame;
     // est = min over rows, missing cell = 0; exact joined for the
     // one-sided-error readout
-    "q250_cms_estimate" -> s"""WITH
+    Q("q250_cms_estimate", q250, Extra, s"""WITH
       ${cmsCellsSql("lineitem", "CAST(l_suppkey AS VARCHAR)")},
       probe AS (
         SELECT s_suppkey AS key, CAST(rw.r AS INTEGER) AS r,
@@ -12177,12 +14175,44 @@ object SparkEntry {
       SELECT e.key, CAST(e.est_count AS BIGINT) AS est_count,
         CAST(coalesce(x.exact_count, 0) AS BIGINT) AS exact_count,
         CAST(e.est_count - coalesce(x.exact_count, 0) AS BIGINT) AS overcount
-      FROM est e LEFT JOIN exact x ON e.key = x.key ORDER BY e.key""",
+      FROM est e LEFT JOIN exact x ON e.key = x.key ORDER BY e.key"""),
+    // q251: the streamed fold must land on the batch sketch EXACTLY -
+    // q249's oracle verbatim (cell-wise-sum merge law)
+    Q("q251_cms_stream", q251, Extra, s"""WITH
+      ${cmsCellsSql("lineitem", "CAST(l_partkey AS VARCHAR)")}
+      SELECT r, c, CAST(cnt AS BIGINT) AS cnt FROM cms ORDER BY r, c"""),
+    // q252: the 3-iteration GD unroll lands on the same weight bits
+    Q("q252_linear_probe", q252, Extra, s"""$probeTrainCte
+      SELECT 0 AS ord, 'bias' AS feature, w0 AS weight FROM w3
+      UNION ALL SELECT 1, 'chars', w1 FROM w3
+      UNION ALL SELECT 2, 'spaces', w2 FROM w3
+      ORDER BY ord"""),
+    // q253: re-train through the shared chain, score with the same
+    // sigma tree rounded at 9, fold to the fit readout
+    Q("q253_probe_eval", q253, Extra, s"""$probeTrainCte,
+      scz AS (
+        SELECT f.y,
+          (w.w0 * f.x0) + (w.w1 * f.x1) + (w.w2 * f.x2) AS z
+        FROM feats f CROSS JOIN w3 w),
+      sc AS (
+        SELECT y, round(0.5 * (1.0 + z / (1.0 + abs(z))), 9) AS score
+        FROM scz),
+      m AS (
+        SELECT count(*) AS n,
+          sum(CASE WHEN (CASE WHEN score >= 0.5 THEN CAST(1.0 AS DOUBLE)
+                         ELSE CAST(0.0 AS DOUBLE) END) = y
+              THEN 1 ELSE 0 END) AS n_correct,
+          CAST(sum(CAST(abs(y - score) AS DECIMAL(28,18))) AS DOUBLE) AS sr
+        FROM sc)
+      SELECT CAST(n AS BIGINT) AS n, CAST(n_correct AS BIGINT) AS n_correct,
+        round(CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE), 6) AS accuracy,
+        round(sr / CAST(n AS DOUBLE), 6) AS mean_abs_resid
+      FROM m"""),
     // q254: pairs within the TRUE clusters (q237's equality argument:
     // the engine's capped multi-probe candidates must recover exactly
     // these, extras dying on the threshold), recursive reach, min-id
     // groups, kept = id == group
-    "q254_semantic_dedup" -> s"""
+    Q("q254_semantic_dedup", q254, Extra, s"""
       WITH RECURSIVE $clusteredVecsCte,
       p AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -12202,10 +14232,10 @@ object SparkEntry {
         CAST(CASE WHEN coalesce(m.g, e.vec_id) = e.vec_id
           THEN 1 ELSE 0 END AS INTEGER) AS kept
       FROM embeddings e LEFT JOIN comp m ON e.vec_id = m.id
-      ORDER BY id""",
+      ORDER BY id"""),
     // q255: the smoothed ratio replayed term-for-term (same 4-node IEEE
     // tree over integer-fed doubles, same round-9 decimal sums)
-    "q255_importance_weights" -> raw"""
+    Q("q255_importance_weights", q255, Extra, raw"""
       WITH toks AS (
         SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS tgt,
           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
@@ -12225,22 +14255,22 @@ object SparkEntry {
         FROM r GROUP BY 1)
       SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
         round(rs / CAST(n_tokens AS DOUBLE), 6) AS importance
-      FROM d ORDER BY importance DESC, doc_id LIMIT 50""",
+      FROM d ORDER BY importance DESC, doc_id LIMIT 50"""),
     // q256: the k smallest salted positions, ties by id — replayed from
     // the same md5 draw
-    "q256_uniform_sample" -> s"""
+    Q("q256_uniform_sample", q256, Extra, s"""
       SELECT doc_id, lang, source,
         ${hashPosSql("'sample'", "CAST(doc_id AS VARCHAR)")} AS __pos
-      FROM documents ORDER BY __pos, doc_id LIMIT 64""",
+      FROM documents ORDER BY __pos, doc_id LIMIT 64"""),
     // q257: the streamed fold must land on the batch sample EXACTLY -
     // q256's oracle verbatim (top-k merge law with payload)
-    "q257_sample_stream" -> s"""
+    Q("q257_sample_stream", q257, Extra, s"""
       SELECT doc_id, lang, source,
         ${hashPosSql("'sample'", "CAST(doc_id AS VARCHAR)")} AS __pos
-      FROM documents ORDER BY __pos, doc_id LIMIT 64""",
+      FROM documents ORDER BY __pos, doc_id LIMIT 64"""),
     // q258: the decorrelated Q17 shape — per-part threshold agg join,
     // decimal-exact sums, one IEEE threshold tree
-    "q258_small_qty_revenue" -> """
+    Q("q258_small_qty_revenue", q258, Extra, """
       WITH lp AS (
         SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -12257,10 +14287,10 @@ object SparkEntry {
       SELECT CAST(count(*) AS BIGINT) AS n_small,
         round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
           / 7.0, 2) + 0.0 AS avg_yearly
-      FROM f""",
+      FROM f"""),
     // q259: sketch prefilter (est*64 >= N, integer) then exact verify
     // of candidates only — one-sided error = no missed heavy hitter
-    "q259_cms_heavy_hitters" -> s"""WITH
+    Q("q259_cms_heavy_hitters", q259, Extra, s"""WITH
       ${cmsCellsSql("lineitem", "CAST(l_suppkey AS VARCHAR)")},
       probe AS (
         SELECT s_suppkey AS key, CAST(rw.r AS INTEGER) AS r,
@@ -12284,10 +14314,10 @@ object SparkEntry {
         CAST(CASE WHEN coalesce(x.exact_count, 0) * 64 >= tot.n
           THEN 1 ELSE 0 END AS INTEGER) AS is_true
       FROM cand cd LEFT JOIN exact x ON cd.key = x.key CROSS JOIN tot
-      ORDER BY cd.key""",
+      ORDER BY cd.key"""),
     // q260: fit offline, score the stream — stateless map, so the
     // streamed landing must equal the batch scoring row-for-row
-    "q260_probe_score_stream" -> s"""$probeTrainCte,
+    Q("q260_probe_score_stream", q260, Extra, s"""$probeTrainCte,
       scz AS (
         SELECT f.doc_id,
           (w.w0 * f.x0) + (w.w1 * f.x1) + (w.w2 * f.x2) AS z
@@ -12298,11 +14328,11 @@ object SparkEntry {
       SELECT doc_id, score,
         CAST(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END AS INTEGER)
           AS predicted
-      FROM sc ORDER BY doc_id""",
+      FROM sc ORDER BY doc_id"""),
     // q261: KMV set algebra — both min-k sets, the union sketch, and
     // the n_both/|U| Jaccard replayed from the same md5 positions;
     // est_intersection multiplies the two already-rounded components
-    "q261_kmv_jaccard" -> s"""
+    Q("q261_kmv_jaccard", q261, Extra, s"""
       WITH ha AS (
         SELECT DISTINCT ${hashPosSql("'kmv'", "CAST(l_partkey AS VARCHAR)")}
           AS hv
@@ -12334,10 +14364,10 @@ object SparkEntry {
         FROM f)
       SELECT n_union_min, n_both, jaccard_est, est_union,
         round(jaccard_est * est_union, 4) AS est_intersection
-      FROM m""",
+      FROM m"""),
     // q262: the 72-cell md5 grid, every gradient-sign bit, the 8 row
     // bands and the BIGINT reassembly — all exact integers
-    "q262_image_dhash" -> """
+    Q("q262_image_dhash", q262, Extra, """
       WITH cells AS (
         SELECT d.doc_id, t.i,
           ('0x' || substring(md5(d.text || '|g' || CAST(t.i AS VARCHAR)),
@@ -12354,16 +14384,83 @@ object SparkEntry {
         FROM bits GROUP BY 1, 2)
       SELECT doc_id AS asset_id,
         string_agg(printf('%02x', band), '' ORDER BY r) AS dhash
-      FROM bands GROUP BY 1 ORDER BY asset_id""",
+      FROM bands GROUP BY 1 ORDER BY asset_id"""),
     // q263: planted one-cell variants, the 4x16-bit pigeonhole band
     // join, XOR popcount distance — the base<->variant pairs and ONLY
     // those survive maxDist 3
-    "q263_image_neardup" -> s"""WITH $dhashPairsCte
+    Q("q263_image_neardup", q263, Extra, s"""WITH $dhashPairsCte
       SELECT id_a, id_b, hamming FROM ham
-      WHERE hamming <= 3 ORDER BY id_a, id_b""",
+      WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+    // q264: 16 Poisson-weighted resamples, each AUC'd with the exact
+    // weighted tied-rank identity — thresholds are the SAME Scala longs
+    Q("q264_bootstrap_auc", q264, Extra,
+      bootstrapAucOracle(withSummary = false)),
+    // q265: q264's replicate frame folded to the (mean, lo, hi) readout
+    Q("q265_bootstrap_auc_ci", q265, Extra,
+      bootstrapAucOracle(withSummary = true)),
+    // q266: the 6-iteration BPE trainer unrolled relationally — same
+    // pair counts, same lexicographic argmax, same greedy replace
+    Q("q266_bpe_merges", q266, Extra, bpeMergesOracle(6)),
+    // q267: the pinned tokenizer as the identical literal replace chain
+    Q("q267_bpe_encode", q267, Extra, bpeEncodeOracle(pinnedBpeMerges)),
+    // q268: the same candidate synthesis, split-explode, and integer
+    // Luhn fold — validity classes and their extreme runs
+    Q("q268_pii_luhn", q268, Extra, """
+      WITH txt AS (
+        SELECT o_orderkey,
+          'order card 45320151' ||
+          lpad(CAST(o_orderkey % 100000000 AS VARCHAR), 8, '0') ||
+          ' ref 1234' AS text
+        FROM orders),
+      runs AS (
+        SELECT DISTINCT o_orderkey AS doc_id, run FROM (
+          SELECT o_orderkey,
+            unnest(string_split_regex(
+              regexp_replace(text, '([0-9])[ -]([0-9])', '\1\2', 'g'),
+              '[^0-9]+')) AS run
+          FROM txt)
+        WHERE len(run) BETWEEN 13 AND 19),
+      pos AS (
+        SELECT doc_id, run,
+          unnest(generate_series(0, len(run) - 1)) AS i
+        FROM runs),
+      d AS (
+        SELECT doc_id, run, i,
+          CAST(substring(reverse(run), i + 1, 1) AS INT) AS dg
+        FROM pos),
+      s AS (
+        SELECT doc_id, run,
+          sum(CASE WHEN i % 2 = 0 THEN dg
+              ELSE 2 * dg - CASE WHEN dg > 4 THEN 9 ELSE 0 END END) AS tot
+        FROM d GROUP BY 1, 2)
+      SELECT (tot % 10 = 0) AS luhn_ok, CAST(count(*) AS BIGINT) AS n,
+        min(run) AS first_run, max(run) AS last_run
+      FROM s GROUP BY 1 ORDER BY luhn_ok"""),
+    // q269: identical integer counting contracts (marker device for
+    // vowel groups), two IEEE divisions, round 4
+    Q("q269_readability", q269, Extra, """
+      WITH f AS (
+        SELECT doc_id,
+          len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+            x -> x <> '')) AS w,
+          greatest(len(list_filter(string_split_regex(text, '[.!?]+'),
+            x -> trim(x) <> '')), 1) AS sn,
+          len(m) - len(replace(m, '#', '')) AS sy
+        FROM (
+          SELECT doc_id, text,
+            regexp_replace(replace(lower(text), '#', ''),
+              '[aeiouy]+', '#', 'g') AS m
+          FROM documents))
+      SELECT doc_id, CAST(w AS INT) AS n_words,
+        CAST(sn AS INT) AS n_sentences, CAST(sy AS INT) AS n_syllables,
+        CASE WHEN w = 0 THEN NULL
+          ELSE round(206.835 - 1.015 * (CAST(w AS DOUBLE) /
+            CAST(sn AS DOUBLE)) - 84.6 * (CAST(sy AS DOUBLE) /
+            CAST(w AS DOUBLE)), 4) END AS flesch
+      FROM f ORDER BY doc_id"""),
     // q270: q263's pairs closed to duplicate groups by a recursive CTE
     // (min reachable id = the canonical group)
-    "q270_image_dedup_groups" -> s"""WITH RECURSIVE $dhashPairsCte,
+    Q("q270_image_dedup_groups", q270, Extra, s"""WITH RECURSIVE $dhashPairsCte,
       pj AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
       sym AS (
         SELECT id_a AS s, id_b AS d FROM pj
@@ -12373,15 +14470,10 @@ object SparkEntry {
         UNION
         SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s)
       SELECT id AS asset_id, CAST(min(r) AS BIGINT) AS dup_group
-      FROM reach GROUP BY id ORDER BY asset_id""",
-    // q272: the streamed pair log must equal the batch pairs exactly —
-    // q263's oracle verbatim
-    "q272_image_neardup_stream" -> s"""WITH $dhashPairsCte
-      SELECT id_a, id_b, hamming FROM ham
-      WHERE hamming <= 3 ORDER BY id_a, id_b""",
+      FROM reach GROUP BY id ORDER BY asset_id"""),
     // q271: both CMS chains are the same sketch (self inner product);
     // the dot per hash row, the min, and the exact sum-of-squares truth
-    "q271_cms_join_size" -> s"""
+    Q("q271_cms_join_size", q271, Extra, s"""
       WITH ${cmsCellsSql("lineitem", "CAST(l_partkey AS VARCHAR)")},
       dots AS (
         SELECT a.r, CAST(sum(a.cnt * b.cnt) AS BIGINT) AS dot
@@ -12394,21 +14486,350 @@ object SparkEntry {
       SELECT e.est AS est_join_size, x.exact AS exact_join_size,
         round(CAST(e.est AS DOUBLE) / CAST(x.exact AS DOUBLE), 4)
           AS overcount_ratio
-      FROM e CROSS JOIN x""",
-    // q264: 16 Poisson-weighted resamples, each AUC'd with the exact
-    // weighted tied-rank identity — thresholds are the SAME Scala longs
-    "q264_bootstrap_auc" -> bootstrapAucOracle(withSummary = false),
-    // q265: q264's replicate frame folded to the (mean, lo, hi) readout
-    "q265_bootstrap_auc_ci" -> bootstrapAucOracle(withSummary = true),
-    // q266: the 6-iteration BPE trainer unrolled relationally — same
-    // pair counts, same lexicographic argmax, same greedy replace
-    "q266_bpe_merges" -> bpeMergesOracle(6),
+      FROM e CROSS JOIN x"""),
+    // q272: the streamed pair log must equal the batch pairs exactly —
+    // q263's oracle verbatim
+    Q("q272_image_neardup_stream", q272, Extra, s"""WITH $dhashPairsCte
+      SELECT id_a, id_b, hamming FROM ham
+      WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+    // q273: the same deterministic reservoir (pos, id tie) and the
+    // same interpolated quantiles on both the sample and the corpus
+    Q("q273_sample_quantiles", q273, Extra, s"""
+      WITH li AS (
+        SELECT CAST(l_orderkey AS VARCHAR) || '-' ||
+          CAST(l_linenumber AS VARCHAR) AS id,
+          CAST(l_extendedprice AS DOUBLE) AS v
+        FROM lineitem),
+      sm AS (
+        SELECT v FROM (
+          SELECT v, ${hashPosSql("'sample'", "id")} AS pos, id FROM li)
+        ORDER BY pos, id LIMIT 1024),
+      e AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75, 0.9]) AS l FROM sm),
+      x AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75, 0.9]) AS l FROM li),
+      i AS (SELECT unnest([1, 2, 3, 4]) AS i)
+      SELECT CASE i.i WHEN 1 THEN 0.25 WHEN 2 THEN 0.5
+        WHEN 3 THEN 0.75 ELSE 0.9 END AS p,
+        round(e.l[i.i], 4) AS est_quantile,
+        round(x.l[i.i], 4) AS exact_quantile,
+        round(abs(e.l[i.i] - x.l[i.i]), 4) AS abs_err
+      FROM i CROSS JOIN e CROSS JOIN x ORDER BY p"""),
+    // q274: per-group min-k via a PARTITIONED rank over the deduped
+    // (group, position) frame; q240's estimator per group; exact truth
+    Q("q274_kmv_by_group", q274, Extra, s"""
+      WITH pos AS (
+        SELECT DISTINCT event_type AS grp,
+          ${hashPosSql("'kmv'", "CAST(user_id AS VARCHAR)")} AS hv
+        FROM events),
+      rk AS (
+        SELECT grp, hv,
+          row_number() OVER (PARTITION BY grp ORDER BY hv) AS rn
+        FROM pos),
+      m AS (
+        SELECT grp, CAST(count(*) AS BIGINT) AS n_min,
+          CAST(max(hv) AS BIGINT) AS kth_pos
+        FROM rk WHERE rn <= 64 GROUP BY 1),
+      est AS (
+        SELECT grp, n_min, kth_pos,
+          CASE WHEN n_min < 64 THEN CAST(n_min AS DOUBLE)
+               WHEN kth_pos = 0 THEN NULL
+               ELSE round(63.0 * 4294967296.0 / kth_pos, 4) END
+            AS est_distinct
+        FROM m),
+      ex AS (
+        SELECT event_type AS grp,
+          CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct
+        FROM events GROUP BY 1)
+      SELECT est.grp AS event_type, n_min, kth_pos, est_distinct,
+        exact_distinct,
+        round(est_distinct / CAST(exact_distinct AS DOUBLE), 4)
+          AS est_ratio
+      FROM est JOIN ex ON est.grp = ex.grp ORDER BY event_type"""),
+    // q275: samples from the md5 PCM rule (q221's device), the planted
+    // one-sample bump, sign-bit bands, and the same pigeonhole +
+    // popcount pipeline; equal-frame-count constraint mirrors the
+    // engine's null-padded zip_with drop
+    Q("q275_audio_neardup", q275, Extra, """
+      WITH base AS (
+        SELECT doc_id, text, octet_length(encode(text)) AS bl
+        FROM documents WHERE text IS NOT NULL),
+      fr AS (
+        SELECT doc_id, text, least(bl // 256 + 1, 4) AS nf FROM base),
+      fj AS (
+        SELECT doc_id, text, nf, unnest(generate_series(0, nf - 1)) AS j
+        FROM fr),
+      hx AS (
+        SELECT doc_id, nf, j,
+          md5(text || '|' || CAST(j AS VARCHAR)) AS h
+        FROM fj),
+      sm AS (
+        SELECT doc_id, nf, j, r.i,
+          ('0x' || substring(h, r.i * 4 + 1, 4))::BIGINT AS u
+        FROM hx, range(0, 8) r(i)),
+      sg0 AS (
+        SELECT doc_id, nf, j, i,
+          CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS s
+        FROM sm),
+      vsg AS (
+        SELECT s0.doc_id + 4611686018427387904 AS doc_id, s0.nf, s0.j, s0.i,
+          CASE WHEN s0.j = 0 AND s0.i = s0.doc_id % 8 THEN s0.s + 1
+               ELSE s0.s END AS s
+        FROM sg0 s0 WHERE s0.doc_id % 17 = 0),
+      sg AS (
+        SELECT doc_id, nf, j, i, s FROM sg0
+        UNION ALL SELECT doc_id, nf, j, i, s FROM vsg),
+      sb AS (
+        SELECT a.doc_id, a.nf, a.j,
+          CAST(sum(CASE WHEN b.s > a.s THEN
+            (1::BIGINT << ((CASE b.i - a.i WHEN 1 THEN 0 WHEN 2 THEN 7
+              WHEN 3 THEN 13 ELSE 18 END) + a.i))
+            ELSE 0 END) AS BIGINT) AS band
+        FROM sg a JOIN sg b
+          ON a.doc_id = b.doc_id AND a.j = b.j
+          AND b.i > a.i AND b.i - a.i <= 4
+        GROUP BY 1, 2, 3),
+      cand AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM sb a JOIN sb b
+          ON a.j = b.j AND a.band = b.band AND a.nf = b.nf
+          AND a.doc_id < b.doc_id
+        WHERE a.nf >= 2),
+      ham AS (
+        SELECT c.id_a, c.id_b,
+          CAST(sum(bit_count(xor(x.band, y.band))) AS INT) AS hamming
+        FROM cand c
+        JOIN sb x ON x.doc_id = c.id_a
+        JOIN sb y ON y.doc_id = c.id_b AND y.j = x.j
+        GROUP BY 1, 2)
+      SELECT id_a, id_b, hamming FROM ham
+      WHERE hamming <= 8 ORDER BY id_a, id_b"""),
+    // q276: three Bradley-Terry rounds unrolled to the same score bits
+    Q("q276_bradley_terry", q276, Extra, bradleyTerryOracle(3)),
+    // q277: the Q21 shape — EXISTS/NOT EXISTS in the oracle, the
+    // engine's semi/anti equi-joins must land on the same waiters
+    Q("q277_waiting_orders", q277, Extra, """
+      WITH lo AS (
+        SELECT l.l_orderkey, l.l_suppkey, l.l_shipdate,
+          o.o_orderdate, o.o_orderstatus
+        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+      late AS (
+        SELECT l_orderkey, l_suppkey FROM lo
+        WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY),
+      l1 AS (
+        SELECT l_orderkey, l_suppkey FROM lo
+        WHERE o_orderstatus = 'F'
+          AND l_shipdate > o_orderdate + INTERVAL 60 DAY),
+      w AS (
+        SELECT * FROM l1
+        WHERE EXISTS (
+            SELECT 1 FROM lineitem l2
+            WHERE l2.l_orderkey = l1.l_orderkey
+              AND l2.l_suppkey <> l1.l_suppkey)
+          AND NOT EXISTS (
+            SELECT 1 FROM late l3
+            WHERE l3.l_orderkey = l1.l_orderkey
+              AND l3.l_suppkey <> l1.l_suppkey))
+      SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
+      FROM w JOIN supplier s ON w.l_suppkey = s.s_suppkey
+      GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 25"""),
+    // q278: the Q2 correlated-min shape decorrelated — round-4 unit
+    // price BEFORE the min so both engines compare identical bits
+    Q("q278_min_cost_supplier", q278, Extra, """
+      WITH lp AS (
+        SELECT l.l_partkey, l.l_suppkey,
+          round(CAST(l.l_extendedprice AS DOUBLE) /
+            CAST(l.l_quantity AS DOUBLE), 4) AS uc
+        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+        WHERE p.p_size <= 10 AND l.l_quantity > 0),
+      m AS (SELECT l_partkey, min(uc) AS min_unit_cost FROM lp GROUP BY 1)
+      SELECT lp.l_partkey AS p_partkey,
+        CAST(min(lp.l_suppkey) AS BIGINT) AS best_suppkey,
+        m.min_unit_cost
+      FROM lp JOIN m ON lp.l_partkey = m.l_partkey
+        AND lp.uc = m.min_unit_cost
+      GROUP BY 1, 3 ORDER BY p_partkey"""),
+    // q279: per-group weighted tied-rank AUC — windows partitioned by
+    // the group on the oracle side, grouped banded device on the engine
+    Q("q279_grouped_auc", q279, Extra, """
+      WITH per AS (
+        SELECT source AS grp, CAST(n_chars % 97 AS INT) AS s,
+          CAST(count(*) AS BIGINT) AS n,
+          CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
+            AS np
+        FROM documents GROUP BY 1, 2),
+      cum AS (
+        SELECT grp, n, np,
+          sum(n) OVER (PARTITION BY grp ORDER BY s) - n AS below
+        FROM per),
+      ag AS (
+        SELECT grp, CAST(sum(np) AS BIGINT) AS n_pos,
+          CAST(sum(n - np) AS BIGINT) AS n_neg,
+          sum(CAST(np AS DECIMAL(38,0)) *
+            (CAST(2 * below + n + 1 AS DECIMAL(38,1)) / 2)) AS sr
+        FROM cum GROUP BY 1)
+      SELECT grp AS source, n_pos, n_neg,
+        CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
+          ELSE round((CAST(sr AS DOUBLE) -
+            CAST(n_pos * (n_pos + 1) AS DOUBLE) / 2.0) /
+            CAST(n_pos * n_neg AS DOUBLE), 6) END AS auc
+      FROM ag ORDER BY source"""),
+    // q280: q267's replace chain folded per language — the fertility
+    // readout from the same integer counts
+    Q("q280_tokenizer_fertility", q280, Extra, {
+      val sp =
+        raw"'  ' || trim(regexp_replace(word, '(.)', ' \1 ', 'g')) || '  '"
+      val chain = pinnedBpeMerges.foldLeft(sp) { case (acc, (l, r)) =>
+        s"replace($acc, ' $l  $r ', ' $l$r ')"
+      }
+      s"""
+      WITH words AS (
+        SELECT lang, word FROM (
+          SELECT lang,
+            unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
+          FROM documents)
+        WHERE word <> ''),
+      enc AS (
+        SELECT lang, len(word) AS wl,
+          len(string_split(trim($chain), '  ')) AS nt
+        FROM words),
+      g AS (
+        SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
+          CAST(sum(nt) AS BIGINT) AS n_tokens,
+          CAST(sum(wl) AS BIGINT) AS n_chars
+        FROM enc GROUP BY 1)
+      SELECT lang, n_words, n_tokens,
+        round(CAST(n_tokens AS DOUBLE) / CAST(n_words AS DOUBLE), 4)
+          AS fertility,
+        round(CAST(n_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE), 4)
+          AS chars_per_token
+      FROM g ORDER BY lang"""
+    }),
+    // q281: the fixed Luhn contracts replayed — separator collapse
+    // inside digit groups, DISTINCT (doc, run) before the checksum
+    Q("q281_luhn_formatted", q281, Extra, """
+      WITH txt AS (
+        SELECT o_orderkey,
+          'pay 4111 1111 1111 1111 then 4111-1111-1111-1116 and ' ||
+          'again 4111 1111 1111 1111 ref 4111-1111-1111-1116 order ' ||
+          '45320151' ||
+          lpad(CAST(o_orderkey % 100000000 AS VARCHAR), 8, '0') AS text
+        FROM orders),
+      runs AS (
+        SELECT DISTINCT o_orderkey AS doc_id, run FROM (
+          SELECT o_orderkey,
+            unnest(string_split_regex(
+              regexp_replace(text, '([0-9])[ -]([0-9])', '\1\2', 'g'),
+              '[^0-9]+')) AS run
+          FROM txt)
+        WHERE len(run) BETWEEN 13 AND 19),
+      pos AS (
+        SELECT doc_id, run,
+          unnest(generate_series(0, len(run) - 1)) AS i
+        FROM runs),
+      d AS (
+        SELECT doc_id, run, i,
+          CAST(substring(reverse(run), i + 1, 1) AS INT) AS dg
+        FROM pos),
+      s AS (
+        SELECT doc_id, run,
+          sum(CASE WHEN i % 2 = 0 THEN dg
+              ELSE 2 * dg - CASE WHEN dg > 4 THEN 9 ELSE 0 END END) AS tot
+        FROM d GROUP BY 1, 2)
+      SELECT (tot % 10 = 0) AS luhn_ok, CAST(count(*) AS BIGINT) AS n,
+        min(run) AS first_run, max(run) AS last_run
+      FROM s GROUP BY 1 ORDER BY luhn_ok"""),
     // q282: 256 unrolled full-recount rounds vs the engine's
     // incremental pair-delta trainer — any drifted delta fails the hash
+    Q("q282_bpe_deep", q282, Unbenched, bpeMergesOracle(256, """
+          SELECT substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) AS word,
+            CAST(count(*) AS BIGINT) AS cnt
+          FROM orders GROUP BY 1""")),
+    // q283: the trained-encode law — w96 read directly (see
+    // bpeEncodeTrainedOracle); gates the native rank-loop encoder
+    Q("q283_bpe_encode_trained", q283, Unbenched, bpeEncodeTrainedOracle(96, """
+          SELECT substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) AS word,
+            CAST(count(*) AS BIGINT) AS cnt
+          FROM orders GROUP BY 1""")),
+    // q284: channel sums recomputed from the closed-form pixel rule —
+    // equality proves the AVI container round trip is pixel-exact
+    Q("q284_avi_roundtrip", q284, Extra, """
+      WITH ids AS (
+        SELECT CAST(doc_id AS BIGINT) AS id FROM documents
+        WHERE doc_id < 200),
+      fr AS (
+        SELECT id, f FROM ids, (SELECT unnest(range(6)) AS f)
+        WHERE f < 2 + id % 5 AND f % 2 = 0),
+      px AS (
+        SELECT id, f, x, y FROM fr,
+          (SELECT unnest(range(10)) AS x), (SELECT unnest(range(6)) AS y)),
+      s AS (
+        SELECT id, f,
+          CAST(sum((id * 7 + f * 13 + y * 10 + x) % 256) AS BIGINT) AS sum_r,
+          CAST(sum((id * 11 + f * 17 + x * 3 + y * 5) % 256) AS BIGINT)
+            AS sum_g,
+          CAST(sum((id * 13 + f * 19 + x * 7 + y * 11) % 256) AS BIGINT)
+            AS sum_b
+        FROM px GROUP BY 1, 2)
+      SELECT id AS asset_id, CAST(f AS INT) AS frame_idx,
+        10 AS width, 6 AS height, sum_r, sum_g, sum_b
+      FROM s ORDER BY asset_id, frame_idx"""),
+    // q285: the tiled generator must land on q155's oracle verbatim —
+    // identical cells, identical DECIMAL sums, different fan-out shape
+    Q("q285_gram_tiled", q285, Extra, """
+      WITH comp AS (
+        SELECT label, vec_id,
+          unnest(CAST(embedding AS DOUBLE[])) AS x,
+          generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS idx
+        FROM embeddings),
+      pairs AS (
+        SELECT a.label, a.idx - 1 AS i, b.idx - 1 AS j,
+          CAST(a.x * b.x AS DECIMAL(28,18)) AS p
+        FROM comp a JOIN comp b ON a.vec_id = b.vec_id AND a.idx <= b.idx)
+      SELECT label, CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
+        CAST(count(*) AS BIGINT) AS n_terms,
+        round(CAST(sum(p) AS DOUBLE), 6) + 0.0 AS s
+      FROM pairs GROUP BY 1, 2, 3 ORDER BY label, i, j"""),
+    // q286: q276's unrolled fit over the 20k-item md5 duel log
+    Q("q286_bradley_terry_scale", q286, Extra,
+      bradleyTerryOracle(2, q286PairsSql)),
+    Q("q287_pq_quant_error", q287, Extra, s"""
+      WITH ${pqTrainCtes(8, 8)},
+      err AS (
+        SELECT su.sub, ${pqL2Sql("su.subvec", "b.cvec", 8)} AS d2
+        FROM subs su
+        JOIN pqcodes c ON c.item_id = su.item_id AND c.sub = su.sub
+        JOIN books1 b ON b.sub = c.sub AND b.cell = c.cell)
+      SELECT sub, CAST(count(*) AS BIGINT) AS n_vectors,
+        round(CAST(sum(d2) AS DOUBLE) / count(*), 6) AS mean_sq_err,
+        round(CAST(max(d2) AS DOUBLE), 6) AS max_sq_err
+      FROM err GROUP BY sub ORDER BY sub"""),
+    // q288: Q20's correlated shipped-sum as a conditional aggregate
+    // over the pair enumeration; EXISTS legs as the semi chain
+    Q("q288_excess_stock", q288, Extra, """
+      WITH pairs AS (
+        SELECT l_partkey, l_suppkey,
+          sum(CAST(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
+            AND l_shipdate < TIMESTAMP '1997-01-01'
+            THEN l_quantity ELSE 0 END AS DECIMAL(18,2))) AS sq
+        FROM lineitem GROUP BY 1, 2),
+      excess AS (
+        SELECT l_partkey, l_suppkey FROM pairs
+        WHERE sq > 0 AND
+          CAST((l_partkey * 7 + l_suppkey * 13) % 100 + 50 AS DOUBLE) >
+            0.5 * CAST(sq AS DOUBLE)),
+      ep AS (
+        SELECT DISTINCT e.l_suppkey FROM excess e
+        WHERE EXISTS (SELECT 1 FROM part p
+          WHERE p.p_partkey = e.l_partkey AND p.p_name LIKE 'large%'))
+      SELECT s_suppkey, s_name FROM supplier
+      WHERE EXISTS (SELECT 1 FROM nation
+          WHERE n_nationkey = s_nationkey AND n_name IN ('NATION_1',
+            'NATION_3', 'NATION_7', 'NATION_12', 'NATION_18'))
+        AND EXISTS (SELECT 1 FROM ep WHERE ep.l_suppkey = s_suppkey)
+      ORDER BY s_suppkey"""),
     // q289: train FROM the streamed word-count fold; the oracle trains
     // from the whole corpus — exact-statistic equality across 3 seams
-    "q289_bpe_stream_wordcounts" -> bpeMergesOracle(8),
-    "q290_pq_codebooks" -> s"""
+    Q("q289_bpe_stream_wordcounts", q289, Extra, bpeMergesOracle(8)),
+    Q("q290_pq_codebooks", q290, Extra, s"""
       WITH ${pqTrainCtes(8, 8)},
       norms AS (
         SELECT sub, cell,
@@ -12420,14 +14841,219 @@ object SparkEntry {
       SELECT n.sub, n.cell, coalesce(m.n_members, 0) AS n_members,
         round(n.centroid_norm, 6) AS centroid_norm
       FROM norms n LEFT JOIN members m ON n.sub = m.sub AND n.cell = m.cell
-      ORDER BY n.sub, n.cell""",
-    "q295_pq_code_stream" -> s"""
+      ORDER BY n.sub, n.cell"""),
+    Q("q291_pq_adc_ann", q291, Extra, s"""
+      WITH ${pqTrainCtes(8, 8)},
+      q AS (
+        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+        FROM embeddings WHERE vec_id = 7),
+      qsubs AS (
+        SELECT q.query_id, s.sub, (q.qv)[s.sub*8+1 : s.sub*8+8] AS qs
+        FROM q CROSS JOIN subsrange s),
+      dt AS (
+        SELECT qs.query_id, qs.sub, b.cell,
+          ${pqL2Sql("qs.qs", "b.cvec", 8)} AS dtv
+        FROM qsubs qs JOIN books1 b ON qs.sub = b.sub),
+      short AS (
+        SELECT c.item_id, sum(d.dtv) AS approx
+        FROM pqcodes c JOIN dt d ON c.sub = d.sub AND c.cell = d.cell
+        WHERE c.item_id <> d.query_id
+        GROUP BY c.item_id
+        ORDER BY approx, c.item_id LIMIT 10),
+      ex AS (
+        SELECT s.item_id, s.approx,
+          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS cos
+        FROM short s JOIN embeddings e ON e.vec_id = s.item_id CROSS JOIN q)
+      SELECT CAST(row_number() OVER w AS BIGINT) AS rank, item_id,
+        round(CAST(approx AS DOUBLE), 6) AS approx_d2,
+        round(cos, 4) AS cosine
+      FROM ex WINDOW w AS (ORDER BY round(cos, 6) DESC, item_id)
+      ORDER BY rank"""),
+    Q("q292_bigram_lm", q292, Extra, raw"""
+      WITH arrs AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+        FROM documents),
+      toks AS MATERIALIZED (
+        SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS w
+        FROM arrs),
+      big AS MATERIALIZED (
+        SELECT a.doc_id, a.w AS w1, b.w AS w2
+        FROM toks a JOIN toks b
+          ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
+      c2 AS MATERIALIZED (
+        SELECT w1, w2, count(*) AS c2 FROM big GROUP BY 1, 2),
+      c1 AS (SELECT w1, sum(c2) AS c1 FROM c2 GROUP BY 1),
+      v AS (SELECT count(DISTINCT w) AS V FROM toks),
+      j AS (
+        SELECT g.doc_id,
+          round(CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1.c1 + v.V AS DOUBLE), 9)
+            AS p
+        FROM big g JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v)
+      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+        round(CAST(sum(CAST(p AS DECIMAL(28,12))) AS DOUBLE)
+          / CAST(count(*) AS DOUBLE), 6) AS mean_p,
+        round(min(p), 6) AS min_p
+      FROM j GROUP BY doc_id ORDER BY doc_id"""),
+    Q("q293_html_extract", q293, Extra, s"""
+      WITH $htmlExtractCtes
+      SELECT doc_id, CAST(len(vis) AS INTEGER) AS n_lines,
+        CAST(len(kept) AS INTEGER) AS n_kept,
+        array_to_string(kept, ' ') AS main_text
+      FROM hkept ORDER BY doc_id"""),
+    Q("q294_ivfpq_ann", q294, Extra, s"""
+      WITH cseeds AS MATERIALIZED (
+        SELECT label AS ccell, CAST(embedding AS DOUBLE[]) AS ccv
+        FROM embeddings
+        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
+      cassign AS MATERIALIZED (
+        SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v, c.ccell, c.ccv
+        FROM embeddings e CROSS JOIN cseeds c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(
+            CAST(e.embedding AS DOUBLE[]), c.ccv), 6) DESC, c.ccell) = 1),
+      resid AS MATERIALIZED (
+        SELECT vec_id,
+          [v[i] - ccv[i] FOR i IN generate_series(1, 64)] AS embedding,
+          ccell AS label
+        FROM cassign),
+      ${pqTrainCtes(8, 8, "resid")},
+      q AS (
+        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+        FROM embeddings WHERE vec_id = 7),
+      probes AS MATERIALIZED (
+        SELECT q.query_id, c.ccell,
+          [q.qv[i] - c.ccv[i] FOR i IN generate_series(1, 64)] AS qres
+        FROM q CROSS JOIN cseeds c
+        QUALIFY row_number() OVER (PARTITION BY q.query_id
+          ORDER BY round(list_cosine_similarity(q.qv, c.ccv), 6) DESC,
+            c.ccell) <= 2),
+      qsubs AS (
+        SELECT p.query_id, p.ccell, s.sub,
+          (p.qres)[s.sub*8+1 : s.sub*8+8] AS qs
+        FROM probes p CROSS JOIN subsrange s),
+      dt AS MATERIALIZED (
+        SELECT qs.query_id, qs.ccell, qs.sub, b.cell,
+          ${pqL2Sql("qs.qs", "b.cvec", 8)} AS dtv
+        FROM qsubs qs JOIN books1 b ON qs.sub = b.sub),
+      shortl AS (
+        SELECT c.item_id, sum(d.dtv) AS approx
+        FROM pqcodes c
+        JOIN cassign a ON a.vec_id = c.item_id
+        JOIN dt d ON d.ccell = a.ccell AND d.sub = c.sub AND d.cell = c.cell
+        WHERE c.item_id <> d.query_id
+        GROUP BY c.item_id
+        ORDER BY approx, c.item_id LIMIT 10),
+      ex AS (
+        SELECT s.item_id, s.approx,
+          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS cos
+        FROM shortl s JOIN embeddings e ON e.vec_id = s.item_id CROSS JOIN q)
+      SELECT CAST(row_number() OVER w AS BIGINT) AS rank, item_id,
+        round(CAST(approx AS DOUBLE), 6) AS approx_d2,
+        round(cos, 4) AS cosine
+      FROM ex WINDOW w AS (ORDER BY round(cos, 6) DESC, item_id)
+      ORDER BY rank"""),
+    Q("q295_pq_code_stream", q295, Extra, s"""
       WITH ${pqTrainCtes(8, 8)}
-      SELECT item_id, sub, cell FROM pqcodes ORDER BY item_id, sub""",
-    "q298_jsonl_roundtrip" -> """
+      SELECT item_id, sub, cell FROM pqcodes ORDER BY item_id, sub"""),
+    Q("q296_prefix_dim_recall", q296, Extra, """
+      WITH fullk AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id
+        FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
+        WHERE q.vec_id < 10
+        QUALIFY row_number() OVER (PARTITION BY q.vec_id
+          ORDER BY round(list_cosine_similarity(
+            CAST(q.embedding AS DOUBLE[]),
+            CAST(c.embedding AS DOUBLE[])), 6) DESC, c.vec_id) <= 5),
+      prek AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS item_id
+        FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
+        WHERE q.vec_id < 10
+        QUALIFY row_number() OVER (PARTITION BY q.vec_id
+          ORDER BY round(list_cosine_similarity(
+            (CAST(q.embedding AS DOUBLE[]))[1:16],
+            (CAST(c.embedding AS DOUBLE[]))[1:16]), 6) DESC,
+            c.vec_id) <= 5),
+      common AS (
+        SELECT f.query_id, count(*) AS n_common
+        FROM fullk f JOIN prek p
+          ON f.query_id = p.query_id AND f.item_id = p.item_id
+        GROUP BY 1)
+      SELECT q.vec_id AS query_id, coalesce(c.n_common, 0) AS n_common
+      FROM embeddings q LEFT JOIN common c ON c.query_id = q.vec_id
+      WHERE q.vec_id < 10 ORDER BY query_id"""),
+    Q("q297_sdc_closest_pairs", q297, Extra, s"""
+      WITH ${pqTrainCtes(8, 8)},
+      cseeds AS (
+        SELECT label AS ccell, CAST(embedding AS DOUBLE[]) AS ccv
+        FROM embeddings
+        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
+      cassign AS MATERIALIZED (
+        SELECT e.vec_id, c.ccell
+        FROM embeddings e CROSS JOIN cseeds c
+        QUALIFY row_number() OVER (PARTITION BY e.vec_id
+          ORDER BY round(list_cosine_similarity(
+            CAST(e.embedding AS DOUBLE[]), c.ccv), 6) DESC, c.ccell) = 1),
+      sdc AS MATERIALIZED (
+        SELECT a.sub, a.cell AS cell_a, b.cell AS cell_b,
+          ${pqL2Sql("a.cvec", "b.cvec", 8)} AS d2
+        FROM books1 a JOIN books1 b ON a.sub = b.sub),
+      prs AS (
+        SELECT x.vec_id AS id_a, y.vec_id AS id_b
+        FROM cassign x JOIN cassign y
+          ON x.ccell = y.ccell AND x.vec_id < y.vec_id),
+      scored AS (
+        SELECT p.id_a, p.id_b, sum(s.d2) AS approx
+        FROM prs p
+        JOIN pqcodes ca ON ca.item_id = p.id_a
+        JOIN pqcodes cb ON cb.item_id = p.id_b AND cb.sub = ca.sub
+        JOIN sdc s ON s.sub = ca.sub AND s.cell_a = ca.cell
+          AND s.cell_b = cb.cell
+        GROUP BY p.id_a, p.id_b
+        ORDER BY approx, id_a, id_b LIMIT 20)
+      SELECT id_a, id_b, round(CAST(approx AS DOUBLE), 6) AS approx_d2
+      FROM scored ORDER BY approx, id_a, id_b"""),
+    Q("q298_jsonl_roundtrip", q298, Extra, """
       SELECT doc_id, text, lang, source, n_chars
-      FROM documents ORDER BY doc_id""",
-    "q300_curation_funnel_e2e" -> s"""
+      FROM documents ORDER BY doc_id"""),
+    Q("q299_mixed_language", q299, Extra, raw"""
+      WITH toks AS (
+        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+        FROM documents),
+      ch AS (
+        SELECT doc_id, t[s:s+31] AS ck
+        FROM (SELECT doc_id, t,
+          unnest(generate_series(1, len(t), 32)) AS s FROM toks)),
+      sc AS (
+        SELECT doc_id,
+          len(list_filter(ck, x -> x IN ('the','a','of','and','to'))) AS s_en,
+          len(list_filter(ck, x -> x IN ('el','la','de','que','y'))) AS s_es,
+          len(list_filter(ck, x -> x IN ('le','la','de','et','un'))) AS s_fr,
+          len(list_filter(ck, x -> x IN ('der','die','und','das','ein'))) AS s_de,
+          len(list_filter(ck, x -> x IN ('的','了','是','我','不'))) AS s_zh
+        FROM ch),
+      pred AS (
+        SELECT doc_id, CASE
+          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0 THEN 'en'
+          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0 THEN 'es'
+          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0 THEN 'fr'
+          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0 THEN 'de'
+          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0 THEN 'zh'
+          ELSE 'und' END AS clang
+        FROM sc),
+      agg AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
+          CAST(count(DISTINCT clang) AS BIGINT) AS n_langs
+        FROM pred GROUP BY 1),
+      maj AS (
+        SELECT doc_id, clang AS majority_lang FROM (
+          SELECT doc_id, clang, count(*) AS c FROM pred GROUP BY 1, 2)
+        QUALIFY row_number() OVER (PARTITION BY doc_id
+          ORDER BY c DESC, clang) = 1)
+      SELECT a.doc_id, a.n_chunks, a.n_langs, m.majority_lang,
+        a.n_langs > 1 AS mixed
+      FROM agg a JOIN maj m ON a.doc_id = m.doc_id
+      ORDER BY a.doc_id"""),
+    Q("q300_curation_funnel_e2e", q300, Extra, s"""
       WITH $htmlExtractCtes,
       extj AS (
         SELECT k.doc_id, d.source,
@@ -12467,15 +15093,103 @@ object SparkEntry {
         round(CAST(sum(CASE WHEN coalesce(k.kept, false) THEN 1 ELSE 0 END)
             AS DOUBLE) / count(*), 4) AS keep_rate
       FROM st s LEFT JOIN kp k ON s.doc_id = k.doc_id
-      GROUP BY s.source ORDER BY s.source""",
-    "q301_nb_model" -> nbModelSql,
+      GROUP BY s.source ORDER BY s.source"""),
+    Q("q301_nb_model", q301, Extra, nbModelSql),
+    Q("q302_nb_predict", q302, Extra, nbPredictSql),
+    Q("q303_nb_confusion", q303, Extra, s"""
+      WITH $nbModelCtes,
+      nbj AS (
+        SELECT p.doc_id, p.pred_class, d.lang AS true_lang
+        FROM nbpred p JOIN documents d ON p.doc_id = d.doc_id),
+      nbcells AS (
+        SELECT true_lang, pred_class, CAST(count(*) AS BIGINT) AS n
+        FROM nbj GROUP BY 1, 2),
+      nbtot AS (
+        SELECT true_lang, count(*) AS tot FROM nbj GROUP BY 1)
+      SELECT c.true_lang, c.pred_class, c.n,
+        round(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE), 6) AS frac
+      FROM nbcells c JOIN nbtot t ON c.true_lang = t.true_lang
+      ORDER BY c.true_lang, c.pred_class"""),
+    Q("q304_platt_fit", q304, Extra, s"""
+      WITH $plattCtes
+      SELECT 0 AS ord, 'bias' AS feature, a0 AS weight FROM cw12
+      UNION ALL SELECT 1, 'score', a1 FROM cw12
+      ORDER BY ord"""),
+    Q("q305_platt_calibration", q305, Extra, plattCalibrationSql),
+    Q("q306_url_canonical_dedup", q306, Extra, s"""
+      WITH $urlFixtureCtes
+      SELECT curl AS canonical_url, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(count(DISTINCT url) AS BIGINT) AS n_urls,
+        min(doc_id) AS keeper
+      FROM ucanon GROUP BY 1 ORDER BY 1"""),
+    Q("q307_domain_stats", q307, Extra, s"""
+      WITH $urlFixtureCtes,
+      qf AS (
+        SELECT u.doc_id, u.domain, u.host,
+          round(least(greatest(
+            0.4 * least(nt / 50.0, 1.0) +
+            0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
+            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 6)
+            AS q
+        FROM (
+          SELECT doc_id, domain, host,
+            CAST(len(tk) AS DOUBLE) AS nt,
+            CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
+            CAST(len(text) AS DOUBLE) AS chars,
+            CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
+              AS DOUBLE) AS alpha
+          FROM (SELECT doc_id, domain, host, text,
+            regexp_split_to_array(trim(lower(text)), '\\s+') AS tk
+            FROM ucanon)) u)
+      SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
+        round(CAST(sum(CAST(q AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_quality
+      FROM qf GROUP BY 1 ORDER BY 1"""),
+    Q("q308_blocklist_funnel", q308, Extra, s"""
+      WITH $urlFixtureCtes,
+      bf AS (
+        SELECT source,
+          domain = 'blogspot.com' AS dom_b,
+          (NOT domain = 'blogspot.com') AND path LIKE '/ads/%' AS path_b
+        FROM ucanon)
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(CASE WHEN dom_b THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_domain_blocked,
+        CAST(sum(CASE WHEN path_b THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_path_blocked,
+        CAST(sum(CASE WHEN NOT dom_b AND NOT path_b THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_kept,
+        round(CAST(sum(CASE WHEN NOT dom_b AND NOT path_b THEN 1 ELSE 0 END)
+            AS DOUBLE) / CAST(count(*) AS DOUBLE), 4) AS keep_rate
+      FROM bf GROUP BY 1 ORDER BY 1"""),
+    Q("q309_k_anonymity", q309, Extra, """
+      WITH g AS (
+        SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS sz
+        FROM customer GROUP BY 1, 2)
+      SELECT sz AS group_size, CAST(count(*) AS BIGINT) AS n_groups,
+        CAST(sum(sz) AS BIGINT) AS n_rows, sz < 5 AS at_risk
+      FROM g GROUP BY sz ORDER BY sz"""),
+    Q("q310_l_diversity", q310, Extra, """
+      WITH g AS (
+        SELECT c_nationkey, c_mktsegment,
+          CAST(count(DISTINCT floor(c_acctbal / 1000.0)) AS BIGINT) AS l,
+          CAST(count(*) AS BIGINT) AS sz
+        FROM customer GROUP BY 1, 2)
+      SELECT l AS l_distinct, CAST(count(*) AS BIGINT) AS n_groups,
+        CAST(sum(sz) AS BIGINT) AS n_rows, l < 2 AS at_risk
+      FROM g GROUP BY l ORDER BY l"""),
+    Q("q311_cv_probe_sweep", q311, Extra, cvSweepSql),
+    // q312 streams the identical stateless scoring one file per
+    // trigger — the landed frame must equal the batch result verbatim
+    Q("q312_nb_score_stream", q312, Extra, nbPredictSql),
     // q313 folds the same counts batch-by-batch and trains from state —
     // the result must equal the batch model verbatim
-    "q313_nb_state_stream" -> nbModelSql,
+    Q("q313_nb_state_stream", q313, Extra, nbModelSql),
     // q314: the synthesized coordinates, the equirectangular metric and
     // the argmin are all replayed from the same md5 draws and IEEE
     // arithmetic; ties resolved (min d2, then min cid) on both sides
-    "q314_geo_nearest" -> s"""
+    Q("q314_geo_nearest", q314, Extra, s"""
       WITH $geoCtes,
       mn AS (SELECT pid, min(d2) AS d2 FROM pr GROUP BY 1),
       best AS (
@@ -12488,10 +15202,10 @@ object SparkEntry {
         round(min(sqrt(best.d2)), 6) AS min_km,
         round(max(sqrt(best.d2)), 6) AS max_km
       FROM best JOIN cc c ON best.cid = c.cid
-      GROUP BY 1 ORDER BY 1""",
+      GROUP BY 1 ORDER BY 1"""),
     // q315: the oracle computes the UNBLOCKED global argmin filtered to
     // the radius — the gate proves the 3x3 grid join loses nothing
-    "q315_geo_radius_grid" -> s"""
+    Q("q315_geo_radius_grid", q315, Extra, s"""
       WITH $geoCtes,
       flt AS (SELECT * FROM pr WHERE d2 <= 250000.0),
       mn AS (SELECT pid, min(d2) AS d2 FROM flt GROUP BY 1),
@@ -12506,264 +15220,11 @@ object SparkEntry {
         round(CAST(sum(CAST(round(sqrt(j.d2), 9) AS DECIMAL(28,12)))
             AS DOUBLE) / CAST(count(j.d2) AS DOUBLE), 6) AS mean_km
       FROM j LEFT JOIN cc c ON j.cid = c.cid
-      GROUP BY 1 ORDER BY 1""",
-    // q325: Q13 written the classic way (LEFT OUTER with the anti-
-    // filter in the join condition, count per customer, histogram);
-    // the engine's pre-aggregated-orders plan must land on the
-    // identical distribution, zero-order customers included
-    "q325_q13_custdist" -> """
-      WITH oc AS (
-        SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        FROM customer c LEFT OUTER JOIN orders o
-          ON c.c_custkey = o.o_custkey
-          AND o.o_orderpriority NOT LIKE '%URGENT%'
-        GROUP BY c.c_custkey)
-      SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-      FROM oc GROUP BY c_count
-      ORDER BY custdist DESC, c_count DESC""",
-    // q329: Q16 written the classic way (NOT IN subquery); the engine
-    // decorrelates into a broadcast anti join before the distinct agg
-    "q329_q16_supplier_cnt" -> """
-      SELECT p_brand, p_type, p_size,
-        CAST(count(DISTINCT ps.l_suppkey) AS BIGINT) AS supplier_cnt
-      FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-      JOIN part ON p_partkey = ps.l_partkey
-      WHERE p_brand <> 'Brand#1' AND p_type <> 'MEDIUM'
-        AND p_size IN (1, 4, 7, 10, 15, 23, 45, 49)
-        AND ps.l_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier
-          WHERE s_acctbal < 0 AND s_suppkey IS NOT NULL)
-      GROUP BY p_brand, p_type, p_size
-      ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-    // q330: Q15 written the classic way (revenue view probed by its own
-    // scalar max); the engine decorrelates into a broadcast equi-join
-    // on the decimal revenue — ties preserved on both sides
-    "q330_q15_top_supplier" -> """
-      WITH revenue AS (
-        SELECT l_suppkey AS supplier_no,
-          sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6)))
-            AS total_rev
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate < TIMESTAMP '1996-04-01'
-        GROUP BY 1)
-      SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
-      FROM supplier JOIN revenue ON s_suppkey = supplier_no
-      WHERE total_rev = (SELECT max(total_rev) FROM revenue)
-      ORDER BY s_suppkey""",
-    // q331: Q11 written the classic way (HAVING > scalar subquery over
-    // the same grouped relation); the engine broadcasts the scalar back
-    // over the checkpointed per-part frame. Identical bounded-precision
-    // decimal compare on both sides: 2·val·n > 3·total at (26,2)×(8,0).
-    "q331_q11_important_parts" -> """
-      WITH pv AS (
-        SELECT l_partkey,
-          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-            AS DECIMAL(26,2)) AS val
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'EUROPE'
-        GROUP BY l_partkey)
-      SELECT l_partkey, CAST(val AS DOUBLE) AS value
-      FROM pv
-      WHERE val * 2 * (SELECT CAST(count(*) AS DECIMAL(8,0)) FROM pv)
-          > (SELECT CAST(sum(val) AS DECIMAL(26,2)) FROM pv) * 3
-      ORDER BY value DESC, l_partkey""",
-    // q332: first-batch-wins over the q306 fixture — batch b holds
-    // doc_id ≡ b (mod 3); a canonical key is claimed by the earliest
-    // batch containing it, by the min doc_id within that batch
-    "q332_url_frontier_stream" -> s"""
-      WITH $urlFixtureCtes,
-      fc AS (
-        SELECT doc_id, doc_id % 3 AS b, curl FROM ucanon
-        WHERE curl IS NOT NULL),
-      fbat AS (SELECT curl, min(b) AS b FROM fc GROUP BY 1),
-      fcl AS (
-        SELECT c.curl, min(c.doc_id) AS claimed_by, c.b
-        FROM fc c JOIN fbat f ON c.curl = f.curl AND c.b = f.b
-        GROUP BY c.curl, c.b)
-      SELECT curl AS canonical_url, claimed_by, CAST(b AS BIGINT) AS batch
-      FROM fcl ORDER BY canonical_url""",
-    // q333: Q7 written the classic way (nation pair disjunction in the
-    // WHERE); the engine broadcasts both nation legs and filters the
-    // join output — identical groups either way
-    "q333_q7_trade_volume" -> """
-      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        year(l_shipdate) AS l_year, CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation n1 ON s_nationkey = n1.n_nationkey
-      JOIN nation n2 ON c_nationkey = n2.n_nationkey
-      WHERE (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_8')
-         OR (n1.n_name = 'NATION_8' AND n2.n_name = 'NATION_3')
-      GROUP BY 1, 2, 3
-      ORDER BY supp_nation, cust_nation, l_year""",
-    // q334: Q19 written the classic way — the OR of three mixed
-    // (part × lineitem) clauses in one WHERE
-    "q334_q19_disjunctive_revenue" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-      FROM lineitem JOIN part ON p_partkey = l_partkey
-      WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-          AND l_quantity BETWEEN 1 AND 20)
-         OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-          AND l_quantity BETWEEN 10 AND 30)
-         OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-          AND l_quantity BETWEEN 20 AND 40)""",
-    // q335/q336: ONE oracle string for the batch sketch and its
-    // streamed maintainer — bin-wise sums are batching-invariant
-    "q335_qbin_quantiles" -> qbinOracle,
-    "q336_qbin_stream" -> qbinOracle,
-    // q337: the grouped QBIN — per-source cumulative counts and the
-    // same rounded interpolation tree, every CTE keyed by source
-    // q337/q342: ONE oracle string for the batch grouped sketch and its
-    // streamed maintainer — per-group bin-wise sums are batching-
-    // invariant exactly (the q335/q336 discipline, grouped flavor)
-    "q337_qbin_by_source" -> qbinByOracle,
-    "q342_qbin_by_source_stream" -> qbinByOracle,
-    // q317: Q18 written the classic way (HAVING subquery + re-join);
-    // the engine's single-scan plan must land on the identical rows
-    "q317_q18_big_orders" -> """
-      WITH oq AS (
-        SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-        FROM lineitem GROUP BY 1
-        HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 240)
-      SELECT c.c_name, c.c_custkey, o.o_orderkey,
-        strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        o.o_totalprice, CAST(oq.qty AS DOUBLE) AS total_qty
-      FROM oq JOIN orders o ON oq.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      ORDER BY o.o_totalprice DESC, o_orderdate, o.o_orderkey
-      LIMIT 100""",
-    // q318: Q22 written the classic way (scalar subquery + NOT EXISTS);
-    // the engine decorrelates into a broadcast scalar + anti join
-    "q318_q22_idle_customers" -> """
-      WITH sel AS (
-        SELECT c_custkey, c_nationkey, c_acctbal FROM customer
-        WHERE c_nationkey IN (1, 3, 7, 12, 18)),
-      av AS (
-        SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE) AS a
-        FROM sel WHERE c_acctbal > 0.0),
-      f AS (
-        SELECT s.c_nationkey, s.c_acctbal FROM sel s CROSS JOIN av
-        WHERE s.c_acctbal > av.a
-          AND NOT EXISTS (
-            SELECT 1 FROM orders o WHERE o.o_custkey = s.c_custkey
-              AND o.o_orderdate >= TIMESTAMP '2001-01-01'))
-      SELECT c_nationkey, CAST(count(*) AS BIGINT) AS numcust,
-        round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
-          + 0.0 AS totacctbal
-      FROM f GROUP BY 1 ORDER BY 1""",
-    // q319: the planting rule, the replace-and-measure occurrence
-    // counts, and the flag rule all replayed verbatim
-    "q319_encoding_audit" -> {
-      val moji = graft.ops.TextAnalysis.MojibakePatterns
-      val occ = (p: String) =>
-        s"CAST((len(text) - len(replace(text, '$p', ''))) / ${p.length} AS BIGINT)"
-      s"""
-      WITH planted AS (
-        SELECT doc_id, source,
-          text ||
-            (CASE WHEN doc_id % 7 = 0 THEN ' donâ€™t cafÃ© niÃ±o'
-              ELSE '' END) ||
-            (CASE WHEN doc_id % 11 = 0 THEN ' bad�byte' ELSE '' END)
-            AS text
-        FROM documents),
-      audit AS (
-        SELECT doc_id, source, len(text) AS n_chars,
-          ${occ("�")} AS n_repl,
-          ${moji.map(occ).mkString("(", " + ", ")")} AS n_moji
-        FROM planted),
-      fl AS (
-        SELECT source, n_repl, n_moji,
-          n_repl > 0 OR (CASE WHEN n_chars > 0
-            THEN round(CAST(n_repl + n_moji AS DOUBLE) /
-              CAST(n_chars AS DOUBLE), 6) ELSE 0.0 END) > 0.001 AS flagged
-        FROM audit)
-      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(CASE WHEN flagged THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_flagged,
-        CAST(sum(n_repl) AS BIGINT) AS tot_repl,
-        CAST(sum(n_moji) AS BIGINT) AS tot_moji
-      FROM fl GROUP BY 1 ORDER BY 1"""
-    },
-    // q320: the automaton's per-keyword counts replayed keyword-by-
-    // keyword as RE2 non-overlapping regex counts (the documented
-    // contract), then the same integer folds
-    "q320_keyword_risk" -> {
-      val occ = kwList.map(k =>
-        s"CAST(len(regexp_extract_all(lower(text), '${k}')) AS BIGINT)")
-      val hits = occ.mkString("(", " + ", ")")
-      val score = kwWeights.zip(occ)
-        .map { case (w, o) => s"$w * $o" }.mkString("(", " + ", ")")
-      s"""
-      WITH sc AS (
-        SELECT source, $hits AS hits, $score AS score
-        FROM documents)
-      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_risky,
-        CAST(sum(hits) AS BIGINT) AS tot_hits,
-        CAST(sum(score) AS BIGINT) AS tot_score
-      FROM sc GROUP BY 1 ORDER BY 1"""
-    },
-    // q321: every edge's crossing test replayed from the SAME
-    // interpolated vertex constants; first-match CASE order as the
-    // engine's fold
-    "q321_geo_zone_tag" -> {
-      val cases = geoZones.map { case (n, poly) =>
-        s"WHEN ${pipSql(poly)} THEN '$n'"
-      }.mkString("\n          ")
-      s"""
-      WITH $geoCtes,
-      z AS (
-        SELECT p.pid, p.plat, p.plon,
-          CASE $cases ELSE '(none)' END AS zone
-        FROM p)
-      SELECT zone, CAST(count(*) AS BIGINT) AS n_pts,
-        round(CAST(sum(CAST(round(plat, 9) AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_lat,
-        round(CAST(sum(CAST(round(plon, 9) AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_lon
-      FROM z GROUP BY 1 ORDER BY 1"""
-    },
-    // q324: the UNBLOCKED all-zones containment test replayed per zone
-    // from the same interpolated vertex constants (pipSql — q321's
-    // device over the 40-zone table); the gate proves the bbox-grid
-    // candidate join loses no (point, zone) pair
-    "q324_zone_table_pip" -> {
-      val conds = q324Zones.map { case (n, poly) => (n, pipSql(poly)) }
-      val pairSelects = conds.map { case (n, c) =>
-        s"SELECT p.pid, p.plat, p.plon, '$n' AS zone FROM p WHERE $c"
-      }.mkString("\n        UNION ALL ")
-      val anyCond = conds.map(_._2).mkString("(", " OR ", ")")
-      s"""
-      WITH $geoCtes,
-      zpairs AS (
-        $pairSelects),
-      ztag AS (
-        SELECT zone, plat, plon FROM zpairs
-        UNION ALL
-        SELECT '(none)', p.plat, p.plon FROM p WHERE NOT $anyCond)
-      SELECT zone, CAST(count(*) AS BIGINT) AS n_pts,
-        round(CAST(sum(CAST(round(plat, 9) AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_lat,
-        round(CAST(sum(CAST(round(plon, 9) AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_lon
-      FROM ztag GROUP BY 1 ORDER BY 1"""
-    },
+      GROUP BY 1 ORDER BY 1"""),
     // q316: q223's unigram-LM CTEs at source grain, then the DoReMi-lite
     // weight math unrolled — the (1 + eta*x)^2 no-libm surrogate, decimal
     // normalization, 6-dp weights
-    "q316_doremi_mix" -> raw"""
+    Q("q316_doremi_mix", q316, Extra, raw"""
       WITH toks AS (
         SELECT doc_id,
           unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
@@ -12807,16 +15268,119 @@ object SparkEntry {
         CAST(round(round(0.9 * (rw.rawv / tt.tot) +
           0.1 / CAST(rw.k AS DOUBLE), 6) * 1000000.0, 0) AS BIGINT)
           AS tokens_alloc
-      FROM rw CROSS JOIN tt ORDER BY domain""",
-    "q302_nb_predict" -> nbPredictSql,
-    // q312 streams the identical stateless scoring one file per
-    // trigger — the landed frame must equal the batch result verbatim
-    "q312_nb_score_stream" -> nbPredictSql,
+      FROM rw CROSS JOIN tt ORDER BY domain"""),
+    // q317: Q18 written the classic way (HAVING subquery + re-join);
+    // the engine's single-scan plan must land on the identical rows
+    Q("q317_q18_big_orders", q317, Extra, """
+      WITH oq AS (
+        SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
+        FROM lineitem GROUP BY 1
+        HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 240)
+      SELECT c.c_name, c.c_custkey, o.o_orderkey,
+        strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
+        o.o_totalprice, CAST(oq.qty AS DOUBLE) AS total_qty
+      FROM oq JOIN orders o ON oq.l_orderkey = o.o_orderkey
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      ORDER BY o.o_totalprice DESC, o_orderdate, o.o_orderkey
+      LIMIT 100"""),
+    // q318: Q22 written the classic way (scalar subquery + NOT EXISTS);
+    // the engine decorrelates into a broadcast scalar + anti join
+    Q("q318_q22_idle_customers", q318, Extra, """
+      WITH sel AS (
+        SELECT c_custkey, c_nationkey, c_acctbal FROM customer
+        WHERE c_nationkey IN (1, 3, 7, 12, 18)),
+      av AS (
+        SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE) AS a
+        FROM sel WHERE c_acctbal > 0.0),
+      f AS (
+        SELECT s.c_nationkey, s.c_acctbal FROM sel s CROSS JOIN av
+        WHERE s.c_acctbal > av.a
+          AND NOT EXISTS (
+            SELECT 1 FROM orders o WHERE o.o_custkey = s.c_custkey
+              AND o.o_orderdate >= TIMESTAMP '2001-01-01'))
+      SELECT c_nationkey, CAST(count(*) AS BIGINT) AS numcust,
+        round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2)
+          + 0.0 AS totacctbal
+      FROM f GROUP BY 1 ORDER BY 1"""),
+    // q319: the planting rule, the replace-and-measure occurrence
+    // counts, and the flag rule all replayed verbatim
+    Q("q319_encoding_audit", q319, Extra, {
+      val moji = graft.ops.TextAnalysis.MojibakePatterns
+      val occ = (p: String) =>
+        s"CAST((len(text) - len(replace(text, '$p', ''))) / ${p.length} AS BIGINT)"
+      s"""
+      WITH planted AS (
+        SELECT doc_id, source,
+          text ||
+            (CASE WHEN doc_id % 7 = 0 THEN ' donâ€™t cafÃ© niÃ±o'
+              ELSE '' END) ||
+            (CASE WHEN doc_id % 11 = 0 THEN ' bad�byte' ELSE '' END)
+            AS text
+        FROM documents),
+      audit AS (
+        SELECT doc_id, source, len(text) AS n_chars,
+          ${occ("�")} AS n_repl,
+          ${moji.map(occ).mkString("(", " + ", ")")} AS n_moji
+        FROM planted),
+      fl AS (
+        SELECT source, n_repl, n_moji,
+          n_repl > 0 OR (CASE WHEN n_chars > 0
+            THEN round(CAST(n_repl + n_moji AS DOUBLE) /
+              CAST(n_chars AS DOUBLE), 6) ELSE 0.0 END) > 0.001 AS flagged
+        FROM audit)
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(CASE WHEN flagged THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_flagged,
+        CAST(sum(n_repl) AS BIGINT) AS tot_repl,
+        CAST(sum(n_moji) AS BIGINT) AS tot_moji
+      FROM fl GROUP BY 1 ORDER BY 1"""
+    }),
+    // q320: the automaton's per-keyword counts replayed keyword-by-
+    // keyword as RE2 non-overlapping regex counts (the documented
+    // contract), then the same integer folds
+    Q("q320_keyword_risk", q320, Extra, {
+      val occ = kwList.map(k =>
+        s"CAST(len(regexp_extract_all(lower(text), '${k}')) AS BIGINT)")
+      val hits = occ.mkString("(", " + ", ")")
+      val score = kwWeights.zip(occ)
+        .map { case (w, o) => s"$w * $o" }.mkString("(", " + ", ")")
+      s"""
+      WITH sc AS (
+        SELECT source, $hits AS hits, $score AS score
+        FROM documents)
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_risky,
+        CAST(sum(hits) AS BIGINT) AS tot_hits,
+        CAST(sum(score) AS BIGINT) AS tot_score
+      FROM sc GROUP BY 1 ORDER BY 1"""
+    }),
+    // q321: every edge's crossing test replayed from the SAME
+    // interpolated vertex constants; first-match CASE order as the
+    // engine's fold
+    Q("q321_geo_zone_tag", q321, Extra, {
+      val cases = geoZones.map { case (n, poly) =>
+        s"WHEN ${pipSql(poly)} THEN '$n'"
+      }.mkString("\n          ")
+      s"""
+      WITH $geoCtes,
+      z AS (
+        SELECT p.pid, p.plat, p.plon,
+          CASE $cases ELSE '(none)' END AS zone
+        FROM p)
+      SELECT zone, CAST(count(*) AS BIGINT) AS n_pts,
+        round(CAST(sum(CAST(round(plat, 9) AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_lat,
+        round(CAST(sum(CAST(round(plon, 9) AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_lon
+      FROM z GROUP BY 1 ORDER BY 1"""
+    }),
     // q322: the NB training chain (nbChainCtes — q301's oracle logic
     // verbatim, instantiated on the planted-label fixture) stitched
     // into the q300 funnel CTEs; the heuristic flag replays q300's
     // quality arithmetic on the planted text
-    "q322_model_curation_funnel" -> {
+    Q("q322_model_curation_funnel", q322, Extra, {
       val plant = s"' ${q322PlantTail.trim}'"
       raw"""
       WITH fplant AS (
@@ -12870,425 +15434,13 @@ object SparkEntry {
             AS DOUBLE) / count(*), 4) AS keep_rate
       FROM fst s LEFT JOIN fkp k ON s.doc_id = k.doc_id
       GROUP BY s.source ORDER BY s.source"""
-    },
-    // q328: the NB language model (nbChainCtes on q301's train split,
-    // scored over the WHOLE corpus) beside the q27 marker heuristic and
-    // the true lang label, rolled up per source
-    "q328_model_lang_gate" -> raw"""
-      WITH gtrain AS (
-        SELECT doc_id, lang AS class, text FROM documents
-        WHERE doc_id % 2 = 0 AND lang IS NOT NULL),
-      gscore_in AS (SELECT doc_id, text FROM documents),
-      ${nbChainCtes("g", "gtrain", "gscore_in")},
-      gsc AS (
-        SELECT doc_id,
-          len(list_filter(tk, t -> t IN ('the','a','of','and','to'))) AS s_en,
-          len(list_filter(tk, t -> t IN ('el','la','de','que','y'))) AS s_es,
-          len(list_filter(tk, t -> t IN ('le','la','de','et','un'))) AS s_fr,
-          len(list_filter(tk, t -> t IN ('der','die','und','das','ein')))
-            AS s_de,
-          len(list_filter(tk, t -> t IN ('的','了','是','我','不'))) AS s_zh
-        FROM (SELECT doc_id,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-          FROM documents)),
-      gheur AS (
-        SELECT doc_id, CASE
-          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0
-            THEN 'en'
-          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0
-            THEN 'es'
-          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0
-            THEN 'fr'
-          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0
-            THEN 'de'
-          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0
-            THEN 'zh'
-          ELSE 'und' END AS lang_pred
-        FROM gsc),
-      gst AS (
-        SELECT d.source,
-          p.pred_class = 'en' AS model_keep,
-          h.lang_pred = 'en' AS heur_keep,
-          coalesce(d.lang, 'und') = 'en' AS true_en
-        FROM documents d JOIN gpred p ON d.doc_id = p.doc_id
-        JOIN gheur h ON d.doc_id = h.doc_id)
-      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(CASE WHEN model_keep THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_model_en,
-        CAST(sum(CASE WHEN heur_keep THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_heur_en,
-        CAST(sum(CASE WHEN true_en THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_true_en,
-        CAST(sum(CASE WHEN model_keep <> heur_keep THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_disagree,
-        CAST(sum(CASE WHEN model_keep = true_en THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_model_correct,
-        CAST(sum(CASE WHEN heur_keep = true_en THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_heur_correct
-      FROM gst GROUP BY source ORDER BY source""",
-    // q338: q328's report card with the NB chain instantiated on the
-    // char-3-gram tokenizer (charGramListSql) — the heuristic CTEs are
-    // the q328 strings verbatim (shared rule, different model)
-    "q338_charngram_lang_gate" -> raw"""
-      WITH cgtrain AS (
-        SELECT doc_id, lang AS class, text FROM documents
-        WHERE doc_id % 2 = 0 AND lang IS NOT NULL),
-      cgscore_in AS (SELECT doc_id, text FROM documents),
-      ${nbChainCtes("cg", "cgtrain", "cgscore_in", charGramListSql _)},
-      cgsc AS (
-        SELECT doc_id,
-          len(list_filter(tk, t -> t IN ('the','a','of','and','to'))) AS s_en,
-          len(list_filter(tk, t -> t IN ('el','la','de','que','y'))) AS s_es,
-          len(list_filter(tk, t -> t IN ('le','la','de','et','un'))) AS s_fr,
-          len(list_filter(tk, t -> t IN ('der','die','und','das','ein')))
-            AS s_de,
-          len(list_filter(tk, t -> t IN ('的','了','是','我','不'))) AS s_zh
-        FROM (SELECT doc_id,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-          FROM documents)),
-      cgheur AS (
-        SELECT doc_id, CASE
-          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0
-            THEN 'en'
-          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0
-            THEN 'es'
-          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0
-            THEN 'fr'
-          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0
-            THEN 'de'
-          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0
-            THEN 'zh'
-          ELSE 'und' END AS lang_pred
-        FROM cgsc),
-      cgst AS (
-        SELECT d.source,
-          p.pred_class = 'en' AS model_keep,
-          h.lang_pred = 'en' AS heur_keep,
-          coalesce(d.lang, 'und') = 'en' AS true_en
-        FROM documents d JOIN cgpred p ON d.doc_id = p.doc_id
-        JOIN cgheur h ON d.doc_id = h.doc_id)
-      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(CASE WHEN model_keep THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_model_en,
-        CAST(sum(CASE WHEN heur_keep THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_heur_en,
-        CAST(sum(CASE WHEN true_en THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_true_en,
-        CAST(sum(CASE WHEN model_keep <> heur_keep THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_disagree,
-        CAST(sum(CASE WHEN model_keep = true_en THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_model_correct,
-        CAST(sum(CASE WHEN heur_keep = true_en THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_heur_correct
-      FROM cgst GROUP BY source ORDER BY source""",
-    // q343: the post-delete table must hash-equal the anti-join of the
-    // raw documents (the erased id range restated as NOT BETWEEN);
-    // pruning/time-travel facts are required in-query, not here
-    "q343_erase_keys" -> """
-      SELECT source, coalesce(lang, 'und') AS lang,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      WHERE doc_id NOT BETWEEN 100 AND 149
-      GROUP BY 1, 2
-      ORDER BY source, lang""",
-    // q344: q343's erase followed by snapshot expiry — the kept
-    // generation must still hash-equal the anti-join; physical-purge
-    // facts (files gone, expired snapshot refuses, zero leaked keys on
-    // disk) are required in-query
-    "q344_erase_then_expire" -> """
-      SELECT source, coalesce(lang, 'und') AS lang,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      WHERE doc_id NOT BETWEEN 200 AND 299
-      GROUP BY 1, 2
-      ORDER BY source, lang""",
-    // q339: Q4 written the classic way (EXISTS subquery); the engine
-    // decorrelates into a left-semi join with both filters pushed
-    "q339_q4_order_priority" -> """
-      SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-      FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        AND o_orderdate < TIMESTAMP '1996-10-01'
-        AND EXISTS (SELECT 1 FROM lineitem
-          WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority""",
-    // q340: Q8 written the classic way (conditional numerator over the
-    // all_nations subquery); the engine folds both legs in one pass
-    "q340_q8_market_share" -> """
-      WITH all_nations AS (
-        SELECT year(o_orderdate) AS o_year,
-          l_extendedprice * (1.0 - l_discount) AS volume,
-          n1.n_name AS supp_nation
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN part ON l_partkey = p_partkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        JOIN region ON n2.n_regionkey = r_regionkey
-        WHERE r_name = 'AMERICA' AND p_type = 'PROMO'
-          AND o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate < TIMESTAMP '1998-01-01')
-      SELECT o_year,
-        round(CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_3'
-              THEN volume ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) /
-          CAST(sum(CAST(volume AS DECIMAL(18,6))) AS DOUBLE), 9)
-          AS mkt_share,
-        CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_3' THEN volume
-            ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS nation_volume,
-        CAST(sum(CAST(volume AS DECIMAL(18,6))) AS DOUBLE) AS total_volume
-      FROM all_nations GROUP BY o_year ORDER BY o_year""",
-    // q341: Q9 written the classic way (profit CTE over the five-way
-    // join); p_retailprice*0.6 stands in for ps_supplycost
-    "q341_q9_profit" -> """
-      WITH profit AS (
-        SELECT n_name AS nation, year(o_orderdate) AS o_year,
-          l_extendedprice * (1.0 - l_discount)
-            - p_retailprice * 0.6 * l_quantity AS amount
-        FROM lineitem
-        JOIN part ON l_partkey = p_partkey
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        WHERE p_name LIKE '%red%')
-      SELECT nation, o_year, CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(amount AS DECIMAL(18,6))) AS DOUBLE) AS sum_profit
-      FROM profit GROUP BY nation, o_year
-      ORDER BY nation, o_year DESC""",
-    // q345: Q3 written the classic way; o_orderpriority stands in for
-    // o_shippriority; ties at the top-10 boundary break on
-    // (o_orderdate, l_orderkey)
-    "q345_q3_shipping_priority" -> """
-      SELECT l_orderkey, o_orderdate, o_orderpriority,
-        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-      FROM customer
-      JOIN orders ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1996-03-15'
-        AND l_shipdate > TIMESTAMP '1996-03-15'
-      GROUP BY 1, 2, 3
-      ORDER BY revenue DESC, o_orderdate, l_orderkey
-      LIMIT 10""",
-    // q346: Q6 — the single-table predicate aggregate
-    "q346_q6_forecast_revenue" -> """
-      SELECT CAST(sum(CAST(l_extendedprice * l_discount
-          AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
-        CAST(count(*) AS BIGINT) AS n_items
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1997-01-01'
-        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
-    // q347: Q10 — the per-customer rollup and top-20 run before the dim
-    // join on both sides (the dim join is 1:1, top-k commutes with it)
-    "q347_q10_returned_items" -> """
-      WITH rev AS (
-        SELECT o_custkey,
-          CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-            AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_returnflag = 'R'
-          AND o_orderdate >= TIMESTAMP '1996-10-01'
-          AND o_orderdate < TIMESTAMP '1997-01-01'
-        GROUP BY o_custkey
-        ORDER BY revenue DESC, o_custkey LIMIT 20)
-      SELECT c_custkey, c_name, revenue, c_acctbal, n_name
-      FROM rev
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation ON c_nationkey = n_nationkey
-      ORDER BY revenue DESC, c_custkey""",
-    // q348: Q12 — l_returnflag ∈ {A,R} stands in for the shipmode IN,
-    // l_linestatus = 'F' for the late-delivery predicate
-    "q348_q12_shipmode_priority" -> """
-      SELECT l_returnflag AS shipmode,
-        CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-          THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-          THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      WHERE l_returnflag IN ('A', 'R') AND l_linestatus = 'F'
-        AND l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate < TIMESTAMP '1997-01-01'
-      GROUP BY 1 ORDER BY 1""",
-    // q349: Q14 — conditional numerator and denominator in one pass
-    // (the q340 quotient discipline, single-group flavor)
-    "q349_q14_promo_revenue" -> """
-      SELECT round(100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
-            THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
-            AS DECIMAL(18,6))) AS DOUBLE)
-          / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-            AS DECIMAL(18,6))) AS DOUBLE), 9) AS promo_pct,
-        CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
-          THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
-          AS DECIMAL(18,6))) AS DOUBLE) AS promo_revenue,
-        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-        AND l_shipdate < TIMESTAMP '1996-10-01'""",
-    // q350: the pruned lake read must hash-equal the predicate restated
-    // over the raw documents; the file-skipping facts (skipped > 0,
-    // pruned ≡ full+filter) are required in-query
-    "q350_lake_pruned_scan" -> """
-      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id,
-        CAST(sum(n_chars) AS BIGINT) AS sum_chars
-      FROM documents
-      WHERE doc_id >= 100 AND doc_id < 200
-      GROUP BY source ORDER BY source""",
-    // q351: q343's erasure oracle verbatim — the columnar lane must land
-    // on the same post-delete table as the text lane
-    "q351_lake_erase" -> """
-      SELECT source, coalesce(lang, 'und') AS lang,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      WHERE doc_id NOT BETWEEN 100 AND 149
-      GROUP BY 1, 2
-      ORDER BY source, lang""",
-    // q352: evolution restated — even docs landed without lang (NULL
-    // after the add-column), odd docs with theirs; source reads under
-    // its post-rename name; the erased range drops
-    "q352_lake_schema_evolution" -> """
-      SELECT source AS origin, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(CASE WHEN doc_id % 2 = 0 OR lang IS NULL
-          THEN 1 ELSE 0 END) AS BIGINT) AS n_lang_missing,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      WHERE doc_id NOT BETWEEN 100 AND 149
-      GROUP BY 1 ORDER BY 1""",
-    // q353: compaction is content-INVARIANT — the post-compact table
-    // must hash-equal the post-erase table (q351's oracle verbatim);
-    // the compaction/skipping/expiry facts are required in-query
-    "q353_lake_compact" -> """
-      SELECT source, coalesce(lang, 'und') AS lang,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      WHERE doc_id NOT BETWEEN 100 AND 149
-      GROUP BY 1, 2
-      ORDER BY source, lang""",
-    // q354: the snapshot increment IS the second landing — the odd half
-    "q354_lake_incremental" -> """
-      SELECT source, coalesce(lang, 'und') AS lang,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      WHERE doc_id % 2 = 1
-      GROUP BY 1, 2
-      ORDER BY source, lang""",
-    // q355: the z-ordered lake slice must hash-equal the user-range
-    // predicate restated over raw events; the BOTH-dimensions-prune
-    // facts are required in-query
-    "q355_lake_zorder_scan" -> """
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-        CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-      FROM events
-      WHERE user_id BETWEEN 3 AND 5
-      GROUP BY 1 ORDER BY 1""",
-    // q356: two racing landings must converge on the FULL table — the
-    // oracle is the whole-documents rollup, which hash-fails if the
-    // lost-update window ever reopens (either half vanishing from HEAD)
-    "q356_lake_concurrent_land" -> """
-      SELECT source, coalesce(lang, 'und') AS lang,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        min(doc_id) AS min_id, max(doc_id) AS max_id
-      FROM documents
-      GROUP BY 1, 2
-      ORDER BY source, lang""",
-    // q357: the streamed lake table must hash-equal the id-range slice
-    // restated over raw events; the replay-idempotence, batch-twin and
-    // pruning facts are required in-query
-    "q357_lake_stream_land" -> """
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-        CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-      FROM events
-      WHERE event_id >= 100 AND event_id < 300
-      GROUP BY 1 ORDER BY 1""",
-    "q303_nb_confusion" -> s"""
-      WITH $nbModelCtes,
-      nbj AS (
-        SELECT p.doc_id, p.pred_class, d.lang AS true_lang
-        FROM nbpred p JOIN documents d ON p.doc_id = d.doc_id),
-      nbcells AS (
-        SELECT true_lang, pred_class, CAST(count(*) AS BIGINT) AS n
-        FROM nbj GROUP BY 1, 2),
-      nbtot AS (
-        SELECT true_lang, count(*) AS tot FROM nbj GROUP BY 1)
-      SELECT c.true_lang, c.pred_class, c.n,
-        round(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE), 6) AS frac
-      FROM nbcells c JOIN nbtot t ON c.true_lang = t.true_lang
-      ORDER BY c.true_lang, c.pred_class""",
-    "q304_platt_fit" -> s"""
-      WITH $plattCtes
-      SELECT 0 AS ord, 'bias' AS feature, a0 AS weight FROM cw12
-      UNION ALL SELECT 1, 'score', a1 FROM cw12
-      ORDER BY ord""",
-    "q305_platt_calibration" -> plattCalibrationSql,
-    // q326 streams the identical frozen-map scoring one file per
-    // trigger and folds the landed rows through the same summaries —
-    // the streamed twin shares q305's oracle verbatim
-    "q326_calibration_drift_stream" -> plattCalibrationSql,
-    // q327: both windows' value-bin curves replayed from the q28
-    // quality arithmetic, full-outer-joined on the bin key
-    "q327_calib_bins_drift" -> raw"""
-      WITH qs AS (
-        SELECT doc_id, lang = 'en' AS p,
-          round(least(greatest(
-            0.4 * least(nt / 50.0, 1.0) +
-            0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0),
-            0.0), 1.0), 6) AS s
-        FROM (
-          SELECT doc_id, lang,
-            CAST(len(tk) AS DOUBLE) AS nt,
-            CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
-            CAST(len(text) AS DOUBLE) AS chars,
-            CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-              AS DOUBLE) AS alpha
-          FROM (SELECT doc_id, lang, text,
-            regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-            FROM documents))),
-      bb AS (
-        SELECT least(greatest(CAST(floor(s * 10) AS BIGINT), 0), 9)
-            AS bin,
-          CAST(count(*) AS BIGINT) AS n,
-          round(CAST(sum(CASE WHEN p THEN 1 ELSE 0 END) AS DOUBLE) /
-            CAST(count(*) AS DOUBLE), 6) AS pr
-        FROM qs WHERE doc_id % 2 = 0 GROUP BY 1),
-      cb AS (
-        SELECT least(greatest(CAST(floor(s * 10) AS BIGINT), 0), 9)
-            AS bin,
-          CAST(count(*) AS BIGINT) AS n,
-          round(CAST(sum(CASE WHEN p THEN 1 ELSE 0 END) AS DOUBLE) /
-            CAST(count(*) AS DOUBLE), 6) AS pr
-        FROM qs WHERE doc_id % 2 = 1 GROUP BY 1)
-      SELECT coalesce(b.bin, c.bin) AS bin,
-        coalesce(b.n, 0) AS n_base, coalesce(c.n, 0) AS n_cur,
-        b.pr AS pos_rate_base, c.pr AS pos_rate_cur,
-        round(c.pr - b.pr, 6) + 0.0 AS drift,
-        coalesce(abs(c.pr - b.pr) >= 0.05, false) AS flagged
-      FROM bb b FULL OUTER JOIN cb c ON b.bin = c.bin
-      ORDER BY 1""",
-    "q306_url_canonical_dedup" -> s"""
-      WITH $urlFixtureCtes
-      SELECT curl AS canonical_url, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(count(DISTINCT url) AS BIGINT) AS n_urls,
-        min(doc_id) AS keeper
-      FROM ucanon GROUP BY 1 ORDER BY 1""",
+    }),
     // q323: the same ~200-row PSL rule list interpolated and the FULL
     // algorithm replayed generically — rule normalization (plain /
     // '*.' wildcard / '!' exception), last-k candidate tails, the
     // exception-first-then-longest winner, the '*' default and the
     // host-is-a-suffix NULL
-    "q323_psl_domain" -> {
+    Q("q323_psl_domain", q323, Extra, {
       val rules = graft.ops.Web.pslSuffixes.map(s => s"'$s'").mkString(",")
       def pat(k: Int): String =
         "(" + Seq.fill(k)("[^.]+").mkString("\\.") + ")$"
@@ -13349,3011 +15501,537 @@ object SparkEntry {
         CAST(count(*) AS BIGINT) AS n_docs,
         CAST(count(DISTINCT host) AS BIGINT) AS n_hosts
       FROM rd GROUP BY 1 ORDER BY 1"""
-    },
-    "q307_domain_stats" -> s"""
-      WITH $urlFixtureCtes,
-      qf AS (
-        SELECT u.doc_id, u.domain, u.host,
+    }),
+    // q324: the UNBLOCKED all-zones containment test replayed per zone
+    // from the same interpolated vertex constants (pipSql — q321's
+    // device over the 40-zone table); the gate proves the bbox-grid
+    // candidate join loses no (point, zone) pair
+    Q("q324_zone_table_pip", q324, Extra, {
+      val conds = q324Zones.map { case (n, poly) => (n, pipSql(poly)) }
+      val pairSelects = conds.map { case (n, c) =>
+        s"SELECT p.pid, p.plat, p.plon, '$n' AS zone FROM p WHERE $c"
+      }.mkString("\n        UNION ALL ")
+      val anyCond = conds.map(_._2).mkString("(", " OR ", ")")
+      s"""
+      WITH $geoCtes,
+      zpairs AS (
+        $pairSelects),
+      ztag AS (
+        SELECT zone, plat, plon FROM zpairs
+        UNION ALL
+        SELECT '(none)', p.plat, p.plon FROM p WHERE NOT $anyCond)
+      SELECT zone, CAST(count(*) AS BIGINT) AS n_pts,
+        round(CAST(sum(CAST(round(plat, 9) AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_lat,
+        round(CAST(sum(CAST(round(plon, 9) AS DECIMAL(28,12))) AS DOUBLE) /
+          CAST(count(*) AS DOUBLE), 6) AS mean_lon
+      FROM ztag GROUP BY 1 ORDER BY 1"""
+    }),
+    // q325: Q13 written the classic way (LEFT OUTER with the anti-
+    // filter in the join condition, count per customer, histogram);
+    // the engine's pre-aggregated-orders plan must land on the
+    // identical distribution, zero-order customers included
+    Q("q325_q13_custdist", q325, Extra, """
+      WITH oc AS (
+        SELECT c.c_custkey, count(o.o_orderkey) AS c_count
+        FROM customer c LEFT OUTER JOIN orders o
+          ON c.c_custkey = o.o_custkey
+          AND o.o_orderpriority NOT LIKE '%URGENT%'
+        GROUP BY c.c_custkey)
+      SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+      FROM oc GROUP BY c_count
+      ORDER BY custdist DESC, c_count DESC"""),
+    // q326 streams the identical frozen-map scoring one file per
+    // trigger and folds the landed rows through the same summaries —
+    // the streamed twin shares q305's oracle verbatim
+    Q("q326_calibration_drift_stream", q326, Extra, plattCalibrationSql),
+    // q327: both windows' value-bin curves replayed from the q28
+    // quality arithmetic, full-outer-joined on the bin key
+    Q("q327_calib_bins_drift", q327, Extra, raw"""
+      WITH qs AS (
+        SELECT doc_id, lang = 'en' AS p,
           round(least(greatest(
             0.4 * least(nt / 50.0, 1.0) +
             0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 6)
-            AS q
+            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0),
+            0.0), 1.0), 6) AS s
         FROM (
-          SELECT doc_id, domain, host,
+          SELECT doc_id, lang,
             CAST(len(tk) AS DOUBLE) AS nt,
             CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
             CAST(len(text) AS DOUBLE) AS chars,
             CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
               AS DOUBLE) AS alpha
-          FROM (SELECT doc_id, domain, host, text,
-            regexp_split_to_array(trim(lower(text)), '\\s+') AS tk
-            FROM ucanon)) u)
-      SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
-        round(CAST(sum(CAST(q AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_quality
-      FROM qf GROUP BY 1 ORDER BY 1""",
-    "q308_blocklist_funnel" -> s"""
-      WITH $urlFixtureCtes,
-      bf AS (
-        SELECT source,
-          domain = 'blogspot.com' AS dom_b,
-          (NOT domain = 'blogspot.com') AND path LIKE '/ads/%' AS path_b
-        FROM ucanon)
-      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(CASE WHEN dom_b THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_domain_blocked,
-        CAST(sum(CASE WHEN path_b THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_path_blocked,
-        CAST(sum(CASE WHEN NOT dom_b AND NOT path_b THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_kept,
-        round(CAST(sum(CASE WHEN NOT dom_b AND NOT path_b THEN 1 ELSE 0 END)
-            AS DOUBLE) / CAST(count(*) AS DOUBLE), 4) AS keep_rate
-      FROM bf GROUP BY 1 ORDER BY 1""",
-    "q311_cv_probe_sweep" -> cvSweepSql,
-    "q309_k_anonymity" -> """
-      WITH g AS (
-        SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS sz
-        FROM customer GROUP BY 1, 2)
-      SELECT sz AS group_size, CAST(count(*) AS BIGINT) AS n_groups,
-        CAST(sum(sz) AS BIGINT) AS n_rows, sz < 5 AS at_risk
-      FROM g GROUP BY sz ORDER BY sz""",
-    "q310_l_diversity" -> """
-      WITH g AS (
-        SELECT c_nationkey, c_mktsegment,
-          CAST(count(DISTINCT floor(c_acctbal / 1000.0)) AS BIGINT) AS l,
-          CAST(count(*) AS BIGINT) AS sz
-        FROM customer GROUP BY 1, 2)
-      SELECT l AS l_distinct, CAST(count(*) AS BIGINT) AS n_groups,
-        CAST(sum(sz) AS BIGINT) AS n_rows, l < 2 AS at_risk
-      FROM g GROUP BY l ORDER BY l""",
-    "q299_mixed_language" -> raw"""
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents),
-      ch AS (
-        SELECT doc_id, t[s:s+31] AS ck
-        FROM (SELECT doc_id, t,
-          unnest(generate_series(1, len(t), 32)) AS s FROM toks)),
-      sc AS (
-        SELECT doc_id,
-          len(list_filter(ck, x -> x IN ('the','a','of','and','to'))) AS s_en,
-          len(list_filter(ck, x -> x IN ('el','la','de','que','y'))) AS s_es,
-          len(list_filter(ck, x -> x IN ('le','la','de','et','un'))) AS s_fr,
-          len(list_filter(ck, x -> x IN ('der','die','und','das','ein'))) AS s_de,
-          len(list_filter(ck, x -> x IN ('的','了','是','我','不'))) AS s_zh
-        FROM ch),
-      pred AS (
-        SELECT doc_id, CASE
-          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0 THEN 'en'
-          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0 THEN 'es'
-          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0 THEN 'fr'
-          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0 THEN 'de'
-          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0 THEN 'zh'
-          ELSE 'und' END AS clang
-        FROM sc),
-      agg AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-          CAST(count(DISTINCT clang) AS BIGINT) AS n_langs
-        FROM pred GROUP BY 1),
-      maj AS (
-        SELECT doc_id, clang AS majority_lang FROM (
-          SELECT doc_id, clang, count(*) AS c FROM pred GROUP BY 1, 2)
-        QUALIFY row_number() OVER (PARTITION BY doc_id
-          ORDER BY c DESC, clang) = 1)
-      SELECT a.doc_id, a.n_chunks, a.n_langs, m.majority_lang,
-        a.n_langs > 1 AS mixed
-      FROM agg a JOIN maj m ON a.doc_id = m.doc_id
-      ORDER BY a.doc_id""",
-    "q297_sdc_closest_pairs" -> s"""
-      WITH ${pqTrainCtes(8, 8)},
-      cseeds AS (
-        SELECT label AS ccell, CAST(embedding AS DOUBLE[]) AS ccv
-        FROM embeddings
-        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
-      cassign AS MATERIALIZED (
-        SELECT e.vec_id, c.ccell
-        FROM embeddings e CROSS JOIN cseeds c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(
-            CAST(e.embedding AS DOUBLE[]), c.ccv), 6) DESC, c.ccell) = 1),
-      sdc AS MATERIALIZED (
-        SELECT a.sub, a.cell AS cell_a, b.cell AS cell_b,
-          ${pqL2Sql("a.cvec", "b.cvec", 8)} AS d2
-        FROM books1 a JOIN books1 b ON a.sub = b.sub),
-      prs AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM cassign x JOIN cassign y
-          ON x.ccell = y.ccell AND x.vec_id < y.vec_id),
-      scored AS (
-        SELECT p.id_a, p.id_b, sum(s.d2) AS approx
-        FROM prs p
-        JOIN pqcodes ca ON ca.item_id = p.id_a
-        JOIN pqcodes cb ON cb.item_id = p.id_b AND cb.sub = ca.sub
-        JOIN sdc s ON s.sub = ca.sub AND s.cell_a = ca.cell
-          AND s.cell_b = cb.cell
-        GROUP BY p.id_a, p.id_b
-        ORDER BY approx, id_a, id_b LIMIT 20)
-      SELECT id_a, id_b, round(CAST(approx AS DOUBLE), 6) AS approx_d2
-      FROM scored ORDER BY approx, id_a, id_b""",
-    "q287_pq_quant_error" -> s"""
-      WITH ${pqTrainCtes(8, 8)},
-      err AS (
-        SELECT su.sub, ${pqL2Sql("su.subvec", "b.cvec", 8)} AS d2
-        FROM subs su
-        JOIN pqcodes c ON c.item_id = su.item_id AND c.sub = su.sub
-        JOIN books1 b ON b.sub = c.sub AND b.cell = c.cell)
-      SELECT sub, CAST(count(*) AS BIGINT) AS n_vectors,
-        round(CAST(sum(d2) AS DOUBLE) / count(*), 6) AS mean_sq_err,
-        round(CAST(max(d2) AS DOUBLE), 6) AS max_sq_err
-      FROM err GROUP BY sub ORDER BY sub""",
-    "q296_prefix_dim_recall" -> """
-      WITH fullk AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id
-        FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 10
-        QUALIFY row_number() OVER (PARTITION BY q.vec_id
-          ORDER BY round(list_cosine_similarity(
-            CAST(q.embedding AS DOUBLE[]),
-            CAST(c.embedding AS DOUBLE[])), 6) DESC, c.vec_id) <= 5),
-      prek AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id
-        FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 10
-        QUALIFY row_number() OVER (PARTITION BY q.vec_id
-          ORDER BY round(list_cosine_similarity(
-            (CAST(q.embedding AS DOUBLE[]))[1:16],
-            (CAST(c.embedding AS DOUBLE[]))[1:16]), 6) DESC,
-            c.vec_id) <= 5),
-      common AS (
-        SELECT f.query_id, count(*) AS n_common
-        FROM fullk f JOIN prek p
-          ON f.query_id = p.query_id AND f.item_id = p.item_id
-        GROUP BY 1)
-      SELECT q.vec_id AS query_id, coalesce(c.n_common, 0) AS n_common
-      FROM embeddings q LEFT JOIN common c ON c.query_id = q.vec_id
-      WHERE q.vec_id < 10 ORDER BY query_id""",
-    "q294_ivfpq_ann" -> s"""
-      WITH cseeds AS MATERIALIZED (
-        SELECT label AS ccell, CAST(embedding AS DOUBLE[]) AS ccv
-        FROM embeddings
-        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
-      cassign AS MATERIALIZED (
-        SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v, c.ccell, c.ccv
-        FROM embeddings e CROSS JOIN cseeds c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(
-            CAST(e.embedding AS DOUBLE[]), c.ccv), 6) DESC, c.ccell) = 1),
-      resid AS MATERIALIZED (
-        SELECT vec_id,
-          [v[i] - ccv[i] FOR i IN generate_series(1, 64)] AS embedding,
-          ccell AS label
-        FROM cassign),
-      ${pqTrainCtes(8, 8, "resid")},
-      q AS (
-        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        FROM embeddings WHERE vec_id = 7),
-      probes AS MATERIALIZED (
-        SELECT q.query_id, c.ccell,
-          [q.qv[i] - c.ccv[i] FOR i IN generate_series(1, 64)] AS qres
-        FROM q CROSS JOIN cseeds c
-        QUALIFY row_number() OVER (PARTITION BY q.query_id
-          ORDER BY round(list_cosine_similarity(q.qv, c.ccv), 6) DESC,
-            c.ccell) <= 2),
-      qsubs AS (
-        SELECT p.query_id, p.ccell, s.sub,
-          (p.qres)[s.sub*8+1 : s.sub*8+8] AS qs
-        FROM probes p CROSS JOIN subsrange s),
-      dt AS MATERIALIZED (
-        SELECT qs.query_id, qs.ccell, qs.sub, b.cell,
-          ${pqL2Sql("qs.qs", "b.cvec", 8)} AS dtv
-        FROM qsubs qs JOIN books1 b ON qs.sub = b.sub),
-      shortl AS (
-        SELECT c.item_id, sum(d.dtv) AS approx
-        FROM pqcodes c
-        JOIN cassign a ON a.vec_id = c.item_id
-        JOIN dt d ON d.ccell = a.ccell AND d.sub = c.sub AND d.cell = c.cell
-        WHERE c.item_id <> d.query_id
-        GROUP BY c.item_id
-        ORDER BY approx, c.item_id LIMIT 10),
-      ex AS (
-        SELECT s.item_id, s.approx,
-          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS cos
-        FROM shortl s JOIN embeddings e ON e.vec_id = s.item_id CROSS JOIN q)
-      SELECT CAST(row_number() OVER w AS BIGINT) AS rank, item_id,
-        round(CAST(approx AS DOUBLE), 6) AS approx_d2,
-        round(cos, 4) AS cosine
-      FROM ex WINDOW w AS (ORDER BY round(cos, 6) DESC, item_id)
-      ORDER BY rank""",
-    "q293_html_extract" -> s"""
-      WITH $htmlExtractCtes
-      SELECT doc_id, CAST(len(vis) AS INTEGER) AS n_lines,
-        CAST(len(kept) AS INTEGER) AS n_kept,
-        array_to_string(kept, ' ') AS main_text
-      FROM hkept ORDER BY doc_id""",
-    "q292_bigram_lm" -> raw"""
-      WITH arrs AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents),
-      toks AS MATERIALIZED (
-        SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS w
-        FROM arrs),
-      big AS MATERIALIZED (
-        SELECT a.doc_id, a.w AS w1, b.w AS w2
-        FROM toks a JOIN toks b
-          ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-      c2 AS MATERIALIZED (
-        SELECT w1, w2, count(*) AS c2 FROM big GROUP BY 1, 2),
-      c1 AS (SELECT w1, sum(c2) AS c1 FROM c2 GROUP BY 1),
-      v AS (SELECT count(DISTINCT w) AS V FROM toks),
-      j AS (
-        SELECT g.doc_id,
-          round(CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1.c1 + v.V AS DOUBLE), 9)
-            AS p
-        FROM big g JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v)
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        round(CAST(sum(CAST(p AS DECIMAL(28,12))) AS DOUBLE)
-          / CAST(count(*) AS DOUBLE), 6) AS mean_p,
-        round(min(p), 6) AS min_p
-      FROM j GROUP BY doc_id ORDER BY doc_id""",
-    "q291_pq_adc_ann" -> s"""
-      WITH ${pqTrainCtes(8, 8)},
-      q AS (
-        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        FROM embeddings WHERE vec_id = 7),
-      qsubs AS (
-        SELECT q.query_id, s.sub, (q.qv)[s.sub*8+1 : s.sub*8+8] AS qs
-        FROM q CROSS JOIN subsrange s),
-      dt AS (
-        SELECT qs.query_id, qs.sub, b.cell,
-          ${pqL2Sql("qs.qs", "b.cvec", 8)} AS dtv
-        FROM qsubs qs JOIN books1 b ON qs.sub = b.sub),
-      short AS (
-        SELECT c.item_id, sum(d.dtv) AS approx
-        FROM pqcodes c JOIN dt d ON c.sub = d.sub AND c.cell = d.cell
-        WHERE c.item_id <> d.query_id
-        GROUP BY c.item_id
-        ORDER BY approx, c.item_id LIMIT 10),
-      ex AS (
-        SELECT s.item_id, s.approx,
-          list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) AS cos
-        FROM short s JOIN embeddings e ON e.vec_id = s.item_id CROSS JOIN q)
-      SELECT CAST(row_number() OVER w AS BIGINT) AS rank, item_id,
-        round(CAST(approx AS DOUBLE), 6) AS approx_d2,
-        round(cos, 4) AS cosine
-      FROM ex WINDOW w AS (ORDER BY round(cos, 6) DESC, item_id)
-      ORDER BY rank""",
-    "q282_bpe_deep" -> bpeMergesOracle(256, """
-          SELECT substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) AS word,
-            CAST(count(*) AS BIGINT) AS cnt
-          FROM orders GROUP BY 1"""),
-    // q284: channel sums recomputed from the closed-form pixel rule —
-    // equality proves the AVI container round trip is pixel-exact
-    "q284_avi_roundtrip" -> """
-      WITH ids AS (
-        SELECT CAST(doc_id AS BIGINT) AS id FROM documents
-        WHERE doc_id < 200),
-      fr AS (
-        SELECT id, f FROM ids, (SELECT unnest(range(6)) AS f)
-        WHERE f < 2 + id % 5 AND f % 2 = 0),
-      px AS (
-        SELECT id, f, x, y FROM fr,
-          (SELECT unnest(range(10)) AS x), (SELECT unnest(range(6)) AS y)),
-      s AS (
-        SELECT id, f,
-          CAST(sum((id * 7 + f * 13 + y * 10 + x) % 256) AS BIGINT) AS sum_r,
-          CAST(sum((id * 11 + f * 17 + x * 3 + y * 5) % 256) AS BIGINT)
-            AS sum_g,
-          CAST(sum((id * 13 + f * 19 + x * 7 + y * 11) % 256) AS BIGINT)
-            AS sum_b
-        FROM px GROUP BY 1, 2)
-      SELECT id AS asset_id, CAST(f AS INT) AS frame_idx,
-        10 AS width, 6 AS height, sum_r, sum_g, sum_b
-      FROM s ORDER BY asset_id, frame_idx""",
-    // q283: the trained-encode law — w96 read directly (see
-    // bpeEncodeTrainedOracle); gates the native rank-loop encoder
-    "q283_bpe_encode_trained" -> bpeEncodeTrainedOracle(96, """
-          SELECT substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) AS word,
-            CAST(count(*) AS BIGINT) AS cnt
-          FROM orders GROUP BY 1"""),
-    // q280: q267's replace chain folded per language — the fertility
-    // readout from the same integer counts
-    "q280_tokenizer_fertility" -> {
-      val sp =
-        raw"'  ' || trim(regexp_replace(word, '(.)', ' \1 ', 'g')) || '  '"
-      val chain = pinnedBpeMerges.foldLeft(sp) { case (acc, (l, r)) =>
-        s"replace($acc, ' $l  $r ', ' $l$r ')"
-      }
-      s"""
-      WITH words AS (
-        SELECT lang, word FROM (
-          SELECT lang,
-            unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-          FROM documents)
-        WHERE word <> ''),
-      enc AS (
-        SELECT lang, len(word) AS wl,
-          len(string_split(trim($chain), '  ')) AS nt
-        FROM words),
-      g AS (
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
-          CAST(sum(nt) AS BIGINT) AS n_tokens,
-          CAST(sum(wl) AS BIGINT) AS n_chars
-        FROM enc GROUP BY 1)
-      SELECT lang, n_words, n_tokens,
-        round(CAST(n_tokens AS DOUBLE) / CAST(n_words AS DOUBLE), 4)
-          AS fertility,
-        round(CAST(n_chars AS DOUBLE) / CAST(n_tokens AS DOUBLE), 4)
-          AS chars_per_token
-      FROM g ORDER BY lang"""
-    },
-    // q267: the pinned tokenizer as the identical literal replace chain
-    "q267_bpe_encode" -> bpeEncodeOracle(pinnedBpeMerges),
-    // q268: the same candidate synthesis, split-explode, and integer
-    // Luhn fold — validity classes and their extreme runs
-    "q268_pii_luhn" -> """
-      WITH txt AS (
-        SELECT o_orderkey,
-          'order card 45320151' ||
-          lpad(CAST(o_orderkey % 100000000 AS VARCHAR), 8, '0') ||
-          ' ref 1234' AS text
-        FROM orders),
-      runs AS (
-        SELECT DISTINCT o_orderkey AS doc_id, run FROM (
-          SELECT o_orderkey,
-            unnest(string_split_regex(
-              regexp_replace(text, '([0-9])[ -]([0-9])', '\1\2', 'g'),
-              '[^0-9]+')) AS run
-          FROM txt)
-        WHERE len(run) BETWEEN 13 AND 19),
-      pos AS (
-        SELECT doc_id, run,
-          unnest(generate_series(0, len(run) - 1)) AS i
-        FROM runs),
-      d AS (
-        SELECT doc_id, run, i,
-          CAST(substring(reverse(run), i + 1, 1) AS INT) AS dg
-        FROM pos),
-      s AS (
-        SELECT doc_id, run,
-          sum(CASE WHEN i % 2 = 0 THEN dg
-              ELSE 2 * dg - CASE WHEN dg > 4 THEN 9 ELSE 0 END END) AS tot
-        FROM d GROUP BY 1, 2)
-      SELECT (tot % 10 = 0) AS luhn_ok, CAST(count(*) AS BIGINT) AS n,
-        min(run) AS first_run, max(run) AS last_run
-      FROM s GROUP BY 1 ORDER BY luhn_ok""",
-    // q281: the fixed Luhn contracts replayed — separator collapse
-    // inside digit groups, DISTINCT (doc, run) before the checksum
-    "q281_luhn_formatted" -> """
-      WITH txt AS (
-        SELECT o_orderkey,
-          'pay 4111 1111 1111 1111 then 4111-1111-1111-1116 and ' ||
-          'again 4111 1111 1111 1111 ref 4111-1111-1111-1116 order ' ||
-          '45320151' ||
-          lpad(CAST(o_orderkey % 100000000 AS VARCHAR), 8, '0') AS text
-        FROM orders),
-      runs AS (
-        SELECT DISTINCT o_orderkey AS doc_id, run FROM (
-          SELECT o_orderkey,
-            unnest(string_split_regex(
-              regexp_replace(text, '([0-9])[ -]([0-9])', '\1\2', 'g'),
-              '[^0-9]+')) AS run
-          FROM txt)
-        WHERE len(run) BETWEEN 13 AND 19),
-      pos AS (
-        SELECT doc_id, run,
-          unnest(generate_series(0, len(run) - 1)) AS i
-        FROM runs),
-      d AS (
-        SELECT doc_id, run, i,
-          CAST(substring(reverse(run), i + 1, 1) AS INT) AS dg
-        FROM pos),
-      s AS (
-        SELECT doc_id, run,
-          sum(CASE WHEN i % 2 = 0 THEN dg
-              ELSE 2 * dg - CASE WHEN dg > 4 THEN 9 ELSE 0 END END) AS tot
-        FROM d GROUP BY 1, 2)
-      SELECT (tot % 10 = 0) AS luhn_ok, CAST(count(*) AS BIGINT) AS n,
-        min(run) AS first_run, max(run) AS last_run
-      FROM s GROUP BY 1 ORDER BY luhn_ok""",
-    // q269: identical integer counting contracts (marker device for
-    // vowel groups), two IEEE divisions, round 4
-    "q269_readability" -> """
-      WITH f AS (
-        SELECT doc_id,
-          len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-            x -> x <> '')) AS w,
-          greatest(len(list_filter(string_split_regex(text, '[.!?]+'),
-            x -> trim(x) <> '')), 1) AS sn,
-          len(m) - len(replace(m, '#', '')) AS sy
-        FROM (
-          SELECT doc_id, text,
-            regexp_replace(replace(lower(text), '#', ''),
-              '[aeiouy]+', '#', 'g') AS m
-          FROM documents))
-      SELECT doc_id, CAST(w AS INT) AS n_words,
-        CAST(sn AS INT) AS n_sentences, CAST(sy AS INT) AS n_syllables,
-        CASE WHEN w = 0 THEN NULL
-          ELSE round(206.835 - 1.015 * (CAST(w AS DOUBLE) /
-            CAST(sn AS DOUBLE)) - 84.6 * (CAST(sy AS DOUBLE) /
-            CAST(w AS DOUBLE)), 4) END AS flesch
-      FROM f ORDER BY doc_id""",
-    // q273: the same deterministic reservoir (pos, id tie) and the
-    // same interpolated quantiles on both the sample and the corpus
-    "q273_sample_quantiles" -> s"""
-      WITH li AS (
-        SELECT CAST(l_orderkey AS VARCHAR) || '-' ||
-          CAST(l_linenumber AS VARCHAR) AS id,
-          CAST(l_extendedprice AS DOUBLE) AS v
-        FROM lineitem),
-      sm AS (
-        SELECT v FROM (
-          SELECT v, ${hashPosSql("'sample'", "id")} AS pos, id FROM li)
-        ORDER BY pos, id LIMIT 1024),
-      e AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75, 0.9]) AS l FROM sm),
-      x AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75, 0.9]) AS l FROM li),
-      i AS (SELECT unnest([1, 2, 3, 4]) AS i)
-      SELECT CASE i.i WHEN 1 THEN 0.25 WHEN 2 THEN 0.5
-        WHEN 3 THEN 0.75 ELSE 0.9 END AS p,
-        round(e.l[i.i], 4) AS est_quantile,
-        round(x.l[i.i], 4) AS exact_quantile,
-        round(abs(e.l[i.i] - x.l[i.i]), 4) AS abs_err
-      FROM i CROSS JOIN e CROSS JOIN x ORDER BY p""",
-    // q274: per-group min-k via a PARTITIONED rank over the deduped
-    // (group, position) frame; q240's estimator per group; exact truth
-    "q274_kmv_by_group" -> s"""
-      WITH pos AS (
-        SELECT DISTINCT event_type AS grp,
-          ${hashPosSql("'kmv'", "CAST(user_id AS VARCHAR)")} AS hv
-        FROM events),
-      rk AS (
-        SELECT grp, hv,
-          row_number() OVER (PARTITION BY grp ORDER BY hv) AS rn
-        FROM pos),
-      m AS (
-        SELECT grp, CAST(count(*) AS BIGINT) AS n_min,
-          CAST(max(hv) AS BIGINT) AS kth_pos
-        FROM rk WHERE rn <= 64 GROUP BY 1),
-      est AS (
-        SELECT grp, n_min, kth_pos,
-          CASE WHEN n_min < 64 THEN CAST(n_min AS DOUBLE)
-               WHEN kth_pos = 0 THEN NULL
-               ELSE round(63.0 * 4294967296.0 / kth_pos, 4) END
-            AS est_distinct
-        FROM m),
-      ex AS (
-        SELECT event_type AS grp,
-          CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct
-        FROM events GROUP BY 1)
-      SELECT est.grp AS event_type, n_min, kth_pos, est_distinct,
-        exact_distinct,
-        round(est_distinct / CAST(exact_distinct AS DOUBLE), 4)
-          AS est_ratio
-      FROM est JOIN ex ON est.grp = ex.grp ORDER BY event_type""",
-    // q275: samples from the md5 PCM rule (q221's device), the planted
-    // one-sample bump, sign-bit bands, and the same pigeonhole +
-    // popcount pipeline; equal-frame-count constraint mirrors the
-    // engine's null-padded zip_with drop
-    "q275_audio_neardup" -> """
-      WITH base AS (
-        SELECT doc_id, text, octet_length(encode(text)) AS bl
-        FROM documents WHERE text IS NOT NULL),
-      fr AS (
-        SELECT doc_id, text, least(bl // 256 + 1, 4) AS nf FROM base),
-      fj AS (
-        SELECT doc_id, text, nf, unnest(generate_series(0, nf - 1)) AS j
-        FROM fr),
-      hx AS (
-        SELECT doc_id, nf, j,
-          md5(text || '|' || CAST(j AS VARCHAR)) AS h
-        FROM fj),
-      sm AS (
-        SELECT doc_id, nf, j, r.i,
-          ('0x' || substring(h, r.i * 4 + 1, 4))::BIGINT AS u
-        FROM hx, range(0, 8) r(i)),
-      sg0 AS (
-        SELECT doc_id, nf, j, i,
-          CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS s
-        FROM sm),
-      vsg AS (
-        SELECT s0.doc_id + 4611686018427387904 AS doc_id, s0.nf, s0.j, s0.i,
-          CASE WHEN s0.j = 0 AND s0.i = s0.doc_id % 8 THEN s0.s + 1
-               ELSE s0.s END AS s
-        FROM sg0 s0 WHERE s0.doc_id % 17 = 0),
-      sg AS (
-        SELECT doc_id, nf, j, i, s FROM sg0
-        UNION ALL SELECT doc_id, nf, j, i, s FROM vsg),
-      sb AS (
-        SELECT a.doc_id, a.nf, a.j,
-          CAST(sum(CASE WHEN b.s > a.s THEN
-            (1::BIGINT << ((CASE b.i - a.i WHEN 1 THEN 0 WHEN 2 THEN 7
-              WHEN 3 THEN 13 ELSE 18 END) + a.i))
-            ELSE 0 END) AS BIGINT) AS band
-        FROM sg a JOIN sg b
-          ON a.doc_id = b.doc_id AND a.j = b.j
-          AND b.i > a.i AND b.i - a.i <= 4
-        GROUP BY 1, 2, 3),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sb a JOIN sb b
-          ON a.j = b.j AND a.band = b.band AND a.nf = b.nf
-          AND a.doc_id < b.doc_id
-        WHERE a.nf >= 2),
-      ham AS (
-        SELECT c.id_a, c.id_b,
-          CAST(sum(bit_count(xor(x.band, y.band))) AS INT) AS hamming
-        FROM cand c
-        JOIN sb x ON x.doc_id = c.id_a
-        JOIN sb y ON y.doc_id = c.id_b AND y.j = x.j
-        GROUP BY 1, 2)
-      SELECT id_a, id_b, hamming FROM ham
-      WHERE hamming <= 8 ORDER BY id_a, id_b""",
-    // q277: the Q21 shape — EXISTS/NOT EXISTS in the oracle, the
-    // engine's semi/anti equi-joins must land on the same waiters
-    "q277_waiting_orders" -> """
-      WITH lo AS (
-        SELECT l.l_orderkey, l.l_suppkey, l.l_shipdate,
-          o.o_orderdate, o.o_orderstatus
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-      late AS (
-        SELECT l_orderkey, l_suppkey FROM lo
-        WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY),
-      l1 AS (
-        SELECT l_orderkey, l_suppkey FROM lo
-        WHERE o_orderstatus = 'F'
-          AND l_shipdate > o_orderdate + INTERVAL 60 DAY),
-      w AS (
-        SELECT * FROM l1
-        WHERE EXISTS (
-            SELECT 1 FROM lineitem l2
-            WHERE l2.l_orderkey = l1.l_orderkey
-              AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (
-            SELECT 1 FROM late l3
-            WHERE l3.l_orderkey = l1.l_orderkey
-              AND l3.l_suppkey <> l1.l_suppkey))
-      SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-      FROM w JOIN supplier s ON w.l_suppkey = s.s_suppkey
-      GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 25""",
-    // q278: the Q2 correlated-min shape decorrelated — round-4 unit
-    // price BEFORE the min so both engines compare identical bits
-    "q278_min_cost_supplier" -> """
-      WITH lp AS (
-        SELECT l.l_partkey, l.l_suppkey,
-          round(CAST(l.l_extendedprice AS DOUBLE) /
-            CAST(l.l_quantity AS DOUBLE), 4) AS uc
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE p.p_size <= 10 AND l.l_quantity > 0),
-      m AS (SELECT l_partkey, min(uc) AS min_unit_cost FROM lp GROUP BY 1)
-      SELECT lp.l_partkey AS p_partkey,
-        CAST(min(lp.l_suppkey) AS BIGINT) AS best_suppkey,
-        m.min_unit_cost
-      FROM lp JOIN m ON lp.l_partkey = m.l_partkey
-        AND lp.uc = m.min_unit_cost
-      GROUP BY 1, 3 ORDER BY p_partkey""",
-    // q279: per-group weighted tied-rank AUC — windows partitioned by
-    // the group on the oracle side, grouped banded device on the engine
-    "q279_grouped_auc" -> """
-      WITH per AS (
-        SELECT source AS grp, CAST(n_chars % 97 AS INT) AS s,
+          FROM (SELECT doc_id, lang, text,
+            regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+            FROM documents))),
+      bb AS (
+        SELECT least(greatest(CAST(floor(s * 10) AS BIGINT), 0), 9)
+            AS bin,
           CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-            AS np
-        FROM documents GROUP BY 1, 2),
-      cum AS (
-        SELECT grp, n, np,
-          sum(n) OVER (PARTITION BY grp ORDER BY s) - n AS below
-        FROM per),
-      ag AS (
-        SELECT grp, CAST(sum(np) AS BIGINT) AS n_pos,
-          CAST(sum(n - np) AS BIGINT) AS n_neg,
-          sum(CAST(np AS DECIMAL(38,0)) *
-            (CAST(2 * below + n + 1 AS DECIMAL(38,1)) / 2)) AS sr
-        FROM cum GROUP BY 1)
-      SELECT grp AS source, n_pos, n_neg,
-        CASE WHEN n_pos = 0 OR n_neg = 0 THEN NULL
-          ELSE round((CAST(sr AS DOUBLE) -
-            CAST(n_pos * (n_pos + 1) AS DOUBLE) / 2.0) /
-            CAST(n_pos * n_neg AS DOUBLE), 6) END AS auc
-      FROM ag ORDER BY source""",
-    // q276: three Bradley-Terry rounds unrolled to the same score bits
-    "q276_bradley_terry" -> bradleyTerryOracle(3),
-    // q286: q276's unrolled fit over the 20k-item md5 duel log
-    "q286_bradley_terry_scale" -> bradleyTerryOracle(2, q286PairsSql),
-    // q288: Q20's correlated shipped-sum as a conditional aggregate
-    // over the pair enumeration; EXISTS legs as the semi chain
-    "q288_excess_stock" -> """
-      WITH pairs AS (
-        SELECT l_partkey, l_suppkey,
-          sum(CAST(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
-            AND l_shipdate < TIMESTAMP '1997-01-01'
-            THEN l_quantity ELSE 0 END AS DECIMAL(18,2))) AS sq
-        FROM lineitem GROUP BY 1, 2),
-      excess AS (
-        SELECT l_partkey, l_suppkey FROM pairs
-        WHERE sq > 0 AND
-          CAST((l_partkey * 7 + l_suppkey * 13) % 100 + 50 AS DOUBLE) >
-            0.5 * CAST(sq AS DOUBLE)),
-      ep AS (
-        SELECT DISTINCT e.l_suppkey FROM excess e
-        WHERE EXISTS (SELECT 1 FROM part p
-          WHERE p.p_partkey = e.l_partkey AND p.p_name LIKE 'large%'))
-      SELECT s_suppkey, s_name FROM supplier
-      WHERE EXISTS (SELECT 1 FROM nation
-          WHERE n_nationkey = s_nationkey AND n_name IN ('NATION_1',
-            'NATION_3', 'NATION_7', 'NATION_12', 'NATION_18'))
-        AND EXISTS (SELECT 1 FROM ep WHERE ep.l_suppkey = s_suppkey)
-      ORDER BY s_suppkey""",
-    // q252: the 3-iteration GD unroll lands on the same weight bits
-    "q252_linear_probe" -> s"""$probeTrainCte
-      SELECT 0 AS ord, 'bias' AS feature, w0 AS weight FROM w3
-      UNION ALL SELECT 1, 'chars', w1 FROM w3
-      UNION ALL SELECT 2, 'spaces', w2 FROM w3
-      ORDER BY ord""",
-    // q253: re-train through the shared chain, score with the same
-    // sigma tree rounded at 9, fold to the fit readout
-    "q253_probe_eval" -> s"""$probeTrainCte,
-      scz AS (
-        SELECT f.y,
-          (w.w0 * f.x0) + (w.w1 * f.x1) + (w.w2 * f.x2) AS z
-        FROM feats f CROSS JOIN w3 w),
-      sc AS (
-        SELECT y, round(0.5 * (1.0 + z / (1.0 + abs(z))), 9) AS score
-        FROM scz),
-      m AS (
-        SELECT count(*) AS n,
-          sum(CASE WHEN (CASE WHEN score >= 0.5 THEN CAST(1.0 AS DOUBLE)
-                         ELSE CAST(0.0 AS DOUBLE) END) = y
-              THEN 1 ELSE 0 END) AS n_correct,
-          CAST(sum(CAST(abs(y - score) AS DECIMAL(28,18))) AS DOUBLE) AS sr
-        FROM sc)
-      SELECT CAST(n AS BIGINT) AS n, CAST(n_correct AS BIGINT) AS n_correct,
-        round(CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE), 6) AS accuracy,
-        round(sr / CAST(n AS DOUBLE), 6) AS mean_abs_resid
-      FROM m""",
-    "q228_seasonal_profile" -> """
-      WITH daily AS (
-        SELECT event_type AS key, CAST(ts AS DATE) AS day,
-          count(*) AS cnt
-        FROM events GROUP BY 1, 2),
-      bd AS (
-        SELECT key, CAST(dayofweek(day) AS BIGINT) AS dow,
-          CAST(count(*) AS BIGINT) AS n_days,
-          CAST(sum(cnt) AS BIGINT) AS n_events
-        FROM daily GROUP BY 1, 2),
-      tot AS (SELECT key, sum(n_events) AS tt FROM bd GROUP BY 1)
-      SELECT bd.key AS event_type, bd.dow, bd.n_days, bd.n_events,
-        round(CAST(bd.n_events AS DOUBLE) / CAST(bd.n_days AS DOUBLE), 6)
-          AS mean_daily,
-        round(CAST(bd.n_events AS DOUBLE) / CAST(t.tt AS DOUBLE), 6)
-          AS share
-      FROM bd JOIN tot t ON bd.key = t.key ORDER BY event_type, dow""",
-    "q229_changepoint" -> """
-      WITH daily AS (
-        SELECT event_type AS key, CAST(ts AS DATE) AS day,
-          sum(CAST(value AS DECIMAL(18,2))) AS ds
-        FROM events GROUP BY 1, 2),
-      g AS (
-        SELECT key, day,
-          CAST(row_number() OVER wo AS BIGINT) AS k,
-          CAST(sum(CAST(ds AS DECIMAL(28,2))) OVER (PARTITION BY key
-            ORDER BY day ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS sk,
-          CAST(count(*) OVER (PARTITION BY key) AS BIGINT) AS n,
-          CAST(sum(CAST(ds AS DECIMAL(28,2))) OVER (PARTITION BY key)
-            AS DOUBLE) AS sn
-        FROM daily WINDOW wo AS (PARTITION BY key ORDER BY day ASC)),
-      st AS (
-        SELECT key, day, n,
-          abs(sk - (CAST(k AS DOUBLE) * sn) / CAST(n AS DOUBLE)) AS stat
-        FROM g)
-      SELECT key AS event_type, strftime(day, '%Y-%m-%d') AS change_day,
-        n AS n_days, round(stat, 4) + 0.0 AS stat
-      FROM st
-      QUALIFY row_number() OVER (PARTITION BY key
-        ORDER BY stat DESC, day ASC) = 1
-      ORDER BY event_type""",
-    // q234 streams the same sufficient statistic through a Complete-mode
-    // aggregation and shares the batch fold — oracle VERBATIM below
-    "q234_ks_drift_stream" -> """
-      WITH base AS (
-        SELECT value AS s, event_type = 'purchase' AS p FROM events
-        WHERE event_type IN ('click', 'purchase')),
-      per AS (
-        SELECT s, count(*) AS n,
-          sum(CASE WHEN p THEN 1 ELSE 0 END) AS np
-        FROM base GROUP BY 1),
-      cum AS (
-        SELECT s, n, np,
-          sum(n) OVER (ORDER BY s) AS cn,
-          sum(np) OVER (ORDER BY s) AS cnp
-        FROM per),
-      tot AS (
-        SELECT CAST(sum(np) AS BIGINT) AS na,
-          CAST(sum(n) - sum(np) AS BIGINT) AS nb
-        FROM per)
-      SELECT t.na AS n_a, t.nb AS n_b,
-        CASE WHEN t.na = 0 OR t.nb = 0 THEN NULL ELSE
-          round(max(abs(CAST(c.cnp AS DOUBLE) / CAST(t.na AS DOUBLE) -
-            CAST(c.cn - c.cnp AS DOUBLE) / CAST(t.nb AS DOUBLE))), 6)
-        END AS ks
-      FROM cum c CROSS JOIN tot t GROUP BY t.na, t.nb""",
-    "q225_ks_drift" -> """
-      WITH base AS (
-        SELECT value AS s, event_type = 'purchase' AS p FROM events
-        WHERE event_type IN ('click', 'purchase')),
-      per AS (
-        SELECT s, count(*) AS n,
-          sum(CASE WHEN p THEN 1 ELSE 0 END) AS np
-        FROM base GROUP BY 1),
-      cum AS (
-        SELECT s, n, np,
-          sum(n) OVER (ORDER BY s) AS cn,
-          sum(np) OVER (ORDER BY s) AS cnp
-        FROM per),
-      tot AS (
-        SELECT CAST(sum(np) AS BIGINT) AS na,
-          CAST(sum(n) - sum(np) AS BIGINT) AS nb
-        FROM per)
-      SELECT t.na AS n_a, t.nb AS n_b,
-        CASE WHEN t.na = 0 OR t.nb = 0 THEN NULL ELSE
-          round(max(abs(CAST(c.cnp AS DOUBLE) / CAST(t.na AS DOUBLE) -
-            CAST(c.cn - c.cnp AS DOUBLE) / CAST(t.nb AS DOUBLE))), 6)
-        END AS ks
-      FROM cum c CROSS JOIN tot t GROUP BY t.na, t.nb""",
-    // q212: the stats recomputed from the closed-form dimension rule the
-    // engine ENCODED the PNGs at — hash equality proves the real
-    // javax.imageio decode round-trips every dimension exactly
-    "q212_real_codec_roundtrip" -> """
-      WITH dims AS (
-        SELECT CAST(doc_id AS BIGINT) AS asset_id,
-          CAST(16 + (CAST(doc_id AS BIGINT) * 7) % 120 AS INT) AS width,
-          CAST(16 + (CAST(doc_id AS BIGINT) * 13) % 90 AS INT) AS height
-        FROM documents WHERE doc_id < 200)
-      SELECT asset_id, width, height, CAST(3 AS INT) AS channels,
-        round(CAST(width AS DOUBLE) /
-          nullif(CAST(height AS DOUBLE), 0.0), 4) AS aspect,
-        (width > 1024 OR height > 1024) AS needs_resize,
-        CAST(CAST(width AS BIGINT) * height AS BIGINT) AS pixels,
-        CAST(floor(width * (CASE WHEN greatest(width, height) <= 64
-            THEN 1.0 ELSE 64.0 / CAST(greatest(width, height) AS DOUBLE)
-            END)) AS INT) AS out_width,
-        CAST(floor(height * (CASE WHEN greatest(width, height) <= 64
-            THEN 1.0 ELSE 64.0 / CAST(greatest(width, height) AS DOUBLE)
-            END)) AS INT) AS out_height
-      FROM dims ORDER BY asset_id""",
-    // q205: the CDC resolution restated directly — final state = updated
-    // rows for mod-3, dropped for mod-5, inserts otherwise
-    "q205_cdc_apply" -> q205CdcOracle,
-    // q208: the streamed twin shares q205's oracle VERBATIM — per-key
-    // frontier state across micro-batches must converge to the batch
-    // resolution for any log partitioning
-    "q208_cdc_stream" -> q205CdcOracle,
-    // q206: q159's knn CTE; wedges via the symmetric self-join, 1-hop
-    // and self excluded, distinct targets counted
-    "q206_two_hop_reach" -> """
-      WITH p AS MATERIALIZED (
-        SELECT a.vec_id AS ia, b.vec_id AS ib,
-          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-            CAST(b.embedding AS DOUBLE[])) AS cos
-        FROM embeddings a JOIN embeddings b
-          ON a.label = b.label AND a.vec_id < b.vec_id),
-      symc AS (
-        SELECT ia AS node, ib AS nbr, cos FROM p
-        UNION ALL
-        SELECT ib AS node, ia AS nbr, cos FROM p),
-      knn AS (
-        SELECT node, nbr FROM (
-          SELECT node, nbr, row_number() OVER w AS rank
-          FROM symc
-          WINDOW w AS (PARTITION BY node ORDER BY round(cos, 6) DESC, nbr))
-        WHERE rank <= 3),
-      und AS MATERIALIZED (
-        SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
-        FROM knn WHERE node <> nbr),
-      sym AS MATERIALIZED (
-        SELECT a AS x, b AS y FROM und UNION ALL SELECT b, a FROM und),
-      deg AS (SELECT x AS node, CAST(count(*) AS BIGINT) AS n1 FROM sym
-        GROUP BY 1),
-      two AS (
-        SELECT DISTINCT s1.x AS a0, s2.y AS b0
-        FROM sym s1 JOIN sym s2 ON s1.y = s2.x
-        WHERE s1.x <> s2.y),
-      twoonly AS (
-        SELECT a0, b0 FROM two
-        WHERE NOT EXISTS (SELECT 1 FROM sym WHERE sym.x = two.a0
-          AND sym.y = two.b0)),
-      n2 AS (SELECT a0 AS node, CAST(count(*) AS BIGINT) AS n2
-        FROM twoonly GROUP BY 1)
-      SELECT d.node, d.n1, COALESCE(n2.n2, 0) AS n2,
-        2 * d.n1 + COALESCE(n2.n2, 0) AS reach_x2
-      FROM deg d LEFT JOIN n2 ON d.node = n2.node
-      ORDER BY d.node""",
-    // q189: running-max islanding in epoch micros; covered_seconds by
-    // exact integer division both sides
-    "q189_interval_merge" -> """
-      WITH base AS (
-        SELECT user_id, ts, event_id,
-          epoch_us(CAST(ts AS TIMESTAMP)) AS s,
-          epoch_us(CAST(ts AS TIMESTAMP)) + 300000000 AS e
-        FROM events),
-      flagged AS (
-        SELECT user_id, ts, event_id, s, e,
-          max(e) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        FROM base),
-      isl AS (
-        SELECT user_id, s, e,
-          sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-            OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS island
-        FROM flagged)
-      SELECT user_id, CAST(island AS BIGINT) AS island,
-        make_timestamp(min(s)) AS island_start,
-        make_timestamp(max(e)) AS island_end,
-        CAST(count(*) AS BIGINT) AS n_events,
-        CAST((max(e) - min(s)) // 1000000 AS BIGINT) AS covered_seconds
-      FROM isl GROUP BY 1, 2 ORDER BY 1, 2""",
-    // q190: the engine's sequential fold restated as a linear recursive
-    // CTE — rn -> rn+1 per user, kept-clock carried in the walk
-    "q190_debounce" -> q190Oracle,
-    // q196: the streamed twin shares q190's oracle VERBATIM — under the
-    // event-time-monotone batch boundary, stateful streaming debounce
-    // must equal the batch fold on the union (q140/q136's device)
-    "q196_debounce_stream" -> q190Oracle,
-    // q191: the reconstruction law — the oracle IS the source frames
-    // (pre-merge table tagged before, post-merge tagged after)
-    "q191_scd2_asof" -> """
-      SELECT c_custkey, c_mktsegment, c_nationkey, 'before' AS state
-      FROM customer
-      UNION ALL
-      SELECT c_custkey,
-        CASE WHEN c_custkey % 10 = 0 THEN 'MACHINERY'
-             ELSE c_mktsegment END,
-        c_nationkey, 'after'
-      FROM customer WHERE c_custkey % 97 <> 0
-      UNION ALL
-      SELECT c_custkey + 1000000, 'BUILDING', c_nationkey, 'after'
-      FROM customer WHERE c_custkey % 101 = 0
-      ORDER BY state, c_custkey""",
-    // q185: two basket equi-joins over the distinct frame, a<b<c; count
-    // + the (n desc, triple asc) total order
-    "q185_frequent_triples" -> """
-      WITH items AS (
-        SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-      tri AS (
-        SELECT a.i AS item_a, b.i AS item_b, c.i AS item_c,
-          CAST(count(*) AS BIGINT) AS n
-        FROM items a
-        JOIN items b ON a.b = b.b AND a.i < b.i
-        JOIN items c ON a.b = c.b AND b.i < c.i
-        GROUP BY 1, 2, 3)
-      SELECT CAST(row_number() OVER (
-          ORDER BY n DESC, item_a, item_b, item_c) AS BIGINT) AS rank,
-        item_a, item_b, item_c, n
-      FROM tri QUALIFY rank <= 100 ORDER BY rank""",
-    // q186: ntile boundaries from the metric-then-id total order (the
-    // standard quotient-remainder fill both engines implement)
-    "q186_rfm_scores" -> """
-      WITH pu AS (
-        SELECT user_id, max(ts) AS last_ts,
-          CAST(count(*) AS BIGINT) AS frequency,
-          CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS monetary
-        FROM events GROUP BY 1),
-      cm AS (SELECT max(last_ts) AS cmax FROM pu),
-      base AS (
-        SELECT user_id,
-          CAST(date_diff('day', CAST(last_ts AS DATE), CAST(cmax AS DATE))
-            AS BIGINT) AS recency_days,
-          frequency, monetary
-        FROM pu CROSS JOIN cm),
-      t AS (
-        SELECT user_id, recency_days, frequency, monetary,
-          CAST(ntile(5) OVER (ORDER BY recency_days DESC, user_id)
-            AS BIGINT) AS r,
-          CAST(ntile(5) OVER (ORDER BY frequency ASC, user_id)
-            AS BIGINT) AS f,
-          CAST(ntile(5) OVER (ORDER BY monetary ASC, user_id)
-            AS BIGINT) AS m
-        FROM base)
-      SELECT user_id, recency_days, frequency, round(monetary, 4) AS monetary,
-        r, f, m,
-        CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR) AS rfm
-      FROM t ORDER BY user_id""",
-    // q187: the >= t0 condition lives IN the left join (cohort keeps
-    // never-converting users); day frame + one cumulative window
-    "q187_survival_curve" -> """
-      WITH st AS (
-        SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t0
-        FROM events WHERE event_type = 'view' GROUP BY 1),
-      cv AS (
-        SELECT s.user_id, s.t0, min(CAST(e.ts AS TIMESTAMP)) AS tc
-        FROM st s LEFT JOIN events e ON e.user_id = s.user_id
-          AND e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) >= s.t0
-        GROUP BY 1, 2),
-      gaps AS (
-        SELECT CAST(date_diff('day', CAST(t0 AS DATE), CAST(tc AS DATE))
-          AS BIGINT) AS gap FROM cv),
-      coh AS (SELECT CAST(count(*) AS BIGINT) AS n FROM gaps),
-      bygap AS (
-        SELECT gap, CAST(count(*) AS BIGINT) AS c FROM gaps
-        WHERE gap IS NOT NULL GROUP BY 1),
-      days AS (SELECT CAST(range AS BIGINT) AS day FROM range(0, 15)),
-      cum AS (
-        SELECT d.day, COALESCE(b.c, 0) AS dc
-        FROM days d LEFT JOIN bygap b ON d.day = b.gap)
-      SELECT day, coh.n AS n_cohort,
-        CAST(sum(dc) OVER w AS BIGINT) AS n_converted,
-        round(CAST(coh.n - sum(dc) OVER w AS DOUBLE) /
-          CAST(coh.n AS DOUBLE), 6) AS survival
-      FROM cum CROSS JOIN coh
-      WINDOW w AS (ORDER BY day ROWS UNBOUNDED PRECEDING)
-      ORDER BY day""",
-    // q188: min/max in one grouped agg; modal brand = per-name count
-    // argmax with the smallest-value tie-break
-    "q188_golden_record" -> """
-      WITH agg AS (
-        SELECT p_name, CAST(count(*) AS BIGINT) AS n_records,
-          min(p_partkey) AS min_p_partkey,
-          round(max(p_retailprice), 2) AS max_p_retailprice
-        FROM part GROUP BY 1),
-      modal AS (
-        SELECT p_name, p_brand AS modal_p_brand FROM (
-          SELECT p_name, p_brand,
-            row_number() OVER (PARTITION BY p_name
-              ORDER BY count(*) DESC, p_brand) AS rn
-          FROM part WHERE p_brand IS NOT NULL
-          GROUP BY p_name, p_brand)
-        WHERE rn = 1)
-      SELECT a.p_name, a.n_records, a.min_p_partkey, a.max_p_retailprice,
-        m.modal_p_brand
-      FROM agg a LEFT JOIN modal m ON a.p_name = m.p_name
-      ORDER BY a.p_name""",
-    "q159_triangle_count" -> """
-      WITH p AS (
-        SELECT a.vec_id AS ia, b.vec_id AS ib,
-          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-            CAST(b.embedding AS DOUBLE[])) AS cos
-        FROM embeddings a JOIN embeddings b
-          ON a.label = b.label AND a.vec_id < b.vec_id),
-      sym AS (
-        SELECT ia AS node, ib AS nbr, cos FROM p
-        UNION ALL
-        SELECT ib AS node, ia AS nbr, cos FROM p),
-      knn AS (
-        SELECT node, nbr FROM (
-          SELECT node, nbr, row_number() OVER w AS rank
-          FROM sym
-          WINDOW w AS (PARTITION BY node ORDER BY round(cos, 6) DESC, nbr))
-        WHERE rank <= 3),
-      und AS (
-        SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
-        FROM knn WHERE node <> nbr),
-      tri AS (
-        SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        FROM und e1
-        JOIN und e2 ON e2.a = e1.b
-        JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-      deg AS (
-        SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-          SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-        GROUP BY 1),
-      tcnt AS (
-        SELECT node, CAST(count(*) AS BIGINT) AS t FROM (
-          SELECT x AS node FROM tri
-          UNION ALL SELECT y FROM tri
-          UNION ALL SELECT z FROM tri)
-        GROUP BY 1)
-      SELECT d.node, d.degree,
-        CAST(COALESCE(c.t, 0) AS BIGINT) AS n_triangles,
-        round(CASE WHEN d.degree >= 2
-          THEN 2.0 * COALESCE(c.t, 0) /
-               (CAST(d.degree AS DOUBLE) * CAST(d.degree - 1 AS DOUBLE))
-          ELSE 0.0 END, 6) AS clustering
-      FROM deg d LEFT JOIN tcnt c ON d.node = c.node
-      ORDER BY d.node""",
-    // q160: doc_id self-join restates the engine's map-side pair
-    // generation; PMI = ln of the q135 DECIMAL-ratio idiom
-    "q160_token_pmi" -> raw"""
-      WITH dt AS (
-        SELECT DISTINCT doc_id,
-          unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-        FROM documents),
-      nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-      pc AS (
-        SELECT a.tok AS token_a, b.tok AS token_b,
-          CAST(count(*) AS BIGINT) AS n_ab
-        FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok
-        GROUP BY 1, 2 HAVING count(*) >= 20),
-      f AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM dt GROUP BY 1)
-      SELECT p.token_a, p.token_b, p.n_ab, fa.n AS n_a, fb.n AS n_b,
-        round(ln(CAST(CAST(p.n_ab AS DECIMAL(19,0)) * nd.n AS DOUBLE) /
-          CAST(CAST(fa.n AS DECIMAL(19,0)) * fb.n AS DOUBLE)), 6) AS pmi
-      FROM pc p
-      JOIN f fa ON p.token_a = fa.tok
-      JOIN f fb ON p.token_b = fb.tok
-      CROSS JOIN nd
-      ORDER BY 1, 2""",
-    // q161: q21's signature CTE with the 16 minima carried per candidate
-    // pair — agreement count vs exact Jaccard, q149's round-9 DECIMAL-sum
-    // mean idiom
-    "q161_lsh_calibration" -> raw"""
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      sh AS (
-        SELECT doc_id, list_distinct([array_to_string(tk[i:i+2], ' ')
-          for i in range(1, len(tk) - 1)]) AS s
-        FROM toks WHERE len(tk) >= 3),
-      sig AS (
-        SELECT doc_id, s,
-          flatten([[list_min([md5(CAST(sd AS VARCHAR) || '|' || x)[j*4+1 : j*4+4]
-            for x in s]) for j in range(0, 8)] for sd in range(0, 2)]) AS sg
-        FROM sh),
-      banded AS (
-        SELECT doc_id, s, sg, band,
-          md5(array_to_string(sg[band*4+1:band*4+4], '|')) AS bucket
-        FROM sig, range(0, 4) r(band)),
-      cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          first(a.s) AS sa, first(b.s) AS sb,
-          first(a.sg) AS sga, first(b.sg) AS sgb
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id),
-      per AS (
-        SELECT CAST(list_sum([CASE WHEN sga[j] = sgb[j] THEN 1 ELSE 0 END
-            for j in range(1, 17)]) AS BIGINT) AS n_match,
-          CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
-            CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE) AS j
-        FROM cand)
-      SELECT n_match, round(CAST(n_match AS DOUBLE) / 16.0, 6) AS est_jaccard,
-        CAST(count(*) AS BIGINT) AS n_pairs,
-        round(CAST(sum(CAST(round(j, 9) AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_jaccard,
-        CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-      FROM per GROUP BY 1 ORDER BY 1""",
-    // q162: q155's gram CTE unrounded + per-dim DECIMAL sums; covariance
-    // is the identical two-division expression tree the engine computes
-    "q162_covariance_matrix" -> """
-      WITH comp AS (
-        SELECT label, vec_id,
-          unnest(CAST(embedding AS DOUBLE[])) AS x,
-          generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS idx
-        FROM embeddings),
-      pairs AS (
-        SELECT a.label, a.idx - 1 AS i, b.idx - 1 AS j,
-          CAST(a.x * b.x AS DECIMAL(28,18)) AS p
-        FROM comp a JOIN comp b ON a.vec_id = b.vec_id AND a.idx <= b.idx),
-      gram AS (
-        SELECT label, CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-          CAST(count(*) AS BIGINT) AS n_terms, sum(p) AS s
-        FROM pairs GROUP BY 1, 2, 3),
-      dims AS (
-        SELECT label, CAST(idx - 1 AS BIGINT) AS d,
+          round(CAST(sum(CASE WHEN p THEN 1 ELSE 0 END) AS DOUBLE) /
+            CAST(count(*) AS DOUBLE), 6) AS pr
+        FROM qs WHERE doc_id % 2 = 0 GROUP BY 1),
+      cb AS (
+        SELECT least(greatest(CAST(floor(s * 10) AS BIGINT), 0), 9)
+            AS bin,
           CAST(count(*) AS BIGINT) AS n,
-          sum(CAST(x AS DECIMAL(28,18))) AS m
-        FROM comp GROUP BY 1, 2)
-      SELECT g.label, g.i, g.j, g.n_terms,
-        round(CAST(g.s AS DOUBLE) / CAST(g.n_terms AS DOUBLE)
-          - (CAST(di.m AS DOUBLE) / CAST(di.n AS DOUBLE))
-            * (CAST(dj.m AS DOUBLE) / CAST(dj.n AS DOUBLE)), 6) + 0.0 AS cov
-      FROM gram g
-      JOIN dims di ON g.label = di.label AND g.i = di.d
-      JOIN dims dj ON g.label = dj.label AND g.j = dj.d
-      ORDER BY g.label, g.i, g.j""",
-    // q163: q155's round-6 gram mirrored to full symmetry, two unrolled
-    // matvec+normalize rounds; sums via round-9 -> DECIMAL(28,12), the
-    // DuckDB double comes off the VARCHAR parse (q99's correctly-rounded
-    // cast note)
-    "q163_pca_power_iteration" -> """
-      WITH comp AS (
-        SELECT label, vec_id,
-          unnest(CAST(embedding AS DOUBLE[])) AS x,
-          generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS idx
-        FROM embeddings),
-      prs AS (
-        SELECT a.label, a.idx - 1 AS i, b.idx - 1 AS j,
-          CAST(a.x * b.x AS DECIMAL(28,18)) AS p
-        FROM comp a JOIN comp b ON a.vec_id = b.vec_id AND a.idx <= b.idx),
-      gram AS (
-        SELECT label, i, j, round(CAST(sum(p) AS DOUBLE), 6) + 0.0 AS s
-        FROM prs GROUP BY 1, 2, 3),
-      m AS (
-        SELECT label, i, j, s FROM gram
-        UNION ALL
-        SELECT label, j, i, s FROM gram WHERE i <> j),
-      w1 AS (
-        SELECT label, i AS dim,
-          CAST(CAST(sum(CAST(round(s * 1.0, 9) AS DECIMAL(28,12)))
-            AS VARCHAR) AS DOUBLE) AS w
-        FROM m GROUP BY 1, 2),
-      n1 AS (
-        SELECT label, sqrt(CAST(CAST(sum(CAST(round(w * w, 9)
-            AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)) AS nrm
-        FROM w1 GROUP BY 1),
-      v1 AS (
-        SELECT w1.label, w1.dim, w1.w / n1.nrm AS v
-        FROM w1 JOIN n1 ON w1.label = n1.label),
-      w2 AS (
-        SELECT m.label, m.i AS dim,
-          CAST(CAST(sum(CAST(round(m.s * v1.v, 9) AS DECIMAL(28,12)))
-            AS VARCHAR) AS DOUBLE) AS w
-        FROM m JOIN v1 ON m.label = v1.label AND m.j = v1.dim
-        GROUP BY 1, 2),
-      n2 AS (
-        SELECT label, sqrt(CAST(CAST(sum(CAST(round(w * w, 9)
-            AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)) AS nrm
-        FROM w2 GROUP BY 1)
-      SELECT w2.label, CAST(w2.dim AS BIGINT) AS dim,
-        round(w2.w / n2.nrm, 6) + 0.0 AS component,
-        round(n2.nrm, 6) + 0.0 AS eigenvalue
-      FROM w2 JOIN n2 ON w2.label = n2.label
-      ORDER BY w2.label, dim""",
-    // q164: q159's und/deg CTEs folded to the symmetric moment
-    // correlation — degrees are integers, every sum exact
-    "q164_degree_assortativity" -> """
-      WITH p AS (
-        SELECT a.vec_id AS ia, b.vec_id AS ib,
-          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-            CAST(b.embedding AS DOUBLE[])) AS cos
-        FROM embeddings a JOIN embeddings b
-          ON a.label = b.label AND a.vec_id < b.vec_id),
-      sym0 AS (
-        SELECT ia AS node, ib AS nbr, cos FROM p
-        UNION ALL
-        SELECT ib AS node, ia AS nbr, cos FROM p),
-      knn AS (
-        SELECT node, nbr FROM (
-          SELECT node, nbr, row_number() OVER w AS rank
-          FROM sym0
-          WINDOW w AS (PARTITION BY node ORDER BY round(cos, 6) DESC, nbr))
-        WHERE rank <= 3),
-      und AS (
-        SELECT DISTINCT least(node, nbr) AS a, greatest(node, nbr) AS b
-        FROM knn WHERE node <> nbr),
-      deg AS (
-        SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-          SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-        GROUP BY 1),
-      sym AS (
-        SELECT a AS x, b AS y FROM und
-        UNION ALL SELECT b, a FROM und),
-      d AS (
-        SELECT dx.degree AS ddx, dy.degree AS ddy
-        FROM sym JOIN deg dx ON sym.x = dx.node
-        JOIN deg dy ON sym.y = dy.node),
-      mom AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_edges,
-          CAST(count(*) AS DOUBLE) AS n,
-          CAST(sum(CAST(ddx AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-          CAST(sum(CAST(ddy AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-          CAST(sum(CAST(ddx * ddx AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
-          CAST(sum(CAST(ddy * ddy AS DECIMAL(38,0))) AS DOUBLE) AS syy,
-          CAST(sum(CAST(ddx * ddy AS DECIMAL(38,0))) AS DOUBLE) AS sxy
-        FROM d)
-      SELECT n_edges,
-        round((n * sxy - sx * sy) /
-          sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) + 0.0
-          AS assortativity
-      FROM mom""",
-    // q165: positional window pairs via nested list comprehensions;
-    // probabilities over windows (Np) and occurrences (Nt), DECIMAL(38,0)
-    // products before the one division + ln
-    "q165_skipgram_pmi" -> raw"""
-      WITH toks AS (
-        SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      prs AS (
-        SELECT unnest(flatten([[ [least(tk[i], tk[i+k]),
-            greatest(tk[i], tk[i+k])]
-          for i in range(1, len(tk) - k + 1)] for k in [1, 2]])) AS pr
-        FROM toks WHERE len(tk) >= 2),
-      pc AS (
-        SELECT pr[1] AS token_a, pr[2] AS token_b,
-          CAST(count(*) AS BIGINT) AS n_ab
-        FROM prs GROUP BY 1, 2 HAVING count(*) >= 20),
-      uni AS (SELECT unnest(tk) AS w FROM toks),
-      uc AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM uni GROUP BY 1),
-      np AS (SELECT CAST(count(*) AS BIGINT) AS np FROM prs),
-      nt AS (SELECT CAST(count(*) AS BIGINT) AS nt FROM uni)
-      SELECT p.token_a, p.token_b, p.n_ab, ua.n AS n_a, ub.n AS n_b,
-        round(ln(
-          CAST(CAST(p.n_ab AS DECIMAL(38,0)) * nt.nt * nt.nt AS DOUBLE) /
-          CAST(CAST(ua.n AS DECIMAL(38,0)) * ub.n * np.np AS DOUBLE)), 6)
-          + 0.0 AS pmi
-      FROM pc p
-      JOIN uc ua ON p.token_a = ua.w
-      JOIN uc ub ON p.token_b = ub.w
-      CROSS JOIN np CROSS JOIN nt
-      ORDER BY 1, 2""",
-    // q166: q108's metric CTE folded to the cumulative-rule funnel
-    "q166_curation_funnel" -> raw"""
-      WITH m AS (
+          round(CAST(sum(CASE WHEN p THEN 1 ELSE 0 END) AS DOUBLE) /
+            CAST(count(*) AS DOUBLE), 6) AS pr
+        FROM qs WHERE doc_id % 2 = 1 GROUP BY 1)
+      SELECT coalesce(b.bin, c.bin) AS bin,
+        coalesce(b.n, 0) AS n_base, coalesce(c.n, 0) AS n_cur,
+        b.pr AS pos_rate_base, c.pr AS pos_rate_cur,
+        round(c.pr - b.pr, 6) + 0.0 AS drift,
+        coalesce(abs(c.pr - b.pr) >= 0.05, false) AS flagged
+      FROM bb b FULL OUTER JOIN cb c ON b.bin = c.bin
+      ORDER BY 1"""),
+    // q328: the NB language model (nbChainCtes on q301's train split,
+    // scored over the WHOLE corpus) beside the q27 marker heuristic and
+    // the true lang label, rolled up per source
+    Q("q328_model_lang_gate", q328, Extra, raw"""
+      WITH gtrain AS (
+        SELECT doc_id, lang AS class, text FROM documents
+        WHERE doc_id % 2 = 0 AND lang IS NOT NULL),
+      gscore_in AS (SELECT doc_id, text FROM documents),
+      ${nbChainCtes("g", "gtrain", "gscore_in")},
+      gsc AS (
         SELECT doc_id,
-          len(tk) AS n_words,
-          CAST(len(array_to_string(tk, '')) AS DOUBLE) /
-            CAST(len(tk) AS DOUBLE) AS mean_word_len,
-          CAST(len([w for w in tk if regexp_matches(w, '[a-z]')]) AS DOUBLE) /
-            CAST(len(tk) AS DOUBLE) AS alpha_frac,
-          ((len(text) - len(replace(text, '#', ''))) +
-            (len(text) - len(replace(text, '...', ''))) / 3) /
-            CAST(len(tk) AS DOUBLE) AS symbol_ratio,
-          len(list_intersect(tk,
-            ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with']))
-            AS stop_hits
-        FROM (SELECT doc_id, text,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-          FROM documents)),
-      f AS (
-        SELECT
-          n_words >= 20 AND n_words <= 100000 AS c1,
-          n_words >= 20 AND n_words <= 100000
-            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS c2,
-          n_words >= 20 AND n_words <= 100000
-            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-            AND alpha_frac > 0.8 AS c3,
-          n_words >= 20 AND n_words <= 100000
-            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-            AND alpha_frac > 0.8 AND symbol_ratio < 0.1 AS c4,
-          n_words >= 20 AND n_words <= 100000
-            AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-            AND alpha_frac > 0.8 AND symbol_ratio < 0.1
-            AND stop_hits >= 2 AS c5
-        FROM m),
-      agg AS (
-        SELECT CAST(count(*) AS BIGINT) AS n0,
-          CAST(sum(CASE WHEN c1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-          CAST(sum(CASE WHEN c2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-          CAST(sum(CASE WHEN c3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-          CAST(sum(CASE WHEN c4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
-          CAST(sum(CASE WHEN c5 THEN 1 ELSE 0 END) AS BIGINT) AS n5
-        FROM f)
-      SELECT stage, rule, n_docs,
-        round(CAST(n_docs AS DOUBLE) / CAST(n0 AS DOUBLE), 6) AS pass_rate
-      FROM (
-        SELECT CAST(0 AS BIGINT) AS stage, 'total' AS rule, n0 AS n_docs, n0 FROM agg
-        UNION ALL SELECT 1, 'words_ok', n1, n0 FROM agg
-        UNION ALL SELECT 2, 'word_len_ok', n2, n0 FROM agg
-        UNION ALL SELECT 3, 'alpha_ok', n3, n0 FROM agg
-        UNION ALL SELECT 4, 'symbol_ok', n4, n0 FROM agg
-        UNION ALL SELECT 5, 'stop_ok', n5, n0 FROM agg)
-      ORDER BY stage""",
-    // q167: q28's quality formula (unrounded) -> fixed-threshold tiers ->
-    // per-tier rank -> round-robin position
-    "q167_curriculum_interleave" -> raw"""
-      WITH f AS (
-        SELECT doc_id,
-          CAST(len(tk) AS DOUBLE) AS nt,
-          CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
-          CAST(len(text) AS DOUBLE) AS chars,
-          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-            AS alpha
-        FROM (SELECT doc_id, text,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-          FROM documents)),
-      q AS (
-        SELECT doc_id, least(greatest(
-          0.4 * least(nt / 50.0, 1.0) +
-          0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-          0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0)
-          AS quality
-        FROM f),
-      t AS (
-        SELECT doc_id, CAST(least(floor(quality * 4), 3) AS BIGINT) AS tier
-        FROM q),
-      r AS (
-        SELECT doc_id, tier,
-          row_number() OVER (PARTITION BY tier ORDER BY doc_id) AS rn
-        FROM t)
-      SELECT doc_id, tier, CAST((rn - 1) * 4 + tier AS BIGINT) AS position
-      FROM r ORDER BY position""",
-    // q168: q105's weight CTE + Hamilton allocation; sum(alloc) = total
-    // exactly
-    "q168_budget_allocation" -> """
-      WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-      s AS (
-        SELECT source, n_docs,
-          CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS share
-        FROM c),
-      m AS (SELECT source, n_docs, share, sqrt(share) AS sm FROM s),
-      mw AS (SELECT source, sm / max(sm) OVER () AS w FROM m),
-      sw AS (
-        SELECT CAST(sum(CAST(round(w, 9) AS DECIMAL(28,12))) AS DOUBLE) AS sw
-        FROM mw),
-      b AS (
-        SELECT source, w, 1000000.0 * w / sw AS ideal
-        FROM mw CROSS JOIN sw),
-      fr AS (
-        SELECT source, w, ideal, CAST(floor(ideal) AS BIGINT) AS base,
-          ideal - floor(ideal) AS frac
-        FROM b),
-      r AS (
-        SELECT source, w, ideal, base,
-          row_number() OVER (ORDER BY frac DESC, source) AS rk,
-          (SELECT 1000000 - sum(base) FROM fr) AS rem
-        FROM fr)
-      SELECT source, round(w, 6) AS weight, round(ideal, 6) AS ideal,
-        CAST(base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS BIGINT) AS alloc
-      FROM r ORDER BY source""",
-    // q246: q168's largest-remainder chain over TOKEN-share temperature
-    // weights, with the epoch ratio readout
-    "q246_epoch_plan" -> """
-      WITH c AS (
-        SELECT source,
-          CAST(sum(len(regexp_split_to_array(trim(lower(text)), '\s+')))
-            AS BIGINT) AS n_tokens
-        FROM documents GROUP BY 1),
-      s AS (
-        SELECT source, n_tokens,
-          CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE)
-            AS share
-        FROM c),
-      m AS (SELECT source, n_tokens, share, sqrt(share) AS sm FROM s),
-      mw AS (
-        SELECT source, n_tokens, share, sm / max(sm) OVER () AS w FROM m),
-      sw AS (
-        SELECT CAST(sum(CAST(round(w, 9) AS DECIMAL(28,12))) AS DOUBLE)
-          AS sw
-        FROM mw),
-      b AS (
-        SELECT source, n_tokens, share, w, 500000.0 * w / sw AS ideal
-        FROM mw CROSS JOIN sw),
-      fr AS (
-        SELECT source, n_tokens, share, w, ideal,
-          CAST(floor(ideal) AS BIGINT) AS base,
-          ideal - floor(ideal) AS frac
-        FROM b),
-      r AS (
-        SELECT source, n_tokens, share, w, base,
-          row_number() OVER (ORDER BY frac DESC, source) AS rk,
-          (SELECT 500000 - sum(base) FROM fr) AS rem
-        FROM fr)
-      SELECT source, n_tokens, round(share, 6) AS share,
-        round(w, 6) AS mix_weight,
-        CAST(base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS BIGINT)
-          AS alloc_tokens,
-        round(CAST(base + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS DOUBLE) /
-          CAST(n_tokens AS DOUBLE), 6) AS epochs
-      FROM r ORDER BY source""",
-    // q148: q66's shingle CTE, scored as a per-doc coverage ratio
-    "q148_coverage_score" -> """
-      WITH toks AS (
-        SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      sh AS (
-        SELECT doc_id, source, unnest(list_distinct([array_to_string(tk[i:i+2], ' ')
-          for i in range(1, len(tk) - 1)])) AS s
-        FROM toks WHERE len(tk) >= 3),
-      ref AS (SELECT DISTINCT s FROM sh WHERE source = 'src0'),
-      m AS (
-        SELECT c.doc_id, CASE WHEN r.s IS NOT NULL THEN 1 ELSE 0 END AS k
-        FROM sh c LEFT JOIN ref r ON c.s = r.s
-        WHERE c.source != 'src0')
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-        CAST(sum(k) AS BIGINT) AS n_known,
-        round(CAST(sum(k) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-          AS coverage
-      FROM m GROUP BY doc_id ORDER BY doc_id""",
-    // q149: decimal-exact squared-component sums, IEEE sqrt (safe), 9dp
-    // rounding before the decimal mean — the q99 idiom throughout
-    "q149_embedding_health" -> """
-      WITH comp AS (
-        SELECT label, vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x
-        FROM embeddings),
-      nsq0 AS (
-        SELECT vec_id,
-          CAST(sum(CAST(x * x AS DECIMAL(28,18))) AS DOUBLE) AS nsq
-        FROM comp GROUP BY 1),
-      -- left join back so null/empty embedding arrays (dropped by unnest)
-      -- count as norm-0 vectors, mirroring the engine's explode_outer
-      nsq AS (
-        SELECT e.label, e.vec_id, coalesce(n.nsq, 0.0) AS nsq
-        FROM embeddings e LEFT JOIN nsq0 n ON e.vec_id = n.vec_id),
-      norms AS (SELECT label, sqrt(nsq) AS nm FROM nsq)
-      SELECT label, CAST(count(*) AS BIGINT) AS n_vectors,
-        round(min(nm), 6) AS min_norm, round(max(nm), 6) AS max_norm,
-        round(CAST(sum(CAST(round(nm, 9) AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE), 6) AS mean_norm,
-        CAST(sum(CASE WHEN abs(nm - 1.0) <= 0.001 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_unit
-      FROM norms GROUP BY label ORDER BY label""",
-    // q146: q25's brute-force CTE (truth) + q37's IVF CTE (approx) +
-    // rational metrics — recall@5 and first-relevant reciprocal rank
-    // q213: q146's retrieval chain through `marked` (q146Cte), then
-    // AP@5/NDCG@5 with the ENGINE-injected literal discount and
-    // ideal-DCG tables (Eval.rankingMetrics computes the same lists)
-    "q213_ranking_metrics" -> {
-      val gains = (1 to 5).map(r => 1.0 / (math.log(r + 1.0) / math.log(2.0)))
-      val idcg = gains.scanLeft(0.0)(_ + _)
-      val gainList = gains.mkString("[", ", ", "]")
-      val idcgList = idcg.mkString("[", ", ", "]")
-      s"""$q146Cte,
-      g AS (
-        SELECT query_id, rank, rel,
-          sum(rel) OVER (PARTITION BY query_id ORDER BY rank
-            ROWS UNBOUNDED PRECEDING) AS hits_upto
-        FROM marked),
-      rsz AS (SELECT query_id, CAST(count(*) AS BIGINT) AS r
-              FROM truth GROUP BY 1),
-      agg AS (
-        SELECT query_id, CAST(count(*) AS BIGINT) AS n_returned,
-          CAST(sum(rel) AS BIGINT) AS hits,
-          CAST(sum(CAST(round(CASE WHEN rel = 1
-              THEN CAST(hits_upto AS DOUBLE) / CAST(rank AS DOUBLE)
-              ELSE 0.0 END, 9) AS DECIMAL(28,12))) AS DOUBLE) AS apn,
-          CAST(sum(CAST(round(CAST(rel AS DOUBLE) *
-              ($gainList)[CAST(rank AS INT)], 9)
-              AS DECIMAL(28,12))) AS DOUBLE) AS dcg
-        FROM g GROUP BY 1)
-      SELECT a.query_id, a.n_returned, a.hits,
-        round(a.apn / CAST(least(rsz.r, 5) AS DOUBLE), 6) AS ap,
-        round(a.dcg / ($idcgList)[CAST(least(rsz.r, 5) AS INT) + 1], 6)
-          AS ndcg
-      FROM agg a JOIN rsz ON a.query_id = rsz.query_id
-      ORDER BY a.query_id"""
-    },
-    "q146_retrieval_metrics" -> s"""$q146Cte
-      SELECT query_id, CAST(count(*) AS BIGINT) AS n_returned,
-        CAST(sum(rel) AS BIGINT) AS hits,
-        round(CAST(sum(rel) AS DOUBLE) / 5.0, 6) AS recall_at_5,
-        round(coalesce(1.0 / CAST(min(CASE WHEN rel = 1 THEN rank END)
-          AS DOUBLE), 0.0), 6) AS reciprocal_rank
-      FROM marked GROUP BY query_id ORDER BY query_id""",
-    "q147_histogram_drift" -> driftOracle,
-    "q150_drift_stream" -> driftOracle,
-    "q145_canonical_by_priority" -> {
-      val values = sourcePriority
-        .map { case (s, p) => s"('$s', $p)" }.mkString(", ")
-      s"""$q52CompCte,
-      pri(source, priority) AS (VALUES $values),
-      mem AS (
-        SELECT c.component, d.doc_id AS id, d.source, p.priority
-        FROM comp c JOIN documents d ON c.id = d.doc_id
-        JOIN pri p ON d.source = p.source),
-      ranked AS (
-        SELECT *, row_number() OVER (
-          PARTITION BY component ORDER BY priority, id) AS rn
-        FROM mem)
-      SELECT component, CAST(count(*) AS BIGINT) AS n_docs,
-        max(CASE WHEN rn = 1 THEN id END) AS keep_id,
-        max(CASE WHEN rn = 1 THEN source END) AS keep_source,
-        CAST(max(CASE WHEN rn = 1 THEN priority END) AS BIGINT)
-          AS keep_priority
-      FROM ranked GROUP BY component ORDER BY component"""
-    },
-    "q138_label_propagation" -> q138Oracle,
-    "q139_neighbor_mean" -> """
-      WITH p AS (
-        SELECT a.vec_id AS ia, b.vec_id AS ib,
-          list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-            CAST(b.embedding AS DOUBLE[])) AS cos
-        FROM embeddings a JOIN embeddings b
-          ON a.label = b.label AND a.vec_id < b.vec_id),
-      sym AS (
-        SELECT ia AS node, ib AS nbr, cos FROM p
-        UNION ALL
-        SELECT ib AS node, ia AS nbr, cos FROM p),
-      knn AS (
-        SELECT node, nbr FROM sym
-        QUALIFY row_number() OVER (PARTITION BY node
-          ORDER BY round(cos, 6) DESC, nbr) <= 3),
-      cells AS (
-        SELECT k.node, t.i AS dim,
-          CAST(e.embedding[t.i] AS DOUBLE) AS v
-        FROM knn k JOIN embeddings e ON k.nbr = e.vec_id
-        CROSS JOIN range(1, 9) t(i))
-      SELECT node, dim, count(v) AS n_nbrs,
-        round(CAST(sum(CAST(v AS DECIMAL(28,12))) AS DOUBLE) /
-          CAST(count(v) AS DOUBLE), 6) + 0.0 AS mean_v
-      FROM cells GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q135_copurchase_lift" -> """
-      WITH items AS (
-        SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-      nb AS (SELECT count(DISTINCT b) AS n_baskets FROM items),
-      sup AS (SELECT i, count(*) AS n FROM items GROUP BY 1),
-      pairs AS (
-        SELECT a.i AS item_a, c.i AS item_b, count(*) AS n_ab
-        FROM items a JOIN items c ON a.b = c.b AND a.i < c.i
-        GROUP BY 1, 2 HAVING count(*) >= 2)
-      SELECT p.item_a, p.item_b, p.n_ab, sa.n AS n_a, sb.n AS n_b,
-        round(CAST(CAST(p.n_ab AS DECIMAL(19,0)) * nb.n_baskets AS DOUBLE) /
-          CAST(CAST(sa.n AS DECIMAL(19,0)) * sb.n AS DOUBLE), 6) AS lift
-      FROM pairs p
-      JOIN sup sa ON p.item_a = sa.i
-      JOIN sup sb ON p.item_b = sb.i
-      CROSS JOIN nb
-      ORDER BY 1, 2""",
-    "q133_gini_index" -> """
-      WITH ranked AS (
-        SELECT source, n_chars AS x,
-          CAST(row_number() OVER (PARTITION BY source
-            ORDER BY n_chars, doc_id) AS BIGINT) AS i
-        FROM documents),
-      sums AS (
-        SELECT source, count(*) AS n, CAST(sum(x) AS BIGINT) AS s0,
-          CAST(sum(CAST(i * x AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s1
-        FROM ranked GROUP BY 1)
-      SELECT source, n,
-        round(CASE WHEN s0 = 0 THEN NULL ELSE
-          (2.0 * CAST(s1 AS DOUBLE) -
-            CAST(n + 1 AS DOUBLE) * CAST(s0 AS DOUBLE)) /
-          (CAST(n AS DOUBLE) * CAST(s0 AS DOUBLE)) END, 6) AS gini
-      FROM sums ORDER BY 1""",
-    // zero-duplication composition: the frontier subquery IS q95's oracle
-    "q134_funnel_timing" -> s"""
-      SELECT count(*) AS n_converted,
-        round(CAST(sum(epoch_us(t_click) - epoch_us(t_view)) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS avg_view_click_sec,
-        round(CAST(max(epoch_us(t_click) - epoch_us(t_view)) AS DOUBLE) /
-          1000000.0, 6) AS max_view_click_sec,
-        round(CAST(sum(epoch_us(t_purchase) - epoch_us(t_click)) AS DOUBLE) /
-          CAST(count(*) AS DOUBLE) / 1000000.0, 6) AS avg_click_purchase_sec,
-        round(CAST(max(epoch_us(t_purchase) - epoch_us(t_click)) AS DOUBLE) /
-          1000000.0, 6) AS max_click_purchase_sec
-      FROM ($funnelOracle) f""",
-    "q130_json_field_stats" -> """
-      WITH x AS (
-        SELECT event_type,
-          TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        FROM events)
-      SELECT event_type, count(*) AS n, count(k) AS n_k,
-        min(k) AS min_k, max(k) AS max_k,
-        CAST(sum(k) AS BIGINT) AS sum_k,
-        count(DISTINCT k) AS k_distinct
-      FROM x GROUP BY 1 ORDER BY 1""",
-    "q131_time_weighted_avg" -> """
-      WITH seq AS (
-        SELECT user_id, CAST(ts AS DATE) AS day,
-          epoch_us(ts) AS us, CAST(value AS DECIMAL(18,2)) AS v,
-          lead(epoch_us(ts)) OVER (
-            PARTITION BY user_id, CAST(ts AS DATE)
-            ORDER BY ts, event_id) AS next_us
-        FROM events),
-      weighted AS (
-        SELECT user_id, day,
-          coalesce(next_us,
-            epoch_us(CAST(day AS TIMESTAMP)) + 86400000000) - us AS dt, v
-        FROM seq)
-      SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        count(*) AS n_events,
-        round(CAST(sum(v * dt) AS DOUBLE) / CAST(sum(dt) AS DOUBLE), 6)
-          AS twap
-      FROM weighted GROUP BY user_id, day ORDER BY 1, 2""",
-    "q132_gap_histogram" -> """
-      WITH seq AS (
-        SELECT epoch_us(ts) AS us,
-          lag(epoch_us(ts)) OVER (
-            PARTITION BY user_id ORDER BY ts, event_id) AS prev
-        FROM events)
-      SELECT CAST(least((us - prev) // 60000000, 60) AS BIGINT)
-          AS gap_minutes,
-        count(*) AS n_gaps
-      FROM seq WHERE prev IS NOT NULL
-      GROUP BY 1 ORDER BY 1""",
-    "q90_zorder_curve" -> q90Oracle,
-    "q96_manifest_landing" -> """
-      SELECT event_type, count(*) AS n_events,
-        min(event_id) AS min_id, max(event_id) AS max_id
-      FROM events GROUP BY 1 ORDER BY event_type""",
-    "q95_funnel" -> funnelOracle,
-    // the streaming funnel must reproduce the batch funnel exactly
-    "q97_funnel_stream" -> funnelOracle,
-    "q104_funnel_landing" -> funnelOracle,
-    "q100_stream_static_join" -> """
-      WITH p AS (
-        SELECT user_id, count(*) AS user_events,
-          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS user_value
-        FROM events GROUP BY 1)
-      SELECT e.event_id, e.user_id, e.value, p.user_events, p.user_value
-      FROM events e JOIN p USING (user_id)
-      WHERE e.event_type = 'purchase'
-      ORDER BY event_id""",
-    "q99_correlation" -> """
-      WITH m AS (
-        SELECT l_returnflag,
-          CAST(count(*) AS DOUBLE) AS n,
-          -- decimal->double via VARCHAR: DuckDB's direct decimal cast
-          -- rounds twice (int128->double, then /10^scale) and can land 1
-          -- ulp off Spark's correctly-rounded BigDecimal cast once the
-          -- scaled sum needs > 53 mantissa bits; the string parse is
-          -- correctly rounded in both engines
-          CAST(CAST(sum(CAST(l_quantity AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sx,
-          CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sy,
-          CAST(CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sxx,
-          CAST(CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS syy,
-          CAST(CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sxy
-        FROM lineitem GROUP BY 1)
-      SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
-        (n * sxy - sx * sy) /
-          sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) AS corr_qty_price
-      FROM m ORDER BY l_returnflag""",
-    "q98_winsorize" -> """
-      WITH r AS (
-        SELECT event_id, event_type, value,
-          row_number() OVER (PARTITION BY event_type
-            ORDER BY value NULLS FIRST, event_id) AS rn,
-          count(*) OVER (PARTITION BY event_type) AS n
-        FROM events),
-      thr AS (
-        SELECT event_type AS s,
-          min(CASE WHEN rn = greatest(CAST(ceil(0.05 * n) AS BIGINT), 1)
-            THEN value END) AS lo,
-          max(CASE WHEN rn = greatest(CAST(ceil(0.95 * n) AS BIGINT), 1)
-            THEN value END) AS hi
-        FROM r
-        WHERE rn = greatest(CAST(ceil(0.05 * n) AS BIGINT), 1)
-           OR rn = greatest(CAST(ceil(0.95 * n) AS BIGINT), 1)
-        GROUP BY 1)
-      SELECT e.event_id, e.event_type, e.value,
-        least(greatest(e.value, t.lo), t.hi) AS clamped
-      FROM events e JOIN thr t ON e.event_type IS NOT DISTINCT FROM t.s
-      ORDER BY event_id""",
-    "q91_bloom_pruned_join" -> """
-      SELECT l_returnflag, count(*) AS n_items,
-        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE o_orderpriority = '1-URGENT'
-      GROUP BY 1 ORDER BY l_returnflag""",
-    "q92_negative_sampling" -> raw"""
-      WITH pairs AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
-          ${hashPosSql("CAST(q.vec_id AS VARCHAR)", "CAST(c.vec_id AS VARCHAR)")} AS pos
-        FROM embeddings q JOIN embeddings c ON c.label != q.label
-        WHERE q.vec_id < 10)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER (PARTITION BY query_id ORDER BY pos, item_id)
-          AS BIGINT) AS rank
-      FROM pairs QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q93_simpson_diversity" -> """
-      WITH tok AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-        FROM documents),
-      cnt AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY 1, 2)
-      SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        1.0 - CAST(sum(c * c) AS DOUBLE) / CAST(sum(c) * sum(c) AS DOUBLE)
-          AS simpson
-      FROM cnt GROUP BY doc_id ORDER BY doc_id""",
-    // Oracle over the file q94 lands (the generator is not expressible in
-    // DuckDB SQL — splitmix64 needs 64-bit wraparound); the predicate is
-    // applied HERE while the engine pushed it into the V2 scan.
-    "q94_docgen_source" -> s"""
-      SELECT lang, count(*) AS n_docs,
-        CAST(sum(n_chars) AS BIGINT) AS total_chars
-      FROM read_parquet('$q94LandPath/*.parquet')
-      WHERE doc_id >= 1000 AND doc_id < 4000
-      GROUP BY lang ORDER BY lang""",
-    "q74_incremental_dedup" -> q74Oracle,
-    "q75_quality_quantile_filter" -> """
-      WITH f AS (
-        SELECT doc_id, lang,
-          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS DOUBLE) AS nt,
-          CAST(len(list_distinct(regexp_split_to_array(trim(lower(text)), '\s+'))) AS DOUBLE) AS nd,
-          CAST(len(text) AS DOUBLE) AS chars,
-          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha
-        FROM documents),
-      q AS (
-        SELECT doc_id, lang,
-          round(least(greatest(
-            0.4 * least(nt / 50.0, 1.0) +
-            0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
-        FROM f),
-      thr AS (SELECT lang, quantile_cont(quality, 0.25) AS t FROM q GROUP BY lang)
-      SELECT doc_id, q.lang, quality
-      FROM q JOIN thr ON q.lang IS NOT DISTINCT FROM thr.lang
-      WHERE quality >= t ORDER BY doc_id""",
-    "q89_stream_landing" -> """
-      SELECT event_type, count(*) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1 ORDER BY event_type""",
-    "q88_hard_negatives" -> """
-      WITH scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
-          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-            CAST(c.embedding AS DOUBLE[])) AS cos
-        FROM embeddings q JOIN embeddings c ON c.label != q.label
-        WHERE q.vec_id < 10)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
-      FROM scored
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q87_corpus_prep" -> raw"""
-      WITH f AS (
-        SELECT doc_id, lang, source,
-          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS DOUBLE) AS nt,
-          CAST(len(list_distinct(regexp_split_to_array(trim(lower(text)), '\s+'))) AS DOUBLE) AS nd,
-          CAST(len(text) AS DOUBLE) AS chars,
-          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha
-        FROM documents),
-      q AS (
-        SELECT doc_id, lang, source, CAST(nt AS BIGINT) AS n_tokens,
-          round(least(greatest(
-            0.4 * least(nt / 50.0, 1.0) +
-            0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-            0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
-        FROM f),
-      thr AS (SELECT lang, quantile_cont(quality, 0.25) AS t FROM q GROUP BY lang),
-      kept AS (
-        SELECT q.* FROM q JOIN thr ON q.lang IS NOT DISTINCT FROM thr.lang
-        WHERE quality >= t),
-      ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY source ORDER BY
-          ${hashPosSql("source", "CAST(doc_id AS VARCHAR)")},
-          doc_id) AS rk
-        FROM kept),
-      capped AS (SELECT * FROM ranked WHERE rk <= 20),
-      c AS (
-        SELECT doc_id, lang, n_tokens, quality,
-          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        FROM capped)
-      SELECT lang,
-        CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id,
-        count(*) AS n_docs,
-        CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-        CAST(sum(CAST(quality AS DECIMAL(18,4))) AS DOUBLE) AS quality_sum
-      FROM c GROUP BY 1, 2 ORDER BY lang, bin_id""",
-    "q85_vocab_encode" -> """
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents),
-      pos AS (
-        SELECT doc_id, u.pos, u.tok FROM (
-          SELECT doc_id, unnest(list_transform(generate_series(1, len(t)),
-            i -> {'pos': i, 'tok': t[i]})) AS u
-          FROM toks)),
-      vocab AS (
-        SELECT tok AS token, row_number() OVER (ORDER BY cnt DESC, tok) AS tid
-        FROM (SELECT tok, count(*) AS cnt FROM pos GROUP BY tok
-              ORDER BY cnt DESC, tok LIMIT 100)),
-      enc AS (
-        SELECT p.doc_id, p.pos, coalesce(v.tid, 0) AS tid
-        FROM pos p LEFT JOIN vocab v ON p.tok = v.token)
-      SELECT doc_id, count(*) AS n_tokens,
-        CAST(sum(CASE WHEN tid = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        md5(string_agg(CAST(tid AS VARCHAR), ',' ORDER BY pos)) AS ids_hash
-      FROM enc GROUP BY doc_id ORDER BY doc_id""",
-    "q86_chunk_stride" -> """
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents),
-      st AS (
-        SELECT doc_id, t, unnest(generate_series(1, len(t), 32)) AS s
-        FROM toks)
-      SELECT doc_id, CAST((s - 1) / 32 AS BIGINT) AS chunk_id,
-        CAST(len(t[s:s+63]) AS BIGINT) AS n_chunk_tokens,
-        md5(array_to_string(t[s:s+63], ' ')) AS chunk_hash
-      FROM st
-      WHERE s = 1 OR (s - 1) - 32 + 64 < len(t)
-      ORDER BY doc_id, chunk_id""",
-    "q83_incremental_agg" -> """
-      SELECT event_type, count(*) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1 ORDER BY event_type""",
-    "q84_scd2_merge" -> """
-      WITH cur AS (SELECT c_custkey, c_mktsegment, c_nationkey FROM customer),
-      upd AS (
-        SELECT c_custkey,
-          CASE WHEN c_custkey % 10 = 0 THEN 'MACHINERY' ELSE c_mktsegment END AS c_mktsegment,
-          c_nationkey
-        FROM cur WHERE c_custkey % 97 <> 0
-        UNION ALL
-        SELECT c_custkey + 1000000, 'BUILDING', c_nationkey
-        FROM cur WHERE c_custkey % 101 = 0),
-      j AS (
-        SELECT coalesce(c.c_custkey, u.c_custkey) AS k,
-          c.c_mktsegment AS cs, c.c_nationkey AS cn,
-          u.c_mktsegment AS us, u.c_nationkey AS un,
-          (c.c_custkey IS NOT NULL) AS has_c, (u.c_custkey IS NOT NULL) AS has_u
-        FROM cur c FULL OUTER JOIN upd u ON c.c_custkey = u.c_custkey),
-      ch AS (
-        SELECT *, has_c AND has_u AND
-          (cs IS DISTINCT FROM us OR cn IS DISTINCT FROM un) AS changed
-        FROM j)
-      SELECT k AS c_custkey, cs AS c_mktsegment, cn AS c_nationkey,
-        '1900-01-01' AS valid_from, '2024-02-01' AS valid_to, FALSE AS is_current
-      FROM ch WHERE has_c AND (NOT has_u OR changed)
-      UNION ALL
-      SELECT k, cs, cn, '1900-01-01', '9999-12-31', TRUE
-      FROM ch WHERE has_c AND has_u AND NOT changed
-      UNION ALL
-      SELECT k, us, un, '2024-02-01', '9999-12-31', TRUE
-      FROM ch WHERE has_u AND (NOT has_c OR changed)
-      ORDER BY c_custkey, valid_from""",
-    "q81_column_profile" -> """
-      SELECT * FROM (
-        SELECT 'lang' AS "column", count(*) AS n_rows, count(lang) AS n_nonnull,
-          count(DISTINCT lang) AS n_distinct,
-          CAST(min(lang) AS VARCHAR) AS min_val,
-          CAST(max(lang) AS VARCHAR) AS max_val
-        FROM documents
-        UNION ALL
-        SELECT 'source', count(*), count(source), count(DISTINCT source),
-          CAST(min(source) AS VARCHAR), CAST(max(source) AS VARCHAR)
-        FROM documents
-        UNION ALL
-        SELECT 'n_chars', count(*), count(n_chars), count(DISTINCT n_chars),
-          CAST(min(n_chars) AS VARCHAR), CAST(max(n_chars) AS VARCHAR)
-        FROM documents)
-      ORDER BY "column"""",
-    "q82_passage_dup" -> """
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents),
-      w0 AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-          generate_series(1, len(t) - 7),
-          i -> md5(array_to_string(t[i:i+7], ' '))))) AS h
-        FROM toks WHERE len(t) >= 8),
-      byh AS (SELECT h, count(DISTINCT doc_id) AS nd FROM w0 GROUP BY h),
-      per AS (
-        SELECT doc_id, count(*) AS n_windows,
-          sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS n_shared
-        FROM w0 JOIN byh USING (h) GROUP BY doc_id)
-      SELECT doc_id, CAST(n_windows AS BIGINT) AS n_windows,
-        CAST(n_shared AS BIGINT) AS n_shared,
-        round(CAST(n_shared AS DOUBLE) / CAST(n_windows AS DOUBLE), 4) AS dup_frac
-      FROM per ORDER BY doc_id""",
-    "q80_quantize_int8" -> """
-      WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings),
-      s AS (
-        SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS ma
-        FROM v),
-      q AS (
-        SELECT vec_id, ma / 127.0 AS scale,
-          CASE WHEN ma = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
-               ELSE list_transform(e, x -> CAST(round(x / (ma / 127.0)) AS BIGINT))
-          END AS qv
-        FROM s)
-      SELECT vec_id, round(scale, 6) AS scale,
-        CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS q_norm2,
-        md5(array_to_string(qv, ',')) AS q_hash
-      FROM q ORDER BY vec_id""",
-    "q79_packed_sequences" -> """
-      WITH f AS (
-        SELECT doc_id, lang, text,
-          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens
-        FROM documents),
-      c AS (
-        SELECT doc_id, lang, text, n_tokens,
-          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        FROM f),
-      b AS (
-        SELECT lang,
-          CAST((cum - n_tokens) // 2048 AS BIGINT) AS bin_id,
-          doc_id, text, n_tokens
-        FROM c)
-      SELECT lang, bin_id, count(*) AS n_docs,
-        CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-        md5(string_agg(text, chr(10)||chr(10) ORDER BY doc_id)) AS seq_hash
-      FROM b GROUP BY lang, bin_id ORDER BY lang, bin_id""",
-    "q78_nfc_normalize" -> """
-      WITH inj AS (
-        SELECT doc_id, text || ' cafe' || chr(769) || ' A' || chr(778) AS t
-        FROM documents)
-      SELECT doc_id,
-        CAST(octet_length(encode(t)) AS BIGINT) AS raw_bytes,
-        CAST(octet_length(encode(nfc_normalize(t))) AS BIGINT) AS norm_bytes,
-        nfc_normalize(t) <> t AS changed,
-        md5(nfc_normalize(t)) AS norm_hash
-      FROM inj ORDER BY doc_id""",
-    "q77_weighted_mix" -> raw"""
-      WITH w AS (
-        SELECT doc_id, lang,
-          CASE lang WHEN 'en' THEN 2.5 WHEN 'fr' THEN 1.5 WHEN 'de' THEN 1.0
-                    WHEN 'es' THEN 0.25 ELSE 0.0 END AS wt,
-          ${hashPosSql("lang", "CAST(doc_id AS VARCHAR)")} AS h
-        FROM documents),
-      c AS (
-        SELECT doc_id, lang,
-          CAST(floor(wt) AS BIGINT) +
-            CASE WHEN h < CAST(floor((wt - floor(wt)) * 4294967296.0) AS BIGINT)
-                 THEN 1 ELSE 0 END AS copies
-        FROM w)
-      SELECT doc_id, lang, unnest(generate_series(0, copies - 1)) AS copy
-      FROM c WHERE copies > 0
-      ORDER BY doc_id, copy""",
-    "q76_deterministic_shards" -> raw"""
-      WITH k AS (
-        SELECT doc_id,
-          ${hashPosSql("'shard'", "CAST(doc_id AS VARCHAR)")} AS key
-        FROM documents),
-      r AS (
-        SELECT doc_id,
-          row_number() OVER (ORDER BY key, doc_id) - 1 AS rn,
-          count(*) OVER () AS n
-        FROM k)
-      SELECT doc_id, CAST(rn AS BIGINT) AS rn,
-        CAST((rn * 8) // n AS BIGINT) AS shard
-      FROM r ORDER BY doc_id""",
-    "q45_stream_distinct_types" -> """
-      SELECT user_id, count(DISTINCT event_type) AS n_types
-      FROM events GROUP BY user_id ORDER BY user_id""",
-    "q46_percentiles" -> """
-      SELECT event_type,
-        round(quantile_cont(value, 0.5), 4) AS p50,
-        round(quantile_cont(value, 0.95), 4) AS p95,
-        round(min(value), 4) AS vmin,
-        round(max(value), 4) AS vmax
-      FROM events GROUP BY event_type ORDER BY event_type""",
-    "q47_window_suite" -> """
-      SELECT user_id, event_id,
-        lag(event_id, 1, -1) OVER w AS prev_event,
-        lead(event_id, 1, -1) OVER w AS next_event,
-        first_value(event_id) OVER wall AS first_event,
-        last_value(event_id) OVER wall AS last_event,
-        CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        round(percent_rank() OVER w, 6) AS pct_rank,
-        CAST(dense_rank() OVER w AS BIGINT) AS drank
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id),
-        wall AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      ORDER BY user_id, event_id""",
-    "q48_scalar_suite" -> """
-      SELECT c_custkey,
-        levenshtein(c_name, 'Customer#000000001') AS edit_dist,
-        translate(lower(c_mktsegment), 'aeiou', '_____') AS seg_masked,
-        lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS key_padded,
-        substring(c_name, -4, 4) AS name_tail,
-        array_to_string(string_split(c_mktsegment, 'U'), '|') AS seg_split,
-        greatest(c_acctbal, 0.0) AS bal_floor,
-        CASE WHEN c_acctbal < 0 THEN 'overdrawn'
-             WHEN c_acctbal < 1000 THEN 'low' ELSE 'ok' END AS bal_band,
-        CAST(length(c_name) AS BIGINT) AS name_len
-      FROM customer ORDER BY c_custkey""",
-    "q23_simhash" -> q23Oracle,
-    "q54_simhash_neighbors" -> q54Oracle,
-    "q55_train_test_split" -> """
-      WITH b AS (
-        SELECT lang, n_chars,
-          ('0x'||substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bk
-        FROM documents)
-      SELECT lang,
-        CASE WHEN bk < 80 THEN 'train' WHEN bk < 90 THEN 'val'
-          ELSE 'test' END AS split,
-        count(*) AS n_docs,
-        CAST(sum(n_chars) AS BIGINT) AS total_chars
-      FROM b GROUP BY 1, 2 ORDER BY lang, split""",
-    "q56_unpivot_measures" -> """
-      SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
-        l_quantity AS val FROM lineitem WHERE l_orderkey < 1000
-      UNION ALL
-      SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-      FROM lineitem WHERE l_orderkey < 1000
-      UNION ALL
-      SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-      FROM lineitem WHERE l_orderkey < 1000
-      ORDER BY l_orderkey, l_linenumber, measure""",
-    "q57_pivot_lang_counts" -> """
-      SELECT source,
-        count(*) FILTER (WHERE lang = 'de') AS de,
-        count(*) FILTER (WHERE lang = 'en') AS en,
-        count(*) FILTER (WHERE lang = 'es') AS es,
-        count(*) FILTER (WHERE lang = 'fr') AS fr,
-        count(*) FILTER (WHERE lang = 'zh') AS zh
-      FROM documents GROUP BY source ORDER BY source""",
-    "q58_intersect_nations" -> """
-      SELECT c_nationkey AS nationkey FROM customer
-      INTERSECT SELECT s_nationkey FROM supplier ORDER BY nationkey""",
-    "q59_correlated_subquery" -> """
-      SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS totalprice
-      FROM orders o
-      WHERE o_totalprice > 2 * (
-        SELECT CAST(sum(CAST(o2.o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-               / count(*)
-        FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-      ORDER BY o_orderkey""",
-    "q60_multi_distinct" -> """
-      SELECT event_type,
-        count(DISTINCT user_id) AS n_users,
-        count(DISTINCT event_id) AS n_events,
-        count(*) AS n_rows
-      FROM events GROUP BY event_type ORDER BY event_type""",
-    "q61_filter_having" -> """
-      SELECT user_id,
-        count(*) FILTER (WHERE event_type = 'click') AS n_clicks,
-        count(*) FILTER (WHERE event_type = 'purchase') AS n_purchases,
-        count(*) AS n_total
-      FROM events
-      GROUP BY user_id
-      HAVING count(*) FILTER (WHERE event_type = 'purchase') >= 10
-      ORDER BY user_id""",
-    "q51_variant_extract" -> """
-      SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k_val, count(*) AS n
-      FROM events GROUP BY 1 ORDER BY k_val""",
-    "q53_sliding_window" -> """
-      WITH c AS (
-        SELECT event_type, value,
-          unnest([time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP)),
-                  time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP))
-                    - INTERVAL 30 MINUTE]) AS wstart
-        FROM events)
-      SELECT CAST(epoch(wstart) AS BIGINT) AS win_start, event_type,
-        count(*) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM c GROUP BY 1, 2 ORDER BY win_start, event_type""",
-    "q52_dedup_groups" ->
-      s"""$q52CompCte
-      SELECT id, component FROM comp ORDER BY id""",
-    // q110: q52's components become split GROUPS — near-dups never
-    // straddle train/eval. Boundaries interpolated from the SAME driver
-    // computation the operator uses (Sampling.splitBounds), so no float
-    // arithmetic crosses engines.
-    "q110_leakage_free_split" -> {
-      val b = graft.ops.Sampling.splitBounds(Seq(0.8, 0.1, 0.1))
-      s"""$q52CompCte,
-      keyed AS (
-        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_key
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-      pos AS (SELECT doc_id, group_key,
-        ${hashPosSql("'split'", "CAST(group_key AS VARCHAR)")} AS p
-        FROM keyed)
-      SELECT doc_id, group_key,
-        CASE WHEN p < ${b(0)} THEN 'train' WHEN p < ${b(1)} THEN 'val'
-             ELSE 'test' END AS split
-      FROM pos ORDER BY doc_id"""
-    },
-    "q50_tfidf_topk" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-        FROM documents),
-      tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-      ntok AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tok FROM tf GROUP BY 1),
-      dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-      nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM toks),
-      scored AS (
-        SELECT t.doc_id AS doc_id, t.token AS token,
-          (CAST(t.tf AS DOUBLE) / CAST(n.n_tok AS DOUBLE)) *
-          (CAST(nd.n_docs AS DOUBLE) / CAST(d.df AS DOUBLE)) AS score
-        FROM tf t JOIN ntok n ON t.doc_id = n.doc_id
-        JOIN dfreq d ON t.token = d.token CROSS JOIN nd)
-      SELECT doc_id, token,
-        CAST(row_number() OVER w AS BIGINT) AS rank,
-        round(score, 4) AS tfidf
-      FROM scored
-      WINDOW w AS (PARTITION BY doc_id ORDER BY round(score, 6) DESC, token)
-      QUALIFY rank <= 3
-      ORDER BY doc_id, rank""",
-    "q63_stratified_sample" -> raw"""
-      SELECT doc_id, lang, source FROM documents
-      WHERE ${hashPosSql("lang", "CAST(doc_id AS VARCHAR)")}
-            < 1073741824
-      ORDER BY doc_id""",
-    "q67_sequence_packing" -> """
-      WITH f AS (
-        SELECT doc_id, lang,
-          CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens
-        FROM documents),
-      c AS (
-        SELECT doc_id, lang, n_tokens,
-          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        FROM f)
-      SELECT doc_id, lang, n_tokens, cum_tokens,
-        CAST((cum_tokens - n_tokens) // 2048 AS BIGINT) AS bin_id,
-        CAST((cum_tokens - 1) // 2048 AS BIGINT) >
-          CAST((cum_tokens - n_tokens) // 2048 AS BIGINT) AS spans_bins
-      FROM c ORDER BY doc_id""",
-    "q68_salted_agg" -> """
-      SELECT event_type, count(*) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY event_type ORDER BY event_type""",
-    "q69_dedup_keep_best" -> """
-      WITH RECURSIVE toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      sh AS (
-        SELECT doc_id, list_distinct([array_to_string(tk[i:i+2], ' ')
-          for i in range(1, len(tk) - 1)]) AS s
-        FROM toks WHERE len(tk) >= 3),
-      sig AS (
-        SELECT doc_id, s,
-          flatten([[list_min([md5(CAST(sd AS VARCHAR) || '|' || x)[j*4+1 : j*4+4]
-            for x in s]) for j in range(0, 8)] for sd in range(0, 2)]) AS sg
-        FROM sh),
-      banded AS (
-        SELECT doc_id, s, band,
-          md5(array_to_string(sg[band*4+1:band*4+4], '|')) AS bucket
-        FROM sig, range(0, 4) r(band)),
-      cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          first(a.s) AS sa, first(b.s) AS sb
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id),
-      edges AS (
-        SELECT id_a, id_b FROM cand
-        WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
-              CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE) >= 0.5),
-      sym AS (
-        SELECT id_a AS s, id_b AS d FROM edges
-        UNION ALL SELECT id_b, id_a FROM edges),
-      reach(id, r) AS (
-        SELECT DISTINCT s, s FROM sym
-        UNION
-        SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s),
-      comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-      qual AS (
-        SELECT doc_id AS id, round(least(greatest(
-          0.4 * least(nt / 50.0, 1.0) +
-          0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-          0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
-        FROM (SELECT doc_id,
-          CAST(len(tk) AS DOUBLE) AS nt,
-          CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
-          CAST(len(text) AS DOUBLE) AS chars,
-          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha
-          FROM (SELECT doc_id, text,
-            regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents))),
-      ranked AS (
-        SELECT comp.component, comp.id, qual.quality,
-          row_number() OVER (PARTITION BY comp.component
-            ORDER BY qual.quality DESC, comp.id) AS rn
-        FROM comp JOIN qual ON comp.id = qual.id)
-      SELECT component, max(CASE WHEN rn = 1 THEN id END) AS keep_id,
-        count(*) AS n_docs,
-        max(CASE WHEN rn = 1 THEN quality END) AS best_quality
-      FROM ranked GROUP BY component ORDER BY component""",
-    "q65_cap_per_stratum" -> raw"""
-      SELECT doc_id, source, lang FROM documents
-      QUALIFY row_number() OVER (PARTITION BY source
-        ORDER BY ${hashPosSql("source", "CAST(doc_id AS VARCHAR)")},
-          doc_id) <= 10
-      ORDER BY doc_id""",
-    "q66_decontaminate" -> q66Oracle,
-    // q109 is the bloom-prefiltered restatement of q66: its output is
-    // identical by construction (bloom false positives die in the exact
-    // join), so the SAME oracle gates that the prefilter dropped nothing.
-    "q109_bloom_decontaminate" -> q66Oracle,
-    "q64_kmeans_two_iterations" -> """
-      WITH cent0 AS (
-        SELECT label AS cell, CAST(embedding AS DOUBLE[]) AS cvec FROM embeddings
-        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
-      assign1 AS (
-        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
-        FROM embeddings e CROSS JOIN cent0 c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            c.cvec), 6) DESC, c.cell) = 1),
-      dims1 AS (
-        SELECT cell, generate_subscripts(vec, 1) AS pos, unnest(vec) AS val
-        FROM assign1),
-      avgs1 AS (
-        SELECT cell, pos,
-          CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS DOUBLE) / count(*) AS avg_val
-        FROM dims1 GROUP BY cell, pos),
-      cent1 AS (
-        SELECT cell, list(avg_val ORDER BY pos) AS cvec FROM avgs1 GROUP BY cell),
-      assign2 AS (
-        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
-        FROM embeddings e CROSS JOIN cent1 c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            c.cvec), 6) DESC, c.cell) = 1),
-      dims2 AS (
-        SELECT cell, generate_subscripts(vec, 1) AS pos, unnest(vec) AS val
-        FROM assign2),
-      avgs2 AS (
-        SELECT cell, pos,
-          CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS DOUBLE) / count(*) AS avg_val
-        FROM dims2 GROUP BY cell, pos),
-      norms AS (
-        SELECT cell,
-          sqrt(CAST(sum(CAST(avg_val * avg_val AS DECIMAL(27,12))) AS DOUBLE)) AS centroid_norm
-        FROM avgs2 GROUP BY cell),
-      members AS (SELECT cell, count(*) AS n_members FROM assign2 GROUP BY cell)
-      SELECT m.cell AS cell, m.n_members AS n_members,
-        round(n.centroid_norm, 6) AS centroid_norm
-      FROM members m JOIN norms n ON m.cell = n.cell ORDER BY m.cell""",
-    "q49_kmeans_iteration" -> """
-      WITH cent AS (
-        SELECT label AS cell, embedding AS cvec FROM embeddings
-        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
-      assign AS (
-        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
-        FROM embeddings e CROSS JOIN cent c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) = 1),
-      dims AS (
-        SELECT cell, generate_subscripts(vec, 1) AS pos, unnest(vec) AS val
-        FROM assign),
-      avgs AS (
-        SELECT cell, pos,
-          CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS DOUBLE) / count(*) AS avg_val
-        FROM dims GROUP BY cell, pos),
-      norms AS (
-        SELECT cell,
-          sqrt(CAST(sum(CAST(avg_val * avg_val AS DECIMAL(27,12))) AS DOUBLE)) AS centroid_norm
-        FROM avgs GROUP BY cell),
-      members AS (SELECT cell, count(*) AS n_members FROM assign GROUP BY cell)
-      SELECT m.cell AS cell, m.n_members AS n_members,
-        round(n.centroid_norm, 6) AS centroid_norm
-      FROM members m JOIN norms n ON m.cell = n.cell ORDER BY m.cell""",
-    "q35_decode_stats" -> """
-      WITH d AS (
-        SELECT doc_id,
-          CAST(64 + (('0x'||substring(md5(text),1,8))::BIGINT % 1856) AS INTEGER) AS width,
-          CAST(64 + (('0x'||substring(md5(text),9,8))::BIGINT % 1016) AS INTEGER) AS height
-        FROM documents)
-      SELECT doc_id AS asset_id, width, height, CAST(3 AS INTEGER) AS channels,
-        round(CAST(width AS DOUBLE) / CAST(height AS DOUBLE), 4) AS aspect,
-        (width > 1024 OR height > 1024) AS needs_resize,
-        CAST(width AS BIGINT) * height AS pixels,
-        CAST(floor(CAST(width AS DOUBLE) *
-          CASE WHEN greatest(width, height) <= 1024 THEN CAST(1.0 AS DOUBLE)
-            ELSE CAST(1024 AS DOUBLE) / CAST(greatest(width, height) AS DOUBLE)
-          END) AS INTEGER) AS out_width,
-        CAST(floor(CAST(height AS DOUBLE) *
-          CASE WHEN greatest(width, height) <= 1024 THEN CAST(1.0 AS DOUBLE)
-            ELSE CAST(1024 AS DOUBLE) / CAST(greatest(width, height) AS DOUBLE)
-          END) AS INTEGER) AS out_height
-      FROM d ORDER BY asset_id""",
-    "q41_asof_click_attribution" -> """
-      WITH clicks AS (
-        SELECT user_id, CAST(ts AS TIMESTAMP) AS cts, max(event_id) AS click_id
-        FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-      p AS (
-        SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        FROM events WHERE event_type = 'purchase')
-      SELECT p.event_id, p.user_id,
-        coalesce(c.click_id, -1) AS click_id,
-        coalesce(epoch_us(p.pts) - epoch_us(c.cts), -1) AS gap_us
-      FROM p ASOF LEFT JOIN clicks c
-        ON p.user_id = c.user_id AND p.pts >= c.cts
-      ORDER BY event_id""",
-    "q44_asof_native" -> """
-      WITH clicks AS (
-        SELECT user_id, CAST(ts AS TIMESTAMP) AS cts, max(event_id) AS click_id
-        FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-      p AS (
-        SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-        FROM events WHERE event_type = 'purchase')
-      SELECT p.event_id, p.user_id,
-        coalesce(c.click_id, -1) AS click_id,
-        coalesce(epoch_us(p.pts) - epoch_us(c.cts), -1) AS gap_us
-      FROM p ASOF LEFT JOIN clicks c
-        ON p.user_id = c.user_id AND p.pts >= c.cts
-      ORDER BY event_id""",
-    "q42_range_prior_clicks" -> """
-      SELECT p.event_id, p.user_id,
-        count(c.cts) AS n_prior_clicks,
-        coalesce(CAST(sum(CAST(c.value AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_click_value
-      FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS pts
-            FROM events WHERE event_type = 'purchase') p
-      LEFT JOIN (SELECT user_id, CAST(ts AS TIMESTAMP) AS cts, value
-                 FROM events WHERE event_type = 'click') c
-        ON c.user_id = p.user_id
-          AND c.cts >= p.pts - INTERVAL 1 HOUR AND c.cts < p.pts
-      GROUP BY p.event_id, p.user_id
-      ORDER BY event_id""",
-    "q70_stream_range_join" -> """
-      SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
-        epoch_us(CAST(p.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP)) AS gap_us
-      FROM events p JOIN events c
-        ON c.user_id = p.user_id
-       AND CAST(c.ts AS TIMESTAMP) >= CAST(p.ts AS TIMESTAMP) - INTERVAL 1 HOUR
-       AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
-      WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-      ORDER BY purchase_id, click_id""",
-    "q71_salted_join" -> """
-      SELECT c_mktsegment, count(*) AS n_orders,
-        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY 1 ORDER BY c_mktsegment""",
-    "q72_pii_redaction" -> """
-      WITH inj AS (
-        SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR)
-          || '@example.com from host 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-          || '.7 or call +1415555' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-        FROM documents)
-      SELECT doc_id,
-        CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        CAST(len(regexp_extract_all(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
-        CAST(len(regexp_extract_all(t, '\+\d{7,15}\b')) AS BIGINT) AS n_phones,
-        md5(regexp_replace(regexp_replace(regexp_replace(t,
-          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-          '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
-          '\+\d{7,15}\b', '[PHONE]', 'g')) AS redacted_hash
-      FROM inj ORDER BY doc_id""",
-    "q73_repetition_stats" -> """
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents),
-      tg AS (
-        SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 2),
-          i -> array_to_string(t[i:i+2], ' '))) AS gram
-        FROM toks WHERE len(t) >= 3),
-      cnt AS (SELECT doc_id, gram, count(*) AS c FROM tg GROUP BY 1, 2)
-      SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams, count(*) AS n_distinct,
-        CAST(max(c) AS BIGINT) AS top_count,
-        round(CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 4) AS top_frac
-      FROM cnt GROUP BY doc_id ORDER BY doc_id""",
-    "q43_interval_join_binned" -> """
-      WITH iv AS (
-        SELECT event_id AS interval_id,
-          CAST(ts AS TIMESTAMP) - INTERVAL 5 MINUTE AS lo,
-          CAST(ts AS TIMESTAMP) + INTERVAL 5 MINUTE AS hi
-        FROM events WHERE event_type = 'error' AND user_id < 10),
-      pt AS (SELECT CAST(ts AS TIMESTAMP) AS ts, value
-             FROM events WHERE event_type = 'view')
-      SELECT iv.interval_id,
-        count(pt.ts) AS n_views,
-        coalesce(CAST(sum(CAST(pt.value AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_view_value
-      FROM iv LEFT JOIN pt ON pt.ts >= iv.lo AND pt.ts < iv.hi
-      GROUP BY iv.interval_id ORDER BY interval_id""",
-    "q01_pricing_summary" -> """
-      SELECT l_returnflag, l_linestatus,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-        CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / count(*) AS avg_qty,
-        CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_disc,
-        count(*) AS count_order
-      FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-    "q02_filter_pushdown" -> """
-      SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-      ORDER BY l_orderkey, l_linenumber""",
-    "q03_star_join_revenue" -> """
-      SELECT r_name, n_name,
-        CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue,
-        count(DISTINCT o_orderkey) AS n_orders
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation ON c_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-    "q245_regional_revenue" -> """
-      SELECT n_name,
-        CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-          AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS revenue,
-        count(DISTINCT o_orderkey) AS n_orders
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN customer ON o_custkey = c_custkey
-        AND c_nationkey = s_nationkey
-      JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      WHERE r_name = 'ASIA'
-        AND o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o_orderdate < TIMESTAMP '1998-01-01'
-      GROUP BY n_name ORDER BY n_name""",
-    "q04_left_join_enrich" -> """
-      SELECT o_orderkey, o_totalprice,
-        coalesce(c_name, 'Indefinido') AS cust_name,
-        coalesce(c_mktsegment, 'Indefinido') AS mktsegment
-      FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-      ORDER BY o_orderkey""",
-    "q05_anti_join_orders" -> """
-      SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
-      WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-      ORDER BY o_orderkey""",
-    "q06_semi_join_suppliers" -> """
-      SELECT s_suppkey, s_name FROM supplier
-      WHERE EXISTS (SELECT 1 FROM lineitem
-                    WHERE l_suppkey = s_suppkey AND l_quantity > 45)
-      ORDER BY s_suppkey""",
-    "q07_distinct_segments" -> """
-      SELECT DISTINCT c_nationkey, c_mktsegment FROM customer
-      ORDER BY c_nationkey, c_mktsegment""",
-    "q08_rollup_acctbal" -> """
-      SELECT coalesce(c_mktsegment, '(all)') AS mktsegment,
-        coalesce(c_nationkey, -1) AS nationkey,
-        count(*) AS n_cust,
-        CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_acctbal,
-        CAST(GROUPING(c_mktsegment, c_nationkey) AS BIGINT) AS gid
-      FROM customer GROUP BY ROLLUP(c_mktsegment, c_nationkey)
-      ORDER BY gid, mktsegment, nationkey""",
-    "q09_cube_orders" -> """
-      SELECT coalesce(o_orderpriority, '(all)') AS priority,
-        coalesce(o_orderstatus, '(all)') AS status,
-        count(*) AS n_orders,
-        CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_total
-      FROM orders GROUP BY CUBE(o_orderpriority, o_orderstatus)
-      ORDER BY priority, status""",
-    "q10_latest_event_per_user" -> """
-      SELECT user_id, event_id, event_type, value FROM events
-      QUALIFY row_number() OVER (PARTITION BY user_id
-        ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) = 1
-      ORDER BY user_id""",
-    "q11_running_totals" -> """
-      SELECT user_id, event_id,
-        CAST(row_number() OVER w AS BIGINT) AS rn,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id
-          ORDER BY CAST(ts AS TIMESTAMP), event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-      ORDER BY user_id, rn""",
-    "q12_union_nationkeys" -> """
-      SELECT c_nationkey AS nationkey FROM customer
-      UNION SELECT s_nationkey FROM supplier ORDER BY nationkey""",
-    "q13_except_orderkeys" -> """
-      SELECT o_orderkey AS orderkey FROM orders
-      EXCEPT SELECT l_orderkey FROM lineitem ORDER BY orderkey""",
-    "q14_topk_lineitems" -> """
-      SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""",
-    "q15_sanitize_extract" -> """
-      SELECT event_id,
-        coalesce(TRY_CAST(regexp_extract(
-          regexp_replace(props, '"(-?INF|NaN)"', 'null', 'g'),
-          '"k":\s*(-?\d+)', 1) AS BIGINT), -1) AS k_val
-      FROM events ORDER BY event_id""",
-    "q16_period_rollup" -> """
-      SELECT CAST(year(l_shipdate) AS BIGINT) AS ano_ref,
-        CAST(month(l_shipdate) AS BIGINT) AS mes_ref,
-        strftime(make_date(CAST(year(l_shipdate) AS INT), CAST(month(l_shipdate) AS INT), 1), '%Y-%m-%d') AS data_competencia,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-        count(*) AS n_items
-      FROM lineitem GROUP BY 1, 2, 3 ORDER BY ano_ref, mes_ref""",
-    "q17_grouping_sets" -> """
-      SELECT coalesce(r_name, '(all)') AS region_name,
-        coalesce(n_name, '(all)') AS nation_name,
-        count(*) AS n_cust,
-        CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_acctbal
-      FROM customer
-      JOIN nation ON c_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      GROUP BY GROUPING SETS ((r_name, n_name), (r_name), ())
-      ORDER BY region_name NULLS FIRST, nation_name NULLS FIRST""",
-    "q18_incremental_antijoin" -> """
-      SELECT event_id, user_id, event_type FROM events e
-      WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '2024-01-10' AND NOT EXISTS (
-        SELECT 1 FROM events h
-        WHERE CAST(h.ts AS TIMESTAMP) < TIMESTAMP '2024-01-10'
-          AND h.user_id = e.user_id AND h.event_type = e.event_type)
-      ORDER BY event_id""",
-    "q19_conform_schema" -> """
-      SELECT CAST(event_id AS BIGINT) AS event_id,
-        coalesce(event_type, 'Indefinido') AS event_type,
-        coalesce(TRY_CAST(value AS DOUBLE), 0.0) AS value,
-        CAST(0 AS BIGINT) AS missing_col
-      FROM events ORDER BY event_id""",
-    "q20_dedup_exact" -> """
-      SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-        count(*) AS n_copies
-      FROM documents GROUP BY md5(text) ORDER BY keep_id""",
-    "q21_minhash_lsh_pairs" -> """
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      sh AS (
-        SELECT doc_id, list_distinct([array_to_string(tk[i:i+2], ' ')
-          for i in range(1, len(tk) - 1)]) AS s
-        FROM toks WHERE len(tk) >= 3),
-      sig AS (
-        SELECT doc_id, s,
-          flatten([[list_min([md5(CAST(sd AS VARCHAR) || '|' || x)[j*4+1 : j*4+4]
-            for x in s]) for j in range(0, 8)] for sd in range(0, 2)]) AS sg
-        FROM sh),
-      banded AS (
-        SELECT doc_id, s, band,
-          md5(array_to_string(sg[band*4+1:band*4+4], '|')) AS bucket
-        FROM sig, range(0, 4) r(band)),
-      cand AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          first(a.s) AS sa, first(b.s) AS sb
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id)
-      SELECT id_a, id_b,
-        round(CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
-              CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE), 4) AS jaccard
-      FROM cand
-      WHERE CAST(len(list_intersect(sa, sb)) AS DOUBLE) /
-            CAST(len(list_distinct(list_concat(sa, sb))) AS DOUBLE) >= 0.5
-      ORDER BY id_a, id_b""",
-    "q22_jaccard_pairs_topk" -> """
-      WITH sh AS (
-        SELECT doc_id, lang, source,
-          list_distinct([array_to_string(tk[i:i+2], ' ')
-            for i in range(1, len(tk) - 1)]) AS s
-        FROM (SELECT doc_id, lang, source,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents)
-        WHERE len(tk) >= 3),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-          CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS j
-        FROM sh a JOIN sh b
-          ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
-      SELECT id_a, id_b, round(j, 4) AS jaccard FROM pairs
-      ORDER BY j DESC, id_a, id_b LIMIT 100""",
-    "q24_cosine_pairs_topk" -> """
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-          CAST(b.embedding AS DOUBLE[])), 4) AS cosine
-      FROM embeddings a JOIN embeddings b
-        ON a.label = b.label AND a.vec_id < b.vec_id
-      ORDER BY round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        CAST(b.embedding AS DOUBLE[])), 6) DESC, id_a, id_b
-      LIMIT 100""",
-    "q25_ann_bruteforce_topk" -> """
-      WITH scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
-          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-            CAST(c.embedding AS DOUBLE[])) AS cos
-        FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 10)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
-      FROM scored
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q26_ann_lsh_topk" -> """
-      WITH b AS (
-        SELECT vec_id, embedding,
-          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END +
-           CASE WHEN embedding[9] >= 0 THEN 2 ELSE 0 END +
-           CASE WHEN embedding[17] >= 0 THEN 4 ELSE 0 END +
-           CASE WHEN embedding[25] >= 0 THEN 8 ELSE 0 END +
-           CASE WHEN embedding[33] >= 0 THEN 16 ELSE 0 END) AS bucket
-        FROM embeddings),
-      probes AS (
-        SELECT vec_id, embedding,
-          unnest([xor(bucket, m) FOR m IN
-            [0, 1, 2, 4, 8, 16, 3, 5, 9, 17, 6, 10, 18, 12, 20, 24]]) AS pb
-        FROM b WHERE vec_id < 10),
-      scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
-          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-            CAST(c.embedding AS DOUBLE[])) AS cos
-        FROM probes q JOIN b c ON q.pb = c.bucket AND c.vec_id != q.vec_id)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
-      FROM scored
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q62_ann_multiprobe_topk" -> """
-      WITH b AS (
-        SELECT vec_id, embedding,
-          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END +
-           CASE WHEN embedding[9] >= 0 THEN 2 ELSE 0 END +
-           CASE WHEN embedding[17] >= 0 THEN 4 ELSE 0 END +
-           CASE WHEN embedding[25] >= 0 THEN 8 ELSE 0 END +
-           CASE WHEN embedding[33] >= 0 THEN 16 ELSE 0 END) AS bucket
-        FROM embeddings),
-      probes AS (
-        SELECT vec_id, embedding,
-          unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4),
-                  xor(bucket, 8), xor(bucket, 16)]) AS pb
-        FROM b WHERE vec_id < 10),
-      scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
-          list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-            CAST(c.embedding AS DOUBLE[])) AS cos
-        FROM probes q JOIN b c ON q.pb = c.bucket AND c.vec_id != q.vec_id)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
-      FROM scored
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q37_ann_ivf_topk" -> """
-      WITH cent AS (
-        SELECT label AS cell, embedding AS cvec FROM embeddings
-        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
-      assign AS (
-        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
-        FROM embeddings e CROSS JOIN cent c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) = 1),
-      q AS (SELECT item_id AS query_id, vec AS qvec, cell
-            FROM assign WHERE item_id < 10),
-      scored AS (
-        SELECT q.query_id, a.item_id,
-          list_cosine_similarity(CAST(q.qvec AS DOUBLE[]),
-            CAST(a.vec AS DOUBLE[])) AS cos
-        FROM assign a JOIN q ON a.cell = q.cell AND a.item_id != q.query_id)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
-      FROM scored
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q103_ann_ivf_probe2" -> """
-      WITH cent AS (
-        SELECT label AS cell, embedding AS cvec FROM embeddings
-        QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1),
-      assign AS (
-        SELECT e.vec_id AS item_id, e.embedding AS vec, c.cell
-        FROM embeddings e CROSS JOIN cent c
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) = 1),
-      probes AS (
-        SELECT e.vec_id AS query_id, e.embedding AS qvec, c.cell
-        FROM embeddings e CROSS JOIN cent c
-        WHERE e.vec_id < 10
-        QUALIFY row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            CAST(c.cvec AS DOUBLE[])), 6) DESC, c.cell) <= 2),
-      scored AS (
-        SELECT q.query_id, a.item_id,
-          list_cosine_similarity(CAST(q.qvec AS DOUBLE[]),
-            CAST(a.vec AS DOUBLE[])) AS cos
-        FROM assign a JOIN probes q ON a.cell = q.cell
-          AND a.item_id != q.query_id)
-      SELECT query_id, item_id,
-        CAST(row_number() OVER w AS BIGINT) AS rank, round(cos, 4) AS cosine
-      FROM scored
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    "q105_temperature_mix" -> """
-      WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-      s AS (
-        SELECT source, n_docs,
-          CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS share
-        FROM c),
-      m AS (SELECT source, n_docs, share, sqrt(share) AS sm FROM s)
-      SELECT source, n_docs, share, sm / max(sm) OVER () AS mix_weight
-      FROM m ORDER BY source""",
-    // BM25 with the rational (log-free) Robertson idf; every arithmetic
-    // step mirrors the engine's two-operand IEEE op order exactly, and the
-    // k1+1 numerator is written as (1.2 + 1.0) so both engines derive the
-    // identical double from the same literals.
-    "q106_bm25_terms" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-        FROM documents),
-      dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-      stats AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS tot FROM dl),
-      tf AS (SELECT doc_id, tok AS term, count(*) AS tf FROM toks
-             WHERE tok IN ('data', 'query', 'stream') GROUP BY 1, 2),
-      dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      scored AS (
-        SELECT t.term, t.doc_id, t.tf,
-          ((CAST(s.n_docs AS DOUBLE) - CAST(f.df AS DOUBLE) + 0.5) /
-            (CAST(f.df AS DOUBLE) + 0.5) + 1.0) *
-          (CAST(t.tf AS DOUBLE) * (1.2 + 1.0) /
-            (CAST(t.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(d.dl AS DOUBLE) /
-              (CAST(s.tot AS DOUBLE) / CAST(s.n_docs AS DOUBLE))))) AS bm25
-        FROM tf t JOIN dl d ON t.doc_id = d.doc_id
-        JOIN dfreq f ON t.term = f.term CROSS JOIN stats s)
-      SELECT term, CAST(row_number() OVER w AS BIGINT) AS rank, doc_id, tf,
-        round(bm25, 4) AS bm25
-      FROM scored WINDOW w AS (PARTITION BY term ORDER BY bm25 DESC, doc_id)
-      QUALIFY rank <= 5 ORDER BY term, rank""",
-    "q107_containment_pairs" -> """
-      WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      sh AS (
-        SELECT doc_id, unnest(list_distinct([array_to_string(tk[i:i+2], ' ')
-          for i in range(1, len(tk) - 1)])) AS s
-        FROM toks WHERE len(tk) >= 3),
-      keepers AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 50),
-      inf AS (SELECT sh.doc_id, sh.s FROM sh JOIN keepers USING (s)),
-      sizes AS (SELECT doc_id AS id_a, count(*) AS size_a FROM inf GROUP BY 1),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-        FROM inf a JOIN inf b ON a.s = b.s AND a.doc_id != b.doc_id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b, n_shared, size_a,
-        round(CAST(n_shared AS DOUBLE) / CAST(size_a AS DOUBLE), 4) AS containment
-      FROM inter JOIN sizes USING (id_a)
-      WHERE CAST(n_shared AS DOUBLE) / CAST(size_a AS DOUBLE) >= 0.5
-      ORDER BY id_a, id_b""",
-    "q108_gopher_rules" -> """
-      WITH m AS (
-        SELECT doc_id,
-          len(tk) AS n_words,
-          CAST(len(array_to_string(tk, '')) AS DOUBLE) /
-            CAST(len(tk) AS DOUBLE) AS mean_word_len,
-          CAST(len([w for w in tk if regexp_matches(w, '[a-z]')]) AS DOUBLE) /
-            CAST(len(tk) AS DOUBLE) AS alpha_frac,
-          ((len(text) - len(replace(text, '#', ''))) +
-            (len(text) - len(replace(text, '...', ''))) / 3) /
-            CAST(len(tk) AS DOUBLE) AS symbol_ratio,
-          len(list_intersect(tk,
-            ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'])) AS stop_hits
-        FROM (SELECT doc_id, text,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents))
-      SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-        round(mean_word_len, 4) AS mean_word_len,
-        round(alpha_frac, 4) AS alpha_frac,
-        round(symbol_ratio, 4) AS symbol_ratio,
-        CAST(stop_hits AS BIGINT) AS stop_hits,
-        n_words >= 20 AND n_words <= 100000 AS words_ok,
-        mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS word_len_ok,
-        alpha_frac > 0.8 AS alpha_ok,
-        symbol_ratio < 0.1 AS symbol_ok,
-        stop_hits >= 2 AS stop_ok,
-        n_words >= 20 AND n_words <= 100000
-          AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-          AND alpha_frac > 0.8 AND symbol_ratio < 0.1
-          AND stop_hits >= 2 AS keep
-      FROM m ORDER BY doc_id""",
-    // Semantic dedup: cosine-threshold edges (boundary margin measured at
-    // 7e-6 minimum across SFs — see q111's scaladoc), recursive-CTE
-    // components, min-id representative.
-    "q111_semantic_dedup" -> """
-      WITH RECURSIVE p AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM embeddings a JOIN embeddings b
-          ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-          CAST(b.embedding AS DOUBLE[])) >= 0.25),
-      sym AS (
-        SELECT id_a AS s, id_b AS d FROM p
-        UNION ALL SELECT id_b, id_a FROM p),
-      reach(id, r) AS (
-        SELECT DISTINCT s, s FROM sym
-        UNION
-        SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s),
-      comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
-      SELECT component, min(id) AS keep_id, count(*) AS n_members
-      FROM comp GROUP BY component ORDER BY component""",
-    "q112_temperature_rebalance" -> raw"""
-      WITH cnt AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-      sh AS (
-        SELECT source,
-          CAST(n_docs AS DOUBLE) / CAST(sum(n_docs) OVER () AS DOUBLE) AS share
-        FROM cnt),
-      m AS (SELECT source, sqrt(share) AS sm FROM sh),
-      w AS (SELECT source, sm / max(sm) OVER () * 2.0 AS wt FROM m),
-      j AS (
-        SELECT d.doc_id, d.source, w.wt,
-          ${hashPosSql("d.source", "CAST(d.doc_id AS VARCHAR)")} AS h
-        FROM documents d JOIN w ON d.source = w.source),
-      c AS (
-        SELECT doc_id, source,
-          CAST(floor(wt) AS BIGINT) +
-            CASE WHEN h < CAST(floor((wt - floor(wt)) * 4294967296.0) AS BIGINT)
-                 THEN 1 ELSE 0 END AS copies
-        FROM j)
-      SELECT doc_id, source, unnest(generate_series(0, copies - 1)) AS copy
-      FROM c WHERE copies > 0
-      ORDER BY doc_id, copy""",
-    // The identity-preservation oracle: three distinct engine paths must
-    // reproduce the events table EXACTLY — q113 (streaming dedup of a
-    // doubled delivery), q116 (compaction rewrite), q117 (versioned-CSV
-    // export -> newest-pick -> import).
-    "q113_stream_dedup" -> eventsIdentityOracle,
-    "q116_compaction_roundtrip" -> eventsIdentityOracle,
-    "q117_versioned_csv_roundtrip" -> eventsIdentityOracle,
-    "q118_jdbc_roundtrip" -> eventsIdentityOracle,
-    "q120_incremental_load" -> eventsIdentityOracle,
-    // The streaming sessionizer must reproduce the batch lag/sum sessions
-    // exactly (same gap, same (ts, event_id) tiebreak).
-    "q119_stream_sessionize" -> """
-      WITH g AS (
-        SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-          lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-            (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_us
-        FROM events),
-      m AS (
-        SELECT user_id, event_id, us,
-          CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-            THEN 1 ELSE 0 END AS is_new
-        FROM g),
-      sess AS (
-        SELECT user_id, us,
-          sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        FROM m)
-      SELECT user_id, CAST(min(us) AS BIGINT) AS start_us,
-        CAST(max(us) AS BIGINT) AS end_us, count(*) AS n_events
-      FROM sess GROUP BY user_id, sid
-      ORDER BY user_id, start_us""",
-    // Quantized shortlist scored by exact integer dot (both engines
-    // quantize and sum identically — no float until the re-rank).
-    "q114_quantized_ann" -> """
-      WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings),
-      s8 AS (
-        SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS ma
-        FROM v),
-      q8 AS (
-        SELECT vec_id,
-          CASE WHEN ma = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
-               ELSE list_transform(e, x -> CAST(round(x / (ma / 127.0)) AS BIGINT))
-          END AS qv
-        FROM s8),
-      short AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS item_id,
-          CAST(list_sum([q.qv[i] * c.qv[i]
-            for i in range(1, len(q.qv) + 1)]) AS BIGINT) AS qdot
-        FROM q8 q JOIN q8 c ON c.vec_id != q.vec_id
-        WHERE q.vec_id < 10
-        QUALIFY row_number() OVER (PARTITION BY q.vec_id
-          ORDER BY qdot DESC, c.vec_id) <= 50),
-      rr AS (
-        SELECT s.query_id, s.item_id, s.qdot,
-          list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]),
-            CAST(ce.embedding AS DOUBLE[])) AS cos
-        FROM short s JOIN embeddings qe ON qe.vec_id = s.query_id
-        JOIN embeddings ce ON ce.vec_id = s.item_id)
-      SELECT query_id, item_id, CAST(row_number() OVER w AS BIGINT) AS rank,
-        qdot, round(cos, 4) AS cosine
-      FROM rr
-      WINDOW w AS (PARTITION BY query_id ORDER BY round(cos, 6) DESC, item_id)
-      QUALIFY rank <= 5 ORDER BY query_id, rank""",
-    // Curation v2 capstone: gopher keep -> containment drop (host wins)
-    // -> source-grouped hash split; boundaries from Sampling.splitBounds.
-    "q115_curation_v2" -> {
-      val b = graft.ops.Sampling.splitBounds(Seq(0.8, 0.1, 0.1))
-      raw"""
-      WITH base AS (
-        SELECT doc_id, source, text,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        FROM documents),
-      m AS (
-        SELECT doc_id, source, tk,
-          len(tk) AS n_words,
-          CAST(len(array_to_string(tk, '')) AS DOUBLE) /
-            CAST(len(tk) AS DOUBLE) AS mean_word_len,
-          CAST(len([w for w in tk if regexp_matches(w, '[a-z]')]) AS DOUBLE) /
-            CAST(len(tk) AS DOUBLE) AS alpha_frac,
-          ((len(text) - len(replace(text, '#', ''))) +
-            (len(text) - len(replace(text, '...', ''))) / 3) /
-            CAST(len(tk) AS DOUBLE) AS symbol_ratio,
-          len(list_intersect(tk,
-            ['the', 'a', 'data', 'table', 'row', 'key', 'value', 'join'])) AS stop_hits
-        FROM base),
-      kept AS (
-        SELECT doc_id, source, tk FROM m
-        WHERE n_words >= 20 AND n_words <= 100000
-          AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-          AND alpha_frac > 0.8 AND symbol_ratio < 0.1 AND stop_hits >= 2),
-      sh AS (
-        SELECT doc_id, unnest(list_distinct([array_to_string(tk[i:i+2], ' ')
-          for i in range(1, len(tk) - 1)])) AS s
-        FROM kept WHERE len(tk) >= 3),
-      keepers AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 50),
-      inf AS (SELECT sh.doc_id, sh.s FROM sh JOIN keepers USING (s)),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM inf GROUP BY 1),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-        FROM inf a JOIN inf b ON a.s = b.s AND a.doc_id != b.doc_id
-        GROUP BY 1, 2),
-      drops AS (
-        SELECT DISTINCT id_a AS doc_id
-        FROM inter JOIN sizes sa ON inter.id_a = sa.doc_id
-        JOIN sizes sb ON inter.id_b = sb.doc_id
-        WHERE CAST(n_shared AS DOUBLE) / CAST(sa.sz AS DOUBLE) >= 0.8
-          AND (sb.sz > sa.sz OR (sb.sz = sa.sz AND id_b < id_a))),
-      surv AS (
-        SELECT k.doc_id, k.source FROM kept k
-        WHERE k.doc_id NOT IN (SELECT doc_id FROM drops))
-      SELECT doc_id, source,
-        CASE WHEN ${hashPosSql("'split'", "source")} < ${b(0)} THEN 'train'
-             WHEN ${hashPosSql("'split'", "source")} < ${b(1)} THEN 'val'
-             ELSE 'test' END AS split
-      FROM surv ORDER BY doc_id"""
-    },
-    "q27_lang_detect" -> """
-      WITH sc AS (
-        SELECT lang,
           len(list_filter(tk, t -> t IN ('the','a','of','and','to'))) AS s_en,
           len(list_filter(tk, t -> t IN ('el','la','de','que','y'))) AS s_es,
           len(list_filter(tk, t -> t IN ('le','la','de','et','un'))) AS s_fr,
-          len(list_filter(tk, t -> t IN ('der','die','und','das','ein'))) AS s_de,
+          len(list_filter(tk, t -> t IN ('der','die','und','das','ein')))
+            AS s_de,
           len(list_filter(tk, t -> t IN ('的','了','是','我','不'))) AS s_zh
-        FROM (SELECT lang,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents)),
-      pred AS (
-        SELECT lang, CASE
-          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0 THEN 'en'
-          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0 THEN 'es'
-          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0 THEN 'fr'
-          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0 THEN 'de'
-          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0 THEN 'zh'
+        FROM (SELECT doc_id,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+          FROM documents)),
+      gheur AS (
+        SELECT doc_id, CASE
+          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0
+            THEN 'en'
+          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0
+            THEN 'es'
+          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0
+            THEN 'fr'
+          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0
+            THEN 'de'
+          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0
+            THEN 'zh'
           ELSE 'und' END AS lang_pred
-        FROM sc)
-      SELECT lang, lang_pred, count(*) AS n FROM pred
-      GROUP BY lang, lang_pred ORDER BY lang, lang_pred""",
-    "q28_quality_scores" -> """
-      WITH f AS (
+        FROM gsc),
+      gst AS (
+        SELECT d.source,
+          p.pred_class = 'en' AS model_keep,
+          h.lang_pred = 'en' AS heur_keep,
+          coalesce(d.lang, 'und') = 'en' AS true_en
+        FROM documents d JOIN gpred p ON d.doc_id = p.doc_id
+        JOIN gheur h ON d.doc_id = h.doc_id)
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(CASE WHEN model_keep THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_model_en,
+        CAST(sum(CASE WHEN heur_keep THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_heur_en,
+        CAST(sum(CASE WHEN true_en THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_true_en,
+        CAST(sum(CASE WHEN model_keep <> heur_keep THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_disagree,
+        CAST(sum(CASE WHEN model_keep = true_en THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_model_correct,
+        CAST(sum(CASE WHEN heur_keep = true_en THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_heur_correct
+      FROM gst GROUP BY source ORDER BY source"""),
+    // q329: Q16 written the classic way (NOT IN subquery); the engine
+    // decorrelates into a broadcast anti join before the distinct agg
+    Q("q329_q16_supplier_cnt", q329, Extra, """
+      SELECT p_brand, p_type, p_size,
+        CAST(count(DISTINCT ps.l_suppkey) AS BIGINT) AS supplier_cnt
+      FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
+      JOIN part ON p_partkey = ps.l_partkey
+      WHERE p_brand <> 'Brand#1' AND p_type <> 'MEDIUM'
+        AND p_size IN (1, 4, 7, 10, 15, 23, 45, 49)
+        AND ps.l_suppkey NOT IN (
+          SELECT s_suppkey FROM supplier
+          WHERE s_acctbal < 0 AND s_suppkey IS NOT NULL)
+      GROUP BY p_brand, p_type, p_size
+      ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""),
+    // q330: Q15 written the classic way (revenue view probed by its own
+    // scalar max); the engine decorrelates into a broadcast equi-join
+    // on the decimal revenue — ties preserved on both sides
+    Q("q330_q15_top_supplier", q330, Extra, """
+      WITH revenue AS (
+        SELECT l_suppkey AS supplier_no,
+          sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6)))
+            AS total_rev
+        FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+          AND l_shipdate < TIMESTAMP '1996-04-01'
+        GROUP BY 1)
+      SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
+      FROM supplier JOIN revenue ON s_suppkey = supplier_no
+      WHERE total_rev = (SELECT max(total_rev) FROM revenue)
+      ORDER BY s_suppkey"""),
+    // q331: Q11 written the classic way (HAVING > scalar subquery over
+    // the same grouped relation); the engine broadcasts the scalar back
+    // over the checkpointed per-part frame. Identical bounded-precision
+    // decimal compare on both sides: 2·val·n > 3·total at (26,2)×(8,0).
+    Q("q331_q11_important_parts", q331, Extra, """
+      WITH pv AS (
+        SELECT l_partkey,
+          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
+            AS DECIMAL(26,2)) AS val
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        WHERE r_name = 'EUROPE'
+        GROUP BY l_partkey)
+      SELECT l_partkey, CAST(val AS DOUBLE) AS value
+      FROM pv
+      WHERE val * 2 * (SELECT CAST(count(*) AS DECIMAL(8,0)) FROM pv)
+          > (SELECT CAST(sum(val) AS DECIMAL(26,2)) FROM pv) * 3
+      ORDER BY value DESC, l_partkey"""),
+    // q332: first-batch-wins over the q306 fixture — batch b holds
+    // doc_id ≡ b (mod 3); a canonical key is claimed by the earliest
+    // batch containing it, by the min doc_id within that batch
+    Q("q332_url_frontier_stream", q332, Extra, s"""
+      WITH $urlFixtureCtes,
+      fc AS (
+        SELECT doc_id, doc_id % 3 AS b, curl FROM ucanon
+        WHERE curl IS NOT NULL),
+      fbat AS (SELECT curl, min(b) AS b FROM fc GROUP BY 1),
+      fcl AS (
+        SELECT c.curl, min(c.doc_id) AS claimed_by, c.b
+        FROM fc c JOIN fbat f ON c.curl = f.curl AND c.b = f.b
+        GROUP BY c.curl, c.b)
+      SELECT curl AS canonical_url, claimed_by, CAST(b AS BIGINT) AS batch
+      FROM fcl ORDER BY canonical_url"""),
+    // q333: Q7 written the classic way (nation pair disjunction in the
+    // WHERE); the engine broadcasts both nation legs and filters the
+    // join output — identical groups either way
+    Q("q333_q7_trade_volume", q333, Extra, """
+      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        year(l_shipdate) AS l_year, CAST(count(*) AS BIGINT) AS n,
+        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+          AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN customer ON o_custkey = c_custkey
+      JOIN nation n1 ON s_nationkey = n1.n_nationkey
+      JOIN nation n2 ON c_nationkey = n2.n_nationkey
+      WHERE (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_8')
+         OR (n1.n_name = 'NATION_8' AND n2.n_name = 'NATION_3')
+      GROUP BY 1, 2, 3
+      ORDER BY supp_nation, cust_nation, l_year"""),
+    // q334: Q19 written the classic way — the OR of three mixed
+    // (part × lineitem) clauses in one WHERE
+    Q("q334_q19_disjunctive_revenue", q334, Extra, """
+      SELECT CAST(count(*) AS BIGINT) AS n,
+        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+          AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+      FROM lineitem JOIN part ON p_partkey = l_partkey
+      WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+          AND l_quantity BETWEEN 1 AND 20)
+         OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+          AND l_quantity BETWEEN 10 AND 30)
+         OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
+          AND l_quantity BETWEEN 20 AND 40)"""),
+    // q335/q336: ONE oracle string for the batch sketch and its
+    // streamed maintainer — bin-wise sums are batching-invariant
+    Q("q335_qbin_quantiles", q335, Extra, qbinOracle),
+    Q("q336_qbin_stream", q336, Extra, qbinOracle),
+    // q337: the grouped QBIN — per-source cumulative counts and the
+    // same rounded interpolation tree, every CTE keyed by source
+    // q337/q342: ONE oracle string for the batch grouped sketch and its
+    // streamed maintainer — per-group bin-wise sums are batching-
+    // invariant exactly (the q335/q336 discipline, grouped flavor)
+    Q("q337_qbin_by_source", q337, Extra, qbinByOracle),
+    // q338: q328's report card with the NB chain instantiated on the
+    // char-3-gram tokenizer (charGramListSql) — the heuristic CTEs are
+    // the q328 strings verbatim (shared rule, different model)
+    Q("q338_charngram_lang_gate", q338, Extra, raw"""
+      WITH cgtrain AS (
+        SELECT doc_id, lang AS class, text FROM documents
+        WHERE doc_id % 2 = 0 AND lang IS NOT NULL),
+      cgscore_in AS (SELECT doc_id, text FROM documents),
+      ${nbChainCtes("cg", "cgtrain", "cgscore_in", charGramListSql _)},
+      cgsc AS (
         SELECT doc_id,
-          CAST(len(tk) AS DOUBLE) AS nt,
-          CAST(len(list_distinct(tk)) AS DOUBLE) AS nd,
-          CAST(len(text) AS DOUBLE) AS chars,
-          CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) AS alpha,
-          len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS nsw
-        FROM (SELECT doc_id, text,
-          regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents))
-      SELECT doc_id,
-        CAST(nt AS BIGINT) AS n_tokens,
-        CAST(nsw AS BIGINT) AS n_subwords,
-        round(nd / nullif(nt, 0.0), 4) AS distinct_ratio,
-        round((chars - (nt - 1)) / nullif(nt, 0.0), 4) AS mean_token_len,
-        round(alpha / nullif(chars, 0.0), 4) AS alpha_ratio,
-        round(least(greatest(
-          0.4 * least(nt / 50.0, 1.0) +
-          0.3 * coalesce(nd / nullif(nt, 0.0), 0.0) +
-          0.3 * coalesce(alpha / nullif(chars, 0.0), 0.0), 0.0), 1.0), 4) AS quality
-      FROM f ORDER BY doc_id""",
-    "q29_token_stats_by_lang" -> """
-      WITH f AS (
-        SELECT lang,
-          len(regexp_split_to_array(trim(lower(text)), '\s+')) AS nt,
-          len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS ns
-        FROM documents)
-      SELECT lang, count(*) AS n_docs,
-        CAST(sum(nt) AS BIGINT) AS total_tokens,
-        round(CAST(sum(nt) AS DOUBLE) / count(*), 4) AS avg_tokens,
-        CAST(sum(ns) AS BIGINT) AS total_subwords
-      FROM f GROUP BY lang ORDER BY lang""",
-    "q30_fingerprint" -> """
-      SELECT doc_id, md5(array_to_string(list_sort(list_distinct(
-        regexp_split_to_array(trim(lower(text)), '\s+'))), ' ')) AS fingerprint
-      FROM documents ORDER BY doc_id""",
-    "q31_stream_window_hourly" -> """
-      SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS hour_epoch,
-        event_type, count(*) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY hour_epoch, event_type""",
-    "q36_stream_window_agg" -> """
-      SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS hour_epoch,
-        event_type, count(*) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY hour_epoch, event_type""",
-    "q32_sessionize" -> sessionizeOracle,
-    // Spark's native session_window must reproduce the lag/sum rollup
-    "q140_native_session_window" -> sessionizeOracle,
-    "q141_quartile_bins" -> """
-      WITH q AS (
-        SELECT lang, n_chars,
-          CAST(ntile(4) OVER (PARTITION BY lang
-            ORDER BY n_chars, doc_id) AS BIGINT) AS quartile
-        FROM documents)
-      SELECT lang, quartile, count(*) AS n_docs,
-        min(n_chars) AS min_chars, max(n_chars) AS max_chars
-      FROM q GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q143_percentile_ranks" -> """
-      WITH r AS (
-        SELECT lang, doc_id, n_chars,
-          round(percent_rank() OVER w, 6) AS pct_rank,
-          round(cume_dist() OVER w, 6) AS cume
-        FROM documents
-        WINDOW w AS (PARTITION BY lang ORDER BY n_chars, doc_id))
-      SELECT lang, doc_id, n_chars, pct_rank, cume
-      FROM r WHERE doc_id % 25 = 0 ORDER BY lang, doc_id""",
-    "q33_asset_metadata" -> """
-      SELECT doc_id AS asset_id,
-        CASE WHEN doc_id % 3 = 0 THEN 'image'
-             WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
-        source, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        md5(text) AS content_hash
-      FROM documents ORDER BY asset_id""",
-    "q38_token_frequency" -> """
-      WITH toks AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-        FROM documents)
-      SELECT token, count(*) AS n_occurrences,
-        count(DISTINCT doc_id) AS doc_freq
-      FROM toks GROUP BY token
-      ORDER BY n_occurrences DESC, token LIMIT 50""",
-    "q39_length_histogram" -> """
-      SELECT lang, CAST(floor(n_chars / 100.0) AS BIGINT) AS len_bucket,
-        count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-      FROM documents GROUP BY 1, 2 ORDER BY lang, len_bucket""",
-    "q40_stateful_user_totals" -> """
-      SELECT user_id, count(*) AS n,
-        round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 4) AS total
-      FROM events GROUP BY user_id ORDER BY user_id""",
-    "q34_frame_sample" -> """
-      WITH v AS (
-        SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
-        FROM documents WHERE doc_id % 3 = 2),
-      f AS (
-        SELECT doc_id, least(CAST(floor(byte_len / 64.0) AS BIGINT) + 1, 40) AS n_frames
-        FROM v)
-      SELECT doc_id AS asset_id, CAST(unnest(range(0, n_frames, 10)) AS BIGINT) AS frame_idx
-      FROM f ORDER BY asset_id, frame_idx""")
+          len(list_filter(tk, t -> t IN ('the','a','of','and','to'))) AS s_en,
+          len(list_filter(tk, t -> t IN ('el','la','de','que','y'))) AS s_es,
+          len(list_filter(tk, t -> t IN ('le','la','de','et','un'))) AS s_fr,
+          len(list_filter(tk, t -> t IN ('der','die','und','das','ein')))
+            AS s_de,
+          len(list_filter(tk, t -> t IN ('的','了','是','我','不'))) AS s_zh
+        FROM (SELECT doc_id,
+          regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+          FROM documents)),
+      cgheur AS (
+        SELECT doc_id, CASE
+          WHEN s_en = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_en > 0
+            THEN 'en'
+          WHEN s_es = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_es > 0
+            THEN 'es'
+          WHEN s_fr = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_fr > 0
+            THEN 'fr'
+          WHEN s_de = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_de > 0
+            THEN 'de'
+          WHEN s_zh = greatest(s_en, s_es, s_fr, s_de, s_zh) AND s_zh > 0
+            THEN 'zh'
+          ELSE 'und' END AS lang_pred
+        FROM cgsc),
+      cgst AS (
+        SELECT d.source,
+          p.pred_class = 'en' AS model_keep,
+          h.lang_pred = 'en' AS heur_keep,
+          coalesce(d.lang, 'und') = 'en' AS true_en
+        FROM documents d JOIN cgpred p ON d.doc_id = p.doc_id
+        JOIN cgheur h ON d.doc_id = h.doc_id)
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(CASE WHEN model_keep THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_model_en,
+        CAST(sum(CASE WHEN heur_keep THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_heur_en,
+        CAST(sum(CASE WHEN true_en THEN 1 ELSE 0 END) AS BIGINT)
+          AS n_true_en,
+        CAST(sum(CASE WHEN model_keep <> heur_keep THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_disagree,
+        CAST(sum(CASE WHEN model_keep = true_en THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_model_correct,
+        CAST(sum(CASE WHEN heur_keep = true_en THEN 1 ELSE 0 END)
+          AS BIGINT) AS n_heur_correct
+      FROM cgst GROUP BY source ORDER BY source"""),
+    // q339: Q4 written the classic way (EXISTS subquery); the engine
+    // decorrelates into a left-semi join with both filters pushed
+    Q("q339_q4_order_priority", q339, Extra, """
+      SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
+      FROM orders
+      WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+        AND o_orderdate < TIMESTAMP '1996-10-01'
+        AND EXISTS (SELECT 1 FROM lineitem
+          WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+      GROUP BY o_orderpriority
+      ORDER BY o_orderpriority"""),
+    // q340: Q8 written the classic way (conditional numerator over the
+    // all_nations subquery); the engine folds both legs in one pass
+    Q("q340_q8_market_share", q340, Extra, """
+      WITH all_nations AS (
+        SELECT year(o_orderdate) AS o_year,
+          l_extendedprice * (1.0 - l_discount) AS volume,
+          n1.n_name AS supp_nation
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN part ON l_partkey = p_partkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        JOIN region ON n2.n_regionkey = r_regionkey
+        WHERE r_name = 'AMERICA' AND p_type = 'PROMO'
+          AND o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o_orderdate < TIMESTAMP '1998-01-01')
+      SELECT o_year,
+        round(CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_3'
+              THEN volume ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) /
+          CAST(sum(CAST(volume AS DECIMAL(18,6))) AS DOUBLE), 9)
+          AS mkt_share,
+        CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_3' THEN volume
+            ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE) AS nation_volume,
+        CAST(sum(CAST(volume AS DECIMAL(18,6))) AS DOUBLE) AS total_volume
+      FROM all_nations GROUP BY o_year ORDER BY o_year"""),
+    // q341: Q9 written the classic way (profit CTE over the five-way
+    // join); p_retailprice*0.6 stands in for ps_supplycost
+    Q("q341_q9_profit", q341, Extra, """
+      WITH profit AS (
+        SELECT n_name AS nation, year(o_orderdate) AS o_year,
+          l_extendedprice * (1.0 - l_discount)
+            - p_retailprice * 0.6 * l_quantity AS amount
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        WHERE p_name LIKE '%red%')
+      SELECT nation, o_year, CAST(count(*) AS BIGINT) AS n,
+        CAST(sum(CAST(amount AS DECIMAL(18,6))) AS DOUBLE) AS sum_profit
+      FROM profit GROUP BY nation, o_year
+      ORDER BY nation, o_year DESC"""),
+    Q("q342_qbin_by_source_stream", q342, Extra, qbinByOracle),
+    // q343: the post-delete table must hash-equal the anti-join of the
+    // raw documents (the erased id range restated as NOT BETWEEN);
+    // pruning/time-travel facts are required in-query, not here
+    Q("q343_erase_keys", q343, Extra, """
+      SELECT source, coalesce(lang, 'und') AS lang,
+        CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      WHERE doc_id NOT BETWEEN 100 AND 149
+      GROUP BY 1, 2
+      ORDER BY source, lang"""),
+    // q344: q343's erase followed by snapshot expiry — the kept
+    // generation must still hash-equal the anti-join; physical-purge
+    // facts (files gone, expired snapshot refuses, zero leaked keys on
+    // disk) are required in-query
+    Q("q344_erase_then_expire", q344, Extra, """
+      SELECT source, coalesce(lang, 'und') AS lang,
+        CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      WHERE doc_id NOT BETWEEN 200 AND 299
+      GROUP BY 1, 2
+      ORDER BY source, lang"""),
+    // q345: Q3 written the classic way; o_orderpriority stands in for
+    // o_shippriority; ties at the top-10 boundary break on
+    // (o_orderdate, l_orderkey)
+    Q("q345_q3_shipping_priority", q345, Extra, """
+      SELECT l_orderkey, o_orderdate, o_orderpriority,
+        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+          AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+      FROM customer
+      JOIN orders ON c_custkey = o_custkey
+      JOIN lineitem ON l_orderkey = o_orderkey
+      WHERE c_mktsegment = 'BUILDING'
+        AND o_orderdate < TIMESTAMP '1996-03-15'
+        AND l_shipdate > TIMESTAMP '1996-03-15'
+      GROUP BY 1, 2, 3
+      ORDER BY revenue DESC, o_orderdate, l_orderkey
+      LIMIT 10"""),
+    // q346: Q6 — the single-table predicate aggregate
+    Q("q346_q6_forecast_revenue", q346, Extra, """
+      SELECT CAST(sum(CAST(l_extendedprice * l_discount
+          AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+        CAST(count(*) AS BIGINT) AS n_items
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        AND l_shipdate < TIMESTAMP '1997-01-01'
+        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"""),
+    // q347: Q10 — the per-customer rollup and top-20 run before the dim
+    // join on both sides (the dim join is 1:1, top-k commutes with it)
+    Q("q347_q10_returned_items", q347, Extra, """
+      WITH rev AS (
+        SELECT o_custkey,
+          CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+            AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE l_returnflag = 'R'
+          AND o_orderdate >= TIMESTAMP '1996-10-01'
+          AND o_orderdate < TIMESTAMP '1997-01-01'
+        GROUP BY o_custkey
+        ORDER BY revenue DESC, o_custkey LIMIT 20)
+      SELECT c_custkey, c_name, revenue, c_acctbal, n_name
+      FROM rev
+      JOIN customer ON o_custkey = c_custkey
+      JOIN nation ON c_nationkey = n_nationkey
+      ORDER BY revenue DESC, c_custkey"""),
+    // q348: Q12 — l_returnflag ∈ {A,R} stands in for the shipmode IN,
+    // l_linestatus = 'F' for the late-delivery predicate
+    Q("q348_q12_shipmode_priority", q348, Extra, """
+      SELECT l_returnflag AS shipmode,
+        CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+          THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+          THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+      WHERE l_returnflag IN ('A', 'R') AND l_linestatus = 'F'
+        AND l_shipdate >= TIMESTAMP '1996-01-01'
+        AND l_shipdate < TIMESTAMP '1997-01-01'
+      GROUP BY 1 ORDER BY 1"""),
+    // q349: Q14 — conditional numerator and denominator in one pass
+    // (the q340 quotient discipline, single-group flavor)
+    Q("q349_q14_promo_revenue", q349, Extra, """
+      SELECT round(100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
+            THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
+            AS DECIMAL(18,6))) AS DOUBLE)
+          / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+            AS DECIMAL(18,6))) AS DOUBLE), 9) AS promo_pct,
+        CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
+          THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
+          AS DECIMAL(18,6))) AS DOUBLE) AS promo_revenue,
+        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+          AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
+      FROM lineitem JOIN part ON l_partkey = p_partkey
+      WHERE l_shipdate >= TIMESTAMP '1996-09-01'
+        AND l_shipdate < TIMESTAMP '1996-10-01'"""),
+    // q350: the pruned lake read must hash-equal the predicate restated
+    // over the raw documents; the file-skipping facts (skipped > 0,
+    // pruned ≡ full+filter) are required in-query
+    Q("q350_lake_pruned_scan", q350, Extra, """
+      SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id,
+        CAST(sum(n_chars) AS BIGINT) AS sum_chars
+      FROM documents
+      WHERE doc_id >= 100 AND doc_id < 200
+      GROUP BY source ORDER BY source"""),
+    // q351: q343's erasure oracle verbatim — the columnar lane must land
+    // on the same post-delete table as the text lane
+    Q("q351_lake_erase", q351, Extra, """
+      SELECT source, coalesce(lang, 'und') AS lang,
+        CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      WHERE doc_id NOT BETWEEN 100 AND 149
+      GROUP BY 1, 2
+      ORDER BY source, lang"""),
+    // q352: evolution restated — even docs landed without lang (NULL
+    // after the add-column), odd docs with theirs; source reads under
+    // its post-rename name; the erased range drops
+    Q("q352_lake_schema_evolution", q352, Extra, """
+      SELECT source AS origin, CAST(count(*) AS BIGINT) AS n_docs,
+        CAST(sum(CASE WHEN doc_id % 2 = 0 OR lang IS NULL
+          THEN 1 ELSE 0 END) AS BIGINT) AS n_lang_missing,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      WHERE doc_id NOT BETWEEN 100 AND 149
+      GROUP BY 1 ORDER BY 1"""),
+    // q353: compaction is content-INVARIANT — the post-compact table
+    // must hash-equal the post-erase table (q351's oracle verbatim);
+    // the compaction/skipping/expiry facts are required in-query
+    Q("q353_lake_compact", q353, Extra, """
+      SELECT source, coalesce(lang, 'und') AS lang,
+        CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      WHERE doc_id NOT BETWEEN 100 AND 149
+      GROUP BY 1, 2
+      ORDER BY source, lang"""),
+    // q354: the snapshot increment IS the second landing — the odd half
+    Q("q354_lake_incremental", q354, Extra, """
+      SELECT source, coalesce(lang, 'und') AS lang,
+        CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      WHERE doc_id % 2 = 1
+      GROUP BY 1, 2
+      ORDER BY source, lang"""),
+    // q355: the z-ordered lake slice must hash-equal the user-range
+    // predicate restated over raw events; the BOTH-dimensions-prune
+    // facts are required in-query
+    Q("q355_lake_zorder_scan", q355, Extra, """
+      SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+        CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+      FROM events
+      WHERE user_id BETWEEN 3 AND 5
+      GROUP BY 1 ORDER BY 1"""),
+    // q356: two racing landings must converge on the FULL table — the
+    // oracle is the whole-documents rollup, which hash-fails if the
+    // lost-update window ever reopens (either half vanishing from HEAD)
+    Q("q356_lake_concurrent_land", q356, Unbenched, """
+      SELECT source, coalesce(lang, 'und') AS lang,
+        CAST(count(*) AS BIGINT) AS n_docs,
+        min(doc_id) AS min_id, max(doc_id) AS max_id
+      FROM documents
+      GROUP BY 1, 2
+      ORDER BY source, lang"""),
+    // q357: the streamed lake table must hash-equal the id-range slice
+    // restated over raw events; the replay-idempotence, batch-twin and
+    // pruning facts are required in-query
+    Q("q357_lake_stream_land", q357, Unbenched, """
+      SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+        CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+      FROM events
+      WHERE event_id >= 100 AND event_id < 300
+      GROUP BY 1 ORDER BY 1"""))
 }

@@ -65,22 +65,16 @@ object Idempotent {
   /** K4: delete-partition-then-insert ≡ dynamic partition overwrite. Only
     * the partitions present in `df` are replaced; everything else is
     * untouched — the exact semantics of the reference's scoped DELETE
-    * (pipeline.py:174-176) without a full-table rewrite.
+    * (pipeline.py:174-176) without a full-table rewrite. The mode is a
+    * per-write option, so the session's own setting is never touched.
     */
   def overwritePartitions(df: DataFrame, tablePath: String,
-                          partitionKeys: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write
+                          partitionKeys: Seq[String]): Unit =
+    df.write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionKeys: _*)
       .parquet(tablePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
 
   /** §2.6 engine-native generalization: dedup-to-latest — keep, per key, the
     * newest row by `orderCols` (descending, with a deterministic tiebreak).

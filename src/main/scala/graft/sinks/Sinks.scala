@@ -176,6 +176,7 @@ object Sinks {
         val sortDdl = bucketCols.map(c => s"`$c`").mkString(", ")
         s.sql(
           s"""CREATE TABLE `$table` ($colsDdl) USING parquet
+             |OPTIONS (partitionOverwriteMode 'dynamic')
              |PARTITIONED BY (`$partitionCol`)
              |CLUSTERED BY ($sortDdl) SORTED BY ($sortDdl)
              |INTO $nBuckets BUCKETS
@@ -183,6 +184,7 @@ object Sinks {
         s.catalog.recoverPartitions(table)
       } else {
         df.write.format("parquet").option("path", path)
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionCol)
           .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
           .sortBy(bucketCols.head, bucketCols.tail: _*)
@@ -195,30 +197,19 @@ object Sinks {
       // columns first, partition column last)
       val cols = s.table(table).columns
         .map(org.apache.spark.sql.functions.col(_))
-      // dynamic MUST be pinned on the session for insertInto (the
-      // per-write option is not consulted on this path — found by
-      // q332's gate losing every prior batch's partition to a static
-      // truncate); restored afterwards so a caller's own mode survives.
-      // The set/insert/restore runs under [[landLock]]: two concurrent
-      // landings interleaving the toggle could otherwise run one insert
-      // under 'static' and truncate every prior batch partition.
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "dynamic")
-      try df.select(cols.toIndexedSeq: _*).write.mode(SaveMode.Overwrite)
+      // dynamic overwrite comes from the TABLE's partitionOverwriteMode
+      // option (set at creation above): insertInto ignores a per-write
+      // option — found by q332's gate losing every prior batch's
+      // partition to a static truncate — but honours a table option.
+      df.select(cols.toIndexedSeq: _*).write.mode(SaveMode.Overwrite)
         .insertInto(table)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
     }
   }
 
-  /** Serializes [[landBucketedPartition]]'s catalog-check + conf-toggle +
-    * insert critical section: the partitionOverwriteMode pin is session-
-    * global state, so unsynchronized concurrent landings could interleave
-    * set/restore and run an insert under 'static' (full-table truncate).
-    * JVM-wide is a conservative superset of session-scoped.
+  /** Serializes [[landBucketedPartition]], for its check-and-create: two
+    * landings that both see no table would otherwise both create it (the
+    * loser's CTAS fails on the existing table or location). JVM-wide is a
+    * conservative superset of catalog-scoped.
     */
   private val landLock = new Object
 }

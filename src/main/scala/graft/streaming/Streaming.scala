@@ -36,9 +36,7 @@ object Streaming {
     *
     * Scale honesty: micro-batch size is set by trigger config, not
     * corpus size, so static per-batch plans are the right default on a
-    * cluster too; a deployment whose individual micro-batches are large
-    * enough to want AQE coalescing/skew handling sets
-    * `spark.graft.streaming.aqe=true` and this wrapper becomes a no-op.
+    * cluster too. A session that already runs with AQE off is left as is.
     *
     * Scope (r14, measured per family — isolated c32 A/B each way): this
     * wraps only the drain/land lanes whose per-batch bodies are trivial
@@ -55,10 +53,8 @@ object Streaming {
   private[graft] def withStaticMicrobatchPlans[T](spark: SparkSession)
                                           (body: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    val keepAqe =
-      spark.conf.getOption("spark.graft.streaming.aqe").contains("true")
     val prev = spark.conf.get(key, "true")
-    if (keepAqe || prev != "true") body
+    if (prev != "true") body
     else {
       spark.conf.set(key, "false")
       try body finally spark.conf.set(key, prev)

@@ -47,18 +47,24 @@ class EnrichIdempotentSpec extends AnyFunSuite {
   }
 
   test("overwritePartitions replaces only the partitions present in the batch") {
-    val dir = TestSpark.tmpDir("dpo") + "/table"
-    val jan = Seq(("a", 1L, 1.0), ("b", 1L, 2.0)).toDF("m", "mes_ref", "v")
-    val feb = Seq(("c", 2L, 3.0)).toDF("m", "mes_ref", "v")
-    Idempotent.overwritePartitions(jan, dir, Seq("mes_ref"))
-    Idempotent.overwritePartitions(feb, dir, Seq("mes_ref"))
-    // re-run january with different content: february must survive
-    val jan2 = Seq(("a", 1L, 9.0)).toDF("m", "mes_ref", "v")
-    Idempotent.overwritePartitions(jan2, dir, Seq("mes_ref"))
-    val out = spark.read.parquet(dir)
-    assert(out.count() === 2)
-    assert(out.filter($"mes_ref" === 2).count() === 1)
-    assert(out.filter($"mes_ref" === 1).select("v").as[Double].head() === 9.0)
+    // the session pinned to static: dynamic overwrite must come from the
+    // write itself, and the session's own mode must survive the call
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    TestSpark.withConfs(Seq(mode -> "static")) {
+      val dir = TestSpark.tmpDir("dpo") + "/table"
+      val jan = Seq(("a", 1L, 1.0), ("b", 1L, 2.0)).toDF("m", "mes_ref", "v")
+      val feb = Seq(("c", 2L, 3.0)).toDF("m", "mes_ref", "v")
+      Idempotent.overwritePartitions(jan, dir, Seq("mes_ref"))
+      Idempotent.overwritePartitions(feb, dir, Seq("mes_ref"))
+      // re-run january with different content: february must survive
+      val jan2 = Seq(("a", 1L, 9.0)).toDF("m", "mes_ref", "v")
+      Idempotent.overwritePartitions(jan2, dir, Seq("mes_ref"))
+      val out = spark.read.parquet(dir)
+      assert(out.count() === 2)
+      assert(out.filter($"mes_ref" === 2).count() === 1)
+      assert(out.filter($"mes_ref" === 1).select("v").as[Double].head() === 9.0)
+      assert(spark.conf.get(mode) === "static")
+    }
   }
 
   test("latestPerKey keeps the newest row per key") {

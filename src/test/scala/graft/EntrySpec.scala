@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract-level checks over the sf0.001 test tables: every declared query
-  * runs and returns a sane shape; every oracle key refers to a real query.
+  * runs and returns a sane shape; the registry it is declared in is
+  * well-formed.
   */
 class EntrySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -13,9 +14,14 @@ class EntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query") {
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"oracle entries without a query: $unknown")
+  test("registry names are unique and the bench tiers are well-formed") {
+    // a duplicate name would silently shadow an entry in the derived maps
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (n, qs) if qs.size > 1 => n
+    }
+    assert(dups.isEmpty, s"registered more than once: $dups")
+    assert(Bench.headline.intersect(Bench.extra).isEmpty)
+    assert(Bench.headline.size === 14)
   }
 
   test("all declared queries execute on sf0.001") {

@@ -19,7 +19,7 @@ class GoldenSpec extends AnyFunSuite {
   private def available: Boolean = new java.io.File(golden).exists()
 
   test("the committed EP3 artifact parses with the ;-CSV reader") {
-    assume(available)
+    assume(available, s"golden file $golden is missing")
     val df = graft.ingest.Ingest.csvWithDelimiterFallback(spark, golden)
     assert(df.columns.length === 17)
     assert(df.columns.head === "undefined")
@@ -31,7 +31,7 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("normalize chain conforms the golden rows to the target schema") {
-    assume(available)
+    assume(available, s"golden file $golden is missing")
     val raw = graft.ingest.Ingest.csvWithDelimiterFallback(spark, golden)
     val renamed = Normalize.renamePresent(
       Normalize.dropIfPresent(raw, "undefined"), Normalize.renameMap)
@@ -55,7 +55,7 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("rollup reproduction: re-aggregating leaves matches the hierarchy shape") {
-    assume(available)
+    assume(available, s"golden file $golden is missing")
     val raw = graft.ingest.Ingest.csvWithDelimiterFallback(spark, golden)
     val renamed = Normalize.renamePresent(
       Normalize.dropIfPresent(raw, "undefined"), Normalize.renameMap)

@@ -124,41 +124,47 @@ class Round12OpsSpec extends AnyFunSuite {
   // ——— bucketed landing: restart recovery ————————————————————————————
 
   test("landBucketedPartition recovers after a catalog wipe (restart)") {
-    val stage = TestSpark.tmpDir("graft_land_restart")
-    val path = s"$stage/claims"
-    val tbl = "graft_r12_restart_claims"
-    def batch(b: Long, ks: Seq[String]) =
-      ks.map(k => (k, b * 100)).toDF("canon", "doc_id")
-        .withColumn("__batch_id", lit(b))
-    graft.sinks.Sinks.landBucketedPartition(
-      batch(0, Seq("a", "b")), tbl, path, Seq("canon"), 4, "__batch_id")
-    graft.sinks.Sinks.landBucketedPartition(
-      batch(1, Seq("c")), tbl, path, Seq("canon"), 4, "__batch_id")
-    // simulate a JVM restart: the in-memory catalog forgets the table,
-    // the landed partitions survive on disk
-    spark.sql(s"DROP TABLE $tbl")
-    assert(!spark.catalog.tableExists(tbl))
-    graft.sinks.Sinks.landBucketedPartition(
-      batch(2, Seq("d", "e")), tbl, path, Seq("canon"), 4, "__batch_id")
-    val rows = spark.table(tbl).orderBy("canon").collect()
-      .map(r => (r.getString(0), r.getLong(2))).toSeq
-    assert(rows == Seq(("a", 0L), ("b", 0L), ("c", 1L), ("d", 2L), ("e", 2L)),
-      s"restart landing lost prior batches: $rows")
-    // the recovered registration still reads bucket-aligned
-    val p = spark.table(tbl).filter($"__batch_id" < 99).select($"canon")
-      .groupBy($"canon").count()
-      .queryExecution.executedPlan.toString
-    assert(p.contains("SelectedBucketsCount") || !p.contains("Exchange"),
-      s"recovered table lost its bucket spec:\n$p")
-    // redelivery of batch 1 (dynamic overwrite) still rewrites only its
-    // own partition
-    graft.sinks.Sinks.landBucketedPartition(
-      batch(1, Seq("c2")), tbl, path, Seq("canon"), 4, "__batch_id")
-    val after = spark.table(tbl).orderBy("canon").collect()
-      .map(r => r.getString(0)).toSeq
-    assert(after == Seq("a", "b", "c2", "d", "e"),
-      s"redelivered batch did not overwrite exactly itself: $after")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    // the session pinned to static: dynamic overwrite must come from the
+    // table, and the session's own mode must survive every landing
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    TestSpark.withConfs(Seq(mode -> "static")) {
+      val stage = TestSpark.tmpDir("graft_land_restart")
+      val path = s"$stage/claims"
+      val tbl = "graft_r12_restart_claims"
+      def batch(b: Long, ks: Seq[String]) =
+        ks.map(k => (k, b * 100)).toDF("canon", "doc_id")
+          .withColumn("__batch_id", lit(b))
+      graft.sinks.Sinks.landBucketedPartition(
+        batch(0, Seq("a", "b")), tbl, path, Seq("canon"), 4, "__batch_id")
+      graft.sinks.Sinks.landBucketedPartition(
+        batch(1, Seq("c")), tbl, path, Seq("canon"), 4, "__batch_id")
+      // simulate a JVM restart: the in-memory catalog forgets the table,
+      // the landed partitions survive on disk
+      spark.sql(s"DROP TABLE $tbl")
+      assert(!spark.catalog.tableExists(tbl))
+      graft.sinks.Sinks.landBucketedPartition(
+        batch(2, Seq("d", "e")), tbl, path, Seq("canon"), 4, "__batch_id")
+      val rows = spark.table(tbl).orderBy("canon").collect()
+        .map(r => (r.getString(0), r.getLong(2))).toSeq
+      assert(rows == Seq(("a", 0L), ("b", 0L), ("c", 1L), ("d", 2L), ("e", 2L)),
+        s"restart landing lost prior batches: $rows")
+      // the recovered registration still reads bucket-aligned
+      val p = spark.table(tbl).filter($"__batch_id" < 99).select($"canon")
+        .groupBy($"canon").count()
+        .queryExecution.executedPlan.toString
+      assert(p.contains("SelectedBucketsCount") || !p.contains("Exchange"),
+        s"recovered table lost its bucket spec:\n$p")
+      // redelivery of batch 1 (dynamic overwrite) still rewrites only its
+      // own partition
+      graft.sinks.Sinks.landBucketedPartition(
+        batch(1, Seq("c2")), tbl, path, Seq("canon"), 4, "__batch_id")
+      val after = spark.table(tbl).orderBy("canon").collect()
+        .map(r => r.getString(0)).toSeq
+      assert(after == Seq("a", "b", "c2", "d", "e"),
+        s"redelivered batch did not overwrite exactly itself: $after")
+      assert(spark.conf.get(mode) === "static")
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
   }
 
   // ——— the columnar lake lane —————————————————————————————————————————

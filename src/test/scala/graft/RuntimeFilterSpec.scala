@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.withConfs
+
 /** Runtime bloom-filter pruning (q91's scale story): when the dim side of a
   * shuffle join carries a selective predicate, Catalyst can build a bloom
   * filter from its join keys and inject a `bloom_filter_might_contain`
@@ -24,16 +26,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-
-  private def withConfs[A](kvs: Seq[(String, String)])(body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("q91's fact scan gets an injected bloom filter from the dim predicate") {
     withConfs(tuned) {
