@@ -4767,29 +4767,18 @@ object SparkEntry {
     docs.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("text"))
       .repartition(3).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
     val land = stage.resolve("land").toString
     // r14: measured BOTH ways (isolated c32 A/B) — this foreachBatch body
     // joins each batch against the maintained model state, and AQE's
     // runtime broadcast decision wins (5.03 s vs 5.44 s static); the
     // static-plan wrapper is kept only on drain/land lanes where the
     // per-batch re-planning overhead dominates (see Streaming.scala).
-    locally {
-      val q = stream.writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           batchId: Long) =>
-            graft.ops.Train.naiveBayesScore(batch, col("doc_id"),
-                col("text"), model)
-              .write.mode("append").parquet(land)
-            ()
-        }
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    graft.streaming.Streaming.drainFiles(s, src, s.read.parquet(src).schema,
+        stage.resolve("ckpt").toString, maxFilesPerTrigger = 1) {
+      (batch, _) =>
+        graft.ops.Train.naiveBayesScore(batch, col("doc_id"), col("text"),
+            model)
+          .write.mode("append").parquet(land)
     }
     val out = s.read.parquet(land)
       .join(docs.select(col("doc_id"), col("lang").as("true_lang")),
@@ -4823,11 +4812,7 @@ object SparkEntry {
     graft.streaming.Streaming.nbStateMaintain(s, src, schema,
       labelCol = "lang", textCol = "text", statePath = statePath,
       checkpointDir = stage.resolve("ckpt").toString)
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val last = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).collect { case n if n.startsWith("v") =>
-        n.drop(1).toLong }.max
+    val last = graft.streaming.Streaming.latestVersion(s, statePath).get
     val out = graft.ops.Train.naiveBayesFromState(
         s.read.parquet(s"$statePath/v$last"))
       .localCheckpoint().orderBy("class", "token")
@@ -5218,11 +5203,7 @@ object SparkEntry {
     val landed = s.read.parquet(land).localCheckpoint() // law + 2 summaries
     // the merge law, in-query: the maintained ≤10-row state folds to
     // the same count and bit-exact decimal Brier as the landed corpus
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val last = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).collect { case n if n.startsWith("v") =>
-        n.drop(1).toLong }.max
+    val last = graft.streaming.Streaming.latestVersion(s, statePath).get
     // coalesced folds: on EMPTY input both sides must land on (0, 0),
     // not a NULL sum (the empty-input law every operator obeys)
     val zeroDec = lit(0).cast("decimal(28,18)")
@@ -5513,7 +5494,7 @@ object SparkEntry {
       .orderBy("canonical_url")
     val res = materializeDropping(s, out, stage)
     s.sql("DROP TABLE IF EXISTS " + graft.streaming.Streaming
-      .frontierClaimsTable(s, stage.resolve("state").toString))
+      .frontierClaimsTable(stage.resolve("state").toString))
     res
   }
 
@@ -5622,11 +5603,7 @@ object SparkEntry {
     graft.streaming.Streaming.qbinMaintain(s, src, schema,
       "l_extendedprice", lo = 0.0, w = 1000.0, bins = 128,
       statePath, stage.resolve("ckpt").toString)
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val last = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).collect { case n if n.startsWith("v") =>
-        n.drop(1).toLong }.max
+    val last = graft.streaming.Streaming.latestVersion(s, statePath).get
     val out = graft.ops.Sketch.qbinQuantiles(
       s.read.parquet(s"$statePath/v$last"),
       Seq(0.25, 0.5, 0.9, 0.99), lo = 0.0, w = 1000.0)
@@ -5853,11 +5830,7 @@ object SparkEntry {
     graft.streaming.Streaming.qbinMaintainBy(s, src, schema,
       "source", "n_chars", lo = 0.0, w = 10.0, bins = 64,
       statePath, stage.resolve("ckpt").toString)
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val last = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .map(_.getPath.getName).collect { case n if n.startsWith("v") =>
-        n.drop(1).toLong }.max
+    val last = graft.streaming.Streaming.latestVersion(s, statePath).get
     val out = graft.ops.Sketch.qbinQuantilesBy(
         s.read.parquet(s"$statePath/v$last"),
         Seq(0.5, 0.9), lo = 0.0, w = 10.0)
@@ -6507,22 +6480,12 @@ object SparkEntry {
     val captured =
       scala.collection.mutable.Map.empty[Long, Seq[org.apache.spark.sql.Row]]
     graft.streaming.Streaming.withStaticMicrobatchPlans(s) {
-      val q = s.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            val rows = batch.collect().toSeq
-            captured.synchronized { captured(id) = rows }
-            Lake.landEpoch(batch.sparkSession, table, batch.toDF(),
-              "ev", id)
-            ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streaming.drainFiles(s, src, staged.schema,
+          s"$base/ckpt", maxFilesPerTrigger = 1) { (batch, id) =>
+        val rows = batch.collect().toSeq
+        captured.synchronized { captured(id) = rows }
+        Lake.landEpoch(batch.sparkSession, table, batch, "ev", id)
+      }
     }
     // order-free content checksum (count + row hashes summed in
     // decimal — a long accumulator overflows under ANSI)
@@ -8060,6 +8023,7 @@ object SparkEntry {
     // through the docgen SCAN with its range pushdown — the DuckDB oracle
     // applies the same predicate to the landed parquet, so a pushdown that
     // skipped or duplicated a slice would shift the counts and fail.
+    reapStaleQ94Landings()
     s.read.format("graft-docgen")
       .option("rows", 5000).option("partitions", 8).load()
       .write.mode("overwrite").parquet(q94LandPath)
@@ -8072,32 +8036,27 @@ object SparkEntry {
       .orderBy("lang")
   }
 
-  /** Where q94 lands the generated corpus for its DuckDB oracle. The
-    * generator is sfDir-independent, so one fixed location suffices; each
-    * run overwrites it.
-    */
   /** Where q94 lands its oracle corpus: unique per JVM, so concurrent
     * Verify runs (or two users on one host) never overwrite each other's
     * landing while DuckDB reads it. The oracle SQL interpolates the same
-    * value per-run, so engine and oracle always agree on the path. Prior
-    * runs' landings (read long ago — the oracle runs right after Verify)
-    * are reaped best-effort once they age an hour, mirroring the manifest
-    * sink's .tmp reaper.
+    * value per-run, so engine and oracle always agree on the path.
     */
-  private val q94LandPath: String = {
-    val tmp = new java.io.File("/tmp")
+  private val q94LandPath: String =
+    s"/tmp/graft_q94_land_${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Best-effort reap of prior runs' q94 landings (read long ago — the
+    * oracle runs right after Verify) once they age an hour, mirroring the
+    * manifest sink's .tmp reaper. Runs from q94's body, so merely loading
+    * this object deletes nothing.
+    */
+  private def reapStaleQ94Landings(): Unit = {
     val horizon = System.currentTimeMillis() - 60L * 60 * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty)
+    Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("graft_q94_land_") &&
         f.lastModified < horizon)
       .foreach(f => scala.util.Try(deleteTree(f.toPath)))
-    s"/tmp/graft_q94_land_${java.util.UUID.randomUUID().toString.take(8)}"
   }
 
-  /** Reverse-walk recursive delete — the one place the staging-cleanup
-    * idiom lives (round-trip harness queries, the q94 reaper, the
-    * streaming landings all route through here).
-    */
   /** Force a staged file's mtime so the file-stream source orders
     * micro-batches deterministically. The boolean result is CHECKED: the
     * forced ordering is load-bearing for every batch-seam gate (a silent
@@ -8109,6 +8068,10 @@ object SparkEntry {
       s"staging: setLastModified($t) failed for $path — the forced " +
         "micro-batch ordering this gate depends on cannot be established")
 
+  /** Reverse-walk recursive delete — the one place the staging-cleanup
+    * idiom lives (round-trip harness queries, the q94 reaper, the
+    * streaming landings all route through here).
+    */
   private def deleteTree(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** Structured Streaming restatement of the reference's incremental
   * semantics (SURVEY.md §2.9).
@@ -287,7 +288,7 @@ object Streaming {
     withStaticMicrobatchPlans(stream.sparkSession) {
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         graft.idempotent.Idempotent.overwritePartitions(
           batch.toDF().withColumn("__batch_id", lit(batchId)),
           tablePath, partitionKeys :+ "__batch_id")
@@ -660,6 +661,92 @@ object Streaming {
     graft.ops.Skew.skewFinish(
       runToMemory(graft.ops.Skew.keyCounts(events, key), name), k)
 
+
+  /** Drain every file currently under `sourceDir` through `body`, at most
+    * `maxFilesPerTrigger` files per micro-batch, each batch exactly once
+    * per checkpoint (`Trigger.AvailableNow`), returning once the files
+    * available at start are drained — the file-stream skeleton every
+    * foreachBatch maintainer here shares. AQE is left as the session
+    * has it (see [[withStaticMicrobatchPlans]]'s scope note); a caller
+    * that wants static per-batch plans wraps the call.
+    */
+  private[graft] def drainFiles(spark: SparkSession, sourceDir: String,
+                                schema: StructType, checkpointDir: String,
+                                maxFilesPerTrigger: Int)
+                               (body: (DataFrame, Long) => Unit): Unit =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(sourceDir)
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        body(batch, batchId)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** The `v{N}` version numbers under a versioned-state dir (none when
+    * the dir does not exist) — the one place the protocol lists them.
+    */
+  private def stateVersions(spark: SparkSession, dir: String): Seq[Long] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("v") => n.drop(1).toLong }
+  }
+
+  /** The newest state version under `dir` strictly below `below`. */
+  private[graft] def latestVersion(spark: SparkSession, dir: String,
+                                   below: Long = Long.MaxValue): Option[Long] =
+    stateVersions(spark, dir).filter(_ < below).maxOption
+
+  /** The newest state version under `dir` strictly below `below`, read
+    * with the declared `stateSchema` — or the empty state when there is
+    * none (an AvailableNow run over an empty source fires zero batches;
+    * the empty state is the correct "seen so far", the empty law). The
+    * schema is explicit because an empty micro-batch lands a
+    * part-file-less dir that inference cannot read.
+    */
+  private def latestState(spark: SparkSession, dir: String,
+                          stateSchema: StructType,
+                          below: Long = Long.MaxValue): DataFrame =
+    latestVersion(spark, dir, below) match {
+      case Some(v) => spark.read.schema(stateSchema).parquet(s"$dir/v$v")
+      case None =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], stateSchema)
+    }
+
+  /** One step of the versioned-overwrite state protocol: `dir/v{batchId}`
+    * = `next` of the latest `v{M}, M < batchId` (gaps legal; the empty
+    * state when none). Overwriting `v{batchId}` on replay converges
+    * because its input is exactly the pre-batch state, which no later
+    * batch has mutated yet — batches process serially under one
+    * checkpointed query — so a redelivered batch rewrites its own
+    * version instead of re-adding its rows.
+    *
+    * Retention: after the landing, every version except the newest 2 is
+    * deleted. Without this, state STORAGE grows linearly with batch
+    * count even when each version is bounded — the "k rows forever" /
+    * "≤ depth·width rows" claims hold per version, not per directory,
+    * and these folds run per-batch forever in the day-2 story. 2 is the
+    * correctness floor: under one checkpointed AvailableNow query the
+    * only replayable batch is the LAST uncommitted one, and its
+    * recompute reads the latest version strictly below it — the
+    * predecessor must survive the prune. Everything older is
+    * unreachable (batches commit serially).
+    */
+  private def foldVersion(spark: SparkSession, dir: String, batchId: Long,
+                          stateSchema: StructType)
+                         (next: DataFrame => DataFrame): Unit = {
+    next(latestState(spark, dir, stateSchema, batchId))
+      .write.mode("overwrite").parquet(s"$dir/v$batchId")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    stateVersions(spark, dir).sorted.dropRight(2)
+      .foreach(v => fs.delete(new Path(s"$dir/v$v"), true))
+  }
+
   /** Streaming k-NN graph maintenance — the day-2 deployment of
     * [[graft.ops.Similarity.knnGraphIncremental]]: an embedding stream
     * lands micro-batch by micro-batch, and each batch folds into the
@@ -673,11 +760,9 @@ object Streaming {
     *    replaces only its own subtree, and batch N's fold reads strictly
     *    `__batch_id < N`, so replay is idempotent and batches never see
     *    themselves;
-    *  - `graph/v{N}/` — the full k-NN graph AFTER batch N, computed from
-    *    the latest `v{M}, M < N` (gaps legal) + the prior corpus.
-    *    Overwriting `v{N}` on replay converges because its inputs are
-    *    exactly the pre-N state, which no later batch has mutated yet —
-    *    batches process serially under one checkpointed query.
+    *  - `graph/v{N}/` — the full k-NN graph AFTER batch N, one
+    *    [[foldVersion]] step from the latest `v{M}, M < N` + the prior
+    *    corpus.
     *
     * By induction over the merge law, the latest graph version equals
     * [[graft.ops.Similarity.knnGraph]] over ALL landed vectors — ANY
@@ -685,90 +770,37 @@ object Streaming {
     * final graph, which is what lets SparkEntry's q144 hash-gate the
     * streamed result against q137's full-recompute oracle verbatim.
     */
-  /** Retention for the versioned-overwrite state protocol: after a
-    * successful `v{N}` landing, delete every version except the newest
-    * `keep`. Without this, state STORAGE grows linearly with batch
-    * count even when each version is bounded — the "k rows forever" /
-    * "≤ depth·width rows" claims hold per version, not per directory,
-    * and these folds run per-batch forever in the day-2 story.
-    *
-    * keep = 2 is the correctness floor: under one checkpointed
-    * AvailableNow query the only replayable batch is the LAST
-    * uncommitted one, and its recompute reads the latest version
-    * strictly below it — the predecessor must survive the prune.
-    * Everything older is unreachable (batches commit serially).
-    */
-  private def pruneStateVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                 dir: String, keep: Int = 2): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(root)) {
-      val versions = fs.listStatus(root).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-        .sorted
-      versions.dropRight(keep).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v$v"), true)
-      }
-    }
-  }
-
   def knnGraphMaintain(spark: SparkSession, sourceDir: String,
                        schema: StructType, idCol: String, vecCol: String,
                        blockCols: Seq[String], k: Int, statePath: String,
                        checkpointDir: String,
                        maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
     val corpusDir = s"$statePath/corpus"
     val graphDir = s"$statePath/graph"
-    // All state reads carry EXPLICIT schemas: an empty micro-batch writes
-    // a part-file-less parquet dir (Spark skips files for rowless tasks),
-    // and schema inference over it would kill the NEXT batch — the
-    // empty-input law every operator here obeys
-    val corpusSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        "__batch_id", org.apache.spark.sql.types.LongType))
+    // explicit schema for the same empty-batch reason as latestState
+    val corpusSchema = StructType(
+      schema.fields :+ StructField("__batch_id", LongType))
     val graphSchema = knnGraphSchema(schema, idCol)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("latestFirst", "false")
-      .parquet(sourceDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val corpus = new Path(corpusDir)
         val priorCorpus =
-          if (fs.exists(new org.apache.hadoop.fs.Path(corpusDir)))
+          if (corpus.getFileSystem(s.sparkContext.hadoopConfiguration)
+              .exists(corpus))
             s.read.schema(corpusSchema).parquet(corpusDir)
               .filter(col("__batch_id") < batchId)
               .drop("__batch_id")
-          else batch.toDF().limit(0)
-        val priorGraph = {
-          val versions =
-            if (fs.exists(new org.apache.hadoop.fs.Path(graphDir)))
-              fs.listStatus(new org.apache.hadoop.fs.Path(graphDir)).toSeq
-                .map(_.getPath.getName)
-                .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-                .filter(_ < batchId)
-            else Seq.empty[Long]
-          if (versions.isEmpty)
-            s.createDataFrame(s.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row], graphSchema)
-          else s.read.schema(graphSchema)
-            .parquet(s"$graphDir/v${versions.max}")
+          else batch.limit(0)
+        foldVersion(s, graphDir, batchId, graphSchema) { priorGraph =>
+          graft.ops.Similarity.knnGraphIncremental(
+            priorGraph, priorCorpus, batch, col(idCol), col(vecCol),
+            blockCols.map(col), k)
         }
-        val next = graft.ops.Similarity.knnGraphIncremental(
-          priorGraph, priorCorpus, batch.toDF(), col(idCol), col(vecCol),
-          blockCols.map(col), k)
-        next.write.mode("overwrite").parquet(s"$graphDir/v$batchId")
-        pruneStateVersions(fs, graphDir)
         graft.idempotent.Idempotent.overwritePartitions(
-          batch.toDF().withColumn("__batch_id", lit(batchId)),
+          batch.withColumn("__batch_id", lit(batchId)),
           corpusDir, Seq("__batch_id"))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming KMV sketch maintenance — the mergeable-sketch day-2
@@ -781,50 +813,21 @@ object Streaming {
     * micro-batches lands on the batch sketch EXACTLY — q243 gates the
     * streamed estimate against q240's batch oracle VERBATIM.
     *
-    * State layout: `statePath/v{N}` holds the sketch AFTER batch N,
-    * computed from the latest `v{M}, M < N` — [[knnGraphMaintain]]'s
-    * versioned-overwrite protocol, so a redelivered batch rewrites only
-    * its own version from unmutated inputs and replay is idempotent.
+    * State layout: `statePath/v{N}` holds the sketch AFTER batch N
+    * ([[foldVersion]]), so a redelivered batch rewrites only its own
+    * version from unmutated inputs and replay is idempotent.
     */
   def kmvMaintain(spark: SparkSession, sourceDir: String,
                   schema: StructType, valueCol: String, k: Int,
                   statePath: String, checkpointDir: String,
-                  maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__h",
-        org.apache.spark.sql.types.LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema).parquet(s"$statePath/v${versions.max}")
-        graft.ops.Sketch.kmvMergeStates(prior,
-            graft.ops.Sketch.kmvState(batch.toDF(),
-              org.apache.spark.sql.functions.col(valueCol), k), k)
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                  maxFilesPerTrigger: Int = 1): Unit =
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId, kmvSchema) {
+          prior => graft.ops.Sketch.kmvMergeStates(prior,
+            graft.ops.Sketch.kmvState(batch, col(valueCol), k), k)
+        }
+    }
 
   /** Streaming quantile-bins maintenance — the quantile member of the
     * maintained-sketch family ([[kmvMaintain]] distinct, [[cmsMaintain]]
@@ -833,55 +836,27 @@ object Streaming {
     * bin-wise sum ([[graft.ops.Sketch.qbinMergeStates]]); state is
     * ≤ bins rows at any corpus size. The fold is commutative and
     * associative but NOT duplicate-insensitive (counters add), so
-    * exactly-once rides the versioned-overwrite protocol: `v{N}` is
-    * computed from the latest `v{M}, M < N` plus batch N alone — a
-    * redelivered batch rewrites its own version from unmutated inputs.
-    * Because vector addition commutes, ANY batch partition of the
-    * corpus lands on the batch state EXACTLY — the gate reads the
-    * final store's quantile readout against the batch oracle verbatim.
+    * exactly-once rides the versioned-overwrite protocol
+    * ([[foldVersion]]): a redelivered batch rewrites its own version
+    * from unmutated inputs. Because vector addition commutes, ANY batch
+    * partition of the corpus lands on the batch state EXACTLY — the
+    * gate reads the final store's quantile readout against the batch
+    * oracle verbatim.
     */
   def qbinMaintain(spark: SparkSession, sourceDir: String,
                    schema: StructType, valueCol: String, lo: Double,
                    w: Double, bins: Int, statePath: String,
                    checkpointDir: String,
                    maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bin",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema)
-            .parquet(s"$statePath/v${versions.max}")
-        graft.ops.Sketch.qbinMergeStates(prior,
-            graft.ops.Sketch.qbinState(batch.toDF(),
-              org.apache.spark.sql.functions.col(valueCol), lo, w, bins))
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stateSchema = StructType(Seq(
+      StructField("bin", LongType), StructField("n", LongType)))
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId, stateSchema) {
+          prior => graft.ops.Sketch.qbinMergeStates(prior,
+            graft.ops.Sketch.qbinState(batch, col(valueCol), lo, w, bins))
+        }
+    }
   }
 
   /** GROUPED streaming quantile-bins maintenance — [[qbinMaintain]] with
@@ -904,46 +879,16 @@ object Streaming {
                      lo: Double, w: Double, bins: Int, statePath: String,
                      checkpointDir: String,
                      maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("group",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("bin",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema)
-            .parquet(s"$statePath/v${versions.max}")
-        graft.ops.Sketch.qbinMergeStatesBy(prior,
-            graft.ops.Sketch.qbinStateBy(batch.toDF(),
-              org.apache.spark.sql.functions.col(groupCol).cast("string"),
-              org.apache.spark.sql.functions.col(valueCol), lo, w, bins))
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stateSchema = StructType(Seq(StructField("group", StringType),
+      StructField("bin", LongType), StructField("n", LongType)))
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId, stateSchema) {
+          prior => graft.ops.Sketch.qbinMergeStatesBy(prior,
+            graft.ops.Sketch.qbinStateBy(batch,
+              col(groupCol).cast("string"), col(valueCol), lo, w, bins))
+        }
+    }
   }
 
   /** Streaming crawl-frontier maintenance — the q306 canonical-URL dedup
@@ -983,18 +928,12 @@ object Streaming {
                        statePath: String, checkpointDir: String,
                        maxFilesPerTrigger: Int = 1,
                        claimsBuckets: Int = 32): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
     val claimsDir = s"$statePath/claims"
-    val table = frontierClaimsTable(spark, statePath)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("latestFirst", "false")
-      .parquet(sourceDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+    val table = frontierClaimsTable(statePath)
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        val claims = batch.toDF()
+        val claims = batch
           .select(col(idCol).cast("long").as("doc_id"),
             graft.ops.Web.urlCanonicalize(col(urlCol)).as("canon"))
           .filter(col("canon").isNotNull)
@@ -1013,10 +952,7 @@ object Streaming {
         graft.sinks.Sinks.landBucketedPartition(
           fresh.withColumn("__batch_id", lit(batchId)),
           table, claimsDir, Seq("canon"), claimsBuckets, "__batch_id")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The session-catalog name of [[frontierMaintain]]'s bucketed claims
@@ -1033,76 +969,30 @@ object Streaming {
       d.take(12).map(b => f"${b & 0xff}%02x").mkString
   }
 
-  /** The round-11 (pre-digest) claims-table name for a state path —
-    * what a frontier that started under the old naming landed into.
-    */
-  private[graft] def legacyFrontierClaimsTable(statePath: String): String =
-    "graft_frontier_claims_" +
-      java.lang.Integer.toHexString(statePath.hashCode)
-
-  /** Catalog-aware resolution (round-13, ADVICE): the digest rename was
-    * state-breaking for a frontier resuming an EXISTING state path — its
-    * claims log lives under the legacy hashCode-derived name, and
-    * starting a fresh digest-named table would orphan every prior claim
-    * (previously claimed work re-claimed). A legacy-named table that
-    * exists wins; fresh state paths get the digest name.
-    */
-  def frontierClaimsTable(spark: SparkSession, statePath: String): String = {
-    val legacy = legacyFrontierClaimsTable(statePath)
-    if (spark.catalog.tableExists(legacy)) legacy
-    else frontierClaimsTable(statePath)
-  }
-
   /** Streaming Count-Min maintenance — the frequency complement of
     * [[kmvMaintain]]: each micro-batch's cell table
     * ([[graft.ops.Sketch.cmsState]]) folds into the persisted sketch by
     * cell-wise sum ([[graft.ops.Sketch.cmsMergeStates]]); state is
     * ≤ depth·width rows at any corpus size. The fold is commutative and
     * associative but NOT duplicate-insensitive (counters add), so
-    * exactly-once rides the versioned-overwrite protocol: `v{N}` is
-    * computed from the latest `v{M}, M < N` plus batch N alone — a
-    * redelivered batch rewrites its own version from unmutated inputs
-    * instead of double-counting. Because vector addition commutes, ANY
-    * batch partition of the corpus lands on the batch sketch EXACTLY —
-    * the gate reads the final store cell-for-cell against the batch
-    * oracle.
+    * exactly-once rides the versioned-overwrite protocol
+    * ([[foldVersion]]): a redelivered batch rewrites its own version
+    * from unmutated inputs instead of double-counting. Because vector
+    * addition commutes, ANY batch partition of the corpus lands on the
+    * batch sketch EXACTLY — the gate reads the final store cell-for-cell
+    * against the batch oracle.
     */
   def cmsMaintain(spark: SparkSession, sourceDir: String,
                   schema: StructType, keyCol: String, depth: Int, width: Int,
                   statePath: String, checkpointDir: String,
-                  maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], cmsSchema)
-          else s.read.schema(cmsSchema).parquet(s"$statePath/v${versions.max}")
-        graft.ops.Sketch.cmsMergeStates(prior,
-            graft.ops.Sketch.cmsState(batch.toDF(),
-              org.apache.spark.sql.functions.col(keyCol), depth, width))
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                  maxFilesPerTrigger: Int = 1): Unit =
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId, cmsSchema) {
+          prior => graft.ops.Sketch.cmsMergeStates(prior,
+            graft.ops.Sketch.cmsState(batch, col(keyCol), depth, width))
+        }
+    }
 
   /** Streaming Naive Bayes sufficient-statistic maintenance — the
     * classifier day-2 shape ([[kmvMaintain]]'s protocol over
@@ -1118,54 +1008,24 @@ object Streaming {
     * merge — the labeled corpus is never rescanned, which is what makes
     * a continuously-retrained quality filter affordable.
     *
-    * State layout: `statePath/v{N}` = the statistic AFTER batch N,
-    * derived from the latest `v{M}, M < N`; superseded versions pruned
-    * to the last 2 — replay-idempotent, storage-bounded.
+    * State layout: `statePath/v{N}` = the statistic AFTER batch N
+    * ([[foldVersion]]) — replay-idempotent, storage-bounded.
     */
   def nbStateMaintain(spark: SparkSession, sourceDir: String,
                       schema: StructType, labelCol: String, textCol: String,
                       statePath: String, checkpointDir: String,
                       maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("kind",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("class",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("token",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema).parquet(s"$statePath/v${versions.max}")
-        graft.ops.Train.naiveBayesMergeStates(prior,
-            graft.ops.Train.naiveBayesState(batch.toDF(), col(labelCol),
+    val stateSchema = StructType(Seq(StructField("kind", StringType),
+      StructField("class", StringType), StructField("token", StringType),
+      StructField("cnt", LongType)))
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId, stateSchema) {
+          prior => graft.ops.Train.naiveBayesMergeStates(prior,
+            graft.ops.Train.naiveBayesState(batch, col(labelCol),
               col(textCol)))
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        }
+    }
   }
 
   /** Streaming calibration-drift maintenance — the q305 monitor as it
@@ -1182,7 +1042,7 @@ object Streaming {
     * diffs against its frozen baseline curve; the exact global Brier is
     * recoverable from state (decimal sums), which is what lets the
     * caller assert state ≡ landed-fold as an in-query law. Versioned-
-    * overwrite + prune per [[kmvMaintain]]'s protocol.
+    * overwrite + prune per [[foldVersion]].
     */
   def calibScoreMaintain(spark: SparkSession, sourceDir: String,
                          schema: StructType, id: Column, label: Column,
@@ -1190,53 +1050,22 @@ object Streaming {
                          landPath: String, statePath: String,
                          checkpointDir: String,
                          maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bin",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_pos",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ssum",
-        org.apache.spark.sql.types.DecimalType(28, 12)),
-      org.apache.spark.sql.types.StructField("brier_sum",
-        org.apache.spark.sql.types.DecimalType(28, 18))))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val scored = batch.toDF().select(id.as("doc_id"),
+    val stateSchema = StructType(Seq(StructField("bin", LongType),
+      StructField("n", LongType), StructField("n_pos", LongType),
+      StructField("ssum", DecimalType(28, 12)),
+      StructField("brier_sum", DecimalType(28, 18))))
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        val scored = batch.select(id.as("doc_id"),
           label.cast("double").as("__y"), score.as("score"),
           calScore.as("cal_score"))
         scored.write.mode("append").parquet(landPath)
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema)
-            .parquet(s"$statePath/v${versions.max}")
-        graft.ops.Eval.calibMergeStates(prior,
+        foldVersion(batch.sparkSession, statePath, batchId, stateSchema) {
+          prior => graft.ops.Eval.calibMergeStates(prior,
             graft.ops.Eval.calibState(scored, col("cal_score"),
               col("__y") === 1.0d, bins))
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        }
+    }
   }
 
   /** Streaming perceptual-dedup maintenance — the multimodal dedup leg
@@ -1264,36 +1093,24 @@ object Streaming {
                          maxDist: Int, statePath: String,
                          checkpointDir: String,
                          maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
     val indexDir = s"$statePath/index"
     val pairsDir = s"$statePath/pairs"
-    val indexSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("bands",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType, containsNull = false)),
-      org.apache.spark.sql.types.StructField("__batch_id",
-        org.apache.spark.sql.types.LongType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("latestFirst", "false")
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+    val indexSchema = StructType(Seq(StructField("id", LongType),
+      StructField("bands", ArrayType(IntegerType, containsNull = false)),
+      StructField("__batch_id", LongType)))
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val bb = toBands(batch.toDF())
+        val index = new Path(indexDir)
+        val bb = toBands(batch)
           .select(col("id").cast("long").as("id"), col("bands"))
           .localCheckpoint() // read by two joins and the index landing
         val prior =
-          if (fs.exists(new org.apache.hadoop.fs.Path(indexDir)))
+          if (index.getFileSystem(s.sparkContext.hadoopConfiguration)
+              .exists(index))
             s.read.schema(indexSchema).parquet(indexDir)
               .filter(col("__batch_id") < batchId)
-          else s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], indexSchema)
+          else s.createDataFrame(s.sparkContext.emptyRDD[Row], indexSchema)
         val within = graft.ops.Multimodal.hammingNearDupPairs(
           bb, col("id"), col("bands"), maxDist)
         val across = graft.ops.Multimodal.hammingNearDupPairsAcross(
@@ -1305,25 +1122,16 @@ object Streaming {
         graft.idempotent.Idempotent.overwritePartitions(
           bb.withColumn("__batch_id", lit(batchId)),
           indexDir, Seq("__batch_id"))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The landed pair log of [[dhashPairsMaintain]] — additive across
     * batches, read with the explicit schema (empty-batch law).
     */
   def latestDhashPairs(spark: SparkSession, statePath: String): DataFrame = {
-    val pairsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id_a",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("id_b",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("hamming",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("__batch_id",
-        org.apache.spark.sql.types.LongType)))
+    val pairsSchema = StructType(Seq(StructField("id_a", LongType),
+      StructField("id_b", LongType), StructField("hamming", IntegerType),
+      StructField("__batch_id", LongType)))
     spark.read.schema(pairsSchema).parquet(s"$statePath/pairs")
       .drop("__batch_id")
   }
@@ -1335,8 +1143,8 @@ object Streaming {
     * positions, WITH payload) folds into the persisted sample by
     * union-then-top-k — the KMV merge law with payload rows, so ANY
     * batch partition of the corpus lands on the batch sample EXACTLY
-    * and state is k rows forever. Versioned-overwrite protocol as
-    * [[kmvMaintain]] (replay rewrites, never re-adds). The day-2 shape
+    * and state is k rows forever. Versioned-overwrite protocol
+    * ([[foldVersion]]: replay rewrites, never re-adds). The day-2 shape
     * for "keep a representative corpus sample as data streams in"
     * (eval-set carving, drift eyeballing) at kilobyte state.
     */
@@ -1344,114 +1152,46 @@ object Streaming {
                      schema: StructType, idCol: String, k: Int,
                      statePath: String, checkpointDir: String,
                      maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField("__pos",
-        org.apache.spark.sql.types.LongType))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema)
-            .parquet(s"$statePath/v${versions.max}")
-        val c = org.apache.spark.sql.functions.col _
-        prior.unionByName(
-            graft.ops.Sampling.uniformTopKSample(batch.toDF(), c(idCol), k))
-          .orderBy(c("__pos").asc, c(idCol).asc).limit(k)
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val stateSchema = sampleSchema(schema)
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId, stateSchema) {
+          prior => prior.unionByName(
+              graft.ops.Sampling.uniformTopKSample(batch, col(idCol), k))
+            .orderBy(col("__pos").asc, col(idCol).asc).limit(k)
+        }
+    }
   }
+
+  /** [[sampleMaintain]]'s state schema: the SOURCE schema plus `__pos`. */
+  private def sampleSchema(source: StructType): StructType =
+    StructType(source.fields :+ StructField("__pos", LongType))
 
   /** Latest landed sample under [[sampleMaintain]]'s state dir (empty
     * sample when no batch landed — the empty law). `schema` is the
     * SOURCE schema; `__pos` is appended.
     */
   def latestSample(spark: SparkSession, statePath: String,
-                   schema: StructType): DataFrame = {
-    val stateSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField("__pos",
-        org.apache.spark.sql.types.LongType))
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-      else Seq.empty[Long]
-    if (versions.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    else spark.read.schema(stateSchema).parquet(s"$statePath/v${versions.max}")
-  }
+                   schema: StructType): DataFrame =
+    latestState(spark, statePath, sampleSchema(schema))
 
-  private val cmsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("r",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("c",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cnt",
-      org.apache.spark.sql.types.LongType)))
+  private val cmsSchema = StructType(Seq(StructField("r", IntegerType),
+    StructField("c", LongType), StructField("cnt", LongType)))
 
   /** Latest landed CMS under [[cmsMaintain]]'s state dir (the empty
     * sketch — all-zero cells, represented sparsely as zero rows — when
     * no batch landed: the empty law).
     */
-  def latestCmsState(spark: SparkSession, statePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-      else Seq.empty[Long]
-    if (versions.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cmsSchema)
-    else spark.read.schema(cmsSchema).parquet(s"$statePath/v${versions.max}")
-  }
+  def latestCmsState(spark: SparkSession, statePath: String): DataFrame =
+    latestState(spark, statePath, cmsSchema)
+
+  private val kmvSchema = StructType(Seq(StructField("__h", LongType)))
 
   /** Latest landed sketch version under [[kmvMaintain]]'s state dir —
-    * or the EMPTY sketch when no batch ever landed (an AvailableNow run
-    * over an empty source fires zero batches; the empty sketch is the
-    * correct value of "the distincts seen so far", the empty law).
+    * or the EMPTY sketch when no batch ever landed (the empty law).
     */
-  def latestKmvState(spark: SparkSession, statePath: String): DataFrame = {
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__h",
-        org.apache.spark.sql.types.LongType)))
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-      else Seq.empty[Long]
-    if (versions.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    else spark.read.schema(stateSchema)
-      .parquet(s"$statePath/v${versions.max}")
-  }
+  def latestKmvState(spark: SparkSession, statePath: String): DataFrame =
+    latestState(spark, statePath, kmvSchema)
 
   /** Streaming word-count maintenance — the tokenizer family's day-2
     * leg: [[graft.ops.Bpe.wordCounts]] is the SUFFICIENT STATISTIC of
@@ -1464,60 +1204,33 @@ object Streaming {
     * batch word count EXACTLY (q289 gates a trainer run FROM the
     * folded state against the whole-corpus training oracle verbatim).
     * NOT duplicate-insensitive (counts add), so exactly-once rides the
-    * same versioned-overwrite protocol as [[cmsMaintain]]: `v{N}` is
-    * computed from the latest `v{M}, M < N` plus batch N alone, and
-    * [[pruneStateVersions]] bounds the directory. State is vocab-grain
-    * — Zipf-small relative to the corpus, the same asymmetry that makes
-    * the trainer itself corpus-free after one pass.
+    * same versioned-overwrite protocol as [[cmsMaintain]]
+    * ([[foldVersion]], which also bounds the directory). State is
+    * vocab-grain — Zipf-small relative to the corpus, the same asymmetry
+    * that makes the trainer itself corpus-free after one pass.
     */
   def wordCountsMaintain(spark: SparkSession, sourceDir: String,
                          schema: StructType, textCol: String,
                          statePath: String, checkpointDir: String,
-                         maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("word",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema)
-            .parquet(s"$statePath/v${versions.max}")
-        prior.unionByName(graft.ops.Bpe.wordCounts(batch.toDF(),
-            org.apache.spark.sql.functions.col(textCol)))
-          .groupBy(org.apache.spark.sql.functions.col("word"))
-          .agg(org.apache.spark.sql.functions
-            .sum(org.apache.spark.sql.functions.col("cnt")).as("cnt"))
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         maxFilesPerTrigger: Int = 1): Unit =
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId,
+            wordCountsSchema) { prior =>
+          prior.unionByName(graft.ops.Bpe.wordCounts(batch, col(textCol)))
+            .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
+        }
+    }
+
+  private val wordCountsSchema = StructType(Seq(
+    StructField("word", StringType), StructField("cnt", LongType)))
 
   /** Latest landed word-count table under [[wordCountsMaintain]]'s
     * state dir (empty when no batch landed — the empty law).
     */
+  def latestWordCounts(spark: SparkSession, statePath: String): DataFrame =
+    latestState(spark, statePath, wordCountsSchema)
+
   /** Streamed PQ coding against a FROZEN codebook artifact — the day-2
     * economics of the compressed-domain index ([[graft.ops.Similarity
     * .pqTrain]] runs once on the base corpus; arriving batches never
@@ -1532,137 +1245,62 @@ object Streaming {
                       schema: StructType, idCol: String, vecCol: String,
                       books: DataFrame, m: Int, storePath: String,
                       checkpointDir: String,
-                      maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.ops.Similarity.pqCode(batch.toDF(),
-            org.apache.spark.sql.functions.col(idCol),
-            org.apache.spark.sql.functions.col(vecCol), books, m)
+                      maxFilesPerTrigger: Int = 1): Unit =
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        graft.ops.Similarity.pqCode(batch, col(idCol), col(vecCol), books, m)
           .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  def latestWordCounts(spark: SparkSession, statePath: String): DataFrame = {
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("word",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-      else Seq.empty[Long]
-    if (versions.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    else spark.read.schema(stateSchema)
-      .parquet(s"$statePath/v${versions.max}")
-  }
+    }
 
   /** Streaming chunk-store maintenance — sub-document dedup on INGEST:
     * each micro-batch's documents chunk via
     * [[graft.ops.TextAnalysis.contentChunks]] and their distinct chunk
-    * hashes union into the persisted store
-    * ([[knnGraphMaintain]]'s versioned-overwrite protocol, so replay is
-    * idempotent). Because set union is commutative, associative and
-    * duplicate-insensitive, ANY batch partition of the corpus lands on
-    * the batch chunk set EXACTLY — q247 gates the final store
-    * row-for-row against the batch oracle. Per batch the cost is
-    * chunking the BATCH plus one hash-keyed union-distinct against the
-    * store — the day-2 economics that lets chunk-grain dedup
-    * ([[graft.ops.Dedup.chunkOverlapPairs]]) run incrementally: a new
-    * document's novelty is one anti-join against this store, never a
-    * corpus rechunk.
+    * hashes union into the persisted store ([[foldVersion]]'s
+    * versioned-overwrite protocol, so replay is idempotent). Because set
+    * union is commutative, associative and duplicate-insensitive, ANY
+    * batch partition of the corpus lands on the batch chunk set EXACTLY
+    * — q247 gates the final store row-for-row against the batch oracle.
+    * Per batch the cost is chunking the BATCH plus one hash-keyed
+    * union-distinct against the store — the day-2 economics that lets
+    * chunk-grain dedup ([[graft.ops.Dedup.chunkOverlapPairs]]) run
+    * incrementally: a new document's novelty is one anti-join against
+    * this store, never a corpus rechunk.
     */
   def chunkStoreMaintain(spark: SparkSession, sourceDir: String,
                          schema: StructType, idCol: String, textCol: String,
                          statePath: String, checkpointDir: String,
                          window: Int = 16, modulus: Int = 64,
-                         maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.{Dataset, Row}
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("chunk_hash",
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(sourceDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(statePath)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-            fs.listStatus(new org.apache.hadoop.fs.Path(statePath)).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-              .filter(_ < batchId)
-          else Seq.empty[Long]
-        val prior =
-          if (versions.isEmpty)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-          else s.read.schema(stateSchema)
-            .parquet(s"$statePath/v${versions.max}")
-        val batchChunks = graft.ops.TextAnalysis.contentChunks(
-            batch.toDF(), org.apache.spark.sql.functions.col(idCol),
-            org.apache.spark.sql.functions.col(textCol), window, modulus)
-          .select(org.apache.spark.sql.functions.col("chunk_hash"))
-        prior.unionByName(batchChunks).distinct()
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        pruneStateVersions(fs, statePath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         maxFilesPerTrigger: Int = 1): Unit =
+    drainFiles(spark, sourceDir, schema, checkpointDir, maxFilesPerTrigger) {
+      (batch, batchId) =>
+        foldVersion(batch.sparkSession, statePath, batchId,
+            chunkStoreSchema) { prior =>
+          prior.unionByName(graft.ops.TextAnalysis.contentChunks(
+              batch, col(idCol), col(textCol), window, modulus)
+            .select(col("chunk_hash"))).distinct()
+        }
+    }
+
+  private val chunkStoreSchema =
+    StructType(Seq(StructField("chunk_hash", StringType)))
 
   /** Latest landed chunk store under [[chunkStoreMaintain]]'s state dir
     * (the empty store when no batch landed — the empty law).
     */
-  def latestChunkStore(spark: SparkSession, statePath: String): DataFrame = {
-    val stateSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("chunk_hash",
-        org.apache.spark.sql.types.StringType)))
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-      else Seq.empty[Long]
-    if (versions.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    else spark.read.schema(stateSchema)
-      .parquet(s"$statePath/v${versions.max}")
-  }
+  def latestChunkStore(spark: SparkSession, statePath: String): DataFrame =
+    latestState(spark, statePath, chunkStoreSchema)
 
   /** [[knnGraphMaintain]]'s graph schema, from the source schema: the
     * id type twice (node, nbr), the score, the rank. Declared rather than
     * inferred so rowless state dirs stay readable.
     */
   private def knnGraphSchema(source: StructType,
-                             idCol: String): StructType = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
+                             idCol: String): StructType =
     StructType(Seq(
       StructField("node", source(idCol).dataType),
       StructField("nbr", source(idCol).dataType),
       StructField("cosine", DoubleType),
       StructField("rank", LongType)))
-  }
 
   /** Latest landed graph version under [[knnGraphMaintain]]'s state dir.
     * `sourceSchema` + `idCol` (the maintain call's own arguments) let the
@@ -1672,13 +1310,9 @@ object Streaming {
   def latestKnnGraph(spark: SparkSession, statePath: String,
                      sourceSchema: StructType, idCol: String): DataFrame = {
     val graphDir = s"$statePath/graph"
-    val fs = new org.apache.hadoop.fs.Path(graphDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(graphDir))
-      .toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") => n.drop(1).toLong }
-    require(versions.nonEmpty, s"no graph versions under $graphDir")
+    val v = latestVersion(spark, graphDir)
+    require(v.nonEmpty, s"no graph versions under $graphDir")
     spark.read.schema(knnGraphSchema(sourceSchema, idCol))
-      .parquet(s"$graphDir/v${versions.max}")
+      .parquet(s"$graphDir/v${v.get}")
   }
 }

@@ -17,10 +17,7 @@ import graft.sources.{Lake, Manifest}
   *    matching file;
   *  - `col <=> NULL` matches all-NULL-column files (the comparison
   *    path's all-NULL prune must not fire for null-safe-equality with
-  *    a NULL literal);
-  *  - the frontier claims table resolves its LEGACY (hashCode-derived)
-  *    name when that table exists — the digest rename must not orphan
-  *    a resuming frontier's claims log.
+  *    a NULL literal).
   */
 class Round13OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -179,23 +176,5 @@ class Round13OpsSpec extends AnyFunSuite {
       Some(col("tag") === "t75"))
     assert(skipped.nonEmpty && sel.nonEmpty,
       s"equality pruning vacuous: sel=${sel.size} skipped=${skipped.size}")
-  }
-
-  // ——— frontier claims legacy name ————————————————————————————————————
-
-  test("frontierClaimsTable: legacy hashCode-named table wins when it " +
-      "exists; digest name otherwise") {
-    val statePath = TestSpark.tmpDir("graft_claims_mig") + "/state"
-    val legacy = "graft_frontier_claims_" +
-      java.lang.Integer.toHexString(statePath.hashCode)
-    val digest = graft.streaming.Streaming.frontierClaimsTable(statePath)
-    assert(graft.streaming.Streaming
-      .frontierClaimsTable(spark, statePath) == digest,
-      "fresh state path must resolve the digest name")
-    spark.sql(s"CREATE TABLE $legacy (canon STRING) USING parquet")
-    try assert(graft.streaming.Streaming
-      .frontierClaimsTable(spark, statePath) == legacy,
-      "existing legacy claims table must win (resume, don't orphan)")
-    finally spark.sql(s"DROP TABLE IF EXISTS $legacy")
   }
 }

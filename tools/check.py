@@ -63,6 +63,23 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame):
     return None
 
 
+def check_query(con, oracles, name: str, qdir: str) -> str:
+    """One query's status line: OK/rows-only, or why it failed."""
+    files = glob.glob(os.path.join(qdir, "*.parquet"))
+    if not files:
+        return "NO-SPARK-OUTPUT"
+    spark_df = pd.concat([pd.read_parquet(p) for p in sorted(files)])
+    if name not in oracles:
+        return f"rows-only ({len(spark_df)} rows)" + (
+            " EMPTY!" if len(spark_df) == 0 else "")
+    try:
+        duck_df = con.execute(oracles[name]).fetchdf()
+    except Exception as e:  # noqa: BLE001
+        return f"ORACLE-ERROR {e}"
+    diff = compare(name, spark_df, duck_df)
+    return diff or f"OK ({len(spark_df)} rows)"
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     json_out = None
@@ -83,40 +100,22 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
-    results = {}
+    record = {}
     for qdir in sorted(glob.glob(os.path.join(out_dir, "q*"))):
         name = os.path.basename(qdir)
-        files = glob.glob(os.path.join(qdir, "*.parquet"))
-        if not files:
-            results[name] = "NO-SPARK-OUTPUT"
-            continue
-        spark_df = pd.concat([pd.read_parquet(p) for p in sorted(files)])
-        if name not in oracles:
-            results[name] = f"rows-only ({len(spark_df)} rows)" + (
-                " EMPTY!" if len(spark_df) == 0 else "")
-            continue
-        try:
-            duck_df = con.execute(oracles[name]).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            results[name] = f"ORACLE-ERROR {e}"
-            continue
-        diff = compare(name, spark_df, duck_df)
-        results[name] = diff or f"OK ({len(spark_df)} rows)"
-    bad = 0
-    record = {}
-    for name in sorted(results):
-        status = results[name]
+        status = check_query(con, oracles, name, qdir)
         ok = status.startswith("OK") or status.startswith("rows-only")
         passed = ok and "EMPTY" not in status
-        if not passed:
-            bad += 1
         record[name] = {"pass": passed, "status": status}
-        print(f"{'PASS' if passed else 'FAIL':4} {name}: {status}")
-    print(f"\n{len(results) - bad}/{len(results)} pass")
+        # printed as decided (flushed): a redirected run shows progress
+        print(f"{'PASS' if passed else 'FAIL':4} {name}: {status}",
+              flush=True)
+    bad = sum(not r["pass"] for r in record.values())
+    print(f"\n{len(record) - bad}/{len(record)} pass")
     if json_out:
         with open(json_out, "w") as f:
-            json.dump({"sf_dir": sf_dir, "n_pass": len(results) - bad,
-                       "n_total": len(results), "queries": record}, f,
+            json.dump({"sf_dir": sf_dir, "n_pass": len(record) - bad,
+                       "n_total": len(record), "queries": record}, f,
                       indent=1, sort_keys=True)
         print(f"wrote {json_out}")
     sys.exit(1 if bad else 0)
