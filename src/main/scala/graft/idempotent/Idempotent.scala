@@ -1,6 +1,7 @@
 package graft.idempotent
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
   *  2. delete-partition-then-insert (pipeline.py:172-189).
   *
   * Spark-first restatements:
-  *  1. `left_anti` join; history side is just the distinct key projection,
-  *     which Catalyst prunes to the key columns at the scan.
+  *  1. `left_anti` join; history side is just the key projection, which
+  *     Catalyst prunes to the key columns at the scan.
   *  2. dynamic partition overwrite on a lake table partitioned by the same
   *     keys the reference DELETEs by — a metadata-level swap instead of a
   *     row-level delete, which is the scalable equivalent at 100 TB.
@@ -35,31 +36,53 @@ object Idempotent {
     incoming.join(alignedHistory, keys, "left_anti")
   }
 
-  /** J3: the semi-join complement count used for the ignored-rows report. */
-  def alreadyLoaded(incoming: DataFrame, history: DataFrame,
-                    keys: Seq[String]): DataFrame =
-    incoming.join(history.select(keys.map(col): _*), keys, "left_semi")
-
   /** J2+O4+K1: full incremental append into a parquet lake table. Returns
     * the received/ignored/loaded counts; skips the write when nothing is new
     * (dags/etl_municipios.py:152-154).
+    *
+    * The delivery is scanned once: the delta is cached, and the noop write
+    * that materializes it also fills two [[Observation]]s, `received` on
+    * `incoming` and `loaded` on the anti-join output; the append then reads
+    * the cache. An append of zero rows would still write an empty part
+    * file, so a re-send touches no file.
+    *
+    * History is the lake's key projection without `distinct()`: a left-anti
+    * join's result does not depend on duplicate build keys, so a distinct
+    * would only add a shuffle (and an adaptive re-plan) before the
+    * broadcast.
+    *
+    * Only a table that does not exist yet — a missing path, or a directory
+    * with no visible entry, as an aborted first write leaves it — counts
+    * as empty history. Any other read failure propagates: treating it as
+    * empty would re-append every row of the delivery. (The reference
+    * swallowed every error of its history query, dags/etl_municipios.py:
+    * 123-125.)
     */
   def incrementalAppend(spark: SparkSession, incoming: DataFrame,
                         tablePath: String, keys: Seq[String]): LoadStats = {
+    val path = new Path(tablePath)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(path) && fs.listStatus(path).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
     val history =
-      try spark.read.parquet(tablePath).select(keys.map(col): _*).distinct()
-      catch { case scala.util.control.NonFatal(_) =>
-        graft.ingest.Ingest.emptyWithSchema(
-          spark, incoming.select(keys.map(col): _*).schema) }
-    val fresh = newRows(incoming, history, keys)
-    // One pass for both counts: received via a cheap count on incoming,
-    // loaded via count of the (cached) delta actually written.
+      if (exists) spark.read.parquet(tablePath).select(keys.map(col): _*)
+      else graft.ingest.Ingest.emptyWithSchema(
+        spark, incoming.select(keys.map(col): _*).schema)
+    val received = Observation()
+    val loaded = Observation()
+    val fresh = newRows(incoming.observe(received, count(lit(1)).as("n")),
+      history, keys).observe(loaded, count(lit(1)).as("n"))
     fresh.cache()
-    val loaded = fresh.count()
-    val received = incoming.count()
-    if (loaded > 0) fresh.write.mode(SaveMode.Append).parquet(tablePath)
-    fresh.unpersist()
-    LoadStats(received, received - loaded, loaded)
+    try {
+      fresh.write.format("noop").mode(SaveMode.Overwrite).save()
+      // an input the optimizer proves empty loses its observed node and
+      // reports no metric
+      def n(o: Observation) = o.get.getOrElse("n", 0L).asInstanceOf[Long]
+      if (n(loaded) > 0) fresh.write.mode(SaveMode.Append).parquet(tablePath)
+      LoadStats(n(received), n(received) - n(loaded), n(loaded))
+    } finally fresh.unpersist()
   }
 
   /** K4: delete-partition-then-insert ≡ dynamic partition overwrite. Only

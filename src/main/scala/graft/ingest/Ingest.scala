@@ -1,6 +1,11 @@
 package graft.ingest
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,44 +26,77 @@ import org.apache.spark.sql.types._
   *    joins still resolve.
   *  - S8 newest-file pick (dags/etl_municipios.py:64-69).
   *
-  * All readers return lazy DataFrames; only cheap driver-side metadata work
-  * (file listing, header sniffing) happens eagerly.
+  * All readers return lazy DataFrames and run no Spark job at call time.
+  * What they need eagerly — the file listing, the JSON reader's sample
+  * document, the CSV reader's header line — is read on the driver through
+  * the Hadoop `FileSystem`, and the schema is derived from it by Spark's
+  * own inference over a local relation, which collects without a job.
   */
 object Ingest {
+
+  /** The quoted non-numeric tokens S1 scrubs to null. Quoted-string tokens
+    * only: bare NaN/Infinity literals are already handled by the JSON
+    * parser's allowNonNumericNumbers; the reference's extractor quotes them.
+    */
+  private val NonNumeric = "\"(-?INF|NaN)\""
+
+  /** The files a scan of `df` reads, largest first. Spark packs the files
+    * of a scan into read partitions largest first, so the head of this
+    * list is the file a `head()` over the scan returns. Equal sizes break
+    * by path. Driver-side metadata only.
+    */
+  private def largestFirst(spark: SparkSession, df: DataFrame): Seq[Path] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    df.inputFiles.toSeq
+      .map { f => val p = new Path(new URI(f)); p.getFileSystem(conf).getFileStatus(p) }
+      .sortBy(s => (-s.getLen, s.getPath.toString))
+      .map(_.getPath)
+  }
+
+  /** Open `file` on the driver, decompressing by extension as Spark's
+    * text readers do.
+    */
+  private def open(spark: SparkSession, file: Path): InputStream = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val in = file.getFileSystem(conf).open(file)
+    Option(new CompressionCodecFactory(conf).getCodec(file))
+      .fold[InputStream](in)(_.createInputStream(in))
+  }
 
   /** S1+S2+S3: read a JSON document file, scrub non-numeric numeric tokens,
     * unwrap the record array, and return one row per record.
     *
     * Implementation is `spark.read.text` (wholetext) -> `regexp_replace` ->
-    * `from_json(schema_of_json)` -> `explode`, so the sanitize step runs as a
-    * Catalyst expression rather than a driver-side string pass: on a large
-    * landing directory each file is scrubbed/parsed inside executors.
+    * `from_json` -> `explode`, so the sanitize step runs as a Catalyst
+    * expression rather than a driver-side string pass: on a large landing
+    * directory each file is scrubbed/parsed inside executors.
+    *
+    * Unless `recordSchema` is given, the record schema is inferred from one
+    * sample document, the largest file (the one a `head()` over the scan
+    * would return): it is read and scrubbed on the driver, unwrapped with
+    * Jackson, and `schema_of_json` is folded over a one-row local relation.
+    * No Spark job runs before the caller's own action.
     */
   def sanitizedJson(spark: SparkSession, path: String,
                     recordSchema: Option[StructType] = None): DataFrame = {
     import spark.implicits._
     val raw = spark.read.option("wholetext", "true").text(path)
-    // Quoted-string tokens only: `: "INF"`, `: "-INF"`, `: "NaN"` → null.
-    // (Bare NaN/Infinity literals are already handled by the JSON parser's
-    // allowNonNumericNumbers; the reference's extractor quotes them.)
     val cleaned = raw.select(
-      regexp_replace($"value", "\"(-?INF|NaN)\"", "null").as("value"))
-
-    // Unwrap: top-level object → first key's array; top-level array → itself.
-    // Normalize driver-side on one sampled document (schema inference needs a
-    // pass anyway), then parse all files with the inferred element schema.
-    val sampled = cleaned.head().getString(0)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val tree = mapper.readTree(sampled)
-    val arrayText =
-      if (tree.isObject) {
-        val firstField = tree.fieldNames().next()
-        tree.get(firstField).toString
-      } else tree.toString
+      regexp_replace($"value", NonNumeric, "null").as("value"))
 
     val elementSchema = recordSchema.getOrElse {
-      val ddl = spark.range(1)
-        .select(schema_of_json(lit(arrayText)).as("s")).head().getString(0)
+      // Unwrap: top-level object → first key's array; top-level array → itself.
+      val sample = largestFirst(spark, raw).headOption.getOrElse(
+        throw new NoSuchElementException(s"no JSON document under $path"))
+      val in = open(spark, sample)
+      val sampled = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(sampled.replaceAll(NonNumeric, "null"))
+      val arrayText =
+        if (tree.isObject) tree.get(tree.fieldNames().next()).toString
+        else tree.toString
+      val ddl = Seq(0).toDF()
+        .select(schema_of_json(lit(arrayText))).head().getString(0)
       DataType.fromDDL(ddl) match {
         case ArrayType(s: StructType, _) => s
         case s: StructType               => s
@@ -78,20 +116,43 @@ object Ingest {
       .select($"r.*")
   }
 
-  /** S4: CSV read with `;` first and a one-retry fallback to `,` when the
-    * header collapses to a single column. The retry decision reads only the
-    * header line (limit 1), not the data.
+  /** S4: CSV read with `;` first and a fallback to `,` when the header
+    * collapses to a single column.
+    *
+    * The decision reads only the header: the first line with a non-space
+    * character of the largest file (the line Spark's own header inference
+    * takes), read on the driver with a UTF-8 BOM stripped as Hadoop's line
+    * reader does. Spark's CSV reader over that one line, as a local
+    * Dataset, yields the header schema with no job; the file is then read
+    * once with that schema.
     */
   def csvWithDelimiterFallback(spark: SparkSession, path: String,
                                header: Boolean = true): DataFrame = {
-    def read(sep: String) = spark.read
+    import spark.implicits._
+    def reader(sep: String) = spark.read
       .option("sep", sep)
       .option("header", header.toString)
       .option("mode", "PERMISSIVE")
-      .csv(path)
-    val semi = read(";")
-    if (semi.columns.length <= 1) read(",") else semi
+    firstLine(spark, path) match {
+      case Some(line) =>
+        val semi = reader(";").csv(Seq(line).toDS()).schema
+        if (semi.length > 1) reader(";").schema(semi).csv(path)
+        else reader(",").schema(reader(",").csv(Seq(line).toDS()).schema).csv(path)
+      case None => reader(",").csv(path) // no line: nothing to sniff or read
+    }
   }
+
+  /** The first line holding a non-space character across the files under
+    * `path`, largest file first.
+    */
+  private def firstLine(spark: SparkSession, path: String): Option[String] =
+    largestFirst(spark, spark.read.text(path)).iterator.flatMap { file =>
+      val lines = new BufferedReader(new InputStreamReader(open(spark, file), UTF_8))
+      try Iterator.continually(lines.readLine()).takeWhile(_ != null)
+        .zipWithIndex.map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
+        .find(_.exists(_ != ' '))
+      finally lines.close()
+    }.nextOption()
 
   /** S5: plain `;`-separated CSV (dags/meu_pipeline.py:55). */
   def csv(spark: SparkSession, path: String): DataFrame =

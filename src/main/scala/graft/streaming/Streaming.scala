@@ -736,10 +736,23 @@ object Streaming {
     * recompute reads the latest version strictly below it — the
     * predecessor must survive the prune. Everything older is
     * unreachable (batches commit serially).
+    *
+    * A batch older than the newest version is refused with an
+    * [[IllegalStateException]]: it means the stream restarted from a fresh
+    * checkpoint over existing state, so batch ids began again at 0. Folding
+    * on would write versions older than the survivors, prune them at once,
+    * and silently drop batches. A redelivery of the last batch
+    * (`batchId` equal to the newest version) is the legal replay above.
     */
   private def foldVersion(spark: SparkSession, dir: String, batchId: Long,
                           stateSchema: StructType)
                          (next: DataFrame => DataFrame): Unit = {
+    stateVersions(spark, dir).maxOption.filter(_ > batchId).foreach { newest =>
+      throw new IllegalStateException(
+        s"state directory $dir already holds version v$newest, newer than " +
+          s"batch $batchId (v$batchId): the stream restarted without its " +
+          "checkpoint; restore the checkpoint or use a new state directory")
+    }
     next(latestState(spark, dir, stateSchema, batchId))
       .write.mode("overwrite").parquet(s"$dir/v$batchId")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

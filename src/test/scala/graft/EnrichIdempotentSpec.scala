@@ -40,6 +40,66 @@ class EnrichIdempotentSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() === 3)
   }
 
+  private val keys = Seq("municipio", "ano_ref", "mes_ref")
+  private def delivery(rows: (String, Long, Long, Double)*) =
+    rows.toDF("municipio", "ano_ref", "mes_ref", "valor")
+
+  test("incrementalAppend: a zero-row re-send leaves every lake file as it was") {
+    val dir = TestSpark.tmpDir("incr-resend") + "/table"
+    val batch = delivery(("a", 2024L, 1L, 10.0), ("b", 2024L, 1L, 20.0))
+    Idempotent.incrementalAppend(spark, batch, dir, keys)
+    val before = TestSpark.files(dir)
+    assert(Idempotent.incrementalAppend(spark, batch, dir, keys) ===
+      Idempotent.LoadStats(2, 2, 0))
+    assert(TestSpark.files(dir) === before)
+  }
+
+  test("incrementalAppend: an empty delivery writes nothing; a first load creates the table") {
+    val missing = TestSpark.tmpDir("incr-first") + "/table"
+    val empty = delivery()
+    assert(Idempotent.incrementalAppend(spark, empty, missing, keys) ===
+      Idempotent.LoadStats(0, 0, 0))
+    assert(!new java.io.File(missing).exists(), "an empty delivery created the table")
+    val batch = delivery(("a", 2024L, 1L, 10.0), ("b", 2024L, 2L, 20.0))
+    assert(Idempotent.incrementalAppend(spark, batch, missing, keys) ===
+      Idempotent.LoadStats(2, 0, 2))
+    assert(spark.read.parquet(missing).count() === 2L)
+    val loaded = TestSpark.files(missing)
+    assert(Idempotent.incrementalAppend(spark, empty, missing, keys) ===
+      Idempotent.LoadStats(0, 0, 0))
+    assert(TestSpark.files(missing) === loaded)
+    // an empty directory, as an aborted first write leaves it, holds no table
+    val bare = TestSpark.tmpDir("incr-bare")
+    assert(Idempotent.incrementalAppend(spark, batch, bare, keys) ===
+      Idempotent.LoadStats(2, 0, 2))
+  }
+
+  test("incrementalAppend: an unreadable lake fails the load instead of re-appending") {
+    val dir = TestSpark.tmpDir("incr-corrupt")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, "part-00000.snappy.parquet"), "not parquet")
+    val before = TestSpark.files(dir)
+    intercept[Exception](Idempotent.incrementalAppend(spark,
+      delivery(("a", 2024L, 1L, 10.0)), dir, keys))
+    assert(TestSpark.files(dir) === before, "a failed history read must not append")
+  }
+
+  test("incrementalAppend scans the delivery once") {
+    val scanned = spark.sparkContext.longAccumulator("incr-scanned")
+    // a filter, so no column pruning skips it; over a range, not a local
+    // relation, so the optimizer does not evaluate it itself
+    val seen = udf { (_: Long) => scanned.add(1); true }.asNondeterministic()
+    val dir = TestSpark.tmpDir("incr-scans") + "/table"
+    Idempotent.incrementalAppend(spark,
+      delivery(("a", 2024L, 1L, 10.0)), dir, keys)
+    val batch = spark.range(2).filter(seen($"id")).select(
+      when($"id" === 0, "a").otherwise("b").as("municipio"),
+      lit(2024L).as("ano_ref"), lit(1L).as("mes_ref"), ($"id" * 10.0).as("valor"))
+    assert(Idempotent.incrementalAppend(spark, batch, dir, keys) ===
+      Idempotent.LoadStats(2, 1, 1))
+    assert(scanned.value === 2L, "each delivered row must be read once")
+  }
+
   test("newRows aligns mismatched key types (the V22 fix)") {
     val incoming = Seq(("a", 2024L)).toDF("k", "ano")
     val history = Seq(("a", "2024"), ("b", "2023")).toDF("k", "ano") // string keys

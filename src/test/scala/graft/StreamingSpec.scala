@@ -172,11 +172,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.select("event_id").distinct().count() === 3)
   }
 
+  /** Four one-file deliveries of keys for the CMS maintainer. */
+  private def cmsBatches = (0 until 4).map(i =>
+    ((0 until 6).map(j => s"k$j") ++ Seq.fill(i + 1)("hot")).toDF("key"))
+
   test("cmsMaintain: versioned fold keeps 2 versions and replays exactly once") {
     // CMS counters add, so a replayed batch folded onto the wrong base
     // version would show up as a double count
-    val files = (0 until 4).map(i =>
-      ((0 until 6).map(j => s"k$j") ++ Seq.fill(i + 1)("hot")).toDF("key"))
+    val files = cmsBatches
     val src = TestSpark.tmpDir("cms-src")
     files.foreach(_.coalesce(1).write.mode("append").parquet(src))
     val state = TestSpark.tmpDir("cms-state") + "/state"
@@ -210,6 +213,28 @@ class StreamingSpec extends AnyFunSuite {
       TestSpark.tmpDir("cms-none") + "/state")
     assert(empty.schema.fieldNames.toSeq === Seq("r", "c", "cnt"))
     assert(empty.count() === 0L)
+  }
+
+  test("cmsMaintain: a fresh checkpoint over existing state fails and keeps it") {
+    val files = cmsBatches
+    val src = TestSpark.tmpDir("cms-src")
+    files.foreach(_.coalesce(1).write.mode("append").parquet(src))
+    val state = TestSpark.tmpDir("cms-state") + "/state"
+    def run(ckpt: String): Unit = Streaming.cmsMaintain(spark, src,
+      files.head.schema, "key", depth = 3, width = 16, state, ckpt)
+    run(TestSpark.tmpDir("cms-ckpt"))
+    val before = TestSpark.files(state)
+    assert(before.keySet.map(_.takeWhile(_ != '/')) === Set("v2", "v3"))
+
+    // batch ids restart at 0 under a new checkpoint: folding on would prune
+    // the new versions at once and drop batches, so the call must fail
+    val err = intercept[Exception](run(TestSpark.tmpDir("cms-ckpt2")))
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    val refusal = causes.collectFirst { case e: IllegalStateException => e }
+    assert(refusal.isDefined, s"expected an IllegalStateException in $err")
+    assert(Seq(state, "v3", "v0").forall(refusal.get.getMessage.contains),
+      refusal.get.getMessage)
+    assert(TestSpark.files(state) === before, "v2/v3 must be left as they were")
   }
 
   test("windowedCounts aggregates per tumbling window with a watermark") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
@@ -21,6 +23,21 @@ object TestSpark {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every regular file under `dir` by relative path, with its bytes; empty
+    * when `dir` does not exist.
+    */
+  def files(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Map.empty
+    else {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+  }
 
   /** Run `body` with `kvs` set on the shared session, restoring each key's
     * previous setting afterwards.
