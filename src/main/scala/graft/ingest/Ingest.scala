@@ -4,9 +4,13 @@ import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.expressions.{Literal, SchemaOfJson}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,11 +30,13 @@ import org.apache.spark.sql.types._
   *    joins still resolve.
   *  - S8 newest-file pick (dags/etl_municipios.py:64-69).
   *
-  * All readers return lazy DataFrames and run no Spark job at call time.
-  * What they need eagerly — the file listing, the JSON reader's sample
-  * document, the CSV reader's header line — is read on the driver through
-  * the Hadoop `FileSystem`, and the schema is derived from it by Spark's
-  * own inference over a local relation, which collects without a job.
+  * All readers return lazy DataFrames and run no query at call time: no
+  * SQL execution, so no Spark job. What they need eagerly — the file
+  * listing, the JSON reader's sample document, the CSV reader's header
+  * line — is read on the driver through the Hadoop `FileSystem`, and the
+  * schema is derived from it by evaluating Spark's own inference code
+  * directly (the `schema_of_json` expression; the CSV tokenizer and
+  * safe-header rule), without planning a query.
   */
 object Ingest {
 
@@ -74,8 +80,9 @@ object Ingest {
     * Unless `recordSchema` is given, the record schema is inferred from one
     * sample document, the largest file (the one a `head()` over the scan
     * would return): it is read and scrubbed on the driver, unwrapped with
-    * Jackson, and `schema_of_json` is folded over a one-row local relation.
-    * No Spark job runs before the caller's own action.
+    * Jackson, and the `schema_of_json` expression is evaluated over the
+    * record array. No query runs before the caller's own action. A sample
+    * document with no records fails: there is nothing to infer from.
     */
   def sanitizedJson(spark: SparkSession, path: String,
                     recordSchema: Option[StructType] = None): DataFrame = {
@@ -92,11 +99,10 @@ object Ingest {
       val sampled = try new String(in.readAllBytes(), UTF_8) finally in.close()
       val tree = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(sampled.replaceAll(NonNumeric, "null"))
-      val arrayText =
-        if (tree.isObject) tree.get(tree.fieldNames().next()).toString
-        else tree.toString
-      val ddl = Seq(0).toDF()
-        .select(schema_of_json(lit(arrayText))).head().getString(0)
+      val records = if (tree.isObject) tree.get(tree.fieldNames().next()) else tree
+      if (records.isArray && records.isEmpty) throw new IllegalArgumentException(
+        s"$sample holds no records: cannot infer a record schema")
+      val ddl = SchemaOfJson(Literal(records.toString), Map.empty).eval().toString
       DataType.fromDDL(ddl) match {
         case ArrayType(s: StructType, _) => s
         case s: StructType               => s
@@ -122,23 +128,40 @@ object Ingest {
     * The decision reads only the header: the first line with a non-space
     * character of the largest file (the line Spark's own header inference
     * takes), read on the driver with a UTF-8 BOM stripped as Hadoop's line
-    * reader does. Spark's CSV reader over that one line, as a local
-    * Dataset, yields the header schema with no job; the file is then read
-    * once with that schema.
+    * reader does. Its schema is derived on the driver with no query
+    * ([[headerSchema]]); the file is then read once with that schema.
     */
   def csvWithDelimiterFallback(spark: SparkSession, path: String,
                                header: Boolean = true): DataFrame = {
-    import spark.implicits._
-    def reader(sep: String) = spark.read
-      .option("sep", sep)
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE")
+    def options(sep: String) =
+      Map("sep" -> sep, "header" -> header.toString, "mode" -> "PERMISSIVE")
+    def read(sep: String, schema: StructType) =
+      spark.read.options(options(sep)).schema(schema).csv(path)
     firstLine(spark, path) match {
       case Some(line) =>
-        val semi = reader(";").csv(Seq(line).toDS()).schema
-        if (semi.length > 1) reader(";").schema(semi).csv(path)
-        else reader(",").schema(reader(",").csv(Seq(line).toDS()).schema).csv(path)
-      case None => reader(",").csv(path) // no line: nothing to sniff or read
+        val semi = headerSchema(spark, options(";"), line)
+        if (semi.length > 1) read(";", semi)
+        else read(",", headerSchema(spark, options(","), line))
+      case None => spark.read.options(options(",")).csv(path) // nothing to sniff or read
+    }
+  }
+
+  /** The schema `spark.read.options(options).csv(Seq(line).toDS())` gives a
+    * `line` holding a non-space character when schema inference is off,
+    * derived the way that reader derives it but without its query: the line
+    * is tokenized by Spark's CSV parser settings for `options`, the tokens
+    * are named by `CSVUtils.makeSafeHeader` (positional `_c<i>` names
+    * without a header; with one, an empty name becomes `_c<i>` and a
+    * duplicate gets its index appended), and every field is a nullable
+    * string. A line the parser returns no tokens for gives the empty schema.
+    */
+  private def headerSchema(spark: SparkSession, options: Map[String, String],
+                           line: String): StructType = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    val opts = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    Option(new CsvParser(opts.asParserSettings).parseLine(line)).fold(new StructType()) {
+      tokens => StructType(CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, opts)
+        .map(StructField(_, StringType)))
     }
   }
 

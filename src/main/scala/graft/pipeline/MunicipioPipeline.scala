@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.enrich.Enrich
@@ -50,14 +50,20 @@ object MunicipioPipeline {
 
   /** EP2: delete-partition-then-insert into a parquet lake table (the
     * scalable analogue of pipeline.py:172-189's scoped DELETE + append).
+    * Returns the rows written into the month's partition, counted by an
+    * [[Observation]] in the write's own job: the lake is not read back. A
+    * delivery with no records fails in [[Ingest.sanitizedJson]] before the
+    * write, so the count is never a silent 0 over a month left as it was.
     */
   def runLocalLake(spark: SparkSession, jsonPath: String,
                    ibgeCsvPath: Option[String], ano: Int, mes: Int,
                    lakePath: String): Long = {
-    val df = transform(spark, jsonPath, ibgeCsvPath, ano, mes)
-    Idempotent.overwritePartitions(df, lakePath, Seq("ano_ref", "mes_ref"))
-    spark.read.parquet(lakePath)
-      .filter(col("ano_ref") === ano && col("mes_ref") === mes).count()
+    val written = Observation()
+    Idempotent.overwritePartitions(
+      transform(spark, jsonPath, ibgeCsvPath, ano, mes)
+        .observe(written, count(lit(1)).as("n")),
+      lakePath, Seq("ano_ref", "mes_ref"))
+    written.get("n").asInstanceOf[Long]
   }
 
   /** EP2, JDBC flavor: ensure DDL + scoped DELETE + append

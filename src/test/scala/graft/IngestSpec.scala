@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 
@@ -9,7 +8,6 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.Ingest
@@ -19,22 +17,6 @@ class IngestSpec extends AnyFunSuite {
 
   private def write(path: String, content: String): Unit =
     Files.writeString(Paths.get(path), content)
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** WARN-or-worse log messages emitted while `body` runs. */
   private def warningsDuring[A](body: => A): (A, Seq[String]) = {
@@ -98,7 +80,11 @@ class IngestSpec extends AnyFunSuite {
       Seq("sigla", "codigo", "nome_municipio")),
     "UTF-8 BOM" -> ("\uFEFF" + ibge, Seq("UF", "COD", "NOME")),
     "leading blank lines" -> ("\n   \n" + ibge, Seq("UF", "COD", "NOME")),
-    "CRLF" -> (ibge.replace("\n", "\r\n"), Seq("UF", "COD", "NOME")))
+    "CRLF" -> (ibge.replace("\n", "\r\n"), Seq("UF", "COD", "NOME")),
+    // Spark's safe names: an empty name becomes `_c<i>`, a duplicate gets
+    // its index appended
+    "duplicate and empty names" -> (
+      "UF;;UF" + ibge.dropWhile(_ != '\n'), Seq("UF0", "_c1", "UF2")))
 
   test("sanitizedJson scrubs quoted INF/-INF/NaN and unwraps first-key records") {
     val dir = TestSpark.tmpDir("json")
@@ -156,14 +142,19 @@ class IngestSpec extends AnyFunSuite {
     csvVariants.foreach { case (variant, (content, columns)) =>
       val dir = TestSpark.tmpDir("csv-variant")
       write(s"$dir/dim.csv", content)
-      val (rows, warnings) = warningsDuring {
-        val df = Ingest.csvWithDelimiterFallback(spark, s"$dir/dim.csv")
-        assert(df.columns.toSeq === columns, variant)
-        df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq
-      }
+      val (df, callWarnings) =
+        warningsDuring(Ingest.csvWithDelimiterFallback(spark, s"$dir/dim.csv"))
+      assert(callWarnings.isEmpty, s"$variant: $callWarnings")
+      assert(df.columns.toSeq === columns, variant)
+      val (rows, readWarnings) = warningsDuring(
+        df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq)
       assert(rows === Seq(("SP", "3507506", "  botucatu"), ("SP", "3550308", "São Paulo")),
         variant)
-      assert(warnings.isEmpty, s"$variant: $warnings")
+      // a renamed header does not match its line: the read's own header
+      // check says so once, as any Spark CSV read of the file does
+      val renamed = columns.exists(c => !content.contains(c))
+      assert(readWarnings.map(_.contains("CSV header does not conform")) ===
+        (if (renamed) Seq(true) else Nil), s"$variant: $readWarnings")
     }
     // without a header the columns are positional and the header is a row
     val dir = TestSpark.tmpDir("csv-noheader")
@@ -178,12 +169,13 @@ class IngestSpec extends AnyFunSuite {
     write(s"$dir/data.json", jsonShapes.head._2._1)
     write(s"$dir/semi.csv", ibge)
     write(s"$dir/comma.csv", ibge.replace(';', ','))
-    val jsonJobs = jobsDuring(Ingest.sanitizedJson(spark, s"$dir/data.json"))
-    val csvJobs = jobsDuring {
+    val (_, json) = TestSpark.activity(Ingest.sanitizedJson(spark, s"$dir/data.json"))
+    val (_, csv) = TestSpark.activity {
       Ingest.csvWithDelimiterFallback(spark, s"$dir/semi.csv")
       Ingest.csvWithDelimiterFallback(spark, s"$dir/comma.csv")
     }
-    assert((jsonJobs, csvJobs) === ((0, 0)))
+    // (jobs, SQL executions) per reader
+    assert(Seq(json, csv).map(a => (a.jobs, a.executions)) === Seq((0, 0), (0, 0)))
   }
 
   test("newestFile picks the most recently modified match") {

@@ -72,6 +72,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(lake).count() === 6)
   }
 
+  test("EP2 lake load: counts in the write's own jobs and never reads the lake") {
+    val lake = TestSpark.tmpDir("lake-ep2-jobs") + "/t"
+    val json = s"$fixtureDir/consolidado.json"
+    // a first load, then a re-send of the same month
+    val runs = Seq.fill(2)(TestSpark.activity(MunicipioPipeline.runLocalLake(
+      spark, json, Some(s"$fixtureDir/de_para_ibge.csv"), 2025, 10, lake)))
+    runs.zipWithIndex.foreach { case ((n, a), i) =>
+      assert(n === 3L, s"run $i")
+      // the dimension's broadcast and the write
+      assert(a.jobs <= 2, s"run $i: $a")
+      assert(a.scanned.exists(_.contains("consolidado.json")), s"run $i: $a")
+      assert(!a.scanned.exists(_.contains(lake)), s"run $i read the lake: $a")
+    }
+  }
+
+  test("EP2 lake load: a delivery with no records fails before any lake file changes") {
+    val lake = TestSpark.tmpDir("lake-ep2-empty") + "/t"
+    MunicipioPipeline.runLocalLake(spark, s"$fixtureDir/consolidado.json", None, 2025, 10, lake)
+    val before = TestSpark.files(lake)
+    val empty = TestSpark.tmpDir("empty-delivery") + "/empty.json"
+    Files.writeString(Paths.get(empty), """{"DS0": []}""")
+    val e = intercept[IllegalArgumentException](
+      MunicipioPipeline.runLocalLake(spark, empty, None, 2025, 10, lake))
+    assert(e.getMessage.contains(empty) && e.getMessage.contains("no records"), e.getMessage)
+    assert(TestSpark.files(lake) === before)
+  }
+
   test("EP1 incremental: second run loads zero rows (anti-join idempotency)") {
     val lake = TestSpark.tmpDir("lake-ep1") + "/t"
     val json = s"$fixtureDir/consolidado.json"
