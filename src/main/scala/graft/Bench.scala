@@ -79,6 +79,7 @@ object Bench {
       // bounded (generated classes are KBs). Scale-independent: compilation
       // is per-plan driver work, identical on a cluster.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config(Sessions.localFileSystem)
     // same A/B hook as Sessions.builder: extra confs as "k=v;k2=v2"
     val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))

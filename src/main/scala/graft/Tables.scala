@@ -66,6 +66,16 @@ object Tables {
   * this would instead be sized to ~2-3x total executor cores).
   */
 object Sessions {
+  /** Hadoop's `file:` filesystem, for both its APIs, with each file's mode
+    * and link status set through `java.nio.file` instead of a `chmod` or
+    * `readlink` process (see [[graft.fs.NioRawLocalFileSystem]]). Every
+    * session this repo builds — [[builder]], Bench, Verify and the test
+    * session — takes it.
+    */
+  val localFileSystem: Map[String, Any] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName)
+
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -90,6 +100,7 @@ object Sessions {
       // r13: hold a whole session's generated classes (default 100 entries
       // thrashes across a 357-query registry; see OPTIMIZATION_r13.md)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config(localFileSystem)
     // measurement/deployment hook: extra session confs as "k=v;k2=v2"
     // (A/B-ing a conf without a rebuild — the §1 measure-first loop)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq

@@ -15,6 +15,7 @@ object Verify {
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(Sessions.localFileSystem)
     // SPARK_GRAFT_ANSI=true/false pins throw-vs-null dialect for the
     // sweep BASELINE.md records (SURVEY §7.3's named trap); unset keeps
     // the session default, printed either way so every recorded run

@@ -1,9 +1,16 @@
 package graft.idempotent
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.graftbridge.ListingBridge
+import org.apache.spark.sql.{classic, Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent-load operators (SURVEY.md §2.4 J2/J3, §2.2 K4, §2.10 O4).
   *
@@ -49,7 +56,8 @@ object Idempotent {
     * History is the lake's key projection without `distinct()`: a left-anti
     * join's result does not depend on duplicate build keys, so a distinct
     * would only add a shuffle (and an adaptive re-plan) before the
-    * broadcast.
+    * broadcast. The lake is read with the schema of one footer, taken on
+    * the driver ([[footerSchema]]), so the read starts no schema job.
     *
     * Only a table that does not exist yet — a missing path, or a directory
     * with no visible entry, as an aborted first write leaves it — counts
@@ -67,7 +75,8 @@ object Idempotent {
       !n.startsWith("_") && !n.startsWith(".")
     }
     val history =
-      if (exists) spark.read.parquet(tablePath).select(keys.map(col): _*)
+      if (exists) footerSchema(spark, fs, path).fold(spark.read)(spark.read.schema)
+        .parquet(tablePath).select(keys.map(col): _*)
       else graft.ingest.Ingest.emptyWithSchema(
         spark, incoming.select(keys.map(col): _*).schema)
     val received = Observation()
@@ -83,6 +92,45 @@ object Idempotent {
       if (n(loaded) > 0) fresh.write.mode(SaveMode.Append).parquet(tablePath)
       LoadStats(n(received), n(received) - n(loaded), n(loaded))
     } finally fresh.unpersist()
+  }
+
+  /** The data schema `spark.read.parquet(path)` infers when schemas are not
+    * merged, without the Spark job that inference runs. Like
+    * `ParquetUtils.inferSchema`, it reads one footer: `_common_metadata`,
+    * else `_metadata`, else the first data file by path, among the files
+    * Spark's listing keeps (hidden names and `_temporary` skipped). The
+    * footer's Spark schema is taken if it has one, else the Parquet schema is
+    * converted with the session's settings, as that inference does; the
+    * footer is read on the driver. Partition columns are not in the
+    * footer: a read given this schema still discovers them from the
+    * directory names. `None` when the session merges schemas or no file
+    * qualifies; the caller's read then infers as before (and fails the same
+    * way on a lake with no data file).
+    */
+  private def footerSchema(spark: SparkSession, fs: FileSystem,
+                           path: Path): Option[StructType] = {
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.conf
+    def leaves(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
+      .filterNot(s => ListingBridge.skipped(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    val summaries = Seq("_common_metadata", "_metadata")
+    def sample: Option[FileStatus] = {
+      val files = leaves(path).sortBy(_.getPath.toString)
+      (summaries.flatMap(n => files.find(_.getPath.getName == n)) ++
+        files.filterNot(f => summaries.contains(f.getPath.getName))).headOption
+    }
+    (if (conf.isParquetSchemaMergingEnabled) None else sample).map { file =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, state.newHadoopConf()), SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+    }
   }
 
   /** K4: delete-partition-then-insert ≡ dynamic partition overwrite. Only

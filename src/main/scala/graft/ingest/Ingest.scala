@@ -77,6 +77,14 @@ object Ingest {
     * expression rather than a driver-side string pass: on a large landing
     * directory each file is scrubbed/parsed inside executors.
     *
+    * The generator takes the parse expression itself, not a column that
+    * aliases it. Over an attribute input, Spark's `InferFiltersFromGenerate`
+    * adds `size(records) > 0 AND isnotnull(records)` below the generator,
+    * and the alias is then substituted into that filter, so every document
+    * would be scrubbed and parsed twice: once in the filter and once in the
+    * projection. The rule skips non-attribute inputs. Rows are the same
+    * either way: `explode` emits nothing for a null or empty array.
+    *
     * Unless `recordSchema` is given, the record schema is inferred from one
     * sample document, the largest file (the one a `head()` over the scan
     * would return): it is read and scrubbed on the driver, unwrapped with
@@ -117,8 +125,7 @@ object Ingest {
           $"value", "^\\s*\\{\\s*\"[^\"]*\"\\s*:", ""), "\\}\\s*$", ""))
 
     cleaned
-      .select(from_json(unwrapExpr, ArrayType(elementSchema)).as("records"))
-      .select(explode($"records").as("r"))
+      .select(explode(from_json(unwrapExpr, ArrayType(elementSchema))).as("r"))
       .select($"r.*")
   }
 

@@ -100,6 +100,26 @@ class EnrichIdempotentSpec extends AnyFunSuite {
     assert(scanned.value === 2L, "each delivered row must be read once")
   }
 
+  test("incrementalAppend: a re-send over an int-keyed lake loads nothing (the V22 fix)") {
+    // the lake's keys are int, in the data and in partition directory names;
+    // the delivery's are bigint
+    val lake = Seq(("a", 2024, 1, 10.0), ("b", 2024, 1, 20.0))
+      .toDF("municipio", "ano_ref", "mes_ref", "valor")
+    val resend = delivery(("a", 2024L, 1L, 10.0), ("b", 2024L, 1L, 20.0))
+    val flat = TestSpark.tmpDir("incr-int") + "/table"
+    val partitioned = TestSpark.tmpDir("incr-int-part") + "/table"
+    lake.write.parquet(flat)
+    lake.write.partitionBy("ano_ref", "mes_ref").parquet(partitioned)
+    Seq(flat, partitioned).foreach { dir =>
+      val (stats, run) = TestSpark.activity(
+        Idempotent.incrementalAppend(spark, resend, dir, keys))
+      assert(stats === Idempotent.LoadStats(2, 2, 0), dir)
+      // the history broadcast, the delta's cache and the noop write over it;
+      // the lake's schema comes from a footer read on the driver, not a job
+      assert(run.jobs === 3, dir)
+    }
+  }
+
   test("newRows aligns mismatched key types (the V22 fix)") {
     val incoming = Seq(("a", 2024L)).toDF("k", "ano")
     val history = Seq(("a", "2024"), ("b", "2023")).toDF("k", "ano") // string keys

@@ -8,6 +8,9 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.Ingest
@@ -176,6 +179,27 @@ class IngestSpec extends AnyFunSuite {
     }
     // (jobs, SQL executions) per reader
     assert(Seq(json, csv).map(a => (a.jobs, a.executions)) === Seq((0, 0), (0, 0)))
+  }
+
+  test("sanitizedJson scrubs and parses each document once") {
+    val dir = TestSpark.tmpDir("json-once")
+    write(s"$dir/data.json", jsonShapes.head._2._1)
+    val plan = Ingest.sanitizedJson(spark, s"$dir/data.json").queryExecution.optimizedPlan
+    // a filter inferred from the generator would parse the document again
+    assert(plan.collect { case f: Filter => f }.isEmpty, plan.treeString)
+    assert(plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j })).size === 1,
+      plan.treeString)
+  }
+
+  test("sanitizedJson yields no row for a null, empty or malformed record array") {
+    val dir = TestSpark.tmpDir("json-degenerate")
+    write(s"$dir/a.json", """[{"x": 1}, null]""")
+    write(s"$dir/b.json", "[]")
+    write(s"$dir/c.json", """{"DS0": null}""")
+    write(s"$dir/d.json", """{"DS0": [{"x": oops""")
+    val df = Ingest.sanitizedJson(spark, dir, Some(StructType.fromDDL("x BIGINT")))
+    assert(df.schema.toDDL === "x BIGINT")
+    assert(df.collect().map(_.toString).sorted.toSeq === Seq("[1]", "[null]"))
   }
 
   test("newestFile picks the most recently modified match") {

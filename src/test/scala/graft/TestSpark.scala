@@ -25,6 +25,7 @@ object TestSpark {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      .config(Sessions.localFileSystem)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
