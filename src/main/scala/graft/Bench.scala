@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -63,42 +62,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r13 (measured, OPTIMIZATION_r13.md): the 100-entry default codegen
-      // cache cannot hold one bench round's generated classes, so EVERY
-      // timed query recompiled all its whole-stage code despite the sf0.001
-      // warmup (QProf: KeyLock-on-CodeGenerator + doCompile ≈ 3-4 s/query).
-      // Sized to hold the full query registry's code; driver-memory cost is
-      // bounded (generated classes are KBs). Scale-independent: compilation
-      // is per-plan driver work, identical on a cluster.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config(Sessions.localFileSystem)
-    // same A/B hook as Sessions.builder: extra confs as "k=v;k2=v2"
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foldLeft(builder) { (bb, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        bb.config(k.trim, v.trim)
-      }
-      .getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // cluster-profile A/B: SPARK_GRAFT_PAIR_HINT=merge benches the
-    // spill-safe SMJ profile against the default shuffle_hash pins
-    sys.env.get("SPARK_GRAFT_PAIR_HINT")
-      .foreach(v => spark.conf.set(GraftConf.PairJoinHintKey, v))
-    // regime-pinned scale probes: "-1" disables broadcast joins so a
-    // 10× byte ratio is measured within ONE join regime instead of
-    // across AQE's broadcast→shuffle transition (whose byte jump at
-    // tiny absolutes reads as superlinear when the algorithm is linear)
-    sys.env.get("SPARK_GRAFT_BROADCAST_THRESHOLD")
-      .foreach(v => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v))
     val qs = SparkEntry.queries
     // local-iteration subset (comma-separated names) — the q52-adjudication
     // workflow; driver leaves it unset. Misspelled names must fail loudly.

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Engine tuning knobs, read from the Spark session conf so a deployment
-  * can retune without a rebuild.
+/** The engine's one tuning knob, the pair-join strategy read from the
+  * Spark session conf so a deployment can retune without a rebuild, and
+  * the registry of operator-internal caches.
   */
 object GraftConf {
 
@@ -41,19 +42,6 @@ object GraftConf {
   /** Apply the configured pair-join hint to the build side. */
   def hintPairJoin(df: DataFrame): DataFrame =
     df.hint(pairJoinHint(df.sparkSession))
-
-  /** Gate for [[graft.plans.AutoPairJoinHint]]: auto-apply the pair-join
-    * strategy to un-hinted joins whose sides both carry array columns.
-    * OFF by default — a strategy hint also removes the join from
-    * Catalyst's inner-join reordering and from AQE's runtime re-selection,
-    * which is the wrong global default; opt in for sessions running
-    * pairwise-similarity workloads where the wide-array build-side
-    * pathology dominates.
-    */
-  val AutoPairJoinKey = "spark.graft.pairJoin.auto"
-
-  def autoPairJoin(s: SparkSession): Boolean =
-    s.conf.get(AutoPairJoinKey, "false").toBoolean
 
   /** Registry of DataFrames the graft operators `.cache()` internally
     * (posting sets, survivor frames). The results those caches feed are

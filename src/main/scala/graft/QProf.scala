@@ -4,7 +4,7 @@ import org.apache.spark.scheduler._
 
 /** Per-JOB and per-STAGE profile of one declared query — the measurement
   * tool the optimization guide's §1 loop needs for COMPOSITE queries,
-  * where QDebug's build-once-count-thrice shape misses the
+  * where building a frame once and counting it repeatedly misses the
   * construction-time jobs (localCheckpoints, gate collects, staging
   * writes, streaming micro-batches). Runs the query exactly as Bench
   * does (fresh construction + count per round, caches cleared, sf0.001

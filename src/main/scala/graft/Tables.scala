@@ -69,8 +69,8 @@ object Sessions {
   /** Hadoop's `file:` filesystem, for both its APIs, with each file's mode
     * and link status set through `java.nio.file` instead of a `chmod` or
     * `readlink` process (see [[graft.fs.NioRawLocalFileSystem]]). Every
-    * session this repo builds — [[builder]], Bench, Verify and the test
-    * session — takes it.
+    * session this repo builds — [[builder]], and so every main, and the
+    * test session — takes it.
     */
   val localFileSystem: Map[String, Any] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
@@ -80,9 +80,6 @@ object Sessions {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.registerAll(spark)
-    // live-session equivalent of the GraftExtensions wiring (idempotent;
-    // the rule no-ops unless spark.graft.pairJoin.auto is enabled)
-    graft.plans.AutoPairJoinHint.register(spark)
     spark
   }
 

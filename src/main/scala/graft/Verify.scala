@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,15 +6,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(Sessions.localFileSystem)
+    // the protocol overrides below are set after the shared settings
+    // (SPARK_GRAFT_EXTRA_CONF included), so they win
+    val builder = Sessions.builder(cpus)
     // SPARK_GRAFT_ANSI=true/false pins throw-vs-null dialect for the
     // sweep BASELINE.md records (SURVEY §7.3's named trap); unset keeps
     // the session default, printed either way so every recorded run

@@ -132,10 +132,11 @@ object Ingest {
   /** S4: CSV read with `;` first and a fallback to `,` when the header
     * collapses to a single column.
     *
-    * The decision reads only the header: the first line with a non-space
-    * character of the largest file (the line Spark's own header inference
-    * takes), read on the driver with a UTF-8 BOM stripped as Hadoop's line
-    * reader does. Its schema is derived on the driver with no query
+    * The decision reads only the header: the first line of the largest file
+    * that is not blank by `String.trim` (the line the file read consumes as
+    * its header, since Spark's CSV file reader drops such blank lines),
+    * read on the driver with a UTF-8 BOM stripped as Hadoop's line reader
+    * does. Its schema is derived on the driver with no query
     * ([[headerSchema]]); the file is then read once with that schema.
     */
   def csvWithDelimiterFallback(spark: SparkSession, path: String,
@@ -154,7 +155,7 @@ object Ingest {
   }
 
   /** The schema `spark.read.options(options).csv(Seq(line).toDS())` gives a
-    * `line` holding a non-space character when schema inference is off,
+    * non-blank `line` when schema inference is off,
     * derived the way that reader derives it but without its query: the line
     * is tokenized by Spark's CSV parser settings for `options`, the tokens
     * are named by `CSVUtils.makeSafeHeader` (positional `_c<i>` names
@@ -172,15 +173,17 @@ object Ingest {
     }
   }
 
-  /** The first line holding a non-space character across the files under
-    * `path`, largest file first.
+  /** The first line across the files under `path`, largest file first,
+    * that `String.trim` leaves non-empty (one with a character above
+    * U+0020): Spark's CSV file reader (`CSVExprUtils.filterCommentAndEmpty`)
+    * drops every other line before it takes the header.
     */
   private def firstLine(spark: SparkSession, path: String): Option[String] =
     largestFirst(spark, spark.read.text(path)).iterator.flatMap { file =>
       val lines = new BufferedReader(new InputStreamReader(open(spark, file), UTF_8))
       try Iterator.continually(lines.readLine()).takeWhile(_ != null)
         .zipWithIndex.map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
-        .find(_.exists(_ != ' '))
+        .find(_.trim.nonEmpty)
       finally lines.close()
     }.nextOption()
 

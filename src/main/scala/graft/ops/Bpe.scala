@@ -136,15 +136,12 @@ object Bpe {
     var it = 0
     var dry = false
     var sinceCompact = 0
-    val debug = sys.env.contains("SPARK_GRAFT_BPE_DEBUG")
     while (it < iters && !dry) {
-      val tRound = System.nanoTime()
       val top = pc.groupBy(col("__l"), col("__r"))
         .agg(sum(col("__c")).as("__c"))
         .filter(col("__c") >= 2L)
         .orderBy(col("__c").desc, col("__l").asc, col("__r").asc)
         .limit(1).collect()
-      if (debug) println(f"[bpe] round=$it argmax=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       if (top.isEmpty) dry = true
       else {
         val (l, r, c) =
@@ -180,7 +177,6 @@ object Bpe {
         live ::= delta
         pc = pc.unionByName(delta)
         voc = voc.filter(!col("__w").contains(pat)).unionByName(rewritten)
-        if (debug) println(f"[bpe] round=$it total=${(System.nanoTime() - tRound) / 1e9}%.2f s pair='$l'+'$r' c=$c")
         sinceCompact += 1
         if (sinceCompact >= compactEvery) {
           voc = voc.coalesce(math.max(1, s.sparkContext.defaultParallelism))

@@ -152,13 +152,6 @@ object Train {
                          iters: Int, rate: Double,
                          scoreJoinHint: String = ""): DataFrame = {
     require(iters >= 0 && iters <= 64, s"iters must be in [0,64], got $iters")
-    val dbg = sys.env.contains("SPARK_GRAFT_BT_DEBUG")
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (dbg) println(f"[bt] $tag ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
     // checkpoint the PROJECTION, filter above the materialized strings:
     // filtering before the checkpoint lets Catalyst push the predicate
     // below the projection, re-inlining the caller's winner/loser
@@ -172,25 +165,24 @@ object Train {
     // item-grain score frame) broadcasts or shuffle-hashes cheaply every
     // round anyway; measured 5.7 → 34.6 s on q286 at local[32]. A plain
     // localCheckpoint of the projection is the right shape.
-    val pl = timed("pl")(Dedup.spread(pairs)
+    val pl = Dedup.spread(pairs)
       .select(winner.cast("string").as("__w"), loser.cast("string").as("__l"))
-      .localCheckpoint()) // read every round
+      .localCheckpoint() // read every round
       .filter(col("__w").isNotNull && col("__l").isNotNull &&
         col("__w") =!= col("__l"))
-    val tallies = timed("tallies")(pl
+    val tallies = pl
       .select(col("__w").as("item"), lit(1L).as("__win"))
       .unionByName(pl.select(col("__l").as("item"), lit(0L).as("__win")))
       .groupBy(col("item"))
       .agg(sum(col("__win")).as("n_wins"),
         sum(lit(1L) - col("__win")).as("n_losses"))
-      .localCheckpoint())
+      .localCheckpoint()
     // r13: the per-item pair count rides ON the score frame (attached
     // once) — the update divides by it every round, and re-joining the
     // never-changing tallies per round was an avoidable item-grain join;
     // the update arithmetic tree is unchanged (same long sum cast double)
-    var scores = timed("scores0")(
-      tallies.select(col("item"), lit(0.0d).as("score"),
-        (col("n_wins") + col("n_losses")).as("__n")).localCheckpoint())
+    var scores = tallies.select(col("item"), lit(0.0d).as("score"),
+      (col("n_wins") + col("n_losses")).as("__n")).localCheckpoint()
     var it = 0
     while (it < iters) {
       // at true item cardinality the score frame outgrows broadcast and
@@ -220,13 +212,13 @@ object Train {
           col("__e.__gv").cast("decimal(28,18)").as("__gc"))
         .groupBy(col("item"))
         .agg(sum(col("__gc")).cast("double").as("__grad"))
-      val next = timed(s"round$it")(scores.join(grads, Seq("item"), "left")
+      val next = scores.join(grads, Seq("item"), "left")
         .select(col("item"),
           when(col("__grad").isNull, col("score"))
             .otherwise(round(col("score") + lit(rate) * col("__grad") /
               col("__n").cast("double"), 12))
             .as("score"), col("__n"))
-        .localCheckpoint())
+        .localCheckpoint()
       scores.unpersist()
       scores = next
       it += 1

@@ -59,7 +59,6 @@ class AsOfJoinStrategy extends SparkStrategy {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => new AsOfJoinStrategy)
-    ext.injectOptimizerRule(s => AutoPairJoinHint(s))
   }
 }
 

@@ -83,6 +83,8 @@ class IngestSpec extends AnyFunSuite {
       Seq("sigla", "codigo", "nome_municipio")),
     "UTF-8 BOM" -> ("\uFEFF" + ibge, Seq("UF", "COD", "NOME")),
     "leading blank lines" -> ("\n   \n" + ibge, Seq("UF", "COD", "NOME")),
+    // Spark's file reader drops lines blank by `String.trim` (tabs too)
+    "leading whitespace-only lines" -> ("\n \t \n" + ibge, Seq("UF", "COD", "NOME")),
     "CRLF" -> (ibge.replace("\n", "\r\n"), Seq("UF", "COD", "NOME")),
     // Spark's safe names: an empty name becomes `_c<i>`, a duplicate gets
     // its index appended

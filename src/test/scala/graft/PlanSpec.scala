@@ -60,40 +60,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("AutoPairJoinHint is opt-in, steers wide-array joins, defers to authors") {
-    import spark.implicits._
-    graft.plans.AutoPairJoinHint.register(spark)
-    val a = Seq((1L, Seq(1L, 2L)), (2L, Seq(3L, 4L))).toDF("id", "ha")
-    val b = Seq((1L, Seq(1L, 2L)), (2L, Seq(9L, 9L))).toDF("id", "hb")
-    def planOf(): String = a.join(b, "id").queryExecution.executedPlan.toString
-    // dormant by default: opt-in config
-    assert(!planOf().contains("ShuffledHashJoin"),
-      "rule must not fire unless spark.graft.pairJoin.auto is enabled")
-    val threshKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevThresh = spark.conf.get(threshKey)
-    spark.conf.set(graft.GraftConf.AutoPairJoinKey, "true")
-    try {
-      // broadcasting disabled -> both sides "large" -> rule steers to SHJ
-      // (the planner's own preference here would be sort-merge)
-      spark.conf.set(threshKey, "-1")
-      assert(planOf().contains("ShuffledHashJoin"),
-        "enabled rule must steer the un-hinted wide-array join")
-      // a broadcast-sized side: the stats guard defers to the planner
-      spark.conf.set(threshKey, "10485760")
-      assert(!planOf().contains("ShuffledHashJoin"),
-        "rule must not force a shuffle when a side is broadcast-sized")
-      // an explicit author hint always wins over the auto rule
-      spark.conf.set(threshKey, "-1")
-      val explicit = a.join(org.apache.spark.sql.functions.broadcast(b), "id")
-        .queryExecution.executedPlan.toString
-      assert(explicit.contains("BroadcastHashJoin"),
-        "explicit broadcast() must override the auto strategy")
-    } finally {
-      spark.conf.unset(graft.GraftConf.AutoPairJoinKey)
-      spark.conf.set(threshKey, prevThresh)
-    }
-  }
-
   test("q63 stratified sample filters at the scan stage, no pre-filter shuffle") {
     val p = plan("q63_stratified_sample")
     // the md5-threshold filter is a per-row predicate: it must run before
